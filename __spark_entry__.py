@@ -19,10 +19,21 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _use_session_conf(spark: SparkSession) -> None:
+    """The driver builds its own session: give it the conf every query
+    assumes (UTC tz and LTZ parquet timestamps, so the fact tables' naive
+    timestamps read as the same instants DuckDB sees; plans/common.py
+    rule 2)."""
+    from habits_etl_spark.session import SESSION_CONF
+
+    for k, v in SESSION_CONF.items():
+        spark.conf.set(k, v)
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the daily rollup
     (reference continuous aggregate habit_daily, sql/001_schema.sql:31-40)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _use_session_conf(spark)
     from habits_etl_spark.plans import QUERIES
 
     return QUERIES["agg_daily_rollup"](spark, "/root/testdata/sf0.001")
@@ -34,9 +45,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     wrapped = {}
     for name, fn in QUERIES.items():
         def run(spark, sf_dir, _fn=fn):
-            # UTC session tz: the fact tables' naive parquet timestamps must
-            # read as the same instants DuckDB sees (plans/common.py rule 2).
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
+            _use_session_conf(spark)
             return _fn(spark, sf_dir)
 
         wrapped[name] = run

@@ -113,11 +113,11 @@ def run_ingest(
             keep_old_cols=["source"],
         ).withColumn("event_date", F.col("ts").cast("date"))
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         merged.repartition("event_date")
         .sortWithinPartitions("user_email", "habit", "ts")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_date")
         .parquet(events_path)
     )

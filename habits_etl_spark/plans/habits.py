@@ -248,7 +248,7 @@ def stream_tumbling_window(spark, sf_dir):
 )
 def pred_time_range(spark, sf_dir):
     """Half-open time-range predicate (reference README.md:124,136
-    $__timeFilter), pushed to the parquet scan in the raw nanos domain
+    $__timeFilter), pushed to the parquet scan on the stored ts column
     (sources.load_events_range) so row groups outside the range are skipped
     by min/max stats — the hypertable chunk-exclusion analog."""
     from habits_etl_spark.sources import load_events_range

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from habits_etl_spark.operators.skew import salted_join
+from habits_etl_spark.session import conf_scope
 from habits_etl_spark.sources import load_table
 
 HOT_USER = 0
@@ -75,11 +76,9 @@ def _max_partition_share(df: DataFrame) -> float:
     max_share=1.0 for every variant and hide the skew spread — the thing
     under test is reducer balance at a fixed partition count, the
     regime a 100 TB shuffle is always in."""
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
+    with conf_scope(
+        df.sparkSession, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    ):
         counts = [
             r["cnt"]
             for r in df.withColumn("__pid", F.spark_partition_id())
@@ -87,8 +86,6 @@ def _max_partition_share(df: DataFrame) -> float:
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
         ]
-    finally:
-        spark.conf.set(key, old)
     return max(counts) / sum(counts)
 
 
@@ -96,19 +93,15 @@ def skew_stress_report(
     spark: SparkSession, sf_dir: str, n_salts: int = 16
 ) -> dict[str, dict[str, float]]:
     """Run the three variants; return {variant: {sec, max_share}}."""
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    old_bc = conf.get("spark.sql.autoBroadcastJoinThreshold")
     out: dict[str, dict[str, float]] = {}
-    try:
+    for label, aqe, salted in (
+        ("plain_noaqe", "false", False),
+        ("plain_aqe", "true", False),
+        ("salted", "true", True),
+    ):
         # the 100 TB dim would not broadcast; test the shuffle path
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        for label, aqe, salted in (
-            ("plain_noaqe", "false", False),
-            ("plain_aqe", "true", False),
-            ("salted", "true", True),
-        ):
-            conf.set("spark.sql.adaptive.enabled", aqe)
+        with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1",
+                                "spark.sql.adaptive.enabled": aqe}):
             facts, dim = skewed_inputs(spark, sf_dir)
             joined = (
                 salted_join(
@@ -127,9 +120,6 @@ def skew_stress_report(
                 "sec": round(sec, 3),
                 "max_share": round(_max_partition_share(joined), 4),
             }
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
     return out
 
 

@@ -35,7 +35,6 @@ import hashlib
 import os
 import shutil
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -47,6 +46,7 @@ from habits_etl_spark.plans.common import (
     sql_dsum,
     t,
 )
+from habits_etl_spark.session import conf_scope
 
 # streaming.rollup imports plans.common for its decimal-exact aggregates, so
 # importing it at module scope from inside the plans package would be
@@ -66,7 +66,6 @@ _N_DROPS = 3
 _N_DROPS_ILV = 2
 
 
-@contextmanager
 def _pinned_state_partitions(spark, n: int = 8):
     """Pin spark.sql.shuffle.partitions for one e2e run. Every stateful
     streaming operator keeps one state store PER shuffle partition (a
@@ -88,12 +87,7 @@ def _pinned_state_partitions(spark, n: int = 8):
     3-drop pipeline: pin 8 = 6.96 s, pin 4 = 7.63 s, pin 2 = 11.43 s).
     No harness restructuring shaves the trio without weakening the
     restart semantics the ids exist to witness."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return conf_scope(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def _workdir_root() -> str:

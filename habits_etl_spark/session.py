@@ -7,17 +7,36 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
   strategy) so plans self-correct at any scale factor.
 - ``spark.sql.shuffle.partitions`` defaults to a small local value; on a
   real cluster AQE's coalescing makes the initial number mostly a ceiling.
-- UTC session timezone so timestamp semantics match the reference's
-  UTC-normalized fact table (reference sql/001_schema.sql:16) and the
-  DuckDB oracle.
+- ``SESSION_CONF`` (UTC timezone, LTZ parquet timestamp reads) is what
+  every query assumes; the driver builds its own session, so
+  ``__spark_entry__`` applies the same dict to it.
 - Arrow enabled for any pandas-UDF extension path.
+
+This module is the only one in the package that writes session conf.
+A temporary override goes through ``conf_scope``, which leaves the
+session exactly as it found it.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+SESSION_CONF = {
+    # timestamp semantics match the reference's UTC-normalized fact table
+    # (reference sql/001_schema.sql:16) and the DuckDB oracle
+    "spark.sql.session.timeZone": "UTC",
+    # Parquet timestamps without the UTC flag (the testdata generator
+    # omits isAdjustedToUTC) read as session-tz TIMESTAMP, not NTZ: under
+    # the UTC session tz the stored micros are the same instants as
+    # DuckDB's naive timestamps, instant functions (unix_micros) accept
+    # them, and filters against to_timestamp literals stay on the scan
+    # column, so parquet pushdown still applies.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
 def get_spark(app_name: str = "habits_etl_spark", master: str | None = None,
@@ -40,12 +59,7 @@ def get_spark(app_name: str = "habits_etl_spark", master: str | None = None,
         # 0.92->1.15 s (chained same-key sort-merge joins lose the sort
         # reuse a blanket rewrite destroys). Individual joins that
         # measurably win carry an explicit shuffle_hash hint instead.
-        .config("spark.sql.session.timeZone", "UTC")
-        # Parquet timestamps without the UTC flag read as session-tz
-        # TIMESTAMP, not NTZ (see sources._force_ltz_reads — the testdata
-        # generator omits isAdjustedToUTC; instant semantics under the UTC
-        # session tz match DuckDB's naive timestamps exactly).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config(map=SESSION_CONF)
         # Allow Python Data Sources to receive pushed filters (the
         # wide_sheet source implements pushFilters; off by default)
         .config("spark.sql.python.filterPushdown.enabled", "true")
@@ -62,14 +76,38 @@ def get_spark(app_name: str = "habits_etl_spark", master: str | None = None,
     return spark
 
 
+@contextmanager
+def conf_scope(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Set ``overrides`` for the body of the ``with`` block, then put each
+    key back: its earlier explicit value, or unset when ``getAll`` did not
+    hold it. Restoring an unset key by setting its old ``get`` value would
+    leave the default pinned as an explicit setting.
+
+    The overrides are session-wide while the block runs, and a lazy
+    DataFrame built inside reads the conf again when it executes, so
+    force whatever depends on them inside the block."""
+    before = spark.conf.getAll
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k in overrides:
+            if k in before:
+                spark.conf.set(k, before[k])
+            else:
+                spark.conf.unset(k)
+
+
 ROCKSDB_STATE_STORE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
 
-def enable_rocksdb_state_store(spark: SparkSession) -> bool:
-    """Route Structured Streaming state through RocksDB instead of the
-    default in-JVM-heap HDFSBackedStateStoreProvider.
+def rocksdb_state_store_conf(spark: SparkSession) -> dict[str, str]:
+    """Conf that routes Structured Streaming state through RocksDB instead
+    of the default in-JVM-heap HDFSBackedStateStoreProvider; apply it
+    with ``conf_scope`` or at session build.
 
     At 100 TB the stateful ops (dropDuplicatesWithinWatermark, windowed
     aggs, stream-stream joins) hold state proportional to the watermark
@@ -79,29 +117,14 @@ def enable_rocksdb_state_store(spark: SparkSession) -> bool:
     deltas instead of full snapshots (streaming/dedup.py's "RocksDB-backed
     in production configs" note, made real).
 
-    Returns False (and changes nothing) when the provider class is not on
-    the classpath — callers/tests skip rather than fail. Takes effect for
-    queries STARTED after the call; a restarted query keeps the provider
-    recorded in its checkpoint."""
+    Empty when the provider class is not on the classpath — callers/tests
+    skip rather than fail. Takes effect for queries STARTED under it; a
+    restarted query keeps the provider recorded in its checkpoint."""
     try:
         spark._jvm.java.lang.Class.forName(ROCKSDB_STATE_STORE_PROVIDER)  # type: ignore[union-attr]
     except Exception:
-        return False
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE_PROVIDER
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true",
-    )
-    return True
-
-
-def tune_for_scale(spark: SparkSession) -> None:
-    """Apply session-level conf we rely on when the driver hands us an
-    externally built session (the harness owns SparkSession creation)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    except Exception:
-        pass  # immutable at runtime on some builds; fine, default is true
+        return {}
+    return {
+        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_STATE_STORE_PROVIDER,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }

@@ -5,11 +5,16 @@ column pruning via Catalyst). ``load_table`` is the single entry point the
 query layer uses, so swapping a source (CSV landing zone, JDBC, a stream)
 means changing one function — the analog of the reference's pluggable
 ``get_ws`` sheet scan (reference etl/etl_habits.py:11-17).
+
+Readers change no session conf. They rely on the session built by
+``session.get_spark`` (or given ``session.SESSION_CONF``), under which
+``events.ts`` reads as a UTC-instant TIMESTAMP.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -25,43 +30,8 @@ TABLES = (
 )
 
 
-def _force_ltz_reads(spark: SparkSession) -> None:
-    """Read parquet TIMESTAMP(isAdjustedToUTC=false) as session-tz TIMESTAMP,
-    not TIMESTAMP_NTZ.
-
-    The testdata generator writes micro-second timestamps without the UTC
-    flag; Spark 4's default ``inferTimestampNTZ`` then types them NTZ,
-    which breaks instant functions (``unix_micros`` rejects NTZ) and makes
-    every comparison against ``to_timestamp`` literals a cross-type
-    coercion. Disabling inference restores the classic LTZ read: the
-    stored micros are interpreted as UTC epoch instants, identical to what
-    DuckDB's naive timestamps mean under our UTC session tz — and filters
-    stay directly on the scan column (no cast blocking parquet pushdown).
-    Session-level on purpose: plans are lazy, so the conf must hold for
-    the lifetime of every DataFrame read here (same note as nanosAsLong
-    below)."""
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table of the scale-factor directory as a DataFrame.
-
-    Older testdata layouts store ``events.ts`` as parquet TIMESTAMP(NANOS),
-    which the Spark vectorized reader rejects. We read nanos as long
-    (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to microsecond
-    timestamps — the same truncation DuckDB applies, so both engines see
-    identical instants. (Current layouts store micros; the Long branch is
-    then dead and the plain read applies.)"""
-    _force_ltz_reads(spark)
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
+    """Read one table of the scale-factor directory as a DataFrame."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -71,56 +41,21 @@ def load_events_range(
     ts_start: str | None = None,
     ts_end: str | None = None,
 ) -> DataFrame:
-    """Events scan with a half-open [ts_start, ts_end) predicate applied in
-    the RAW nanosecond domain, *before* the timestamp conversion.
+    """Events scan with a half-open [ts_start, ts_end) predicate on the
+    stored ``ts`` column.
 
-    A filter on the converted column can't push past ``timestamp_micros(ts
-    div 1000)``, so Parquet would scan every row group. Translating the
-    bounds to int64 nanos keeps the predicate on the stored column —
-    ``PushedFilters: [GreaterThanOrEqual(ts, ...)]`` — which prunes row
-    groups by min/max stats. At 100 TB this is the difference between a
-    range read and a full scan (and mirrors the hypertable chunk exclusion
-    the reference gets from Timescale, sql/001_schema.sql:26)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    # NOTE: nanosAsLong must stay set for the lifetime of the returned
-    # (lazy) DataFrame — Spark re-reads SQLConf at each query execution,
-    # so restoring it here would break a later .collect(). It is therefore
-    # a session-level setting, shared with load_table("events").
-    _force_ltz_reads(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-
-    def nanos(s: str) -> int:
-        # Exact integer epoch arithmetic: float .timestamp() would truncate
-        # or round sub-second components of the bound.
-        d = dt.datetime.fromisoformat(s).replace(tzinfo=dt.timezone.utc)
-        delta = d - dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
-        return (
-            (delta.days * 86_400 + delta.seconds) * 1_000_000_000
-            + delta.microseconds * 1_000
-        )
-
-    if isinstance(df.schema["ts"].dataType, T.LongType):
-        if ts_start is not None:
-            df = df.filter(F.col("ts") >= nanos(ts_start))
-        if ts_end is not None:
-            df = df.filter(F.col("ts") < nanos(ts_end))
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    The filter compares the scan column with timestamp literals, so it
+    stays a ``PushedFilters: [GreaterThanOrEqual(ts, ...)]`` entry and
+    Parquet prunes row groups by min/max stats. At 100 TB this is the
+    difference between a range read and a full scan (and mirrors the
+    hypertable chunk exclusion the reference gets from Timescale,
+    sql/001_schema.sql:26)."""
+    df = load_table(spark, sf_dir, "events")
     if ts_start is not None:
         df = df.filter(F.col("ts") >= F.to_timestamp(F.lit(ts_start)))
     if ts_end is not None:
         df = df.filter(F.col("ts") < F.to_timestamp(F.lit(ts_end)))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register every table as a temp view for the SQL surface."""
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def read_wide_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -20,7 +20,7 @@ the exact one.
 
 Scale: state is two scalars per user, hash-partitioned by user_id across
 executors and checkpointed incrementally; works under the RocksDB state
-store (session.enable_rocksdb_state_store) for state larger than memory.
+store (session.rocksdb_state_store_conf) for state larger than memory.
 """
 
 from __future__ import annotations

@@ -19,7 +19,7 @@ same merge a count-min/Misra-Gries pipeline ships.
 
 Scale: state per group is three fixed-length arrays; shards
 hash-partition across executors and checkpoint incrementally; works
-under the RocksDB state store (session.enable_rocksdb_state_store).
+under the RocksDB state store (session.rocksdb_state_store_conf).
 Emits the full shard summary each micro-batch (output mode "update"),
 so the downstream view is always the current sketch.
 """

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.session import conf_scope
 from habits_etl_spark.sinks.bucketing import bucketed_join, write_bucketed
 from habits_etl_spark.sources import load_table
 
@@ -26,8 +27,7 @@ def test_bucketed_join_no_exchange(spark, sf_dir, tmp_path):
     write_bucketed(lineitem, "lineitem_b", "o_orderkey", n_buckets=8)
 
     # broadcast would dodge the point at this size — force the merge path
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = bucketed_join(spark, "lineitem_b", "orders_b", "o_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
@@ -42,5 +42,3 @@ def test_bucketed_join_no_exchange(spark, sf_dir, tmp_path):
             .count()
         )
         assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")

@@ -13,6 +13,7 @@ from habits_etl_spark.plans.ext_curation2 import (
     ext_domain_mix,
     ext_dup_ngram_coverage,
 )
+from habits_etl_spark.session import conf_scope
 
 
 def test_dup_ngram_coverage_bounds(spark, sf_dir):
@@ -68,10 +69,7 @@ def test_runtime_bloom_filter_injected(spark, sf_dir):
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # force a shuffle join
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -82,12 +80,6 @@ def test_runtime_bloom_filter_injected(spark, sf_dir):
         plan = j._jdf.queryExecution().optimizedPlan().toString()
         assert "might_contain" in plan and "bloom_filter_agg" in plan, plan[:2000]
         assert j.collect()  # and it still executes correctly
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_cbo_stats_drive_broadcast(spark, sf_dir, tmp_path):
@@ -96,9 +88,8 @@ def test_cbo_stats_drive_broadcast(spark, sf_dir, tmp_path):
     external parquet tables, ANALYZE them, and assert (a) rowCount stats
     are visible to the planner and (b) a stats-sized small table is chosen
     as the broadcast side without an explicit hint."""
-    # (events.parquet carries TIMESTAMP(NANOS) which a plain catalog scan
-    # rejects — the engine reads it through sources.load_table's nanos
-    # path — so the catalog tables here are the nanos-free dims.)
+    # (The catalog tables are two small dims: cheap to ANALYZE, and the
+    # planner must pick nation as the broadcast side from its stats.)
     spark.sql("DROP TABLE IF EXISTS _cbo_customer")
     spark.sql("DROP TABLE IF EXISTS _cbo_nation")
     spark.sql(
@@ -114,16 +105,12 @@ def test_cbo_stats_drive_broadcast(spark, sf_dir, tmp_path):
             F.col("col_name") == "Statistics"
         ).collect()
         assert stats and "rows" in stats[0].data_type, stats
-        old = spark.conf.get("spark.sql.cbo.enabled", "false")
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        try:
+        with conf_scope(spark, {"spark.sql.cbo.enabled": "true"}):
             cust = spark.table("_cbo_customer")
             nat = spark.table("_cbo_nation")
             j = cust.join(nat, cust.c_nationkey == nat.n_nationkey)
             plan = j._jdf.queryExecution().sparkPlan().toString()
             assert "BroadcastHashJoin" in plan, plan[:2000]
-        finally:
-            spark.conf.set("spark.sql.cbo.enabled", old)
     finally:
         spark.sql("DROP TABLE IF EXISTS _cbo_customer")
         spark.sql("DROP TABLE IF EXISTS _cbo_nation")

@@ -39,6 +39,23 @@ def test_asof_basic_and_ties(spark):
     assert got[3] == (None, None)  # no right row at-or-before
 
 
+def test_asof_null_tie_wins_its_instant(spark):
+    """Pins the documented precondition: ``tie_col`` must be non-null,
+    because a NULL tie sorts last within its instant and so wins it."""
+    left = spark.createDataFrame(
+        [(1, "u1", ts(12))], "event_id long, k string, ts timestamp"
+    )
+    right = spark.createDataFrame(
+        [("u1", ts(12), 100.0, 5), ("u1", ts(12), 200.0, None)],
+        "k string, ts timestamp, v double, tie long",
+    )
+    out = asof_join(
+        left, right, keys=["k"], left_ts="ts", right_ts="ts",
+        payload_cols=["v"], tie_col="tie",
+    )
+    assert [(r.event_id, r.asof_v) for r in out.collect()] == [(1, 200.0)]
+
+
 def test_dedup_batch_last_writer_wins(spark):
     df = spark.createDataFrame(
         [("k1", 1.0, 1), ("k1", 2.0, 2), ("k2", 9.0, 1)],

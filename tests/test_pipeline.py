@@ -48,11 +48,14 @@ def test_ingest_idempotent(spark, wh):
             ("08/21/2025", "a@x.com", "no", "5", None),
         ],
     )
+    conf = spark.conf.getAll
     run_ingest(spark, batch, CFG, wh)
     s1 = snapshot(spark, wh)
     assert len(s1) == 4  # 2 rows x 2 habits
     run_ingest(spark, batch, CFG, wh)  # re-run: must be a no-op
     assert snapshot(spark, wh) == s1
+    # the ingest's write options stay on its writes, not on the session
+    assert spark.conf.getAll == conf
 
 
 def test_upsert_overwrites_value_keeps_notes(spark, wh):

@@ -12,6 +12,7 @@ no registered query should ever do.
 from __future__ import annotations
 
 from habits_etl_spark.plans import QUERIES
+from habits_etl_spark.session import conf_scope
 
 
 def _bracket_groups(s: str) -> list[str]:
@@ -53,13 +54,20 @@ def unpartitioned_windows(plan: str) -> list[str]:
 
 
 def test_every_query_builds_and_has_no_cartesian_product(spark, sf_dir):
+    """Also: building a query leaves the session conf as it found it, so
+    one query's settings never leak into the next one's plan."""
     failures = []
     for name, fn in sorted(QUERIES.items()):
+        conf = spark.conf.getAll
         try:
             plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # noqa: BLE001 - collecting all failures
             failures.append(f"{name}: plan build failed: {e}")
             continue
+        after = spark.conf.getAll
+        for k in sorted(set(conf) | set(after)):
+            if conf.get(k) != after.get(k):
+                failures.append(f"{name}: conf {k}: {conf.get(k)} -> {after.get(k)}")
         if "CartesianProduct" in plan:
             failures.append(f"{name}: CartesianProduct in physical plan")
         for w in unpartitioned_windows(plan):
@@ -74,15 +82,11 @@ def test_every_query_analyzes_under_ansi_mode(spark, sf_dir):
     registry under ANSI catches the analysis-time class for every query
     at plan cost; execution-sensitive ops are additionally RUN under ANSI
     in test_robustness's sample."""
-    old = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
     failures = []
-    try:
+    with conf_scope(spark, {"spark.sql.ansi.enabled": "true"}):
         for name, fn in sorted(QUERIES.items()):
             try:
                 fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
             except Exception as e:  # noqa: BLE001 - collecting all failures
                 failures.append(f"{name}: {e}")
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", old)
     assert not failures, "\n".join(failures)

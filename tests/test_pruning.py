@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.session import conf_scope
 from habits_etl_spark.sinks.landing import read_events, write_events
 
 
@@ -43,9 +44,9 @@ def test_dynamic_partition_pruning_through_join(spark, tmp_path):
         [("2024-03-04", "target"), ("2024-03-05", "target"), ("2024-03-06", "other")],
         "event_date string, tag string",
     ).select(F.col("event_date").cast("date").alias("event_date"), "tag")
-    old = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled")
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    try:
+    with conf_scope(
+        spark, {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "true"}
+    ):
         j = (
             read_events(spark, path)
             .join(dim.filter(F.col("tag") == "target"), "event_date")
@@ -56,8 +57,6 @@ def test_dynamic_partition_pruning_through_join(spark, tmp_path):
         assert "dynamicpruning" in plan.lower(), plan[:2500]
         rows = {str(r.event_date): r.n for r in j.collect()}
         assert rows == {"2024-03-04": 200, "2024-03-05": 200}
-    finally:
-        spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", old)
 
 
 def test_landing_schema_evolution(spark, tmp_path):

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from habits_etl_spark.plans.common import QUERIES
 from habits_etl_spark.plans.ext_curation2 import ext_unigram_lm_score
+from habits_etl_spark.session import conf_scope
 
 # A cast-heavy / parse-heavy sample: the queries most likely to differ
 # between ANSI and legacy modes (overflow, bad casts, lookups).
@@ -22,28 +23,20 @@ _ANSI_SAMPLE = (
 
 
 def test_queries_survive_ansi_mode(spark, sf_dir):
-    old = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
+    with conf_scope(spark, {"spark.sql.ansi.enabled": "true"}):
         for name in _ANSI_SAMPLE:
             assert QUERIES[name](spark, sf_dir).count() >= 0, name
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 def test_broadcast_threshold_flips_join_strategy(spark, sf_dir):
     def strategy(threshold):
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        try:
+        with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": threshold}):
             # build inside the conf scope: queryExecution is memoized per
             # DataFrame, so a shared plan would ignore the second setting
             cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
             orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
             j = orders.join(cust, orders.o_custkey == cust.c_custkey)
             return j._jdf.queryExecution().sparkPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
     assert "BroadcastHashJoin" in strategy("100MB")
     no_bcast = strategy("-1")
@@ -81,19 +74,15 @@ def test_results_invariant_to_shuffle_parallelism(spark, sf_dir):
         "ext_dataset_card",
         "win_cumulative_uniques",
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
 
     def snapshot(n_part):
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
         out = {}
-        for name in sample:
-            rows = QUERIES[name](spark, sf_dir).collect()
-            out[name] = sorted(tuple(r) for r in rows)
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": str(n_part)}):
+            for name in sample:
+                rows = QUERIES[name](spark, sf_dir).collect()
+                out[name] = sorted(tuple(r) for r in rows)
         return out
 
-    try:
-        a, b = snapshot(1), snapshot(17)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    a, b = snapshot(1), snapshot(17)
     for name in sample:
         assert a[name] == b[name], f"{name} differs across parallelism"

@@ -31,8 +31,6 @@ def sheet_path(tmp_path):
 
 
 def _load(spark, path, n_parts=2):
-    # session fixture may predate the factory conf; runtime-settable
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(WideSheetDataSource)
     return (
         spark.read.format("wide_sheet")

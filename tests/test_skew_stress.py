@@ -10,7 +10,10 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_salting_collapses_max_partition_share(spark):
+    conf = spark.conf.getAll
     report = skew_stress_report(spark, SF_DIR, n_salts=16)
+    # its AQE and broadcast overrides end with the report
+    assert spark.conf.getAll == conf
 
     # naive: the whale user's ~50% of rows sit in a single partition
     assert report["plain_noaqe"]["max_share"] > 0.4, report

@@ -226,23 +226,27 @@ def test_stream_anomaly_e2e_under_rocksdb_state_store(spark):
     import pytest
 
     from habits_etl_spark.plans.streaming_e2e import stream_anomaly_e2e
-    from habits_etl_spark.session import enable_rocksdb_state_store
+    from habits_etl_spark.session import (
+        ROCKSDB_STATE_STORE_PROVIDER,
+        conf_scope,
+        rocksdb_state_store_conf,
+    )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
     base = {
         (r.user_id, r.event_id): (r.z, r.n_history)
         for r in stream_anomaly_e2e(spark, sf_dir).collect()
     }
-    if not enable_rocksdb_state_store(spark):
+    rocks_conf = rocksdb_state_store_conf(spark)
+    if not rocks_conf:
         pytest.skip("RocksDB state store provider not on the classpath")
-    try:
+    with conf_scope(spark, rocks_conf):
+        assert (
+            spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+            == ROCKSDB_STATE_STORE_PROVIDER
+        )
         rocks = {
             (r.user_id, r.event_id): (r.z, r.n_history)
             for r in stream_anomaly_e2e(spark, sf_dir).collect()
         }
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        )
     assert rocks == base

@@ -92,14 +92,18 @@ def test_dedup_under_rocksdb_state_store(spark, dirs):
     (the bounded-memory provider a 100 TB watermark horizon requires)."""
     from habits_etl_spark.session import (
         ROCKSDB_STATE_STORE_PROVIDER,
-        enable_rocksdb_state_store,
+        conf_scope,
+        rocksdb_state_store_conf,
     )
 
-    if not enable_rocksdb_state_store(spark):
+    rocks = rocksdb_state_store_conf(spark)
+    if not rocks:
         pytest.skip("RocksDB state store provider not on the classpath")
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    assert old == ROCKSDB_STATE_STORE_PROVIDER
-    try:
+    with conf_scope(spark, rocks):
+        assert (
+            spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+            == ROCKSDB_STATE_STORE_PROVIDER
+        )
         write_batch(
             dirs,
             "b1.json",
@@ -120,11 +124,6 @@ def test_dedup_under_rocksdb_state_store(spark, dirs):
         )
         run_once(spark, dirs)
         assert [h for h, _ in read_out(spark, dirs)] == ["A", "B", "C"]
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        )
 
 
 def test_stream_dedup_e2e_query_converges_to_distinct_set(spark):

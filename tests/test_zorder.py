@@ -24,16 +24,17 @@ def _mean_span(path, col, full_span):
     return sum(spans) / len(spans)
 
 
-def test_zorder_bounds_both_columns(spark, tmp_path):
-    # 128x128 grid: x and y independent and uniform
-    side = 128
-    grid = (
-        spark.range(side * side)
-        .select(
-            (F.col("id") % side).alias("x"),
-            (F.col("id") / side).cast("bigint").alias("y"),
-        )
+def _grid(spark, side):
+    """side x side grid: x and y independent and uniform."""
+    return spark.range(side * side).select(
+        (F.col("id") % side).alias("x"),
+        (F.col("id") / side).cast("bigint").alias("y"),
     )
+
+
+def test_zorder_bounds_both_columns(spark, tmp_path):
+    side = 128
+    grid = _grid(spark, side)
     by_x = str(tmp_path / "by_x")
     by_z = str(tmp_path / "by_z")
     grid.repartitionByRange(8, "x").sortWithinPartitions("x").write.parquet(by_x)
@@ -52,6 +53,22 @@ def test_zorder_bounds_both_columns(spark, tmp_path):
     x_span_z = _mean_span(by_z, "x", full)
     assert y_span_z < 0.6, y_span_z
     assert x_span_z < 0.6, x_span_z
+
+
+def test_file_count_follows_row_count(spark, tmp_path, monkeypatch):
+    """Both layouts write ceil(rows / ROWS_PER_FILE) files once that
+    exceeds the MIN_FILES floor, and the floor below it — never a count
+    taken from the session's cores."""
+    from habits_etl_spark.sinks import zorder
+
+    grid = _grid(spark, 128)  # 16,384 distinct Morton codes at bits=7
+    for per_file, want in [(zorder.ROWS_PER_FILE, zorder.MIN_FILES), (1000, 17)]:
+        monkeypatch.setattr(zorder, "ROWS_PER_FILE", per_file)
+        for layout in (zorder.zorder_by, zorder.zorder_by_quantile):
+            out = str(tmp_path / f"{layout.__name__}_{per_file}")
+            layout(grid, "x", "y", bits=7).write.parquet(out)
+            got = len(glob.glob(os.path.join(out, "*.parquet")))
+            assert got == want, (layout.__name__, per_file, got)
 
 
 def _files_containing(path, col, value):
@@ -128,10 +145,10 @@ def test_quantile_zorder_discriminates_skewed_hot_range(spark, tmp_path):
         # whose x-stats cover it (i.e. files a scan must read). Measured:
         # uniform 1.00 (every file covers the smeared hot range) vs
         # quantile 0.38-0.63 (absolute value quantizes with the file
-        # count, which follows the session's parallelism — so assert
-        # RELATIVE to the uniform baseline; the range partitioner can
-        # leave as few as 4 non-empty files under a skewed
-        # z-distribution, 3/4 = 0.75, hence the 0.8 headroom).
+        # count — zorder.MIN_FILES at this size — so assert RELATIVE to
+        # the uniform baseline; the range partitioner can leave as few
+        # as 4 non-empty files under a skewed z-distribution, 3/4 =
+        # 0.75, hence the 0.8 headroom).
         probe = 5
         frac_uniform = _files_containing(by_u, "x", probe)
         frac_quantile = _files_containing(by_q, "x", probe)

@@ -26,7 +26,6 @@ def main():
     from habits_etl_spark.session import get_spark
 
     spark = get_spark("dump_plans")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     jvm_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
 
     names = sorted(QUERIES)

@@ -53,7 +53,6 @@ def main() -> None:
     from habits_etl_spark.session import get_spark
 
     spark = get_spark("probe_solo")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     jvm_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
