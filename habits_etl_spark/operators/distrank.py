@@ -88,6 +88,7 @@ _PID = "__dr_pid"
 _CNT = "__dr_cnt"
 _KEY = "__dr_key"
 _AGG = "__dr_agg"
+_RLOC = "__dr_rloc"
 
 
 def _nparts(df: DataFrame, nparts: int | None) -> int:
@@ -685,7 +686,7 @@ def with_global_running_agg(
     # coalesce), which would plan two identical _we slots per output
     # column. Project each running aggregate ONCE here and build the
     # combine from the projected column — slots drop from 2/column to 1.
-    loc_names = [f"__rloc{i}" for i in range(len(names))]
+    loc_names = [f"{_RLOC}{i}" for i in range(len(names))]
     res = res.select(
         "*",
         *[fn(cols[o]).over(w_loc).alias(ln) for o, ln in zip(names, loc_names)],

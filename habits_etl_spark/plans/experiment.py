@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.operators.distrank import global_order_statistics
 from habits_etl_spark.plans.common import dec, managed_cache, query, t
 
@@ -119,18 +120,7 @@ def ext_ab_test_welch(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     variant = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(_AB_SALT), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0,
-        "A",
+        md5_int(_AB_SALT, F.col("user_id").cast("string")) % 2 == 0, "A"
     ).otherwise("B")
     assign = users.select("user_id", variant.alias("variant"))
     per_user = (

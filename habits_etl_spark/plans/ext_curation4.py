@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.plans.common import dec, query, t
 from habits_etl_spark.plans.ext_text import (
     _QUALITY_INPUTS_DUCK,
@@ -122,13 +123,7 @@ def ext_train_shuffle_shards(spark, sf_dir):
     reducer. At 100 TB / 16 shards scale n_shards to ~2x executor count
     and nothing else changes."""
     d = t(spark, sf_dir, "documents")
-    sid = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint") % _N_SHARDS
+    sid = md5_int("shard:", F.col("doc_id").cast("string")) % _N_SHARDS
     key = F.md5(F.concat(F.lit("order:"), F.col("doc_id").cast("string")))
     return d.select("doc_id", sid.alias("shard_id"), key.alias("sort_key"))
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.plans.common import dec, managed_cache, query, t, widened
 from habits_etl_spark.plans.ext_text import (
     _MINHASH_CTES,
@@ -274,18 +275,7 @@ def ext_hash_split(spark, sf_dir):
     hash-aggregate over ~|splits|x|langs| groups with map-side
     partials. Exact integer counts only — no float summation."""
     d = t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(_SPLIT_SALT), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = md5_int(_SPLIT_SALT, F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < _TRAIN_PCT, "train")
         .when(bucket < _TRAIN_PCT + _VAL_PCT, "val")
@@ -854,21 +844,7 @@ def ext_weighted_sample(spark, sf_dir):
     stratum sizes the rank window becomes per-partition heaps + merge
     (TakeOrdered per stratum). No collect, no RNG state."""
     d = t(spark, sf_dir, "documents")
-    u = (
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("wsample:"), F.col("doc_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            + 1
-        )
-        / F.lit(4294967297.0)
-    )
+    u = (md5_int("wsample:", F.col("doc_id").cast("string")) + 1) / F.lit(4294967297.0)
     w = _TOK_SPARK(F.col("text"))
     scored = d.select(
         "doc_id",

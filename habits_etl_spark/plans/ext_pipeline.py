@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.operators.clusters import connected_components
 from habits_etl_spark.plans.common import query, t
 from habits_etl_spark.plans.ext_text import (
@@ -849,18 +850,7 @@ def ext_cluster_safe_split(spark, sf_dir):
         F.col("vertex").alias("doc_id"), F.col("component").alias("comp")
     )
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(_CSPLIT_SALT), F.col("rep").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10
-    )
+    bucket = md5_int(_CSPLIT_SALT, F.col("rep").cast("string")) % 10
     asg = (
         docs.join(F.broadcast(comps), "doc_id", "left")
         .select("doc_id", F.coalesce("comp", "doc_id").alias("rep"))

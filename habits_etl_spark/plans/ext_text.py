@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.plans.common import (
     davg,
     managed_cache,
@@ -1241,7 +1242,7 @@ def ext_stratified_sample(spark, sf_dir):
     retries, and engines (md5-uniform in [0,1)). Pure map stage; at 100 TB
     this IS the mixture-sampling pass of a data pipeline."""
     d = t(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))), 1, 8), 16, 10).cast("bigint")
+    h = md5_int("sample:", F.col("doc_id").cast("string"))
     u = h.cast("double") / F.lit(4294967295.0)
     keep_p = F.when(F.col("lang") == "en", F.lit(0.5)).otherwise(F.lit(0.25))
     return d.filter(u < keep_p).select("doc_id", "lang")

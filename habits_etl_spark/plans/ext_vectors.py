@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.plans.common import managed_cache, query, t
 
 _TOP_K = 5
@@ -773,13 +774,7 @@ def _ivf_pick_assign(spark, sf_dir, n_cells, total=None):
     # vec_id: keep rows whose id-hash lands in ~2*n_cells/total of the
     # hash space (oversampled 2x against Poisson shortfall), then number
     # the first n_cells in hash order.
-    hsh = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("centroid:"), F.col("vec_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    hsh = md5_int("centroid:", F.col("vec_id").cast("string"))
     cand_c = prepped.withColumn("__h", hsh).filter(F.pmod(F.col("__h"), F.lit(step)) < 2)
     picked = cand_c.orderBy("__h", "vec_id").limit(n_cells).select("v", "nrm").collect()
     centroids = spark.createDataFrame(

@@ -21,23 +21,17 @@ scalars), so nearest-centroid = argmax dot(v, c) with no division at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.common import query, t
+from habits_etl_spark.functions.hashing import md5_int
+from habits_etl_spark.operators.lloyd import hash_seeds, lloyd_round
+from habits_etl_spark.plans.common import memo_fit, query, shared_cache, t
+from habits_etl_spark.plans.ext_vectors import _prepped_embeddings
 
 _KM_K = 8
 _KM_ITERS = 3
 _SEM_THRESHOLD = 0.4  # matches ext_embedding_cosine_pairs' _COS_THRESHOLD
-
-
-def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, label, v, nrm): float64 embedding + its L2 norm as a
-    scalar column — the one normalization kernel, shared with the ANN ops
-    so a fix there cannot drift from the k-means path."""
-    from habits_etl_spark.plans.ext_vectors import _prepped_embeddings
-
-    return _prepped_embeddings(spark, sf_dir)
 
 
 def _lit_array_sql(vals) -> str:
@@ -67,16 +61,16 @@ def _argmax_cell_expr(centroids: list[list[float]]) -> F.Column:
 
 
 def _normed_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-lifetime cached (vec_id, v, nrm) base relation, shared by
-    kmeans_fit and pq_fit (ext_vectors3): both estimators hash-pick seeds
-    from it, count it, and re-read it every Lloyd round — one cached copy
-    per (session, sf_dir) instead of one re-cache per fit invocation."""
-    from habits_etl_spark.plans.common import shared_cache
-
+    """Session-lifetime cached (vec_id, v, nrm) base relation that every
+    fit trains on: kmeans_fit, the incremental-IVF fit (on its base
+    split) and pq_fit (ext_vectors3, via its exploded subvectors). The
+    kernel's seed pick counts and hash-orders it and every Lloyd round
+    re-reads it — one cached copy per (session, sf_dir) instead of one
+    re-cache per fit invocation."""
     return shared_cache(
         spark,
         f"embeddings/normed::{sf_dir}",
-        lambda: _normed_embeddings(spark, sf_dir).select("vec_id", "v", "nrm"),
+        lambda: _prepped_embeddings(spark, sf_dir).select("vec_id", "v", "nrm"),
     )
 
 
@@ -90,98 +84,35 @@ def kmeans_fit(spark: SparkSession, sf_dir: str, k: int = _KM_K,
     ext_ivfpq_topk each used to re-run the identical 3-round fit
     (~2 s of pure job latency apiece at sf0.1).
 
-    Init is the deterministic hash-order pick ext_ann_ivf_probe uses (no
-    density assumption on vec_id), widened to the full corpus if the
-    2x-oversampled hash slice comes up short of k rows. Each iteration:
-    assignment is a pure map (broadcast-literal centroids, see
-    _argmax_cell_expr), the update is ONE hash-aggregate keyed
-    (cell, dim) with map-side partials over posexploded members, then a
-    k x dim collect — the only driver traffic, a few KB regardless of
-    corpus size (the same loop shape MLlib's KMeans runs via
-    treeAggregate). At 100 TB, fit on a hash sample (the estimator
-    converges on a fraction of the corpus) and run the final assignment
-    map over everything."""
-    from habits_etl_spark.plans.common import memo_fit
-
+    Seeds and rounds come from operators/lloyd.py (salt ``"kmeans:"``):
+    hash_seeds is the md5-order pick, widened to the full corpus if its
+    2x-oversampled slice comes up short of k rows; each lloyd_round is a
+    pure-map assignment (broadcast-literal centroids, see
+    _argmax_cell_expr), ONE decimal-exact (cell, dim) aggregate and a
+    k x dim collect — the same loop shape MLlib's KMeans runs via
+    treeAggregate."""
     return memo_fit(
-        ("kmeans_fit", sf_dir, k, iters), lambda: _kmeans_fit(spark, sf_dir, k, iters)
+        ("kmeans_fit", sf_dir, k, iters),
+        lambda: _spherical_lloyd(_normed_base_cached(spark, sf_dir), k, iters),
     )
 
 
-def _kmeans_fit(spark, sf_dir, k, iters):
-    # CACHED + session-shared: the seed pick, the count, and every Lloyd
-    # round's update agg re-read this relation; uncached, each re-runs
-    # scan + cast + norm-fold. pq_fit starts from the same handle.
-    return _kmeans_fit_from(_normed_base_cached(spark, sf_dir), k, iters)
-
-
-def _kmeans_fit_from(m, k, iters):
-    """The Lloyd loop over an arbitrary (vec_id, v, nrm) relation —
-    factored out (r12) so the incremental-IVF op can train on a
-    filtered base corpus while the classic fit keeps training on the
-    full table. ``m`` should be cached by the caller: the seed pick,
-    the count and every round's update agg re-read it."""
-    total = m.count()
-    step = max(total // k, 1)
-    # md5-hex-prefix integer, not crc32: engine-portable, so the whole
-    # fit chain can be restated as the DuckDB oracle (_kmeans_cent_sql)
-    hsh = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("kmeans:"), F.col("vec_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint")
-
-    def pick(cand):
-        # orderBy(...).limit(k) -> TakeOrderedAndProject: same first-k-in-
-        # hash-order rows as a row_number window, but a per-partition
-        # bounded-heap merge instead of a single-partition WindowExec
-        # (and no unpartitioned-window warning in every bench run)
-        return cand.orderBy("__h", "vec_id").limit(k).select("v", "nrm").collect()
-
-    seeds = pick(m.withColumn("__h", hsh).filter(F.pmod(F.col("__h"), F.lit(step)) < 2))
-    if len(seeds) < k:
-        # hash slice came up short (binomial shortfall on a tiny corpus):
-        # fall back to hash-ordering everything — only reachable when the
-        # corpus is small enough for that to be cheap
-        seeds = pick(m.withColumn("__h", hsh))
-    centroids = [[x / (r.nrm or 1.0) for x in r.v] for r in seeds]
-
+def _spherical_lloyd(m: DataFrame, k: int, iters: int) -> list[list[float]]:
+    """The spherical k-means loop over a cached (vec_id, v, nrm) relation:
+    kmeans_fit trains on the full table, the incremental-IVF op on its
+    base split. Each round's mean of member unit vectors is renormalized;
+    empty cells keep their previous centroid (standard Lloyd fallback)."""
+    centroids = hash_seeds(m, "kmeans:", k)
     for _ in range(iters):
-        cell = _argmax_cell_expr(centroids)
-        # mean of unit vectors: posexplode v alongside the scalar nrm and
-        # sum x/nrm — the division is scalar-per-exploded-row, never
-        # inside an array lambda
-        sums = (
-            m.select(cell.alias("cell"), "nrm", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cell", "dim")
-            # DECIMAL-exact (rule 1): the iterate is then order- and
-            # parallelism-invariant — what lets the fit chain be stated
-            # as a DuckDB oracle, and what MLlib's float treeAggregate
-            # cannot promise (the old rows-only excuse)
-            .agg(
-                F.sum((F.col("x") / F.col("nrm")).cast("decimal(38,28)"))
-                .cast("double")
-                .alias("s")
-            )
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "s"))),
-                    lambda st: st.getField("s"),
-                ).alias("vsum")
-            )
-            .collect()
-        )
-        new: dict[int, list[float]] = {}
-        for r in sums:
-            vec = r.vsum
-            nrm = sum(x * x for x in vec) ** 0.5 or 1.0
-            new[r.cell] = [x / nrm for x in vec]
-        # empty cells keep their previous centroid (standard Lloyd fallback)
-        centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
+        sums = lloyd_round(m, _argmax_cell_expr(centroids))
+        new = {cell: _unit(vsum) for (cell,), (vsum, _) in sums.items()}
+        centroids = [new.get(i, c) for i, c in enumerate(centroids)]
     return centroids
+
+
+def _unit(vec: list[float]) -> list[float]:
+    nrm = sum(x * x for x in vec) ** 0.5 or 1.0
+    return [x / nrm for x in vec]
 
 
 def _kmeans_cent_sql(k: int = _KM_K, iters: int = _KM_ITERS,
@@ -313,7 +244,7 @@ def ext_kmeans_centroids(spark, sf_dir):
     Lloyd round count unrolls into the _kmeans_cent_sql oracle chain;
     cluster-quality invariants are asserted in tests/test_vectors2.py."""
     centroids = kmeans_fit(spark, sf_dir)
-    m = _normed_embeddings(spark, sf_dir)
+    m = _prepped_embeddings(spark, sf_dir)
     cell = _argmax_cell_expr(centroids)
     # cosine to own centroid = max dot / row norm (centroids are unit)
     sim_to_own = F.expr(f"array_max({_dots_sql(centroids)})") / F.col("nrm")
@@ -370,7 +301,7 @@ def ext_semantic_dedup(spark, sf_dir):
     construction (every flagged pair is exactly scored); recall is bounded
     by cell purity and asserted in tests/test_vectors2.py."""
     centroids = kmeans_fit(spark, sf_dir)
-    m = _normed_embeddings(spark, sf_dir).select(
+    m = _prepped_embeddings(spark, sf_dir).select(
         "vec_id", "label", "v", "nrm", _argmax_cell_expr(centroids).alias("cluster_id")
     )
     a = m.select(
@@ -430,13 +361,7 @@ _IVFD_DUCK_DELTA = (
 
 
 def _ivfd_delta_col() -> F.Column:
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ivfd:"), F.col("vec_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_int("ivfd:", F.col("vec_id").cast("string"))
     return F.pmod(h, F.lit(_IVFD_MOD)) == 0
 
 
@@ -505,8 +430,6 @@ def ext_ivf_delta_maintenance(spark, sf_dir):
     ext_kmeans_centroids (hash-green there since r10). Reference
     parity: [E] extension (BASELINE north-star similarity-search
     family); no reference twin."""
-    from habits_etl_spark.plans.common import memo_fit, shared_cache
-
     m = _normed_base_cached(spark, sf_dir)
     base = shared_cache(
         spark,
@@ -515,7 +438,7 @@ def ext_ivf_delta_maintenance(spark, sf_dir):
     )
     cents = memo_fit(
         ("ivf_delta_fit", sf_dir, _KM_K, _KM_ITERS),
-        lambda: _kmeans_fit_from(base, _KM_K, _KM_ITERS),
+        lambda: _spherical_lloyd(base, _KM_K, _KM_ITERS),
     )
     dots = F.expr(_dots_sql(cents))
     assigned = (

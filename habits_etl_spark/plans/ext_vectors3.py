@@ -34,18 +34,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.common import query, t
-from habits_etl_spark.plans.ext_vectors import _DIM, _N_QUERIES, _TOP_K
+from habits_etl_spark.operators.lloyd import hash_seeds, lloyd_round
+from habits_etl_spark.plans.common import memo_fit, query, shared_cache, t
+from habits_etl_spark.plans.ext_vectors import (
+    _DIM,
+    _N_QUERIES,
+    _TOP_K,
+    _prepped_embeddings,
+)
+from habits_etl_spark.plans.ext_vectors2 import (
+    _KM_ITERS,
+    _argmax_cell_expr,
+    _kmeans_cent_sql,
+    _lit_array_sql,
+    _normed_base_cached,
+    kmeans_fit,
+)
 
 _PQ_M = 8  # subspaces
 _PQ_DSUB = _DIM // _PQ_M
 _PQ_K = 16  # codebook entries per subspace (4-bit codes)
 _PQ_RERANK = 64  # ADC shortlist size fed to the exact re-rank stage
 _PQ_ITERS = 3
-
-
-def _lit_arr(vals) -> str:
-    return "array(" + ", ".join(f"{x!r}D" for x in vals) + ")"
 
 
 def _sub_slice(m: int, vcol: str = "v", dsub: int = _PQ_DSUB) -> str:
@@ -56,7 +66,7 @@ def _sub_slice(m: int, vcol: str = "v", dsub: int = _PQ_DSUB) -> str:
 def _cb_lit(codebooks) -> str:
     """The full codebook as ONE m_sub x k x dsub literal matrix."""
     return "array(" + ", ".join(
-        "array(" + ", ".join(_lit_arr(c) for c in cb_m) + ")" for cb_m in codebooks
+        "array(" + ", ".join(_lit_array_sql(c) for c in cb_m) + ")" for cb_m in codebooks
     ) + ")"
 
 
@@ -107,22 +117,20 @@ def pq_fit(
     ALL subspaces in one job per iteration. Returns codebooks[m][code] ->
     dsub floats (trained on unit-normalized vectors).
 
-    Shape per iteration: one pure-map assignment (codebook literals ride
-    into the task, per subspace a CASE over sub_id), then ONE hash-
-    aggregate keyed (sub_id, cell, dim) with map-side partials over the
-    posexploded subvectors, then an M x k x dsub collect — bounded driver
-    traffic (4 KB here) regardless of corpus size. Init is the
-    deterministic md5-hash-order row pick kmeans_fit uses; at 100 TB,
-    train on a hash sample and map-assign everything (same argument as
-    kmeans_fit's docstring).
+    Seeds and rounds come from operators/lloyd.py, the kernel kmeans_fit
+    also runs: init is hash_seeds with salt ``"pq:"`` (k unit vectors,
+    each sliced into its M subvectors); each lloyd_round, keyed by
+    sub_id, is one pure-map assignment (the codebook matrix rides into
+    the task as a literal, see _scores_matrix_sql), ONE decimal-exact
+    (sub_id, cell, dim) aggregate and an M x k x dsub collect — bounded
+    driver traffic (4 KB here) regardless of corpus size. A codeword is
+    the plain mean of its members' unit subvectors.
 
     MEMOIZED per (sf_dir, m_sub, k, iters), like kmeans_fit: the fit is
     a deterministic pure function of the parquet input, and all three PQ
     queries (codes / flat topk / IVFPQ) compose the same codebooks — the
     r10 bench paid the identical 3-round training once per query per
     repetition, which made ext_ivfpq_topk the slowest registered id."""
-    from habits_etl_spark.plans.common import memo_fit
-
     return memo_fit(
         ("pq_fit", sf_dir, m_sub, k, iters),
         lambda: _pq_fit(spark, sf_dir, m_sub, k, iters),
@@ -130,45 +138,18 @@ def pq_fit(
 
 
 def _pq_fit(spark, sf_dir, m_sub, k, iters):
-    from habits_etl_spark.plans.ext_vectors2 import _normed_base_cached
-
     dsub = _DIM // m_sub
     base = _normed_base_cached(spark, sf_dir)
-    total = base.count()
-    step = max(total // k, 1)
-    # md5-prefix integer, not crc32: engine-portable so the fit chain can
-    # be restated as the DuckDB oracle (_pq_codebook_sql)
-    hsh = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("pq:"), F.col("vec_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint")
-
-    def pick(cand):
-        # TakeOrderedAndProject pick (see ext_vectors2.kmeans seeding):
-        # same rows as the old row_number window, no unpartitioned
-        # WindowExec warning, bounded-heap merge instead of 1-partition sort
-        return cand.orderBy("__h", "vec_id").limit(k).select("v", "nrm").collect()
-
-    seeds = pick(base.withColumn("__h", hsh).filter(F.pmod(F.col("__h"), F.lit(step)) < 2))
-    if len(seeds) < k:
-        seeds = pick(base.withColumn("__h", hsh))
-    unit_seeds = [[x / (r.nrm or 1.0) for x in r.v] for r in seeds]
-    codebooks = [
-        [u[m * dsub : (m + 1) * dsub] for u in unit_seeds] for m in range(m_sub)
-    ]
+    seeds = hash_seeds(base, "pq:", k)
+    codebooks = [[u[m * dsub : (m + 1) * dsub] for u in seeds] for m in range(m_sub)]
 
     # (vec_id, sub_id, sv_raw, nrm): one row per subspace per vector. The
-    # subvector stays RAW here; the exploded element is divided by the
-    # scalar nrm AFTER posexplode (scalar context, no lambda). CACHED and
+    # subvector stays RAW here; lloyd_round divides each exploded element
+    # by the scalar nrm (scalar context, no lambda). CACHED and
     # session-shared: every Lloyd round's update agg re-reads this
     # relation, and without the cache each round re-runs the scan +
     # slice + explode lineage (r10: the PQ queries were the bench's
     # slowest ids mostly on this).
-    from habits_etl_spark.plans.common import shared_cache
-
     subs = shared_cache(
         spark,
         f"pq_fit/subs::{sf_dir}::{m_sub}",
@@ -187,31 +168,10 @@ def _pq_fit(spark, sf_dir, m_sub, k, iters):
 
     for _ in range(iters):
         cell = F.expr(_argmax_code_sql(codebooks, "sv", "sub_id")).cast("int")
-        sums = (
-            subs.select("sub_id", "nrm", cell.alias("cell"), F.posexplode("sv").alias("dim", "x"))
-            .groupBy("sub_id", "cell", "dim")
-            # DECIMAL-exact numerators (rule 1): the iterate is order- and
-            # parallelism-invariant, which is what lets the fit chain be a
-            # DuckDB oracle (same move as kmeans_fit / pagerank in r10)
-            .agg(
-                F.sum((F.col("x") / F.col("nrm")).cast("decimal(38,28)"))
-                .cast("double")
-                .alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .groupBy("sub_id", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "s"))),
-                    lambda st: st.getField("s"),
-                ).alias("vsum"),
-                F.first("n").alias("n"),
-            )
-            .collect()
-        )
-        new: dict[tuple[int, int], list[float]] = {}
-        for r in sums:
-            new[(r.sub_id, r.cell)] = [x / r.n for x in r.vsum]
+        sums = lloyd_round(subs, cell, vec="sv", keys=("sub_id",))
+        # codeword = plain mean of the members' unit subvectors; empty
+        # cells keep their previous codeword
+        new = {key: [x / n for x in vsum] for key, (vsum, n) in sums.items()}
         codebooks = [
             [new.get((m, c), codebooks[m][c]) for c in range(k)] for m in range(m_sub)
         ]
@@ -373,10 +333,8 @@ def ext_pq_codes(spark, sf_dir):
     single map over the scan; nothing shuffles but the output ORDER BY
     (which an index writer drops in favor of writing codes next to the
     source partition)."""
-    from habits_etl_spark.plans.ext_vectors2 import _normed_embeddings
-
     codebooks = pq_fit(spark, sf_dir)
-    base = _normed_embeddings(spark, sf_dir)
+    base = _prepped_embeddings(spark, sf_dir)
     coded = _with_codes(base, codebooks)
     recon = _recon_err_expr(codebooks)
     return coded.select(
@@ -455,7 +413,7 @@ def _adc_tables(units, codebooks):
 def _adc_dist_sql(tab) -> str:
     """sum_m element_at(T_m, codes[m]+1) — the whole per-row ADC cost."""
     return " + ".join(
-        f"element_at({_lit_arr(tab[m])}, codes[{m}] + 1)" for m in range(len(tab))
+        f"element_at({_lit_array_sql(tab[m])}, codes[{m}] + 1)" for m in range(len(tab))
     )
 
 
@@ -481,7 +439,7 @@ def _rerank_exact(shortlist: DataFrame, base: DataFrame, units) -> DataFrame:
     qcos = None
     for qid, u in sorted(units.items()):
         dot = (
-            f"aggregate(zip_with(v, {_lit_arr(u)}, (x, y) -> x * y),"
+            f"aggregate(zip_with(v, {_lit_array_sql(u)}, (x, y) -> x * y),"
             " 0.0D, (acc, x) -> acc + x) / nrm"
         )
         e = F.expr(dot)
@@ -589,10 +547,8 @@ def pq_topk(spark, sf_dir, m_sub: int = _PQ_M, k: int = _PQ_K) -> DataFrame:
     _adc_tables (all derive shapes from the codebooks), not a code path,
     which is what makes ext_pq_topk_retuned (ext_vectors4) a literal
     change. Called with defaults this IS ext_pq_topk's plan."""
-    from habits_etl_spark.plans.ext_vectors2 import _normed_embeddings
-
     codebooks = pq_fit(spark, sf_dir, m_sub=m_sub, k=k)
-    base = _normed_embeddings(spark, sf_dir)
+    base = _prepped_embeddings(spark, sf_dir)
     coded = _with_codes(base, codebooks).select("vec_id", "codes")
 
     units = _query_units(base)
@@ -626,8 +582,6 @@ def _ivfpq_oracle_sql() -> str:
     cell ASC), and the ADC scan is restricted to rows whose coarse cell
     one of the probing queries selected — exactly the Spark plan's
     null-filtered arm semantics."""
-    from habits_etl_spark.plans.ext_vectors2 import _KM_ITERS, _kmeans_cent_sql
-
     probes = f"""probes AS MATERIALIZED (
       SELECT query_id, cell FROM (
         SELECT q.query_id, c.cell,
@@ -676,15 +630,9 @@ def ext_ivfpq_topk(spark, sf_dir):
 
     Recall against the exact scan is asserted in tests/test_vectors3.py
     (losses come from cell misses + quantization, bounded there)."""
-    from habits_etl_spark.plans.ext_vectors2 import (
-        _argmax_cell_expr,
-        _normed_embeddings,
-        kmeans_fit,
-    )
-
     centroids = kmeans_fit(spark, sf_dir)
     codebooks = pq_fit(spark, sf_dir)
-    base = _normed_embeddings(spark, sf_dir)
+    base = _prepped_embeddings(spark, sf_dir)
     coded = (
         _with_codes(base, codebooks)
         .withColumn("cell", _argmax_cell_expr(centroids))

@@ -420,7 +420,6 @@ def ext_pq_layout_sim(spark, sf_dir):
     scoped per layout), aggregated over the SAME rounded per-vector
     error grain ext_pq_codes' hash already proves portable. Reference
     parity: [E] extension; no reference twin."""
-    from habits_etl_spark.plans.ext_vectors2 import _normed_embeddings
     from habits_etl_spark.plans.ext_vectors3 import (
         _PQ_K,
         _recon_err_expr,
@@ -428,7 +427,7 @@ def ext_pq_layout_sim(spark, sf_dir):
         pq_fit,
     )
 
-    base = _normed_embeddings(spark, sf_dir)
+    base = _prepped_embeddings(spark, sf_dir)
     reports = []
     for m_sub in _PQ_SIM_LAYOUTS:
         codebooks = pq_fit(spark, sf_dir, m_sub=m_sub)

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.operators.approx_rank import with_approx_ntile
 from habits_etl_spark.operators.distrank import with_global_ntile_by_selection
 from habits_etl_spark.plans.common import dec, managed_cache, query, t
@@ -422,12 +423,7 @@ def ext_hashed_features(spark, sf_dir):
         F.lit(":"),
         F.coalesce(F.get_json_object("props", "$.k"), F.lit("")),
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(_FH_SALT), feat)), 1, 8), 16, 10
-        ).cast("bigint")
-        % _FH_BUCKETS
-    )
+    bucket = md5_int(_FH_SALT, feat) % _FH_BUCKETS
     return (
         ev.select(feat.alias("feat"), bucket.alias("bucket"))
         .groupBy("bucket")

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.plans.common import dec, query, t
 
 # --- k-anonymity audit -------------------------------------------------------
@@ -203,14 +204,7 @@ def ext_dp_noisy_counts(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
     unif = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(_DP_SALT), F.col("event_type"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        + 0.5
+        md5_int(_DP_SALT, F.col("event_type"), hex_digits=12) + 0.5
     ) / 281474976710656.0
     lap = (-1.0 / _DP_EPSILON) * F.when(
         F.col("unif") < 0.5, -F.log(2.0 * F.col("unif"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.hashing import md5_int
 from habits_etl_spark.operators.distrank import (
     bounded_running_sum,
     with_global_ntile_by_selection,
@@ -158,22 +159,13 @@ def agg_poisson_bootstrap_ci(spark, sf_dir):
     )
     reps = x.sparkSession.range(_BOOT_B).select(F.col("id").alias("rep"))
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(_BOOT_SALT),
-                        F.col("event_id").cast("string"),
-                        F.lit(":"),
-                        F.col("rep").cast("string"),
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(
+            _BOOT_SALT,
+            F.col("event_id").cast("string"),
+            ":",
+            F.col("rep").cast("string"),
+            hex_digits=12,
+        )
         + 0.5
     ) / 281474976710656.0
     w = (

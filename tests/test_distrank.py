@@ -228,22 +228,24 @@ def test_group_position_empty_and_cell_guard(spark):
 def test_running_agg_multi_column_matches_chained(spark):
     rows = [(i, i % 7, (i * 3) % 5) for i in range(60)]
     df = spark.createDataFrame(rows, "id int, a int, b int")
-    got = with_global_running_agg(
-        df, ["id"], {"ca": "a", "cb": "b"}, nparts=5
-    )
     w = (
         Window.partitionBy(F.lit(0))
         .orderBy("id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    want = df.select(
-        "id",
-        "a",
-        "b",
-        F.sum("a").over(w).alias("ca"),
-        F.sum("b").over(w).alias("cb"),
-    )
-    assert _collect_sorted(got, "id") == _collect_sorted(want, "id")
+    # the second input carries a user column named like the operator's
+    # old inline scratch names: it must pass through untouched
+    for inp in (df, df.withColumn("__rloc0", F.col("id") * 10)):
+        got = with_global_running_agg(
+            inp, ["id"], {"ca": "a", "cb": "b"}, nparts=5
+        )
+        want = inp.select(
+            "*",
+            F.sum("a").over(w).alias("ca"),
+            F.sum("b").over(w).alias("cb"),
+        )
+        assert got.columns == want.columns
+        assert _collect_sorted(got, "id") == _collect_sorted(want, "id")
 
 
 def test_no_unpartitioned_window_in_plan(spark, sf_dir):

@@ -187,3 +187,54 @@ def test_upsert_keyed_duplicate_incoming_fans_out(spark):
     out = upsert_keyed(existing, incoming, ["k"], ["v"], ["notes"])
     rows = sorted((r.k, r.v, r.notes) for r in out.collect())
     assert rows == [("k1", "a", "keep"), ("k1", "b", "keep")]
+
+
+def test_crash_after_landing_then_rerun_matches_clean_run(spark, tmp_path, monkeypatch):
+    """Crash-and-rerun (the CronJob restarts a failed run on the same
+    drop): a run that dies after land_raw and before the merge, re-run
+    unpatched, leaves both tables equal to a clean two-drop run's."""
+    import os
+
+    import habits_etl_spark.pipeline as pipeline
+
+    drop1 = wide(
+        spark,
+        [
+            ("08/20/2025", "a@x.com", "Yes", "8", "first"),
+            ("08/20/2025", "b@x.com", "No", "3", None),
+        ],
+    )
+    drop2 = wide(
+        spark,
+        [
+            ("08/20/2025", "a@x.com", "No", "2", None),  # upsert an existing key
+            ("08/21/2025", "b@x.com", "Yes", "7", "second"),
+        ],
+    )
+
+    def raw(wh):
+        # ingested_at is the landing wall clock, so it differs run to run
+        df = spark.read.parquet(os.path.join(wh, "habits_raw"))
+        return sorted((r.row_hash, r.payload) for r in df.collect())
+
+    clean = str(tmp_path / "clean")
+    run_ingest(spark, drop1, CFG, clean)
+    run_ingest(spark, drop2, CFG, clean)
+
+    crashed = str(tmp_path / "crashed")
+    run_ingest(spark, drop1, CFG, crashed)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("crash between landing and merge")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "upsert_keyed", boom)
+        with pytest.raises(RuntimeError, match="between landing and merge"):
+            run_ingest(spark, drop2, CFG, crashed)
+    # the crashed run landed drop2's payloads but merged nothing
+    assert len(raw(crashed)) == len(raw(clean))
+    assert snapshot(spark, crashed) != snapshot(spark, clean)
+
+    run_ingest(spark, drop2, CFG, crashed)
+    assert snapshot(spark, crashed) == snapshot(spark, clean)
+    assert raw(crashed) == raw(clean)

@@ -3,14 +3,19 @@ cosine-pairs op, and recall through the cluster partition."""
 
 from __future__ import annotations
 
+import hashlib
+import math
+
 from pyspark.sql import functions as F
 
+from habits_etl_spark.operators.lloyd import hash_seeds
+
 from habits_etl_spark.plans.common import QUERIES
+from habits_etl_spark.plans.ext_vectors import _prepped_embeddings
 from habits_etl_spark.plans.ext_vectors2 import (
     _SEM_THRESHOLD,
     _argmax_cell_expr,
     _dots_sql,
-    _normed_embeddings,
     ext_kmeans_centroids,
     ext_semantic_dedup,
     kmeans_fit,
@@ -19,7 +24,7 @@ from habits_etl_spark.plans.ext_vectors2 import (
 
 def _objective(spark, sf_dir, centroids):
     """Spherical k-means objective: total member-to-own-centroid cosine."""
-    m = _normed_embeddings(spark, sf_dir)
+    m = _prepped_embeddings(spark, sf_dir)
     sim = F.expr(f"array_max({_dots_sql(centroids)})") / F.col("nrm")
     return m.select(F.sum(sim).alias("obj")).collect()[0].obj
 
@@ -32,7 +37,7 @@ def test_lloyd_iterations_improve_objective(spark, sf_dir):
 
 def test_kmeans_centroids_partition(spark, sf_dir):
     rows = ext_kmeans_centroids(spark, sf_dir).collect()
-    total = _normed_embeddings(spark, sf_dir).count()
+    total = _prepped_embeddings(spark, sf_dir).count()
     assert sum(r.n_members for r in rows) == total  # every vector in one cell
     for r in rows:
         assert -1.0 <= r.mean_cos_to_centroid <= 1.0
@@ -76,7 +81,7 @@ def test_assignment_is_shuffle_free(spark, sf_dir):
     """The per-vector cell assignment must be a pure map: centroids ride
     as plan literals, so the plan has no join/exchange below the scan."""
     centroids = kmeans_fit(spark, sf_dir, iters=0)
-    m = _normed_embeddings(spark, sf_dir).select(
+    m = _prepped_embeddings(spark, sf_dir).select(
         "vec_id", _argmax_cell_expr(centroids).alias("cell")
     )
     plan = m._jdf.queryExecution().executedPlan().toString()
@@ -111,3 +116,43 @@ def test_ivf_delta_maintenance_report_is_consistent(spark, sf_dir):
             r.cos_drift is not None and r.cos_drift <= -0.05
         )
         assert r.refit == want_refit, r
+
+
+def _md5_prefix(salt, vec_id):
+    return int(hashlib.md5(f"{salt}{vec_id}".encode()).hexdigest()[:8], 16)
+
+
+def test_hash_seeds_slice_and_shortfall_paths(spark):
+    """The kernel's seed pick on a small in-memory relation, both paths,
+    against Python's hashlib: the first k rows by (md5-prefix int,
+    vec_id), taken from the 2-in-step hash slice when it holds k rows
+    and from the whole relation when it comes up short."""
+    salt = "kmeans:"
+
+    def h(i):
+        return _md5_prefix(salt, i)
+
+    def rel(ids):
+        rows = [(i, [float(i), 1.0], math.sqrt(i * i + 1.0)) for i in ids]
+        return spark.createDataFrame(rows, "vec_id bigint, v array<double>, nrm double")
+
+    def unit(i):
+        n = math.sqrt(i * i + 1.0)
+        return [float(i) / n, 1.0 / n]
+
+    # slice path: 200 rows, k = 8 -> step 25, ~16 rows in the slice
+    ids, k = list(range(200)), 8
+    sliced = sorted((h(i), i) for i in ids if h(i) % (len(ids) // k) < 2)
+    assert len(sliced) >= k
+    want = [i for _, i in sliced[:k]]
+    assert want != [i for _, i in sorted((h(i), i) for i in ids)[:k]]
+    assert hash_seeds(rel(ids), salt, k) == [unit(i) for i in want]
+
+    # shortfall path: 12 rows, k = 4 -> step 3, built so only 3 rows land
+    # in the slice (h % 3 < 2); the pick must widen to all 12
+    near = [i for i in range(1000) if h(i) % 3 < 2][:3]
+    far = [i for i in range(1000) if h(i) % 3 == 2][:9]
+    ids, k = near + far, 4
+    want = [i for _, i in sorted((h(i), i) for i in ids)[:k]]
+    assert not set(want) <= set(near)  # the widened pick reaches past the slice
+    assert hash_seeds(rel(ids), salt, k) == [unit(i) for i in want]

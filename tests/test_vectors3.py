@@ -124,10 +124,10 @@ def test_ivf_cell_layout_prunes_partitions(spark, sf_dir, tmp_path):
     becomes partition pruning — non-probed cells are never read."""
     from pyspark.sql import functions as F
 
+    from habits_etl_spark.plans.ext_vectors import _prepped_embeddings
     from habits_etl_spark.plans.ext_vectors2 import _argmax_cell_expr
-    from habits_etl_spark.plans.ext_vectors2 import _normed_embeddings
 
-    base = _normed_embeddings(spark, sf_dir)
+    base = _prepped_embeddings(spark, sf_dir)
     # deterministic one-hot "centroids": real assignment expression, no
     # training job needed for a layout test
     cents = [[1.0 if i == m * 16 else 0.0 for i in range(64)] for m in range(4)]
