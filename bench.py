@@ -456,7 +456,7 @@ def main():
     # a small thread pool. Methodology is unchanged: same queries, same
     # warmup SF, same swallow-and-continue, and nothing in the timed
     # section starts until every warmup job has finished. The stream_*
-    # ids stay SERIAL: their _pinned_state_partitions context manager
+    # ids stay SERIAL: their shared run loop (streaming_e2e._run_drops)
     # pins/restores the session-wide shuffle-partition conf, and two
     # concurrent pinners could race the restore and leak the pin into
     # the timed section; the restore below is belt-and-braces for that.

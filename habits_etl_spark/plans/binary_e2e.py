@@ -20,12 +20,10 @@ commits over directory listings in the first place.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.common import query, t
+from habits_etl_spark.plans.common import query, scratch_result, t
 from habits_etl_spark.sinks import manifest as M
 
 # Fixture construction shared (by value) with the oracle below: payload =
@@ -86,8 +84,8 @@ def src_binaryfile_scan(spark, sf_dir):
         .select("doc_id", "text")
         .collect()
     )  # bounded fixture set ({_N_BIN_DOCS} rows) — driver-side by design
-    tmp = tempfile.mkdtemp(prefix="binaryfile_e2e_")
-    try:
+
+    def build(tmp):
         for r in docs:
             body = r.text.encode("utf-8")
             if r.doc_id % 3 == 0:
@@ -97,7 +95,7 @@ def src_binaryfile_scan(spark, sf_dir):
             with open(os.path.join(tmp, f"doc_{r.doc_id:04d}.bin"), "wb") as f:
                 f.write(body)
         scanned = spark.read.format("binaryFile").load(tmp)
-        out = (
+        return (
             sniff_mime(scanned, "content")
             .select(
                 F.substring_index("path", "/", -1).alias("file_name"),
@@ -107,10 +105,8 @@ def src_binaryfile_scan(spark, sf_dir):
             )
             .orderBy("file_name")
         )
-        rows = out.collect()  # materialize before the fixtures vanish
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return scratch_result(spark, "binaryfile_e2e_", build)
 
 
 @query(
@@ -154,10 +150,9 @@ def sink_manifest_time_travel(spark, sf_dir):
     the historical read plans from that immutable file list exactly
     like a current read (no directory listing, no tombstone replay)."""
     e = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "value")
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="manifest_tt_"), "events_tt"
-    )
-    try:
+
+    def build(tmp):
+        table = os.path.join(tmp, "events_tt")
         M.overwrite_snapshot(spark, e.filter(F.col("user_id") % 5 == 0), table)
         M.append_snapshot(spark, e.filter(F.col("user_id") % 5 == 1), table)
         M.overwrite_snapshot(spark, e.filter(F.col("user_id") % 5 == 2), table)
@@ -175,8 +170,6 @@ def sink_manifest_time_travel(spark, sf_dir):
                     F.lit(v).cast("int").alias("version"), "n_rows", "sum_value"
                 )
             )
-        out = parts[0].unionByName(parts[1]).unionByName(parts[2]).orderBy("version")
-        rows = out.collect()  # materialize before the temp table is deleted
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(os.path.dirname(table), ignore_errors=True)
+        return parts[0].unionByName(parts[1]).unionByName(parts[2]).orderBy("version")
+
+    return scratch_result(spark, "manifest_tt_", build)

@@ -22,6 +22,8 @@ DuckDB oracle at sf0.01):
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import threading
 from typing import Callable
 
@@ -184,6 +186,22 @@ def memo_fit(key: tuple, builder: Callable[[], object]):
         # race (values are plain Python data, so the loser's result is
         # simply garbage-collected)
         return _FIT_MEMO.setdefault(key, val)
+
+
+def scratch_result(
+    spark: SparkSession, prefix: str, build: Callable[[str], DataFrame]
+) -> DataFrame:
+    """Run ``build(tmp)`` in a fresh temp directory named ``prefix*`` and
+    return its result as an in-memory DataFrame. The round-trip ids write
+    files there and read them back, so the (small) result is collected
+    before the directory goes; the directory is removed even when the
+    build or the collect fails."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        out = build(tmp)
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def fmt_ts(c: Column) -> Column:

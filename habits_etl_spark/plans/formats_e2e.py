@@ -12,29 +12,17 @@ doubles).
 Scale: both writers/readers are ordinary distributed jobs (one file per
 partition, no driver funnel); only the |groups|-row final aggregate is
 collected so the temp directory can be cleaned up deterministically
-(same lifecycle pattern as plans/manifest_e2e.py).
+(plans/common.scratch_result, shared with plans/manifest_e2e.py).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from habits_etl_spark.plans.common import query, sql_dsum, t
-
-
-def _finish(spark, out, tmp):
-    """Materialize the small result before removing the temp files it
-    still references, then hand back an in-memory DataFrame."""
-    try:
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+from habits_etl_spark.plans.common import query, scratch_result, sql_dsum, t
 
 
 @query(
@@ -63,21 +51,23 @@ def src_jsonl_roundtrip(spark, sf_dir):
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    tmp = tempfile.mkdtemp(prefix="jsonl_e2e_")
-    path = os.path.join(tmp, "documents_jsonl")
-    t(spark, sf_dir, "documents").write.mode("overwrite").json(path)
-    back = spark.read.schema(schema).json(path)
-    out = (
-        back.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("sum_chars"),
-            F.countDistinct("source").cast("bigint").alias("n_sources"),
-            F.sum(F.length("text")).cast("bigint").alias("sum_text_len"),
+
+    def build(tmp):
+        path = os.path.join(tmp, "documents_jsonl")
+        t(spark, sf_dir, "documents").write.mode("overwrite").json(path)
+        back = spark.read.schema(schema).json(path)
+        return (
+            back.groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                F.sum("n_chars").cast("bigint").alias("sum_chars"),
+                F.countDistinct("source").cast("bigint").alias("n_sources"),
+                F.sum(F.length("text")).cast("bigint").alias("sum_text_len"),
+            )
+            .orderBy("lang")
         )
-        .orderBy("lang")
-    )
-    return _finish(spark, out, tmp)
+
+    return scratch_result(spark, "jsonl_e2e_", build)
 
 
 @query(
@@ -97,23 +87,25 @@ def src_orc_roundtrip(spark, sf_dir):
     ORC is Spark's second built-in columnar format (Hive lineage); the
     timestamp extrema make the hash gate sensitive to any precision
     loss in the conversion."""
-    tmp = tempfile.mkdtemp(prefix="orc_e2e_")
-    path = os.path.join(tmp, "events_orc")
-    t(spark, sf_dir, "events").write.mode("overwrite").orc(path)
-    back = spark.read.orc(path)
-    out = (
-        back.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("sum_value"),
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("min_ts_s"),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("max_ts_s"),
+
+    def build(tmp):
+        path = os.path.join(tmp, "events_orc")
+        t(spark, sf_dir, "events").write.mode("overwrite").orc(path)
+        back = spark.read.orc(path)
+        return (
+            back.groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
+                ).alias("sum_value"),
+                F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("min_ts_s"),
+                F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("max_ts_s"),
+            )
+            .orderBy("event_type")
         )
-        .orderBy("event_type")
-    )
-    return _finish(spark, out, tmp)
+
+    return scratch_result(spark, "orc_e2e_", build)
 
 
 @query(
@@ -179,18 +171,6 @@ def src_csv_malformed_audit(spark, sf_dir):
         .when(F.col("event_id") % 19 == 0, F.concat(full, F.lit(",extra")))
         .otherwise(full)
     )
-    tmp = tempfile.mkdtemp(prefix="csv_audit_")
-    path = os.path.join(tmp, "events_csv")
-    e.select(line.alias("value")).write.mode("overwrite").text(path)
-    back = (
-        spark.read.schema(
-            "event_id long, event_type string, user_id long, cents long, "
-            "_corrupt string"
-        )
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(path)
-    )
     n_commas = F.length("_corrupt") - F.length(
         F.regexp_replace("_corrupt", ",", "")
     )
@@ -200,32 +180,46 @@ def src_csv_malformed_audit(spark, sf_dir):
         .when(n_commas == 4, "too_many")
         .otherwise("bad_field")
     )
-    out = (
-        back.select(
-            "event_type", "event_id", "user_id", "cents", cls.alias("cls")
+
+    def build(tmp):
+        path = os.path.join(tmp, "events_csv")
+        e.select(line.alias("value")).write.mode("overwrite").text(path)
+        back = (
+            spark.read.schema(
+                "event_id long, event_type string, user_id long, cents long, "
+                "_corrupt string"
+            )
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt")
+            .csv(path)
         )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum((F.col("cls") == "valid").cast("int")).cast("bigint").alias("n_valid"),
-            F.sum((F.col("cls") == "too_few").cast("int")).cast("bigint").alias("n_too_few"),
-            F.sum((F.col("cls") == "bad_field").cast("int")).cast("bigint").alias("n_bad_field"),
-            F.sum((F.col("cls") == "too_many").cast("int")).cast("bigint").alias("n_too_many"),
-            F.sum(F.when(F.col("cls") == "valid", F.col("cents")))
-            .cast("bigint")
-            .alias("sum_cents_valid"),
-            # checksum aggregates over event_id/user_id double as the
-            # full-parse forcer: with CSV column pruning, token-count
-            # anomalies are only detected when every data column is
-            # required by the plan
-            F.sum("event_id").cast("bigint").alias("sum_event_id"),
-            F.sum(F.when(F.col("cls") != "valid", F.col("user_id")))
-            .cast("bigint")
-            .alias("sum_user_corrupt"),
+        return (
+            back.select(
+                "event_type", "event_id", "user_id", "cents", cls.alias("cls")
+            )
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                F.sum((F.col("cls") == "valid").cast("int")).cast("bigint").alias("n_valid"),
+                F.sum((F.col("cls") == "too_few").cast("int")).cast("bigint").alias("n_too_few"),
+                F.sum((F.col("cls") == "bad_field").cast("int")).cast("bigint").alias("n_bad_field"),
+                F.sum((F.col("cls") == "too_many").cast("int")).cast("bigint").alias("n_too_many"),
+                F.sum(F.when(F.col("cls") == "valid", F.col("cents")))
+                .cast("bigint")
+                .alias("sum_cents_valid"),
+                # checksum aggregates over event_id/user_id double as the
+                # full-parse forcer: with CSV column pruning, token-count
+                # anomalies are only detected when every data column is
+                # required by the plan
+                F.sum("event_id").cast("bigint").alias("sum_event_id"),
+                F.sum(F.when(F.col("cls") != "valid", F.col("user_id")))
+                .cast("bigint")
+                .alias("sum_user_corrupt"),
+            )
+            .orderBy("event_type")
         )
-        .orderBy("event_type")
-    )
-    return _finish(spark, out, tmp)
+
+    return scratch_result(spark, "csv_audit_", build)
 
 
 @query(
@@ -265,22 +259,24 @@ def src_schema_evolution_scan(spark, sf_dir):
     ev = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value", "event_type"
     )
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
-    path = os.path.join(tmp, "events_evolved")
-    ev.filter(F.col("user_id") % 2 == 0).drop("event_type").write.mode(
-        "overwrite"
-    ).parquet(path)
-    ev.filter(F.col("user_id") % 2 == 1).write.mode("append").parquet(path)
-    back = spark.read.option("mergeSchema", "true").parquet(path)
-    out = (
-        back.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.count("event_type").cast("bigint").alias("n_typed"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("sum_value"),
+
+    def build(tmp):
+        path = os.path.join(tmp, "events_evolved")
+        ev.filter(F.col("user_id") % 2 == 0).drop("event_type").write.mode(
+            "overwrite"
+        ).parquet(path)
+        ev.filter(F.col("user_id") % 2 == 1).write.mode("append").parquet(path)
+        back = spark.read.option("mergeSchema", "true").parquet(path)
+        return (
+            back.groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                F.count("event_type").cast("bigint").alias("n_typed"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
+                ).alias("sum_value"),
+            )
+            .orderBy(F.col("event_type").asc_nulls_first())
         )
-        .orderBy(F.col("event_type").asc_nulls_first())
-    )
-    return _finish(spark, out, tmp)
+
+    return scratch_result(spark, "schema_evo_", build)

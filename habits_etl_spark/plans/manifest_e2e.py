@@ -21,12 +21,10 @@ Batches are carved from ``events`` by deterministic predicates:
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.common import query, sql_dsum, t
+from habits_etl_spark.plans.common import query, scratch_result, sql_dsum, t
 from habits_etl_spark.sinks import manifest as M
 
 
@@ -72,18 +70,13 @@ def sink_manifest_snapshot(spark, sf_dir):
     Scale: each commit writes only its batch's files (append never
     rewrites); the read plans from the manifest file list — no directory
     listing. The aggregate is the standard single hash-agg."""
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="manifest_e2e_"), "events_snapshot"
-    )
-    try:
+
+    def build(tmp):
+        table = os.path.join(tmp, "events_snapshot")
         _snapshot_lifecycle(spark, sf_dir, table)
-        out = _snapshot_agg(M.read_snapshot(spark, table))
-        # materialize before the temp table is deleted (the returned DF
-        # must survive the cleanup below; the result is |event_types| rows)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(os.path.dirname(table), ignore_errors=True)
+        return _snapshot_agg(M.read_snapshot(spark, table))
+
+    return scratch_result(spark, "manifest_e2e_", build)
 
 
 def _snapshot_lifecycle(spark, sf_dir, table):
@@ -168,10 +161,9 @@ def sink_retention_vacuum(spark, sf_dir):
     Delta VACUUM retention contract, sinks/manifest.py:359). Reference
     parity: [E] extension (storage/maintenance family); no reference
     twin."""
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="manifest_vacuum_"), "events_snapshot"
-    )
-    try:
+
+    def build(tmp):
+        table = os.path.join(tmp, "events_snapshot")
         _snapshot_lifecycle(spark, sf_dir, table)
         pre_rows = _snapshot_agg(M.read_snapshot(spark, table)).collect()
         M.vacuum(table, retain_versions=1)
@@ -187,17 +179,15 @@ def sink_retention_vacuum(spark, sf_dir):
         post = _snapshot_agg(M.read_snapshot(spark, table))
         post_rows = post.collect()
         unchanged = [tuple(r) for r in post_rows] == [tuple(r) for r in pre_rows]
-        # post_rows are already local — unlike sink_manifest_snapshot's
-        # lazy read, nothing here depends on the temp table, so the
-        # assembled frame is safe to return directly
+        # built from the collected rows: no second read of the table
         return spark.createDataFrame(post_rows, post.schema).select(
             "*",
             F.lit(versions_after).alias("versions_after"),
             F.lit(v1_gone).alias("v1_time_travel_gone"),
             F.lit(unchanged).alias("current_unchanged"),
         )
-    finally:
-        shutil.rmtree(os.path.dirname(table), ignore_errors=True)
+
+    return scratch_result(spark, "manifest_vacuum_", build)
 
 
 # --- Compaction planner ------------------------------------------------------

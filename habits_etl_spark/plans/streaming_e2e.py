@@ -7,15 +7,17 @@ table back and gate it against the batch SQL the view declares.
 
 This is the data-level check the 11 streaming modules' pytest
 batch-equivalence tests cannot give: the final parquet state after
-  - three cron-style runs (availableNow trigger, ONE shared checkpoint,
-    so runs 2 and 3 are genuine restarts that must skip already-processed
+  - two cron-style runs (availableNow trigger, ONE shared checkpoint,
+    so run 2 is a genuine restart that must skip already-processed
     files),
   - late data (drops are event_id-interleaved, so every run after the
     first delivers rows into day buckets the rollup already
     materialized — the refresh must re-fold them, Timescale's
     invalidation-window recompute),
 must equal the one-shot batch aggregate over all events. Oracle = that
-batch SQL, same shape as agg_daily_rollup.
+batch SQL, same shape as agg_daily_rollup. The other eight stream_*_e2e
+ids drive their operators through the same drop-and-restart loop
+(_run_drops).
 
 Scale: the staged pipeline is the production shape — file-source
 streaming reads scale with new-file count per trigger; the fact table is
@@ -35,8 +37,11 @@ import hashlib
 import os
 import shutil
 import tempfile
+from typing import Callable
 
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from habits_etl_spark.plans.common import (
     TS_FMT_DUCK,
@@ -52,68 +57,127 @@ from habits_etl_spark.session import conf_scope
 # importing it at module scope from inside the plans package would be
 # circular; the query body imports it lazily instead.
 
-_N_DROPS = 3
-
 # Drop count for the ids whose determinism argument is proven by ONE
 # restart (replica-interleave, additive interleave, totally-poisoned
 # drop): two drops exercise the restore path end to end while paying a
 # third less checkpoint I/O — the fixed cost that dominates these
 # witnesses (stores x partitions x restarts). The TIME-CONTIGUOUS ids
-# (funnel, anomaly) keep {_N_DROPS}: their argument is that sequential
-# fold state COMPOSES across splits, which a single interior boundary
-# exercises only once per user history — three drops put two fold
-# boundaries inside every history.
+# (funnel, anomaly) run three drops (_terciles): their argument is that
+# sequential fold state COMPOSES across splits, which a single interior
+# boundary exercises only once per user history — three drops put two
+# fold boundaries inside every history.
 _N_DROPS_ILV = 2
 
-
-def _pinned_state_partitions(spark, n: int = 8):
-    """Pin spark.sql.shuffle.partitions for one e2e run. Every stateful
-    streaming operator keeps one state store PER shuffle partition (a
-    stream-stream join keeps four), and every store snapshots on every
-    micro-batch commit — at the session default (32) the multi-drop e2e
-    pipelines here pay 32-128 stores x 3 restarts of pure checkpoint
-    I/O for fixture-scale inputs. Sizing the state partition count to
-    throughput is the knob a real deployment sets per query; results
-    are partition-count independent, and the count is baked into each
-    run's FRESH checkpoint (_scoped_workdir wipes the previous tree),
-    so the pin never conflicts with restored state.
-
-    Measured floor (r14, closing the r13 verdict's stretch #8 — a shared
-    warm-session harness for the funnel/retention/anomaly trio): an
-    availableNow RESTART with no new files costs 0.1-0.25 s, so the
-    checkpoint-restart machinery is NOT the fixed cost; each ~2 s
-    micro-batch is the stateful Python fold itself plus per-partition
-    state-store I/O, and the pin is already at its optimum (sf0.1 funnel
-    3-drop pipeline: pin 8 = 6.96 s, pin 4 = 7.63 s, pin 2 = 11.43 s).
-    No harness restructuring shaves the trio without weakening the
-    restart semantics the ids exist to witness."""
-    return conf_scope(spark, {"spark.sql.shuffle.partitions": str(n)})
+# State partitions for every e2e run (see _run_drops).
+_STATE_PARTITIONS = 8
 
 
 def _workdir_root() -> str:
     """Prefer a tmpfs root when one exists: the multi-drop pipelines are
     dominated by state-store snapshot + source/sink file I/O across
-    restarts, all of it scratch data _scoped_workdir wipes anyway. A
+    restarts, all of it scratch data _run_drops wipes anyway. A
     real deployment puts checkpoints on durable storage; these
     witnesses verify restart SEMANTICS, not disk durability."""
     return "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
 
-def _scoped_workdir(spark, sf_dir: str, kind: str = "rollup") -> str:
-    """Fresh per-(session, sf_dir, query) staging root; the previous
-    invocation's tree is removed so repeated runs (bench reps, driver
-    retries) never accumulate state or replay a stale checkpoint."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+def _run_drops(
+    spark,
+    sf_dir: str,
+    kind: str,
+    drops: list[dict[str, DataFrame]],
+    start: Callable[[str, str], StreamingQuery],
+) -> str:
+    """The cron loop every stream_*_e2e id runs, returning its workdir.
+
+    The workdir is ``<root>/habits_etl_stream_e2e/<appId>/<kind>/<tag>``
+    with ``tag`` the md5 of ``sf_dir``: fresh per (session, sf_dir,
+    query), and the previous invocation's tree is removed first so
+    repeated runs (bench reps, driver retries) never accumulate state or
+    replay a stale checkpoint. Each drop maps a source subdirectory of
+    the workdir to the DataFrame appended into it (new part files in a
+    watched dir = one cron drop); after each drop ``start(base, ckpt)``
+    runs one availableNow trigger against the ONE shared checkpoint
+    ``<base>/checkpoint``, so every run after the first is a genuine
+    restart.
+
+    Every run pins spark.sql.shuffle.partitions to _STATE_PARTITIONS.
+    Every stateful streaming operator keeps one state store PER shuffle
+    partition (a stream-stream join keeps four), and every store
+    snapshots on every micro-batch commit — at the session default (32)
+    the multi-drop pipelines pay 32-128 stores x each restart of pure
+    checkpoint I/O for fixture-scale inputs. Sizing the state partition
+    count to throughput is the knob a real deployment sets per query;
+    results are partition-count independent, and the count is baked into
+    each run's FRESH checkpoint, so the pin never conflicts with restored
+    state. For the stateless ids (rollup, dq gate) the pin only sets the
+    width of their per-batch merges.
+
+    Measured floor (r14): an availableNow RESTART with no new files
+    costs 0.1-0.25 s, so the checkpoint-restart machinery is NOT the
+    fixed cost; each ~2 s micro-batch is the stateful Python fold itself
+    plus per-partition state-store I/O, and the pin is at its optimum
+    (sf0.1 funnel 3-drop pipeline: pin 8 = 6.96 s, pin 4 = 7.63 s,
+    pin 2 = 11.43 s)."""
     base = os.path.join(
         _workdir_root(),
         "habits_etl_stream_e2e",
         spark.sparkContext.applicationId,
         kind,
-        tag,
+        hashlib.md5(sf_dir.encode()).hexdigest()[:10],
     )
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
+    ckpt = os.path.join(base, "checkpoint")
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": str(_STATE_PARTITIONS)}):
+        for drop in drops:
+            for sub, df in drop.items():
+                df.coalesce(2).write.mode("append").parquet(os.path.join(base, sub))
+            start(base, ckpt).awaitTermination()
     return base
+
+
+def _interleave(df: DataFrame, key: Column, n: int) -> list[DataFrame]:
+    """Split ``df`` into ``n`` drops by ``pmod(key, n)``: every drop
+    carries rows of every user and day, so each run after the first is
+    late data for buckets the stream has already emitted."""
+    return [df.filter(F.pmod(key, F.lit(n)) == i) for i in range(n)]
+
+
+def _terciles(df: DataFrame) -> list[DataFrame]:
+    """Split ``df`` into three TIME-CONTIGUOUS drops at the approximate
+    event-time terciles of its ``ts`` column. Any time-contiguous split
+    is exact for the sequential folds that use it, so approximate
+    boundaries suffice; the boundaries cost one bounded 2-value
+    percentile job, never a sort of the corpus."""
+    et = F.unix_micros("ts")
+    b1, b2 = df.select(F.percentile_approx(et, [1.0 / 3, 2.0 / 3])).first()[0]
+    return [df.filter(et <= b1), df.filter((et > b1) & (et <= b2)), df.filter(et > b2)]
+
+
+def _epoch_sink(path: str):
+    """foreachBatch writer: append each micro-batch to ``path`` tagged
+    with its batch id as ``epoch``."""
+
+    def write(df, epoch_id):
+        df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(path)
+
+    return write
+
+
+def _latest_epoch(spark, path: str, key: str) -> DataFrame:
+    """The rows _epoch_sink wrote for each ``key`` in that key's highest
+    epoch — the dashboard's upsert over an update feed. Heavy hitters
+    emits several rows per shard per batch and needs all of them. For
+    retention, funnel and drift this equals taking the one
+    ``row_number() == 1`` row per key, because their update functions
+    yield exactly one row per key per batch."""
+    w = Window.partitionBy(key).orderBy(F.col("epoch").desc())
+    return (
+        spark.read.parquet(path)
+        .withColumn("__e", F.max("epoch").over(w))
+        .filter(F.col("epoch") == F.col("__e"))
+    )
 
 
 @query(
@@ -129,26 +193,19 @@ def _scoped_workdir(spark, sf_dir: str, kind: str = "rollup") -> str:
 )
 def stream_rollup_e2e(spark, sf_dir):
     """Continuously-maintained daily rollup, end to end: stage the events
-    table as {_N_DROPS_ILV} interleaved micro-batch file drops into a watched
+    table as 2 interleaved micro-batch file drops into a watched
     source directory, run the maintenance stream once per drop
     (availableNow = the reference's cron run) against one shared
     checkpoint, and return the final materialized rollup read back from
     parquet. Every run after the first is both a RESTART (checkpoint
     must dedup the already-seen files) and a LATE-DATA delivery (the
-    event_id % {_N_DROPS_ILV} interleave puts rows of every day in every
+    event_id % 2 interleave puts rows of every day in every
     drop, so materialized buckets must be re-folded, not appended).
 
     The oracle is the batch rollup SQL over the whole table — the
     streaming pipeline is correct iff the incremental materialization
     converges to it exactly (counts, decimal-exact avg/sum)."""
     from habits_etl_spark.streaming.rollup import start_continuous_rollup
-
-    base = _scoped_workdir(spark, sf_dir)
-    src = os.path.join(base, "incoming")
-    fact = os.path.join(base, "events_fact")
-    rollup = os.path.join(base, "rollup")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(src, exist_ok=True)
 
     staged = t(spark, sf_dir, "events").select(
         "event_id",
@@ -158,31 +215,26 @@ def stream_rollup_e2e(spark, sf_dir):
         "value",
     )
     source_schema = staged.drop("event_id").schema
+    drops = _interleave(staged, F.col("event_id"), _N_DROPS_ILV)
 
-    for i in range(_N_DROPS_ILV):
-        # new part files appended into the watched dir = one cron drop
-        (
-            staged.filter(F.pmod(F.col("event_id"), F.lit(_N_DROPS_ILV)) == i)
-            .drop("event_id")
-            .coalesce(2)
-            .write.mode("append")
-            .parquet(src)
-        )
-        q = start_continuous_rollup(
+    def start(base, ckpt):
+        return start_continuous_rollup(
             spark,
-            source_dir=src,
+            source_dir=os.path.join(base, "incoming"),
             source_schema=source_schema,
-            events_path=fact,
-            rollup_path=rollup,
+            events_path=os.path.join(base, "events_fact"),
+            rollup_path=os.path.join(base, "rollup"),
             checkpoint_path=ckpt,
             # testdata lives in 2024; keep it inside the refresh horizon
             backfill_horizon_days=36500,
             trigger={"availableNow": True},
             meditation_habit="purchase",
         )
-        q.awaitTermination()
 
-    return spark.read.parquet(rollup).select(
+    base = _run_drops(
+        spark, sf_dir, "rollup", [{"incoming": d.drop("event_id")} for d in drops], start
+    )
+    return spark.read.parquet(os.path.join(base, "rollup")).select(
         F.date_format(F.col("day").cast("date"), "yyyy-MM-dd").alias("day"),
         F.col("user_email").alias("user_id"),
         F.col("habit").alias("event_type"),
@@ -208,7 +260,7 @@ def stream_rollup_e2e(spark, sf_dir):
 def stream_retention_e2e(spark, sf_dir):
     """Stateful streaming retention (streaming/retention.py,
     applyInPandasWithState), end to end and ORACLE-GATED: stage the
-    events table as {_N_DROPS_ILV} event_id-interleaved micro-batch file
+    events table as 2 event_id-interleaved micro-batch file
     drops, run the retention stream once per drop against ONE shared
     checkpoint (each run after the first is a genuine restart that must
     resume per-user state), and return the LATEST per-user
@@ -230,52 +282,31 @@ def stream_retention_e2e(spark, sf_dir):
     incrementally checkpointed (RocksDB-compatible); per-trigger cost
     scales with new files, and the foreachBatch sink appends update
     deltas — the latest-row read models the dashboard's upsert."""
-    from pyspark.sql import Window
-
     from habits_etl_spark.streaming.retention import retention_stream
-
-    base = _scoped_workdir(spark, sf_dir, kind="retention")
-    src = os.path.join(base, "incoming")
-    out = os.path.join(base, "updates")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(src, exist_ok=True)
 
     staged = t(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     source_schema = staged.drop("event_id").schema
+    drops = _interleave(staged, F.col("event_id"), _N_DROPS_ILV)
 
-    def fb(df, epoch_id):
-        df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out)
-
-    with _pinned_state_partitions(spark):
-        for i in range(_N_DROPS_ILV):
-            (
-                staged.filter(F.pmod(F.col("event_id"), F.lit(_N_DROPS_ILV)) == i)
-                .drop("event_id")
-                .coalesce(2)
-                .write.mode("append")
-                .parquet(src)
-            )
-            q = (
-                retention_stream(spark.readStream.schema(source_schema).parquet(src))
-                .writeStream.foreachBatch(fb)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    upd = spark.read.parquet(out)
-    w = Window.partitionBy("user_id").orderBy(F.col("epoch").desc())
-    return (
-        upd.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "user_id",
-            F.date_format("cohort_day", "yyyy-MM-dd").alias("cohort_day"),
-            "d1_active",
-            "d7_active",
+    def start(base, ckpt):
+        src = spark.readStream.schema(source_schema).parquet(os.path.join(base, "incoming"))
+        return (
+            retention_stream(src)
+            .writeStream.foreachBatch(_epoch_sink(os.path.join(base, "updates")))
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
+
+    base = _run_drops(
+        spark, sf_dir, "retention", [{"incoming": d.drop("event_id")} for d in drops], start
+    )
+    return _latest_epoch(spark, os.path.join(base, "updates"), "user_id").select(
+        "user_id",
+        F.date_format("cohort_day", "yyyy-MM-dd").alias("cohort_day"),
+        "d1_active",
+        "d7_active",
     )
 
 
@@ -322,7 +353,7 @@ def _funnel_final_oracle_sql() -> str:
 def stream_funnel_e2e(spark, sf_dir):
     """Stateful streaming funnel (streaming/funnel.py,
     applyInPandasWithState), end to end and ORACLE-GATED: stage the
-    events table as {_N_DROPS} TIME-CONTIGUOUS micro-batch file drops
+    events table as 3 TIME-CONTIGUOUS micro-batch file drops
     (split at event-time terciles), run the funnel stream once per drop
     against ONE shared checkpoint (each run after the first is a genuine
     restart that must resume per-user (stage, instant) state), and
@@ -348,54 +379,26 @@ def stream_funnel_e2e(spark, sf_dir):
     incrementally checkpointed (RocksDB-compatible); per-trigger cost
     scales with new files; the boundary computation is one bounded
     2-value percentile job, never a sort of the corpus."""
-    from pyspark.sql import Window
-
     from habits_etl_spark.streaming.funnel import funnel_stream
 
-    base = _scoped_workdir(spark, sf_dir, kind="funnel")
-    src = os.path.join(base, "incoming")
-    out = os.path.join(base, "updates")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(src, exist_ok=True)
+    staged = t(spark, sf_dir, "events").select("ts", "user_id", "event_type")
 
-    staged = t(spark, sf_dir, "events").select(
-        "ts", "user_id", "event_type", F.unix_micros("ts").alias("__et")
+    def start(base, ckpt):
+        src = spark.readStream.schema(staged.schema).parquet(os.path.join(base, "incoming"))
+        return (
+            funnel_stream(src)
+            .writeStream.foreachBatch(_epoch_sink(os.path.join(base, "updates")))
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    base = _run_drops(
+        spark, sf_dir, "funnel", [{"incoming": d} for d in _terciles(staged)], start
     )
-    source_schema = staged.drop("__et").schema
-
-    # event-time tercile boundaries: any time-contiguous split is exact
-    # (fold composition above), so approximate percentiles suffice
-    b1, b2 = staged.select(
-        F.percentile_approx("__et", [1.0 / 3, 2.0 / 3]).alias("b")
-    ).collect()[0]["b"]
-    ranges = [
-        F.col("__et") <= b1,
-        (F.col("__et") > b1) & (F.col("__et") <= b2),
-        F.col("__et") > b2,
-    ]
-
-    def fb(df, epoch_id):
-        df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out)
-
-    with _pinned_state_partitions(spark):
-        for cond in ranges:
-            staged.filter(cond).drop("__et").coalesce(2).write.mode("append").parquet(src)
-            q = (
-                funnel_stream(spark.readStream.schema(source_schema).parquet(src))
-                .writeStream.foreachBatch(fb)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    upd = spark.read.parquet(out)
-    w = Window.partitionBy("user_id").orderBy(F.col("epoch").desc())
-    return (
-        upd.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("user_id", "stage", "converted")
+    return _latest_epoch(spark, os.path.join(base, "updates"), "user_id").select(
+        "user_id", "stage", "converted"
     )
 
 
@@ -412,10 +415,11 @@ def stream_dedup_e2e(spark, sf_dir):
     dropDuplicatesWithinWatermark — the reference's ON CONFLICT
     (row_hash) DO NOTHING as a stream), end to end and ORACLE-GATED:
     salt the events table with two extra copies of every 4th event,
-    spread the three replicas across three DIFFERENT micro-batch drops
-    (replica r of event e lands in drop (e + r) mod 3, so cross-restart
-    state hits constantly), run the dedup stream once per drop against
-    ONE shared checkpoint, and read the admitted rows back.
+    spread the three replicas across the 2 micro-batch drops (replica r
+    of event e lands in drop (e + r) mod 2, so every salted event has
+    replicas on both sides of the restart and cross-restart state hits
+    constantly), run the dedup stream once per drop against ONE shared
+    checkpoint, and read the admitted rows back.
 
     Why this is hash-gateable where the funnel needed ordered drops:
     replicas are IDENTICAL rows keyed by event_id, so whichever replica
@@ -435,12 +439,6 @@ def stream_dedup_e2e(spark, sf_dir):
     on event_id; output appends per batch with no window or join."""
     from habits_etl_spark.streaming.dedup import dedup_stream
 
-    base = _scoped_workdir(spark, sf_dir, kind="dedup")
-    src = os.path.join(base, "incoming")
-    out = os.path.join(base, "admitted")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(src, exist_ok=True)
-
     staged = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -454,32 +452,24 @@ def stream_dedup_e2e(spark, sf_dir):
         ),
     )
 
-    with _pinned_state_partitions(spark):
-        for i in range(_N_DROPS_ILV):
-            (
-                reps.filter(F.pmod(F.col("event_id") + F.col("r"), F.lit(_N_DROPS_ILV)) == i)
-                .drop("r")
-                .coalesce(2)
-                .write.mode("append")
-                .parquet(src)
-            )
-            q = (
-                dedup_stream(
-                    spark.readStream.schema(source_schema).parquet(src),
-                    keys=["event_id"],
-                    event_ts="ts",
-                    watermark="4000 days",
-                )
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    drops = _interleave(reps, F.col("event_id") + F.col("r"), _N_DROPS_ILV)
 
-    return spark.read.parquet(out).select(
+    def start(base, ckpt):
+        src = spark.readStream.schema(source_schema).parquet(os.path.join(base, "incoming"))
+        return (
+            dedup_stream(src, keys=["event_id"], event_ts="ts", watermark="4000 days")
+            .writeStream.format("parquet")
+            .option("path", os.path.join(base, "admitted"))
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    base = _run_drops(
+        spark, sf_dir, "dedup", [{"incoming": d.drop("r")} for d in drops], start
+    )
+    return spark.read.parquet(os.path.join(base, "admitted")).select(
         "event_id",
         fmt_ts("ts").alias("ts_s"),
         "user_id",
@@ -511,7 +501,7 @@ def stream_interval_join_e2e(spark, sf_dir):
     reference's fact-to-context attribution shape as two live feeds),
     end to end and ORACLE-GATED: split the events table into a context
     stream (signups) and a fact stream (purchases), stage EACH side as
-    {_N_DROPS_ILV} event_id-interleaved micro-batch file drops into its own
+    2 event_id-interleaved micro-batch file drops into its own
     watched directory, run the two-source join query once per drop pair
     against ONE shared checkpoint, and read the emitted pairs back.
 
@@ -519,7 +509,7 @@ def stream_interval_join_e2e(spark, sf_dir):
     stream-stream join emits each qualifying (fact, context) pair exactly
     once — in the micro-batch where the LATER side arrives, joining
     against the earlier side's checkpointed state — so cross-drop pairs
-    (a drop-0 signup matching a drop-2 purchase, and the reverse) come
+    (a drop-0 signup matching a drop-1 purchase, and the reverse) come
     out of restored state, which the interleave makes constant. Nothing
     is ever late or evicted: the watermark delay (4000 days) exceeds the
     fixture's full span, so the state watermark never passes a buffered
@@ -540,14 +530,6 @@ def stream_interval_join_e2e(spark, sf_dir):
     partition-count independent)."""
     from habits_etl_spark.streaming.join import interval_enrichment_join
 
-    base = _scoped_workdir(spark, sf_dir, kind="ivjoin")
-    fsrc = os.path.join(base, "facts_in")
-    csrc = os.path.join(base, "ctx_in")
-    out = os.path.join(base, "enriched")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(fsrc, exist_ok=True)
-    os.makedirs(csrc, exist_ok=True)
-
     ev = t(spark, sf_dir, "events")
     facts = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("fact_id"),
@@ -560,38 +542,36 @@ def stream_interval_join_e2e(spark, sf_dir):
         F.col("ts").alias("ctx_ts"),
         "user_id",
     )
-    f_schema, c_schema = facts.schema, ctx.schema
+    drops = [
+        {"facts_in": f, "ctx_in": c}
+        for f, c in zip(
+            _interleave(facts, F.col("fact_id"), _N_DROPS_ILV),
+            _interleave(ctx, F.col("ctx_id"), _N_DROPS_ILV),
+        )
+    ]
 
-    with _pinned_state_partitions(spark):
-        for i in range(_N_DROPS_ILV):
-            for side, key, dst in ((facts, "fact_id", fsrc), (ctx, "ctx_id", csrc)):
-                (
-                    side.filter(F.pmod(F.col(key), F.lit(_N_DROPS_ILV)) == i)
-                    .coalesce(2)
-                    .write.mode("append")
-                    .parquet(dst)
-                )
-            q = (
-                interval_enrichment_join(
-                    spark.readStream.schema(f_schema).parquet(fsrc),
-                    spark.readStream.schema(c_schema).parquet(csrc),
-                    key="user_id",
-                    fact_ts="fact_ts",
-                    context_ts="ctx_ts",
-                    fact_delay="4000 days",
-                    context_delay="4000 days",
-                    horizon=f"{_IJ_HORIZON_H} hours",
-                )
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+    def start(base, ckpt):
+        return (
+            interval_enrichment_join(
+                spark.readStream.schema(facts.schema).parquet(os.path.join(base, "facts_in")),
+                spark.readStream.schema(ctx.schema).parquet(os.path.join(base, "ctx_in")),
+                key="user_id",
+                fact_ts="fact_ts",
+                context_ts="ctx_ts",
+                fact_delay="4000 days",
+                context_delay="4000 days",
+                horizon=f"{_IJ_HORIZON_H} hours",
             )
-            q.awaitTermination()
+            .writeStream.format("parquet")
+            .option("path", os.path.join(base, "enriched"))
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
 
-    return spark.read.parquet(out).select(
+    base = _run_drops(spark, sf_dir, "ivjoin", drops, start)
+    return spark.read.parquet(os.path.join(base, "enriched")).select(
         "user_id",
         "ctx_id",
         "fact_id",
@@ -646,7 +626,7 @@ def _drift_oracle_sql() -> str:
 def stream_drift_e2e(spark, sf_dir):
     """Stateful streaming PSI drift monitor (streaming/drift.py,
     applyInPandasWithState), end to end and ORACLE-GATED: stage the
-    events table as {_N_DROPS_ILV} event_id-interleaved micro-batch file
+    events table as 2 event_id-interleaved micro-batch file
     drops, run the drift stream once per drop against ONE shared
     checkpoint (each run after the first is a genuine restart that must
     resume per-window bin-count state), and return the LATEST PSI
@@ -671,57 +651,33 @@ def stream_drift_e2e(spark, sf_dir):
     (the shuffle carries (window, bin), never raw values); state is one
     fixed-width count vector per window, hash-partitioned and
     incrementally checkpointed (RocksDB-compatible)."""
-    from pyspark.sql import Window
-
     from habits_etl_spark.streaming.drift import psi_drift_stream
-
-    base = _scoped_workdir(spark, sf_dir, kind="drift")
-    src = os.path.join(base, "incoming")
-    out = os.path.join(base, "updates")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(src, exist_ok=True)
 
     staged = t(spark, sf_dir, "events").select("event_id", "ts", "value")
     source_schema = staged.drop("event_id").schema
+    drops = _interleave(staged, F.col("event_id"), _N_DROPS_ILV)
 
-    def fb(df, epoch_id):
-        df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out)
-
-    with _pinned_state_partitions(spark):
-        for i in range(_N_DROPS_ILV):
-            (
-                staged.filter(F.pmod(F.col("event_id"), F.lit(_N_DROPS_ILV)) == i)
-                .drop("event_id")
-                .coalesce(2)
-                .write.mode("append")
-                .parquet(src)
+    def start(base, ckpt):
+        src = spark.readStream.schema(source_schema).parquet(os.path.join(base, "incoming"))
+        return (
+            psi_drift_stream(
+                src, edges=_DRIFT_EDGES, ref_counts=_DRIFT_REF, window_duration="1 day"
             )
-            q = (
-                psi_drift_stream(
-                    spark.readStream.schema(source_schema).parquet(src),
-                    edges=_DRIFT_EDGES,
-                    ref_counts=_DRIFT_REF,
-                    window_duration="1 day",
-                )
-                .writeStream.foreachBatch(fb)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    upd = spark.read.parquet(out)
-    w = Window.partitionBy("window_start").orderBy(F.col("epoch").desc())
-    return (
-        upd.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            fmt_ts("window_start").alias("window_start_s"),
-            "n_events",
-            "psi",
-            "n_bins",
+            .writeStream.foreachBatch(_epoch_sink(os.path.join(base, "updates")))
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
+
+    base = _run_drops(
+        spark, sf_dir, "drift", [{"incoming": d.drop("event_id")} for d in drops], start
+    )
+    return _latest_epoch(spark, os.path.join(base, "updates"), "window_start").select(
+        fmt_ts("window_start").alias("window_start_s"),
+        "n_events",
+        "psi",
+        "n_bins",
     )
 
 
@@ -780,7 +736,7 @@ _ANOM_MIN_N = 5
 def stream_anomaly_e2e(spark, sf_dir):
     """Stateful streaming z-score anomaly detector (streaming/anomaly.py,
     applyInPandasWithState over Welford running moments), end to end and
-    ORACLE-GATED: stage the events table as {_N_DROPS} TIME-CONTIGUOUS
+    ORACLE-GATED: stage the events table as 3 TIME-CONTIGUOUS
     micro-batch drops (event-time terciles, the funnel pattern), run the
     detector once per drop against ONE shared checkpoint, and return the
     union of emitted anomaly rows.
@@ -804,45 +760,24 @@ def stream_anomaly_e2e(spark, sf_dir):
     CHECK, not the engine — the Spark side never iterates."""
     from habits_etl_spark.streaming.anomaly import zscore_anomaly_stream
 
-    base = _scoped_workdir(spark, sf_dir, kind="anomaly")
-    src = os.path.join(base, "incoming")
-    out = os.path.join(base, "anomalies")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(src, exist_ok=True)
+    staged = t(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
 
-    staged = t(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "value", F.unix_micros("ts").alias("__et")
+    def start(base, ckpt):
+        src = spark.readStream.schema(staged.schema).parquet(os.path.join(base, "incoming"))
+        return (
+            zscore_anomaly_stream(src, threshold=_ANOM_THRESHOLD, min_n=_ANOM_MIN_N)
+            .writeStream.format("parquet")
+            .option("path", os.path.join(base, "anomalies"))
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    base = _run_drops(
+        spark, sf_dir, "anomaly", [{"incoming": d} for d in _terciles(staged)], start
     )
-    source_schema = staged.drop("__et").schema
-
-    b1, b2 = staged.select(
-        F.percentile_approx("__et", [1.0 / 3, 2.0 / 3]).alias("b")
-    ).collect()[0]["b"]
-    ranges = [
-        F.col("__et") <= b1,
-        (F.col("__et") > b1) & (F.col("__et") <= b2),
-        F.col("__et") > b2,
-    ]
-
-    with _pinned_state_partitions(spark):
-        for cond in ranges:
-            staged.filter(cond).drop("__et").coalesce(2).write.mode("append").parquet(src)
-            q = (
-                zscore_anomaly_stream(
-                    spark.readStream.schema(source_schema).parquet(src),
-                    threshold=_ANOM_THRESHOLD,
-                    min_n=_ANOM_MIN_N,
-                )
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    return spark.read.parquet(out).select(
+    return spark.read.parquet(os.path.join(base, "anomalies")).select(
         "user_id",
         "event_id",
         fmt_ts("ts").alias("ts_s"),
@@ -864,7 +799,7 @@ def stream_anomaly_e2e(spark, sf_dir):
 )
 def stream_dq_gate_e2e(spark, sf_dir):
     """Streaming DQ circuit breaker (streaming/dq_gate.py), end to end
-    and ORACLE-GATED: stage the events table as {_N_DROPS_ILV}
+    and ORACLE-GATED: stage the events table as 2
     event_id-interleaved drops, POISON every row of drop 1 (value set to
     NULL, so the events_value_complete rule fails on ANY nonempty subset
     of it), run the gated publish once per drop against ONE shared
@@ -889,16 +824,10 @@ def stream_dq_gate_e2e(spark, sf_dir):
     from habits_etl_spark.sinks import manifest as M
     from habits_etl_spark.streaming.dq_gate import _QUARANTINE_DIR, dq_gated_publish
 
-    base = _scoped_workdir(spark, sf_dir, kind="dqgate")
-    src = os.path.join(base, "incoming")
-    table = os.path.join(base, "serving")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(src, exist_ok=True)
-
     staged = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    # The published=(event_id % {_N_DROPS_ILV} <> 1) oracle couples to
+    # The published=(event_id % 2 <> 1) oracle couples to
     # SOURCE cleanliness: a naturally-NULL value in a "clean" drop would
     # fail events_value_complete and quarantine rows the oracle marks
     # published. Assert the precondition fast instead of relying on it
@@ -917,21 +846,16 @@ def stream_dq_gate_e2e(spark, sf_dir):
         ),
     )
 
-    for i in range(_N_DROPS_ILV):
-        (
-            poisoned.filter(F.pmod(F.col("event_id"), F.lit(_N_DROPS_ILV)) == i)
-            .coalesce(2)
-            .write.mode("append")
-            .parquet(src)
-        )
-        q = dq_gated_publish(
-            spark,
-            spark.readStream.schema(source_schema).parquet(src),
-            table_path=table,
-            checkpoint_dir=ckpt,
-        )
-        q.awaitTermination()
+    drops = _interleave(poisoned, F.col("event_id"), _N_DROPS_ILV)
 
+    def start(base, ckpt):
+        src = spark.readStream.schema(source_schema).parquet(os.path.join(base, "incoming"))
+        return dq_gated_publish(
+            spark, src, table_path=os.path.join(base, "serving"), checkpoint_dir=ckpt
+        )
+
+    base = _run_drops(spark, sf_dir, "dqgate", [{"incoming": d} for d in drops], start)
+    table = os.path.join(base, "serving")
     pub = M.read_snapshot(spark, table).withColumn("published", F.lit(True))
     quar = (
         spark.read.schema(source_schema)
@@ -969,14 +893,14 @@ _HH_CAPACITY_MIN = 4096
 def stream_heavy_hitters_e2e(spark, sf_dir):
     """Sharded space-saving heavy hitters (streaming/heavy_hitters.py,
     applyInPandasWithState), end to end and ORACLE-GATED in the sketch's
-    EXACT regime: stage user_id items as {_N_DROPS_ILV} event_id-interleaved
+    EXACT regime: stage user_id items as 2 event_id-interleaved
     drops, run the sketch once per drop against ONE shared checkpoint,
     and return each shard's LATEST summary with the shard column
     dropped.
 
     Why this is the hash-gateable regime and the honest one: with
     capacity >= the distinct item count (derived from the MEASURED
-    cardinality at staging time, min {_HH_CAPACITY_MIN}) space-saving
+    cardinality at staging time, min 4096) space-saving
     NEVER evicts, so every counter is the exact item
     frequency (est = true, err = 0) and the final summaries are a
     deterministic, batch-split-invariant function of the item set — the
@@ -994,15 +918,7 @@ def stream_heavy_hitters_e2e(spark, sf_dir):
 
     Scale: state is n_shards x capacity counters TOTAL — bounded
     regardless of item cardinality; each update touches one shard."""
-    from pyspark.sql import Window
-
     from habits_etl_spark.streaming.heavy_hitters import heavy_hitters_stream
-
-    base = _scoped_workdir(spark, sf_dir, kind="hh")
-    src = os.path.join(base, "incoming")
-    out = os.path.join(base, "summaries")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(src, exist_ok=True)
 
     staged = t(spark, sf_dir, "events").select("event_id", "user_id")
     source_schema = staged.drop("event_id").schema
@@ -1012,37 +928,22 @@ def stream_heavy_hitters_e2e(spark, sf_dir):
     # frame, amortized across the run)
     n_items = staged.select("user_id").distinct().count()
     capacity = max(_HH_CAPACITY_MIN, 2 * n_items)
+    drops = _interleave(staged, F.col("event_id"), _N_DROPS_ILV)
 
-    def fb(df, epoch_id):
-        df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out)
+    def start(base, ckpt):
+        src = spark.readStream.schema(source_schema).parquet(os.path.join(base, "incoming"))
+        return (
+            heavy_hitters_stream(src, item_col="user_id", capacity=capacity)
+            .writeStream.foreachBatch(_epoch_sink(os.path.join(base, "summaries")))
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
 
-    with _pinned_state_partitions(spark):
-        for i in range(_N_DROPS_ILV):
-            (
-                staged.filter(F.pmod(F.col("event_id"), F.lit(_N_DROPS_ILV)) == i)
-                .drop("event_id")
-                .coalesce(2)
-                .write.mode("append")
-                .parquet(src)
-            )
-            q = (
-                heavy_hitters_stream(
-                    spark.readStream.schema(source_schema).parquet(src),
-                    item_col="user_id",
-                    capacity=capacity,
-                )
-                .writeStream.foreachBatch(fb)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    summ = spark.read.parquet(out)
-    w = Window.partitionBy("shard").orderBy(F.col("epoch").desc())
-    return (
-        summ.withColumn("__e", F.max("epoch").over(w))
-        .filter(F.col("epoch") == F.col("__e"))
-        .select("item", "est_count", "max_err")
+    base = _run_drops(
+        spark, sf_dir, "hh", [{"incoming": d.drop("event_id")} for d in drops], start
+    )
+    return _latest_epoch(spark, os.path.join(base, "summaries"), "shard").select(
+        "item", "est_count", "max_err"
     )

@@ -22,3 +22,22 @@ def test_csv_audit_accounting(spark, sf_dir):
     # classification is deterministic: second run identical
     again = src_csv_malformed_audit(spark, sf_dir).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+
+
+def test_orc_roundtrip_removes_scratch_dir_when_write_fails(spark, sf_dir, monkeypatch, tmp_path):
+    """A failed round-trip write must not leak its temp directory."""
+    import tempfile
+
+    import pytest
+    from pyspark.sql import DataFrameWriter
+
+    from habits_etl_spark.plans.formats_e2e import src_orc_roundtrip
+
+    def broken_orc(self, path, *args, **kwargs):
+        raise OSError("injected ORC write failure")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(DataFrameWriter, "orc", broken_orc)
+    with pytest.raises(OSError, match="injected"):
+        src_orc_roundtrip(spark, sf_dir)
+    assert not list(tmp_path.glob("orc_e2e_*"))

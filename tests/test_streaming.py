@@ -179,6 +179,48 @@ def test_stream_rollup_e2e_query_converges_to_batch(spark, sf_dir):
     assert got == want
 
 
+def test_e2e_harness_restarts_on_one_checkpoint(spark, tmp_path):
+    """Three drops through the stream_*_e2e run loop: every availableNow
+    run restarts on the one shared checkpoint, so the commit log holds
+    consecutive batch ids and the sink holds each input row exactly once
+    (a run that re-read an earlier drop would duplicate it)."""
+    import os
+    import shutil
+
+    from habits_etl_spark.plans.streaming_e2e import _run_drops
+
+    schema = "id long, drop string"
+    drops = [
+        {"incoming": spark.createDataFrame([(10 * d + i, f"d{d}") for i in range(5)], schema)}
+        for d in range(3)
+    ]
+
+    def start(base, ckpt):
+        return (
+            spark.readStream.schema(schema)
+            .parquet(os.path.join(base, "incoming"))
+            .writeStream.format("parquet")
+            .option("path", os.path.join(base, "out"))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    base = _run_drops(spark, str(tmp_path), "harness_test", drops, start)
+    try:
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+        commits = sorted(
+            int(f) for f in os.listdir(os.path.join(base, "checkpoint", "commits")) if f.isdigit()
+        )
+        assert len(commits) >= 3 and commits == list(range(len(commits)))
+        got = sorted(map(tuple, spark.read.parquet(os.path.join(base, "out")).collect()))
+        want = sorted(tuple(r) for d in drops for r in d["incoming"].collect())
+        assert got == want
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_refresh_read_prunes_fact_partitions(spark, dirs):
     """The 100 TB property the design pays for: the fact table lands
     day-partitioned and the refresh READ filters on the partition column,
