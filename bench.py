@@ -52,6 +52,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from habits_etl_spark.metrics import (  # noqa: E402
+    PROBE_BASELINE_SEC,
+    calibrate,
+    time_noop,
+)
+
 HEADLINE = [
     "agg_daily_rollup",
     "agg_sum_timeseries",
@@ -87,22 +93,6 @@ HEADLINE2 = [
     "ext_bigram_lm_score",
     "ext_pmi_collocations",
 ]
-
-# Fixed quiet-host reference time for the calibration probe below,
-# recorded from a clean round-5 bench run (steal_suspected=false,
-# pooled pre+post samples 0.399-0.438, median 0.414). Two subtleties
-# found while recording it: (1) the estimator must be the MEDIAN of
-# pooled samples — a min-of-3 latches onto transient turbo bursts
-# (0.37 s vs a 0.41 s steady state) and skewed the ratio by ~35% on an
-# otherwise clean run; (2) the baseline must come from an IN-BENCH
-# probe, not a standalone JVM — after the full query workload the JIT
-# runs the identical probe ~17% faster (0.41 s vs 0.50 s fresh), so a
-# fresh-JVM reference systematically inflates calibrated_value.
-# calibrated_value = value * (this / observed probe median) normalizes
-# totals across host-speed luck: a sustained-steal run slows the probe
-# by the same factor as the queries, so the ratio cancels it. See
-# README "Benchmark protocol".
-PROBE_BASELINE_SEC = 0.414
 
 # Non-headline curation section (round-3 ops): timed for scale evidence,
 # excluded from the headline total so that set stays comparable across
@@ -322,10 +312,11 @@ def correctness_extras(
     sink_cdc_apply rotate through the tracked record, not only
     ext_*/win_*. Pick k seeded by the git HEAD (deterministic per commit,
     rotates round to round), run each on Spark at the bench scale factor
-    and compare against its DuckDB oracle with the same row-count +
-    value-hash fingerprint the driver uses. Timings are split into
-    spark_sec vs oracle_sec so the audit doubles as a coarse per-id perf
-    witness. Statuses: "pass" / "fail" (fingerprint mismatch — a real
+    and compare against its DuckDB oracle with the ledger's per-id check
+    (check_correctness.check_one: row-count + value-hash fingerprint,
+    conf left unchanged). Timings are split into spark_sec vs oracle_sec
+    so the audit doubles as a coarse per-id perf witness. Statuses:
+    "pass" / "fail" (fingerprint mismatch or a changed conf key — a real
     correctness red) / "error" (exception: scale-guard refusal, transient
     infra, or the per-query wall-clock cap cancelling a stalled Spark
     job) — errors are counted separately from fails on the compact line
@@ -335,11 +326,9 @@ def correctness_extras(
     import re
     import threading
 
-    import duckdb
-
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     sys.path.insert(0, os.path.join(repo_dir, "tools"))
-    from check_correctness import TABLES, frame_fingerprint
+    from check_correctness import check_one, oracle_con
 
     from habits_etl_spark.plans import ORACLES, QUERIES
 
@@ -367,11 +356,9 @@ def correctness_extras(
             pass
     pool = sorted(n for n in ORACLES if n not in driver_ids)
     ids = sorted(random.Random(seed).sample(pool, min(k, len(pool))))
-    con = duckdb.connect()
-    for t in TABLES:
-        # oracle reads the ORIGINAL driver-generated parquet; Spark reads
-        # the layout-optimized copy of the same rows
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{oracle_dir}/{t}.parquet'")
+    # oracle reads the ORIGINAL driver-generated parquet; Spark reads the
+    # layout-optimized copy of the same rows
+    con = oracle_con(oracle_dir)
     sc = spark.sparkContext
     results: dict[str, dict] = {}
     for name in ids:
@@ -405,20 +392,7 @@ def correctness_extras(
         timer.start()
         t0 = time.perf_counter()
         try:
-            sdf = QUERIES[name](spark, query_dir).toPandas()
-            t1 = time.perf_counter()
-            odf = con.sql(ORACLES[name]).df()
-            t2 = time.perf_counter()
-            sn, _, sh = frame_fingerprint(sdf)
-            on, _, oh = frame_fingerprint(odf)
-            ok = sn == on and sh == oh
-            results[name] = {
-                "status": "pass" if ok else "fail",
-                "rows": sn,
-                "oracle_rows": on,
-                "spark_sec": round(t1 - t0, 3),
-                "oracle_sec": round(t2 - t1, 3),
-            }
+            results[name] = check_one(spark, con, QUERIES[name], query_dir, ORACLES[name])
         except Exception as exc:  # a broken extra must not kill the bench
             results[name] = {
                 "status": "error",
@@ -469,9 +443,7 @@ def main():
 
     def _warm(name: str) -> None:
         try:
-            QUERIES[name](spark, WARMUP_SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            time_noop(spark, lambda: QUERIES[name](spark, WARMUP_SF_DIR), f"warm:{name}")
         except Exception:
             pass
 
@@ -493,41 +465,21 @@ def main():
     #   * steal_suspected flag when any query's max/min spread > 3x
     repeat = max(3, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3")))
 
-    # Host-speed calibration probe: a FIXED CPU-bound job (no I/O, no
-    # data dependence) timed before and after the measured section.
-    # Bursty steal shows up as per-query rep spread (steal_suspected);
-    # SUSTAINED steal slows every rep uniformly and is invisible to the
-    # spread check — but it slows this probe identically, so readers
-    # (and the judge) can normalize totals across runs by the probe
-    # ratio instead of mistaking a slow host for a regression.
-    def calibrate() -> list[float]:
-        # 5 probe samples; each probe is large enough (~0.5 s on the
-        # reference host) that JVM scheduling jitter is <10% of it.
-        # The MEDIAN across pooled pre+post samples is the estimator —
-        # r5 measurement showed min-of-3 latches onto transient turbo
-        # bursts (0.37 s vs a 0.5-0.6 s steady state), which inflated
-        # calibrated_value by 36% on a clean run. The modulo keeps the
-        # running sum inside bigint under ANSI.
-        times = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            spark.range(0, 4_000_000_000, 1, 32).selectExpr(
-                "sum(id % 1000003) as s"
-            ).write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        return times
-
-    calibrate()  # JIT warm
-    cal_pre_samples = calibrate()
+    # Host-speed calibration probe (metrics.calibrate), timed before and
+    # after the measured section.
+    calibrate(spark)  # JIT warm
+    cal_pre_samples = calibrate(spark)
     cal_pre = round(statistics.median(cal_pre_samples), 3)
 
-    def time_query(fn) -> list[float]:
-        reps = []
-        for _ in range(repeat):
-            t0 = time.perf_counter()
-            fn(spark, bench_dir).write.format("noop").mode("overwrite").save()
-            reps.append(round(time.perf_counter() - t0, 3))
-        return reps
+    def time_query(name: str, fn) -> tuple[list[float], float]:
+        """``repeat`` reps of one query: (rep seconds, median build
+        seconds). A rep is plan build + noop execution."""
+        reps, builds = [], []
+        for i in range(repeat):
+            b, e = time_noop(spark, lambda: fn(spark, bench_dir), f"bench:{name}:rep{i}")
+            reps.append(round(b + e, 3))
+            builds.append(b)
+        return reps, round(statistics.median(builds), 3)
 
     STEAL_SPREAD = 3.0
     # Bounded per-query retries when a repetition set trips the spread
@@ -543,6 +495,8 @@ def main():
     steal_queries: list[str] = []
     steal_retries: dict[str, int] = {}
     dirty_reps: dict[str, list[list[float]]] = {}
+    # per-query median plan-build seconds of the published repetitions
+    build_sec: dict[str, float] = {}
 
     def measure(name: str, fn) -> list[float]:
         """repeat-rep timing with bounded steal recovery; every discarded
@@ -553,7 +507,7 @@ def main():
         full repetition sets, so its caches/JIT are systematically warmer
         than a first-set query's — cross-query comparisons should treat
         retried medians as a lower bound and consult dirty_reps."""
-        reps = time_query(fn)
+        reps, build_sec[name] = time_query(name, fn)
         tries = 0
         while _dirty(reps) and tries < STEAL_RETRIES:
             tries += 1
@@ -564,7 +518,7 @@ def main():
                 f"re-running (retry {tries}/{STEAL_RETRIES})",
                 file=sys.stderr,
             )
-            reps = time_query(fn)
+            reps, build_sec[name] = time_query(name, fn)
         if tries:
             steal_retries[name] = tries
         if _dirty(reps):
@@ -650,7 +604,7 @@ def main():
     reprobe_won: list[str] = []
     for _, name in candidates[:REPROBE_BUDGET]:
         r = reference[name]
-        solo = time_query(QUERIES[name])
+        solo, solo_build = time_query(name, QUERIES[name])
         solo_med = round(statistics.median(solo), 3)
         outlier_reprobes[name] = {
             "reference_best_committed": r,
@@ -673,6 +627,7 @@ def main():
             timings[name] = solo_med
             timings_min[name] = min(timings_min[name], round(min(solo), 3))
             reps_all[name] = solo
+            build_sec[name] = solo_build
             reprobe_won.append(name)
 
     # Sidecar-only Bloom-pruning A/B (plans/sketchjoin.py): the same
@@ -690,8 +645,8 @@ def main():
         _bloom_ab_inputs,
     )
 
-    ab_plain = round(statistics.median(time_query(bloom_ab_plain)), 3)
-    ab_pruned = round(statistics.median(time_query(bloom_ab_pruned)), 3)
+    ab_plain = round(statistics.median(time_query("bloom_ab_plain", bloom_ab_plain)[0]), 3)
+    ab_pruned = round(statistics.median(time_query("bloom_ab_pruned", bloom_ab_pruned)[0]), 3)
     _dim, _fact = _bloom_ab_inputs(spark, bench_dir)
     from habits_etl_spark.operators.bloom import bloom_build, bloom_prune
 
@@ -718,7 +673,7 @@ def main():
         "pruned_shuffle_records": ab_pruned_m["shuffle_records_written"],
     }
 
-    cal_post_samples = calibrate()
+    cal_post_samples = calibrate(spark)
     cal_post = round(statistics.median(cal_post_samples), 3)
     total = round(sum(timings.values()), 3)
     # Host-speed normalization: the median of the pooled pre+post probe
@@ -839,6 +794,7 @@ def main():
             "sibling_records": siblings,
             "sibling_headline_band": sibling_band,
             "queries_min": timings_min,
+            "build_sec": build_sec,
             "repetitions": reps_all,
             "steal_queries": steal_queries,
             "steal_retries": steal_retries,

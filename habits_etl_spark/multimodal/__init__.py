@@ -30,23 +30,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from habits_etl_spark.multimodal.avi import (  # noqa: F401
     decode_mjpeg_avi,
     encode_mjpeg_avi,
 )
 from habits_etl_spark.multimodal.jpeg import decode_jpeg, encode_jpeg  # noqa: F401
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("content", T.BinaryType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("mime", T.StringType(), True),
-    ]
-)
 
 DECODED_SCHEMA = (
     "media_id long, kind string, n_bytes long, width int, height int, "

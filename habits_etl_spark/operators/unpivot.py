@@ -38,8 +38,6 @@ from habits_etl_spark.functions.coerce import (
 )
 from habits_etl_spark.functions.datetime_ops import parse_report_date_expr
 
-EVENT_COLUMNS = ("ts", "user_email", "habit", "value", "notes", "source")
-
 
 def normalize_wide_rows(wide: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Compile the config into the wide->long normalization plan."""

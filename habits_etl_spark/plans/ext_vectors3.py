@@ -102,10 +102,6 @@ def _argmax_code_sql(codebooks, sv: str, subid: str) -> str:
     return f"array_position({s}, array_max({s})) - 1"
 
 
-def _code_expr(codebooks: list[list[list[float]]], m: int):
-    return F.expr(_argmax_code_sql(codebooks, _sub_slice(m), str(m))).cast("int")
-
-
 def pq_fit(
     spark: SparkSession,
     sf_dir: str,

@@ -27,11 +27,10 @@ asserts the share collapse.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from habits_etl_spark.metrics import time_noop
 from habits_etl_spark.operators.skew import salted_join
 from habits_etl_spark.session import conf_scope
 from habits_etl_spark.sources import load_table
@@ -113,9 +112,7 @@ def skew_stress_report(
             agg = joined.groupBy("user_id", "segment").agg(
                 F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
             )
-            t0 = time.perf_counter()
-            agg.write.format("noop").mode("overwrite").save()
-            sec = time.perf_counter() - t0
+            _, sec = time_noop(spark, lambda: agg, f"skew_stress:{label}")
             out[label] = {
                 "sec": round(sec, 3),
                 "max_share": round(_max_partition_share(joined), 4),
@@ -148,9 +145,7 @@ def skew_agg_report(spark: SparkSession, sf_dir: str) -> dict[str, dict[str, flo
         ("sketch_percentile_approx", "percentile_approx(value, 0.5, 1000)"),
     ):
         agg = facts.groupBy("user_id").agg(F.expr(expr).cast("double").alias("p50"))
-        t0 = time.perf_counter()
-        agg.write.format("noop").mode("overwrite").save()
-        sec = time.perf_counter() - t0
+        _, sec = time_noop(spark, lambda: agg, f"skew_agg:{label}")
         hot = agg.filter(F.col("user_id") == HOT_USER).collect()
         p50[label] = hot[0]["p50"] if hot else None
         out[label] = {"sec": round(sec, 3)}

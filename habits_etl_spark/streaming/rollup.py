@@ -49,8 +49,6 @@ from pyspark.sql import functions as F
 
 from habits_etl_spark.plans.common import davg, dsum
 
-ROLLUP_COLS = ("day", "user_email", "habit", "count_done", "avg_value", "sum_meditation")
-
 
 def batch_daily_rollup(events: DataFrame, meditation_habit: str = "meditation_minutes") -> DataFrame:
     """The rollup SELECT (reference sql/001_schema.sql:31-40), batch form."""

@@ -3,9 +3,13 @@ the instrument behind the bench's bloom_ab byte story."""
 
 from __future__ import annotations
 
+import time
+import uuid
+
+import pytest
 from pyspark.sql import functions as F
 
-from habits_etl_spark.metrics import _metric_total, run_with_shuffle_metrics
+from habits_etl_spark.metrics import _metric_total, run_with_shuffle_metrics, time_noop
 
 
 def test_metric_total_parses_plain_and_human_forms():
@@ -58,3 +62,43 @@ def test_bloom_prune_reduces_shuffle_bytes_and_records(spark):
     assert pruned["shuffle_records_written"] is not None
     assert pruned["shuffle_records_written"] < plain["shuffle_records_written"]
     assert pruned["shuffle_bytes_written"] < plain["shuffle_bytes_written"]
+
+
+def _group_jobs(sc, label: str, at_least: int) -> set[int]:
+    """Job ids of ``label``, polled because the listener bus is async."""
+    deadline = time.monotonic() + 30
+    while True:
+        jobs = set(sc.statusTracker().getJobIdsForGroup(label))
+        if len(jobs) >= at_least or time.monotonic() > deadline:
+            return jobs
+        time.sleep(0.1)
+
+
+def test_time_noop_labels_build_and_write_jobs(spark):
+    sc = spark.sparkContext
+    label = f"test_time_noop:{uuid.uuid4().hex}"
+    seen = {}
+
+    def build():
+        spark.range(0, 1000, 1, 2).count()  # a job run while building
+        seen["build"] = _group_jobs(sc, label, 1)
+        return spark.range(0, 1000, 1, 2).selectExpr("sum(id) as s")
+
+    build_s, exec_s = time_noop(spark, build, label)
+    assert build_s > 0 and exec_s > 0
+    assert seen["build"]
+    # the write's jobs join the build's under the same group
+    assert seen["build"] < _group_jobs(sc, label, len(seen["build"]) + 1)
+
+
+def test_time_noop_clears_its_label_when_build_raises(spark):
+    sc = spark.sparkContext
+
+    def build():
+        spark.range(0, 10).count()
+        raise ValueError("plan build failed")
+
+    with pytest.raises(ValueError):
+        time_noop(spark, build, "test_time_noop:raises")
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert sc.getLocalProperty("spark.job.description") is None

@@ -165,7 +165,7 @@ def test_restart_is_idempotent(spark, dirs):
 
 
 def test_stream_rollup_e2e_query_converges_to_batch(spark, sf_dir):
-    """The registered oracle-gated e2e query: three cron runs over one
+    """The registered oracle-gated e2e query: two cron runs over one
     checkpoint with interleaved (late) drops must converge to the exact
     batch rollup — same keys, same counts, same decimal-exact stats."""
     from habits_etl_spark.plans.habits import agg_daily_rollup

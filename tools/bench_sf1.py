@@ -11,10 +11,12 @@ informed r13/r14 decisions lived in ad-hoc .scratch runs
 repeatable record (committed per round as BENCH_SF1_r{N}.json) so
 round-over-round deltas on data-bound plans are measurable.
 
-Protocol mirrors bench.py exactly where it matters: noop sink per rep
-(guide §1.4), >=2 reps with median+min+all reps persisted, the same
-fixed-reference calibration probe bracketing the timed section, the
-same one-time layout prep (reported separately). The fixture is the
+Protocol is bench.py's, from the same core (habits_etl_spark/metrics.py):
+each rep is ``time_noop`` (plan build + noop sink, jobs labelled
+``sf1:<id>:rep<i>``), >=2 reps with median+min+all reps and the median
+build seconds persisted, the same ``calibrate`` probe bracketing the
+timed section, the same one-time layout prep (reported separately).
+Naming ids times just those, at any ``--sf``. The fixture is the
 DETERMINISTIC sf0.1 replication produced by tools/make_scaled_fixture.py
 (factor 10) — regenerate with:
 
@@ -35,7 +37,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -81,52 +82,38 @@ def main() -> None:
             f"--factor 10 --out {sf_dir}"
         )
 
-    from bench import PROBE_BASELINE_SEC, optimize_layout
+    from bench import optimize_layout
+    from habits_etl_spark.metrics import PROBE_BASELINE_SEC, calibrate, time_noop
     from habits_etl_spark.plans import QUERIES
     from habits_etl_spark.session import get_spark
 
     spark = get_spark("bench_sf1")
     bench_dir, prep_sec = optimize_layout(spark, sf_dir)
 
-    def calibrate() -> list[float]:
-        times = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            spark.range(0, 4_000_000_000, 1, 32).selectExpr(
-                "sum(id % 1000003) as s"
-            ).write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        return times
-
-    calibrate()  # JIT warm
-    cal_pre = calibrate()
+    calibrate(spark)  # JIT warm
+    cal_pre = calibrate(spark)
 
     timings: dict[str, float] = {}
+    build_sec: dict[str, float] = {}
     reps_all: dict[str, list[float]] = {}
     for name in names:
         if name not in QUERIES:
             print(json.dumps({"query": name, "error": "unknown"}), file=sys.stderr)
             continue
-        rep_times = []
-        for i in range(reps):
-            spark.sparkContext.setJobDescription(f"sf1:{name}:rep{i}")
-            t0 = time.perf_counter()
-            try:
-                QUERIES[name](spark, bench_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as exc:
-                print(f"ERROR {name}: {exc}", file=sys.stderr)
-                rep_times = []
-                break
-            rep_times.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
-        if rep_times:
-            reps_all[name] = rep_times
-            timings[name] = round(statistics.median(rep_times), 3)
-            print(json.dumps({"query": name, "reps": rep_times}), file=sys.stderr)
+        try:
+            times = [
+                time_noop(spark, lambda: QUERIES[name](spark, bench_dir), f"sf1:{name}:rep{i}")
+                for i in range(reps)
+            ]
+        except Exception as exc:
+            print(f"ERROR {name}: {exc}", file=sys.stderr)
+            continue
+        reps_all[name] = [round(b + e, 3) for b, e in times]
+        build_sec[name] = round(statistics.median(b for b, _ in times), 3)
+        timings[name] = round(statistics.median(reps_all[name]), 3)
+        print(json.dumps({"query": name, "reps": reps_all[name]}), file=sys.stderr)
 
-    cal_post = calibrate()
+    cal_post = calibrate(spark)
     probe_observed = max(round(statistics.median(cal_pre + cal_post), 3), 1e-9)
     total = round(sum(timings.values()), 3)
     record = {
@@ -141,6 +128,7 @@ def main() -> None:
         "repeat": reps,
         "repetitions": reps_all,
         "queries_min": {n: round(min(r), 3) for n, r in reps_all.items()},
+        "build_sec": build_sec,
         "layout_prep_sec": prep_sec,
         "probe_baseline_sec": PROBE_BASELINE_SEC,
         "probe_observed_sec": probe_observed,

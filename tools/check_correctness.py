@@ -3,7 +3,10 @@
 
 For every query in __spark_entry__.queries(): run it on Spark at sf0.01,
 run the matching oracle_sql() in DuckDB over the same parquet files, and
-compare (row count, schema, order-insensitive value hash).
+compare (row count, schema, order-insensitive value hash). Running an id
+must also leave ``spark.conf`` as it found it: an id that changes a conf
+key fails, with the changed keys named. ``check_one`` is that per-id
+check; ``bench.correctness_extras`` runs it too.
 
 Usage:
     python tools/check_correctness.py            # all queries
@@ -59,33 +62,78 @@ def frame_fingerprint(df) -> tuple[int, dict, str]:
     return len(df), schema, h
 
 
+def oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def check_one(spark, con, fn, query_dir: str, oracle: str | None) -> dict:
+    """Run ``fn(spark, query_dir)`` on Spark and ``oracle`` on ``con``
+    and compare their fingerprints. ``oracle`` None means rows-only.
+
+    Returns the ledger entry plus ``spark_sec`` and ``oracle_sec``
+    (``perf_counter`` seconds). Status ``fail`` on a fingerprint
+    mismatch, or when running the id changed ``spark.conf.getAll``
+    (``conf_changed`` names the keys). Raises on an engine or DuckDB
+    error; the message starts with the side that failed."""
+    conf = spark.conf.getAll
+    t0 = time.perf_counter()
+    try:
+        sdf = fn(spark, query_dir).toPandas()
+    except Exception as exc:
+        raise RuntimeError(f"spark error: {exc}") from exc
+    t1 = t2 = time.perf_counter()
+    after = spark.conf.getAll
+    changed = sorted(k for k in conf.keys() | after.keys() if conf.get(k) != after.get(k))
+    if oracle is None:
+        out = {"status": "rows_only", "spark_rows": len(sdf)}
+    else:
+        try:
+            odf = con.sql(oracle).df()
+        except Exception as exc:
+            raise RuntimeError(f"duckdb error: {exc}") from exc
+        t2 = time.perf_counter()
+        sn, ss, sh = frame_fingerprint(sdf)
+        on, os_, oh = frame_fingerprint(odf)
+        if sn == on and sh == oh:
+            out = {"status": "pass", "rows": sn, "schema_match": ss == os_, "hash": sh}
+        else:
+            out = {"status": "fail", "spark_rows": sn, "oracle_rows": on,
+                   "hash_match": sh == oh}
+    if changed:
+        out.update(status="fail", conf_changed=changed)
+    out.update(spark_sec=round(t1 - t0, 3), oracle_sec=round(t2 - t1, 3))
+    return out
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     args = sys.argv[1:]
-    json_out = None
-    if "--json" in args:
-        i = args.index("--json")
+    usage = "usage: check_correctness.py [--json OUT.json] [--sf SF_DIR] [query ...]"
+
+    def flag(name: str, default: str | None) -> str | None:
+        if name not in args:
+            return default
+        i = args.index(name)
         if i + 1 >= len(args):
-            sys.exit("usage: check_correctness.py [--json OUT.json] "
-                     "[--sf SF_DIR] [query ...]")
-        json_out = args[i + 1]
-        args = args[:i] + args[i + 2 :]
+            sys.exit(usage)
+        value = args[i + 1]
+        del args[i : i + 2]
+        return value
+
+    json_out = flag("--json", None)
     # --sf overrides the env var. Parsed explicitly because the old
     # behavior — unknown flags silently became query-NAME filters — made
     # `--sf DIR` run the named queries at the DEFAULT scale factor (or,
     # with no names, filter every query out and write an empty ledger)
     # while looking like a successful larger-scale check.
-    if "--sf" in args:
-        i = args.index("--sf")
-        if i + 1 >= len(args):
-            sys.exit("usage: check_correctness.py [--json OUT.json] "
-                     "[--sf SF_DIR] [query ...]")
-        sf_dir = args[i + 1]
-        args = args[:i] + args[i + 2 :]
+    sf_dir = flag("--sf", sf_dir)
     unknown = [a for a in args if a.startswith("-")]
     if unknown:
-        sys.exit(f"unknown flag(s) {unknown}: "
-                 "usage: check_correctness.py [--json OUT.json] [--sf SF_DIR] [query ...]")
+        sys.exit(f"unknown flag(s) {unknown}: {usage}")
     only = set(args)
 
     import __spark_entry__ as entry_mod
@@ -94,13 +142,9 @@ def main():
     spark = get_spark("check_correctness")
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
+    con = oracle_con(sf_dir)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    n_pass = n_fail = n_rows_only = 0
-    failures = []
+    counts = {"pass": 0, "fail": 0, "rows_only": 0}
     ledger: dict[str, dict] = {}
     # Per-id (spark_sec, oracle_sec) sweep cost: ext_cosine_pairs_lsh
     # silently cost ~70 s per full sweep for seven rounds because nothing
@@ -111,62 +155,19 @@ def main():
     for name in qs:
         if only and name not in only:
             continue
-        t0 = time.time()
         try:
-            sdf = qs[name](spark, sf_dir).toPandas()
-        except Exception as exc:
-            n_fail += 1
-            failures.append(name)
-            ledger[name] = {"status": "fail", "err": f"spark error: {exc}"}
-            print(f"FAIL  {name}: spark error: {exc}")
-            continue
-        t_spark = round(time.time() - t0, 3)
-        if name not in oracles:
-            n_rows_only += 1
-            ledger[name] = {"status": "rows_only", "spark_rows": len(sdf)}
-            sweep_secs[name] = {"spark_sec": t_spark, "oracle_sec": 0.0}
-            print(f"rows  {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
-            continue
-        t1 = time.time()
-        try:
-            odf = con.sql(oracles[name]).df()
-        except Exception as exc:
-            n_fail += 1
-            failures.append(name)
-            ledger[name] = {"status": "fail", "err": f"duckdb error: {exc}"}
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            continue
-        sweep_secs[name] = {
-            "spark_sec": t_spark,
-            "oracle_sec": round(time.time() - t1, 3),
-        }
-        sn, ss, sh = frame_fingerprint(sdf)
-        on, os_, oh = frame_fingerprint(odf)
-        if sn == on and sh == oh:
-            schema_note = "" if ss == os_ else f"  [schema diff: {ss} vs {os_}]"
-            n_pass += 1
-            ledger[name] = {
-                "status": "pass",
-                "rows": sn,
-                "schema_match": ss == os_,
-                "hash": sh,
-            }
-            print(f"PASS  {name}: {sn} rows{schema_note} [{time.time()-t0:.1f}s]")
+            entry = check_one(spark, con, qs[name], sf_dir, oracles.get(name))
+        except RuntimeError as exc:  # check_one names the failing side
+            entry = {"status": "fail", "err": str(exc)}
         else:
-            n_fail += 1
-            failures.append(name)
-            ledger[name] = {
-                "status": "fail",
-                "spark_rows": sn,
-                "oracle_rows": on,
-                "hash_match": sh == oh,
-            }
-            print(f"FAIL  {name}: rows {sn} vs {on}, hash {'ok' if sh == oh else 'MISMATCH'}")
-            if sn and on:
-                print("  spark:", sdf.sort_values(sorted(sdf.columns)[0]).head(3).to_dict("records"))
-                print("  duck :", odf.sort_values(sorted(odf.columns)[0]).head(3).to_dict("records"))
+            sweep_secs[name] = {k: entry.pop(k) for k in ("spark_sec", "oracle_sec")}
+        ledger[name] = entry
+        counts[entry["status"]] += 1
+        detail = {k: v for k, v in entry.items() if k not in ("status", "hash")}
+        print(f"{entry['status'].upper():9} {name}: {detail} {sweep_secs.get(name, '')}")
 
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    failures = [n for n, e in ledger.items() if e["status"] == "fail"]
+    print(f"\n{counts['pass']} pass, {counts['fail']} fail, {counts['rows_only']} rows-only")
 
     # Solo re-probe of the slowest-5 Spark-side sweep entries (r14,
     # VERDICT r13 #1b): the sweep runs each query ONCE inside a long
@@ -183,10 +184,10 @@ def main():
     for name, secs in sorted(
         sweep_secs.items(), key=lambda kv: -kv[1]["spark_sec"]
     )[:5]:
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             qs[name](spark, sf_dir).toPandas()
-            reprobe = round(time.time() - t0, 3)
+            reprobe = round(time.perf_counter() - t0, 3)
         except Exception:
             continue
         sweep_reprobes[name] = {
@@ -217,11 +218,7 @@ def main():
                 {
                     "git_head": head,  # audit: which tree this ledger attests
                     "sf_dir": sf_dir,
-                    "summary": {
-                        "pass": n_pass,
-                        "fail": n_fail,
-                        "rows_only": n_rows_only,
-                    },
+                    "summary": counts,
                     # top-10 sweep hogs, Spark and DuckDB halves split —
                     # a silent per-id cost must show up in the ledger the
                     # round it appears, not in a later bisect
