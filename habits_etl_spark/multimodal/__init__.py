@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from habits_etl_spark.multimodal.avi import (  # noqa: F401
     decode_mjpeg_avi,
     encode_mjpeg_avi,
+    iter_chunks,
 )
 from habits_etl_spark.multimodal.jpeg import decode_jpeg, encode_jpeg  # noqa: F401
 
@@ -726,8 +727,6 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 32) -> DataFrame:
     decode parallelizes by repartitioning frames, not videos."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from habits_etl_spark.multimodal.avi import _iter_chunks
-
         def frames_of(b) -> list[bytes]:
             data = bytes(b)
             if (
@@ -737,9 +736,9 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 32) -> DataFrame:
             ):
                 end = min(8 + struct.unpack_from("<I", data, 4)[0], len(data))
                 out = []
-                for ckid, body, size in _iter_chunks(data, 12, end):
+                for ckid, body, size in iter_chunks(data, 12, end):
                     if ckid == b"LIST" and size >= 4 and data[body : body + 4] == b"movi":
-                        for sub, sb, ss in _iter_chunks(
+                        for sub, sb, ss in iter_chunks(
                             data, body + 4, body + size
                         ):
                             if sub[2:4] in (b"dc", b"db"):

@@ -116,7 +116,7 @@ def encode_mjpeg_avi(
     return _chunk(b"RIFF", b"AVI " + hdrl + movi + idx1)
 
 
-def _iter_chunks(data: bytes, pos: int, end: int):
+def iter_chunks(data: bytes, pos: int, end: int):
     """Yield (fourcc, body_start, body_len) walking RIFF subchunks in
     data[pos:end]; stops (rather than raises) at any malformed size."""
     n = 0
@@ -157,13 +157,13 @@ def _decode_mjpeg_avi(
     rate = scale = 0
     frames: list[np.ndarray] = []
     saw_movi = False
-    for ckid, body, size in _iter_chunks(data, 12, end):
+    for ckid, body, size in iter_chunks(data, 12, end):
         if ckid == b"LIST" and size >= 4:
             listtype = data[body : body + 4]
             if listtype == b"hdrl":
-                for sub, sb, ss in _iter_chunks(data, body + 4, body + size):
+                for sub, sb, ss in iter_chunks(data, body + 4, body + size):
                     if sub == b"LIST" and ss >= 4 and data[sb : sb + 4] == b"strl":
-                        for s2, b2, s2len in _iter_chunks(data, sb + 4, sb + ss):
+                        for s2, b2, s2len in iter_chunks(data, sb + 4, sb + ss):
                             if s2 == b"strh" and s2len >= 32:
                                 fcc = data[b2 : b2 + 4]
                                 if fcc == b"vids":
@@ -172,7 +172,7 @@ def _decode_mjpeg_avi(
                                     )
             elif listtype == b"movi":
                 saw_movi = True
-                for sub, sb, ss in _iter_chunks(data, body + 4, body + size):
+                for sub, sb, ss in iter_chunks(data, body + 4, body + size):
                     # ##dc (compressed video) / ##db (uncompressed) of
                     # the first stream; MJPEG uses dc chunks
                     if sub[2:4] in (b"dc", b"db"):

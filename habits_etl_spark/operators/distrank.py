@@ -67,6 +67,7 @@ callers with expensive upstreams cache the input first
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -324,6 +325,17 @@ def with_global_ntile(
     return _probe(df, order, b).withColumn(out, tile).drop(_PID)
 
 
+def _ntile_ranks(n: int, total: int) -> list[int]:
+    """The n-1 tile-boundary ranks of NTILE(n) over ``total`` rows: the
+    cumulative tile sizes, the first ``total % n`` tiles one row larger."""
+    q, rem = divmod(total, n)
+    cums, acc = [], 0
+    for i in range(1, n):
+        acc += q + 1 if i <= rem else q
+        cums.append(acc)
+    return cums
+
+
 def with_global_ntile_by_selection(
     df: DataFrame,
     order: Sequence[Column | str],
@@ -343,16 +355,7 @@ def with_global_ntile_by_selection(
     and then streams. The price is O(n) struct comparisons per row —
     use it when n is a small domain constant (deciles/quintiles), the
     plain two-pass ntile for large n."""
-
-    def _ranks(total: int) -> list[int]:
-        q, rem = divmod(total, n)
-        cums, acc = [], 0
-        for i in range(1, n):
-            acc += q + 1 if i <= rem else q
-            cums.append(acc)
-        return cums
-
-    stats, total = global_order_statistics(df, order, _ranks, nparts)
+    stats, total = global_order_statistics(df, order, partial(_ntile_ranks, n), nparts)
     if total == 0:
         return df.withColumn(out, F.lit(None).cast("bigint"))
     key = _key_struct(order)
@@ -851,18 +854,10 @@ def grouped_ntile_by_selection(
     subset but needs the label on the full relation (rows outside
     ``df``'s groups get a NULL tile; rows outside its rank range get the
     arithmetic tile their key implies). Default: stamp onto ``df``."""
-    def _ranks(total: int) -> list[int]:
-        q, rem = divmod(total, n)
-        cums, acc = [], 0
-        for i in range(1, n):
-            acc += q + 1 if i <= rem else q
-            cums.append(acc)
-        return cums
-
     gnames = list(groups)
     target = df if apply_to is None else apply_to
     stats, totals = grouped_order_statistics(
-        df, gnames, order, _ranks, nparts, max_cells
+        df, gnames, order, partial(_ntile_ranks, n), nparts, max_cells
     )
     if not totals:
         return target.withColumn(out, F.lit(None).cast("bigint"))
@@ -872,7 +867,7 @@ def grouped_ntile_by_selection(
     expr = None
     for gkey, total in totals.items():
         tile: Column = F.lit(1).cast("bigint")
-        for gr in _ranks(total):
+        for gr in _ntile_ranks(n, total):
             blit = F.struct(
                 *[
                     F.lit(v).cast(t).alias(f"_k{j}")

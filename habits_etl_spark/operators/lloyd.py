@@ -6,8 +6,8 @@ Input is a (vec_id, v, nrm) relation: a float64 vector with its L2 norm
 as a scalar column, never a pre-divided unit vector (dividing inside an
 array lambda re-evaluates the norm fold per element). The caller keeps
 the model-specific parts: the assignment expression (centroids ride into
-the task as plan literals) and the centroid update applied to the
-collected per-cell sums.
+the task as plan literals; ``argmax_cell_expr`` for unit centroids) and
+the centroid update applied to the collected per-cell sums.
 
 Determinism is the contract that lets every fit be restated as a DuckDB
 oracle: seeds come from a salted md5 order (no RNG state, no density
@@ -28,6 +28,32 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from habits_etl_spark.functions.hashing import md5_int
+
+
+def lit_array_sql(vals) -> str:
+    """A float64 array literal as ONE parsed SQL expression (a Column-tree
+    build of 64 lits per centroid costs hundreds of py4j round trips —
+    the lesson recorded in PERF_r3_minhash.md #2)."""
+    return "array(" + ", ".join(f"{x!r}D" for x in vals) + ")"
+
+
+def dots_sql(centroids: list[list[float]], vcol: str = "v") -> str:
+    """SQL for array(dot(vcol, c_0), ..., dot(vcol, c_{k-1}))."""
+    return "array(" + ", ".join(
+        f"aggregate(zip_with({vcol}, {lit_array_sql(c)}, (x, y) -> x * y),"
+        " 0.0D, (acc, x) -> acc + x)"
+        for c in centroids
+    ) + ")"
+
+
+def argmax_cell_expr(centroids: list[list[float]]) -> Column:
+    """cluster id of the nearest centroid for embedding column ``v``, ties
+    to the lowest cell id — a pure map over the corpus, no shuffle, no
+    join: the centroid set rides into the task as plan literals. Because
+    centroids are unit vectors, argmax of the raw dot product IS argmax
+    of the cosine (the row's 1/nrm factor is a positive constant)."""
+    dots = dots_sql(centroids)
+    return F.expr(f"array_position({dots}, array_max({dots})) - 1").cast("int")
 
 
 def hash_seeds(rel: DataFrame, salt: str, k: int) -> list[list[float]]:

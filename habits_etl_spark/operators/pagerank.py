@@ -31,8 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DAMPING = 0.85
-_ITERS = 8
+DAMPING = 0.85
+ITERS = 8
 
 
 def pagerank(
@@ -41,8 +41,8 @@ def pagerank(
     node_col: str = "node",
     src: str = "src",
     dst: str = "dst",
-    damping: float = _DAMPING,
-    iters: int = _ITERS,
+    damping: float = DAMPING,
+    iters: int = ITERS,
 ) -> DataFrame:
     """Power-iteration PageRank.
 

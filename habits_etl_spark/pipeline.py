@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from habits_etl_spark.config import PipelineConfig
 from habits_etl_spark.operators.unpivot import normalize_wide_rows
 from habits_etl_spark.sinks.landing import land_raw
+from habits_etl_spark.sinks.manifest import read_snapshot, upsert_snapshot
 from habits_etl_spark.sinks.upsert import dedup_batch, upsert_keyed
 from habits_etl_spark.sources import read_wide_csv
 
@@ -38,8 +39,6 @@ def read_events_table(
     spark: SparkSession, warehouse: str, table_format: str = "parquet"
 ) -> DataFrame:
     if table_format == "manifest":
-        from habits_etl_spark.sinks.manifest import read_snapshot
-
         return read_snapshot(spark, _events_path(warehouse))
     return spark.read.parquet(_events_path(warehouse))
 
@@ -86,8 +85,6 @@ def run_ingest(
 
     events_path = _events_path(warehouse)
     if table_format == "manifest":
-        from habits_etl_spark.sinks.manifest import upsert_snapshot
-
         upsert_snapshot(
             spark,
             incoming,

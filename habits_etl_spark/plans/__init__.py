@@ -6,7 +6,11 @@ Submodules register into QUERIES / ORACLES via the ``query`` decorator in
 ``plans.common``.
 """
 
+import importlib
+import pkgutil
+
 from habits_etl_spark.plans.common import QUERIES, ORACLES  # noqa: F401
 
 # Importing the submodules populates the registries.
-from habits_etl_spark.plans import habits, star, star2, star3, star4, star5, star6, star7, star8, windows, ext_text, ext_vectors, ext_vectors2, ext_pipeline, ext_curation, ext_curation2, ext_curation3, ext_curation4, ext_curation5, ext_curation6, ext_curation7, ext_retrieval, ext_retrieval2, ext_vectors3, ext_vectors4, extra, serving, analytics, media, dq, sheet_e2e, manifest_e2e, formats_e2e, timeseries, features, robust, journey, privacy, trend, experiment, corpus, opsaudit, evaluation, binary_e2e, timeseries2, contrastive, resampling, nonparam, corpusqa, lifecycle, sketchjoin, streaming_e2e  # noqa: F401,E402
+for _mod in pkgutil.iter_modules(__path__):
+    importlib.import_module(f"{__name__}.{_mod.name}")

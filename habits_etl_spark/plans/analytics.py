@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from habits_etl_spark.plans.common import day_str, query, t
+from habits_etl_spark.streaming.funnel import FUNNEL, FUNNEL_STEP_US
 
 # --- cohort retention --------------------------------------------------------
 
@@ -80,35 +81,32 @@ def win_retention_cohort(spark, sf_dir):
 
 # --- ordered funnel ----------------------------------------------------------
 
-_FUNNEL = ("signup", "click", "purchase")
-_FUNNEL_STEP_US = 12 * 3600 * 1_000_000  # max delay between adjacent stages
-
 
 @query(
     "ext_event_funnel",
     f"""
     WITH s1 AS (
       SELECT user_id, min(epoch_us(ts)) AS t FROM events
-      WHERE event_type = '{_FUNNEL[0]}' GROUP BY 1
+      WHERE event_type = '{FUNNEL[0]}' GROUP BY 1
     ),
     s2 AS (
       SELECT e.user_id, min(epoch_us(e.ts)) AS t
       FROM events e JOIN s1 USING (user_id)
-      WHERE e.event_type = '{_FUNNEL[1]}' AND epoch_us(e.ts) > s1.t
-        AND epoch_us(e.ts) <= s1.t + {_FUNNEL_STEP_US} GROUP BY 1
+      WHERE e.event_type = '{FUNNEL[1]}' AND epoch_us(e.ts) > s1.t
+        AND epoch_us(e.ts) <= s1.t + {FUNNEL_STEP_US} GROUP BY 1
     ),
     s3 AS (
       SELECT e.user_id, min(epoch_us(e.ts)) AS t
       FROM events e JOIN s2 USING (user_id)
-      WHERE e.event_type = '{_FUNNEL[2]}' AND epoch_us(e.ts) > s2.t
-        AND epoch_us(e.ts) <= s2.t + {_FUNNEL_STEP_US} GROUP BY 1
+      WHERE e.event_type = '{FUNNEL[2]}' AND epoch_us(e.ts) > s2.t
+        AND epoch_us(e.ts) <= s2.t + {FUNNEL_STEP_US} GROUP BY 1
     ),
     counts AS (
-      SELECT 1 AS stage_ord, '{_FUNNEL[0]}' AS stage, count(*) AS n_users FROM s1
+      SELECT 1 AS stage_ord, '{FUNNEL[0]}' AS stage, count(*) AS n_users FROM s1
       UNION ALL
-      SELECT 2, '{_FUNNEL[1]}', count(*) FROM s2
+      SELECT 2, '{FUNNEL[1]}', count(*) FROM s2
       UNION ALL
-      SELECT 3, '{_FUNNEL[2]}', count(*) FROM s3
+      SELECT 3, '{FUNNEL[2]}', count(*) FROM s3
     )
     SELECT stage_ord, stage, CAST(n_users AS BIGINT) AS n_users,
            round(CAST(n_users AS DOUBLE)
@@ -118,9 +116,9 @@ _FUNNEL_STEP_US = 12 * 3600 * 1_000_000  # max delay between adjacent stages
     """,
 )
 def ext_event_funnel(spark, sf_dir):
-    """Strictly-ordered conversion funnel {_FUNNEL}: a user converts at
+    """Strictly-ordered conversion funnel {FUNNEL}: a user converts at
     stage k+1 only with an event AFTER their stage-k conversion instant
-    and within _FUNNEL_STEP_US (12 h) of it — first-touch semantics at
+    and within FUNNEL_STEP_US (12 h) of it — first-touch semantics at
     each stage, ClickHouse windowFunnel's 'strict_order' analog with a
     per-step window bound. Emits per stage the
     converted-user count and its share of the stage-1 cohort.
@@ -135,7 +133,7 @@ def ext_event_funnel(spark, sf_dir):
     return funnel_over(t(spark, sf_dir, "events"))
 
 
-def funnel_stages(e, stages=_FUNNEL, step_us: int = _FUNNEL_STEP_US):
+def funnel_stages(e, stages=FUNNEL, step_us: int = FUNNEL_STEP_US):
     """Per-stage (user_id, conversion-instant-μs) frames for an events-like
     DataFrame (user_id, ts, event_type). Factored out so property tests can
     drive it on generated inputs (tests/test_analytics_property.py)."""
@@ -164,7 +162,7 @@ def funnel_stages(e, stages=_FUNNEL, step_us: int = _FUNNEL_STEP_US):
     return out
 
 
-def funnel_over(e, stages=_FUNNEL, step_us: int = _FUNNEL_STEP_US):
+def funnel_over(e, stages=FUNNEL, step_us: int = FUNNEL_STEP_US):
     """The 3-row funnel result over an events-like DataFrame."""
     frames = funnel_stages(e, stages, step_us)
     counts = None

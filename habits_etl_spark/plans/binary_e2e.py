@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.multimodal import sniff_mime
 from habits_etl_spark.plans.common import query, scratch_result, t
 from habits_etl_spark.sinks import manifest as M
 
@@ -76,7 +77,6 @@ def src_binaryfile_scan(spark, sf_dir):
     compares md5 of the HEX of the content in both engines (DuckDB's
     blob→VARCHAR cast escapes bytes, so hashing the blob's hex is the
     portable form)."""
-    from habits_etl_spark.multimodal import sniff_mime
 
     docs = (
         t(spark, sf_dir, "documents")

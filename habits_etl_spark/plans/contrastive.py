@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from habits_etl_spark.operators.srp import cosine_expr
 from habits_etl_spark.plans.common import query, t
 
 # --- inverse-frequency class weights -----------------------------------------
@@ -223,7 +224,6 @@ def ext_hard_negatives_topk(spark, sf_dir):
     against the corpus scan and WindowGroupLimit keeps per-anchor
     heaps. Cosines are the shared fold kernel rounded before the
     deterministic top-k (neighbor-id tie-break)."""
-    from habits_etl_spark.plans.ext_vectors import cosine_expr
 
     e = t(spark, sf_dir, "embeddings")
     a = e.filter(F.col("vec_id") < _HN_QUERIES).select(
@@ -319,7 +319,6 @@ def ext_triplet_mining(spark, sf_dir):
     anchor partitioning; the triplet assembly joins two 1-row-per-
     anchor relations. Deterministic via rounded cosines and id
     tie-breaks."""
-    from habits_etl_spark.plans.ext_vectors import cosine_expr
 
     e = t(spark, sf_dir, "embeddings")
     a = e.filter(F.col("vec_id") < _HN_QUERIES).select(

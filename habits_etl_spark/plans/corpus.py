@@ -23,9 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.text import TOK_DUCK, tok_spark
 from habits_etl_spark.operators.distrank import with_global_running_agg
 from habits_etl_spark.plans.common import managed_cache, query, t
-from habits_etl_spark.plans.ext_text import _TOK_DUCK, _TOK_SPARK
 
 # --- Heaps' law fit ----------------------------------------------------------
 
@@ -34,7 +34,7 @@ from habits_etl_spark.plans.ext_text import _TOK_DUCK, _TOK_SPARK
     "ext_heaps_law_fit",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOK_DUCK}) AS w FROM documents
+      SELECT doc_id, unnest({TOK_DUCK}) AS w FROM documents
     ),
     per_doc AS (
       SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks FROM toks GROUP BY 1
@@ -109,12 +109,12 @@ def ext_heaps_law_fit(spark, sf_dir):
     # word is unchanged, but the shuffle input shrinks from corpus tokens
     # to per-doc distinct types before the map-side combine even runs.
     per_doc = d.select(
-        "doc_id", F.size(_TOK_SPARK(F.col("text"))).cast("bigint").alias("n_toks")
+        "doc_id", F.size(tok_spark(F.col("text"))).cast("bigint").alias("n_toks")
     ).filter(F.col("n_toks").isNotNull())
     new_types = (
         d.select(
             "doc_id",
-            F.explode(F.array_distinct(_TOK_SPARK(F.col("text")))).alias("w"),
+            F.explode(F.array_distinct(tok_spark(F.col("text")))).alias("w"),
         )
         .groupBy("w")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -167,7 +167,7 @@ def ext_heaps_law_fit(spark, sf_dir):
     f"""
     WITH vocab AS (
       SELECT DISTINCT source, w FROM (
-        SELECT source, unnest({_TOK_DUCK}) AS w FROM documents
+        SELECT source, unnest({TOK_DUCK}) AS w FROM documents
       )
     ),
     sizes AS (
@@ -205,7 +205,7 @@ def ext_source_vocab_overlap(spark, sf_dir):
     broadcast. Exact integer set algebra, two rounded ratios."""
     d = t(spark, sf_dir, "documents")
     vocab = d.select(
-        "source", F.explode(_TOK_SPARK(F.col("text"))).alias("w")
+        "source", F.explode(tok_spark(F.col("text"))).alias("w")
     ).distinct()
     sizes = vocab.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("v")
@@ -318,7 +318,7 @@ def agg_source_diversity(spark, sf_dir):
     "win_doc_novelty_curve",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOK_DUCK}) AS w FROM documents
+      SELECT doc_id, unnest({TOK_DUCK}) AS w FROM documents
     ),
     doc_types AS (
       SELECT DISTINCT doc_id, w FROM toks
@@ -353,7 +353,7 @@ def win_doc_novelty_curve(spark, sf_dir):
     parallelizes without a global order."""
     d = t(spark, sf_dir, "documents")
     doc_types = d.select(
-        "doc_id", F.explode(_TOK_SPARK(F.col("text"))).alias("w")
+        "doc_id", F.explode(tok_spark(F.col("text"))).alias("w")
     ).distinct()
     firsts = doc_types.groupBy("w").agg(F.min("doc_id").alias("first_doc"))
     is_new = F.when(F.col("first_doc") == F.col("doc_id"), 1)

@@ -33,9 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.text import TOK_DUCK, tok_spark
 from habits_etl_spark.operators.distrank import with_group_position
 from habits_etl_spark.plans.common import managed_cache, query, t
-from habits_etl_spark.plans.ext_text import _TOK_DUCK, _TOK_SPARK
 
 # Shared RE2-and-Java-safe character classes (hex escapes only).
 _CTRL = r"[\x00-\x08\x0b\x0c\x0e-\x1f]"  # C0 controls minus \t\n\r
@@ -184,7 +184,7 @@ _GRAM_N = 8
     "ext_source_reuse_matrix",
     f"""
     WITH toks AS (
-      SELECT source, {_TOK_DUCK} AS w FROM documents
+      SELECT source, {TOK_DUCK} AS w FROM documents
     ),
     g AS (
       SELECT DISTINCT source,
@@ -213,7 +213,7 @@ def ext_source_reuse_matrix(spark, sf_dir):
     aggregate has ≤ C(|sources|,2) groups. No all-pairs over docs
     anywhere."""
     d = t(spark, sf_dir, "documents")
-    w = _TOK_SPARK(F.col("text"))
+    w = tok_spark(F.col("text"))
     idx = F.when(
         F.size(w) >= _GRAM_N, F.sequence(F.lit(1), F.size(w) - (_GRAM_N - 1))
     ).otherwise(F.array().cast("array<int>"))

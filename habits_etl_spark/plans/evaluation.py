@@ -21,48 +21,18 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from habits_etl_spark.operators.distrank import with_global_running_agg
-from habits_etl_spark.plans.common import managed_cache, query, t
-from habits_etl_spark.plans.ext_text import (
-    _LANG_PROFILES,
-    _TOK_DUCK,
-    _TOK_SPARK,
-    _lang_score_duck,
-    _lang_score_spark,
+from habits_etl_spark.functions.text import (
+    LANG_GUESS_DUCK,
+    LANG_PROFILES,
+    TOK_DUCK,
+    lang_score_duck,
+    lang_score_spark,
+    tok_spark,
 )
-
-# The lang-ID decision, shared verbatim with ext_lang_id (ext_text.py).
-_GUESS_DUCK = f"""
-      SELECT doc_id, lang,
-             CASE WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-                  WHEN s_en >= greatest(s_de, s_fr, s_es) THEN 'en'
-                  WHEN s_de >= greatest(s_fr, s_es) THEN 'de'
-                  WHEN s_fr >= s_es THEN 'fr'
-                  ELSE 'es' END AS lang_guess
-      FROM (
-        SELECT doc_id, lang,
-               {_lang_score_duck(_LANG_PROFILES['en'])} AS s_en,
-               {_lang_score_duck(_LANG_PROFILES['de'])} AS s_de,
-               {_lang_score_duck(_LANG_PROFILES['fr'])} AS s_fr,
-               {_lang_score_duck(_LANG_PROFILES['es'])} AS s_es
-        FROM documents
-      )
-"""
-
-
-def _guessed(spark, sf_dir):
-    d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text"))
-    s = {k: _lang_score_spark(toks, v) for k, v in _LANG_PROFILES.items()}
-    guess = (
-        F.when(F.greatest(s["en"], s["de"], s["fr"], s["es"]) == 0, F.lit("und"))
-        .when(s["en"] >= F.greatest(s["de"], s["fr"], s["es"]), F.lit("en"))
-        .when(s["de"] >= F.greatest(s["fr"], s["es"]), F.lit("de"))
-        .when(s["fr"] >= s["es"], F.lit("fr"))
-        .otherwise(F.lit("es"))
-    )
-    return d.select("doc_id", "lang", guess.alias("lang_guess"))
-
+from habits_etl_spark.operators.distrank import with_global_running_agg
+from habits_etl_spark.operators.srp import cosine_expr
+from habits_etl_spark.plans.common import managed_cache, query, t
+from habits_etl_spark.plans.ext_text import ext_lang_id
 
 # --- confusion matrix --------------------------------------------------------
 
@@ -70,7 +40,7 @@ def _guessed(spark, sf_dir):
 @query(
     "ext_langid_confusion",
     f"""
-    WITH guessed AS ({_GUESS_DUCK}),
+    WITH guessed AS ({LANG_GUESS_DUCK}),
     m AS (
       SELECT lang AS true_lang, lang_guess AS guessed_lang,
              CAST(count(*) AS BIGINT) AS n
@@ -96,7 +66,7 @@ def ext_langid_confusion(spark, sf_dir):
     Scale: the guess is the same map-only expression as ext_lang_id;
     the matrix is one hash-agg onto |langs|² cells with map-side
     partials, row totals broadcast. Exact integers, one ratio."""
-    g = _guessed(spark, sf_dir)
+    g = ext_lang_id(spark, sf_dir)
     m = g.groupBy(
         F.col("lang").alias("true_lang"),
         F.col("lang_guess").alias("guessed_lang"),
@@ -124,7 +94,7 @@ def ext_langid_confusion(spark, sf_dir):
 @query(
     "ext_langid_prf",
     f"""
-    WITH guessed AS ({_GUESS_DUCK}),
+    WITH guessed AS ({LANG_GUESS_DUCK}),
     classes AS (
       SELECT lang AS cls FROM guessed
       UNION SELECT lang_guess AS cls FROM guessed
@@ -161,7 +131,7 @@ def ext_langid_prf(spark, sf_dir):
     (Spark side aggregates the matrix once rather than re-scanning per
     class — the decorrelated form of the oracle's per-class
     subqueries). Exact integer confusion algebra."""
-    g = _guessed(spark, sf_dir)
+    g = ext_lang_id(spark, sf_dir)
     m = g.groupBy(
         F.col("lang").alias("true_lang"),
         F.col("lang_guess").alias("guessed_lang"),
@@ -281,7 +251,6 @@ def ext_knn_ndcg_eval(spark, sf_dir):
     top-k); the ideal DCG comes from each label's relevant-pool size,
     not a second ranking pass. Discount terms are identical log2
     doubles over exact ranks, decimal-summed."""
-    from habits_etl_spark.plans.ext_vectors import cosine_expr
 
     e = t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _NDCG_QUERIES).select(
@@ -367,8 +336,8 @@ def ext_knn_ndcg_eval(spark, sf_dir):
     f"""
     WITH scored AS (
       SELECT doc_id, lang = 'en' AS label,
-             round(CAST({_lang_score_duck(_LANG_PROFILES['en'])} AS DOUBLE)
-                   / greatest(len({_TOK_DUCK}), 1), 6) AS score
+             round(CAST({lang_score_duck(LANG_PROFILES['en'])} AS DOUBLE)
+                   / greatest(len({TOK_DUCK}), 1), 6) AS score
       FROM documents
     ),
     by_score AS (
@@ -414,9 +383,9 @@ def agg_langid_feature_auc(spark, sf_dir):
     sums. Never ranks raw rows — ties are handled by the group sizes,
     which is also what makes the result engine-identical."""
     d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text"))
+    toks = tok_spark(F.col("text"))
     score = F.round(
-        _lang_score_spark(toks, _LANG_PROFILES["en"]).cast("double")
+        lang_score_spark(toks, LANG_PROFILES["en"]).cast("double")
         / F.greatest(F.size(toks), F.lit(1)),
         6,
     )

@@ -14,8 +14,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.common import query, t
-from habits_etl_spark.plans.ext_text import _TOK_DUCK, _TOK_SPARK
+from habits_etl_spark.functions.bpe import (
+    PRETOK_SPARK,
+    train_bpe_merges,
+    with_bpe_token_count,
+)
+from habits_etl_spark.functions.text import TOK_DUCK, tok_spark
+from habits_etl_spark.plans.common import ORACLES, query, t
 
 # --- sequence packing -------------------------------------------------------
 
@@ -26,7 +31,7 @@ _PACK_WINDOW = 256  # tokens per training sequence
     "ext_seq_packing",
     f"""
     WITH toks AS (
-      SELECT doc_id, source, len({_TOK_DUCK}) AS n_tokens FROM documents
+      SELECT doc_id, source, len({TOK_DUCK}) AS n_tokens FROM documents
     ),
     offs AS (
       SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -74,7 +79,7 @@ def seq_packing_over(d, n_tokens_col=None):
     n_tokens = (
         n_tokens_col.cast("bigint")
         if n_tokens_col is not None
-        else F.size(_TOK_SPARK(F.col("text"))).cast("bigint")
+        else F.size(tok_spark(F.col("text"))).cast("bigint")
     )
     w = (
         Window.partitionBy("source")
@@ -115,7 +120,7 @@ def _gram_sql(n: int) -> str:
     "ext_contamination_ngram",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_TOK_DUCK} AS w FROM documents
+      SELECT doc_id, {TOK_DUCK} AS w FROM documents
     ),
     g AS (
       SELECT doc_id, unnest({_gram_sql(_CONTAM_N)}) AS gram
@@ -151,7 +156,7 @@ def ext_contamination_ngram(spark, sf_dir):
         + "))"
     )
     g = (
-        d.select("doc_id", _TOK_SPARK(F.col("text")).alias("w"))
+        d.select("doc_id", tok_spark(F.col("text")).alias("w"))
         .filter(F.size(w) >= _CONTAM_N)
         .select("doc_id", F.explode(grams).alias("gram"))
     )
@@ -177,7 +182,7 @@ _REP_TOP2_MAX = 0.08
     "ext_repetition_stats",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_TOK_DUCK} AS w FROM documents
+      SELECT doc_id, {TOK_DUCK} AS w FROM documents
     ),
     g2 AS (
       SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 1),
@@ -210,7 +215,7 @@ def ext_repetition_stats(spark, sf_dir):
         "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"
     )
     c = (
-        d.select("doc_id", _TOK_SPARK(F.col("text")).alias("w"))
+        d.select("doc_id", tok_spark(F.col("text")).alias("w"))
         .filter(F.size(w) >= 2)
         .select("doc_id", F.explode(bigrams).alias("gram"))
         .groupBy("doc_id", "gram")
@@ -263,7 +268,6 @@ def _bpe_oracle_sql() -> str:
     bpe.py). The recursion is a CHECK, not the engine: depth is bounded
     by {n_merges} rounds / max pre-token length, rows per level by the
     {max_words}-word table, never by corpus size."""
-    from habits_etl_spark.functions.bpe import _PRETOK_SPARK
 
     n_merges, max_words = 64, 50_000
     best = f"""
@@ -279,7 +283,7 @@ def _bpe_oracle_sql() -> str:
     WITH RECURSIVE
     words AS MATERIALIZED (
       SELECT w, CAST(count(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(regexp_extract_all(text, '{_PRETOK_SPARK}')) AS w
+      FROM (SELECT unnest(regexp_extract_all(text, '{PRETOK_SPARK}')) AS w
             FROM documents)
       GROUP BY w ORDER BY freq DESC, w LIMIT {max_words}
     ),
@@ -347,7 +351,7 @@ def _bpe_oracle_sql() -> str:
       FROM tr WHERE kind > 0 GROUP BY rnd
     ),
     doc_words AS MATERIALIZED (
-      SELECT doc_id, unnest(regexp_extract_all(text, '{_PRETOK_SPARK}')) AS w
+      SELECT doc_id, unnest(regexp_extract_all(text, '{PRETOK_SPARK}')) AS w
       FROM documents
     ),
     vocab AS MATERIALIZED (SELECT DISTINCT w FROM doc_words),
@@ -417,7 +421,6 @@ def ext_token_count_bpe(spark, sf_dir):
     round over the bounded word-frequency table; application is an
     Arrow-batched map stage (broadcast ranks, per-task word cache) — no
     shuffle beyond the output ORDER BY, which a pipeline consumer drops."""
-    from habits_etl_spark.functions.bpe import train_bpe_merges, with_bpe_token_count
 
     d = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     merges = train_bpe_merges(spark, d, n_merges=64)
@@ -425,7 +428,7 @@ def ext_token_count_bpe(spark, sf_dir):
         with_bpe_token_count(d, merges)
         .select(
             "doc_id",
-            F.size(_TOK_SPARK(F.col("text"))).cast("bigint").alias("n_tokens_ws"),
+            F.size(tok_spark(F.col("text"))).cast("bigint").alias("n_tokens_ws"),
             "n_tokens_bpe",
         )
         .orderBy("doc_id")
@@ -439,7 +442,6 @@ def _fertility_oracle_sql() -> str:
     the token counts it summarizes. All sums are exact integers; the two
     ratios are single divisions of exact integers, deterministic in both
     engines."""
-    from habits_etl_spark.plans.common import ORACLES
 
     tc = ORACLES["ext_token_count_bpe"]
     return f"""

@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.common import query, t
-from habits_etl_spark.plans.ext_text import _TOK_DUCK, _TOK_SPARK
+from habits_etl_spark.functions.text import TOK_DUCK, tok_spark
+from habits_etl_spark.operators.distrank import grouped_ntile_by_selection
+from habits_etl_spark.plans.common import dec, managed_cache, query, t
 
 # --- duplicate n-gram coverage ----------------------------------------------
 
@@ -28,7 +29,7 @@ _COV_MAX_FRAC = 0.30  # flag docs whose grams are mostly corpus boilerplate
     "ext_dup_ngram_coverage",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_TOK_DUCK} AS w FROM documents
+      SELECT doc_id, {TOK_DUCK} AS w FROM documents
     ),
     g AS (
       SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - {_COV_N - 1}),
@@ -79,7 +80,7 @@ def ext_dup_ngram_coverage(spark, sf_dir):
         + "))"
     )
     c = (
-        d.select("doc_id", _TOK_SPARK(F.col("text")).alias("w"))
+        d.select("doc_id", tok_spark(F.col("text")).alias("w"))
         .filter(F.size(w) >= _COV_N)
         .select("doc_id", F.explode(grams).alias("gram"))
         .groupBy("doc_id", "gram")
@@ -112,7 +113,7 @@ _MIX_MAX_WEIGHT = 5.0  # cap upsampling of tiny sources (Pile-style epoch cap)
     WITH per_src AS (
       SELECT source,
              CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len({_TOK_DUCK})) AS BIGINT) AS n_tokens
+             CAST(sum(len({TOK_DUCK})) AS BIGINT) AS n_tokens
       FROM documents GROUP BY 1
     ),
     tot AS (
@@ -150,7 +151,7 @@ def domain_mix_over(d):
     not the raw one (examples/curation_pipeline.py)."""
     per_src = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.size(_TOK_SPARK(F.col("text"))).cast("bigint")).cast("bigint").alias("n_tokens"),
+        F.sum(F.size(tok_spark(F.col("text"))).cast("bigint")).cast("bigint").alias("n_tokens"),
     )
     tot = per_src.agg(
         F.sum("n_tokens").cast("bigint").alias("total_tokens"),
@@ -185,7 +186,7 @@ def domain_mix_over(d):
     "ext_unigram_lm_score",
     f"""
     WITH toks AS (
-      SELECT doc_id, lang, unnest({_TOK_DUCK}) AS tok FROM documents
+      SELECT doc_id, lang, unnest({TOK_DUCK}) AS tok FROM documents
     ),
     cnt AS (SELECT tok, count(*) AS c FROM toks GROUP BY 1),
     tot AS (SELECT CAST(sum(c) AS BIGINT) AS s FROM cnt),
@@ -230,12 +231,10 @@ def ext_unigram_lm_score(spark, sf_dir):
     engines produce the identical total regardless of partial-sum
     order, and terciles cut on the pre-ROUNDED score, so both engines
     select identical boundaries."""
-    from habits_etl_spark.operators.distrank import grouped_ntile_by_selection
-    from habits_etl_spark.plans.common import dec, managed_cache
 
     d = t(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", "lang", F.explode(_TOK_SPARK(F.col("text"))).alias("tok")
+        "doc_id", "lang", F.explode(tok_spark(F.col("text"))).alias("tok")
     )
     cnt = managed_cache(
         toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")),

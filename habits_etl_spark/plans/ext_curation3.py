@@ -10,8 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.text import TOK_DUCK, tok_spark
 from habits_etl_spark.plans.common import query, t
-from habits_etl_spark.plans.ext_text import _TOK_DUCK, _TOK_SPARK
 
 # --- Gopher quality rules ----------------------------------------------------
 
@@ -40,7 +40,7 @@ _G_STOP_SQL = ", ".join(f"'{s}'" for s in _G_STOPWORDS)
                    AS DOUBLE) / len(w), 4) AS alpha_frac,
              CAST(len(list_filter(w, x -> x IN ({_G_STOP_SQL}))) AS BIGINT)
                AS n_stop_hits
-      FROM (SELECT doc_id, {_TOK_DUCK} AS w FROM documents)
+      FROM (SELECT doc_id, {TOK_DUCK} AS w FROM documents)
     )
     SELECT doc_id, n_words, mean_word_len, alpha_frac, n_stop_hits,
            n_words BETWEEN {_G_MIN_WORDS} AND {_G_MAX_WORDS} AS r_word_count,
@@ -76,7 +76,7 @@ def ext_gopher_rules(spark, sf_dir):
 def gopher_rules_over(d):
     """Gopher rule battery over any documents-like DataFrame (doc_id, text)."""
     m = d.select(
-        "doc_id", _TOK_SPARK(F.col("text")).alias("w")
+        "doc_id", tok_spark(F.col("text")).alias("w")
     ).select(
         "doc_id",
         F.size("w").cast("bigint").alias("n_words"),
@@ -136,7 +136,7 @@ def _gram_with_pos_spark(k: int):
     "ext_exact_substr_spans",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_TOK_DUCK} AS w FROM documents
+      SELECT doc_id, {TOK_DUCK} AS w FROM documents
     ),
     g AS (
       SELECT doc_id, u.i - 1 AS pos,
@@ -206,7 +206,7 @@ def exact_substr_spans_over(d, k=_ES_K, min_span=_ES_MIN_SPAN, max_postings=_ES_
     {max_postings}-distinct-doc cap before pair expansion, so per-gram
     fan-out is O(cap^2) worst-case on collision-scale rows only."""
     g = (
-        d.select("doc_id", _TOK_SPARK(F.col("text")).alias("w"))
+        d.select("doc_id", tok_spark(F.col("text")).alias("w"))
         .filter(F.size("w") >= k)
         .select("doc_id", F.posexplode(_gram_with_pos_spark(k)).alias("pos", "gram"))
     )

@@ -14,13 +14,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from habits_etl_spark.functions.hashing import md5_int
-from habits_etl_spark.plans.common import dec, query, t
-from habits_etl_spark.plans.ext_text import (
-    _QUALITY_INPUTS_DUCK,
-    _QUALITY_SQL,
-    _TOK_SPARK,
-    _quality_col,
+from habits_etl_spark.functions.text import (
+    QUALITY_INPUTS_DUCK,
+    QUALITY_SQL,
+    quality_col,
+    tok_spark,
 )
+from habits_etl_spark.plans.common import dec, managed_cache, query, t
 
 # Chunk geometry: 64-token windows, stride 48 (16-token overlap) — the
 # window/overlap shape RAG indexers and long-doc pretraining both use.
@@ -133,12 +133,12 @@ def ext_train_shuffle_shards(spark, sf_dir):
     f"""
     WITH inputs AS (
       SELECT source, lang, md5(text) AS text_hash,
-             {_QUALITY_INPUTS_DUCK}
+             {QUALITY_INPUTS_DUCK}
       FROM documents
     ),
     m AS (
       SELECT source, lang, text_hash, n_tokens,
-             {_QUALITY_SQL} AS quality
+             {QUALITY_SQL} AS quality
       FROM inputs
     )
     SELECT source, lang,
@@ -156,7 +156,7 @@ def ext_dataset_card(spark, sf_dir):
     publishes): per (source, language) stratum — document count, exact
     unique-text count (dedup headroom), total and median token counts,
     and mean quality score. Composes the tokenizer, the exact-dedup hash,
-    and the shared quality formula (ext_text._quality_col) into one
+    and the shared quality formula (functions/text.py quality_col) into one
     rollup, so the numbers here are definitionally consistent with
     ext_exact_dedup / ext_quality_score.
 
@@ -171,13 +171,13 @@ def ext_dataset_card(spark, sf_dir):
     swap to approx_percentile (agg_approx_percentiles precedent); kept
     exact here for oracle parity at test scale."""
     d = t(spark, sf_dir, "documents")
-    n_tokens = F.size(_TOK_SPARK(F.col("text"))).cast("bigint")
+    n_tokens = F.size(tok_spark(F.col("text"))).cast("bigint")
     m = d.select(
         "source",
         "lang",
         F.md5("text").alias("text_hash"),
         n_tokens.alias("n_tokens"),
-        _quality_col().alias("quality"),
+        quality_col().alias("quality"),
     )
     return (
         m.groupBy("source", "lang")
@@ -356,7 +356,6 @@ def ext_label_balance(spark, sf_dir):
     join_cross_scalar_cte). The fact table shuffles once."""
     emb = t(spark, sf_dir, "embeddings")
     g = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
-    from habits_etl_spark.plans.common import managed_cache
 
     g = managed_cache(g, "ext_label_balance.g")
     tot = g.agg(F.sum("n").cast("bigint").alias("total"))

@@ -22,13 +22,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from habits_etl_spark.functions.hashing import md5_int
-from habits_etl_spark.plans.common import dec, managed_cache, query, t, widened
-from habits_etl_spark.plans.ext_text import (
-    _MINHASH_CTES,
-    _MINHASH_FINAL,
-    _TOK_DUCK,
-    _TOK_SPARK,
-)
+from habits_etl_spark.functions.text import TOK_DUCK, tok_spark
+from habits_etl_spark.operators.minhash import MINHASH_CTES, MINHASH_FINAL
+from habits_etl_spark.operators.pagerank import DAMPING, ITERS, pagerank
+from habits_etl_spark.plans.bases import minhash_pairs_shared
+from habits_etl_spark.plans.common import ORACLES, dec, managed_cache, query, t, widened
+from habits_etl_spark.plans.ext_curation3 import ext_gopher_rules
 
 # --- character entropy -------------------------------------------------------
 
@@ -109,7 +108,7 @@ _LM_LAMBDA = 0.7  # bigram weight; (1 - lambda) falls back to the unigram
 @query(
     "ext_bigram_lm_score",
     f"""
-    WITH d AS (SELECT doc_id, lang, {_TOK_DUCK} AS w FROM documents),
+    WITH d AS (SELECT doc_id, lang, {TOK_DUCK} AS w FROM documents),
     b AS (
       SELECT doc_id, lang, unnest(
         list_transform(generate_series(1, len(w) - 1),
@@ -121,7 +120,7 @@ _LM_LAMBDA = 0.7  # bigram weight; (1 - lambda) falls back to the unigram
                   split_part(bg, ' ', 2) AS w2 FROM b),
     cb AS (SELECT bg, count(*) AS c_bg FROM bi GROUP BY 1),
     cctx AS (SELECT w1, count(*) AS c_ctx FROM bi GROUP BY 1),
-    toks AS (SELECT unnest({_TOK_DUCK}) AS tok FROM documents),
+    toks AS (SELECT unnest({TOK_DUCK}) AS tok FROM documents),
     cuni AS (SELECT tok, count(*) AS c_uni FROM toks GROUP BY 1),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM toks),
     scored AS (
@@ -156,7 +155,7 @@ def ext_bigram_lm_score(spark, sf_dir):
     (rule 1). No self-joins: bigrams come from one array transform in
     the map stage."""
     d = t(spark, sf_dir, "documents")
-    w = d.select("doc_id", "lang", _TOK_SPARK(F.col("text")).alias("w"))
+    w = d.select("doc_id", "lang", tok_spark(F.col("text")).alias("w"))
     bi = (
         w.select(
             "doc_id",
@@ -192,7 +191,7 @@ def ext_bigram_lm_score(spark, sf_dir):
         "ext_bigram_lm_score/cab",
     )
     cctx = cab.groupBy("w1").agg(F.sum("c_bg").alias("c_ctx"))
-    toks = d.select(F.explode(_TOK_SPARK(F.col("text"))).alias("tok"))
+    toks = d.select(F.explode(tok_spark(F.col("text"))).alias("tok"))
     cuni = managed_cache(
         toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_uni")),
         "ext_bigram_lm_score/cuni",
@@ -240,7 +239,7 @@ _TRAIN_PCT, _VAL_PCT = 90, 5
     "ext_hash_split",
     f"""
     WITH h AS (
-      SELECT lang, {_TOK_DUCK} AS w,
+      SELECT lang, {TOK_DUCK} AS w,
              CAST(('0x' || substr(md5('{_SPLIT_SALT}' || CAST(doc_id AS VARCHAR)), 1, 8))
                   AS BIGINT) % 100 AS bucket
       FROM documents
@@ -285,7 +284,7 @@ def ext_hash_split(spark, sf_dir):
         d.select(
             split.alias("split"),
             "lang",
-            F.size(_TOK_SPARK(F.col("text"))).alias("n_toks"),
+            F.size(tok_spark(F.col("text"))).alias("n_toks"),
         )
         .groupBy("split", "lang")
         .agg(
@@ -395,7 +394,7 @@ _QC_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
     "ext_quality_classifier",
     f"""
     WITH w AS (
-      SELECT doc_id, lang, {_TOK_DUCK} AS w,
+      SELECT doc_id, lang, {TOK_DUCK} AS w,
              length(regexp_replace(text, '\\s+', '', 'g')) AS n_chars_nws
       FROM documents
     ),
@@ -439,7 +438,7 @@ def ext_quality_classifier(spark, sf_dir):
     w = d.select(
         "doc_id",
         "lang",
-        _TOK_SPARK(F.col("text")).alias("w"),
+        tok_spark(F.col("text")).alias("w"),
         F.length(F.regexp_replace("text", r"\s+", "")).alias("n_chars_nws"),
     ).filter(F.size("w") > 0)
     in_list = ", ".join(f"'{s}'" for s in _QC_STOPWORDS)
@@ -478,7 +477,7 @@ _ZIPF_TOP_V = 1000  # fit over the top-V types; bounds the window + the fit
 @query(
     "ext_zipf_fit",
     f"""
-    WITH toks AS (SELECT unnest({_TOK_DUCK}) AS tok FROM documents),
+    WITH toks AS (SELECT unnest({TOK_DUCK}) AS tok FROM documents),
     cnt AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1),
     top AS (SELECT tok, c FROM cnt ORDER BY c DESC, tok LIMIT {_ZIPF_TOP_V}),
     ranked AS (
@@ -518,7 +517,7 @@ def ext_zipf_fit(spark, sf_dir):
     regression is computed from decimal exact sums of per-rank terms
     (rule 1), so partial-agg order cannot move the slope."""
     toks = t(spark, sf_dir, "documents").select(
-        F.explode(_TOK_SPARK(F.col("text"))).alias("tok")
+        F.explode(tok_spark(F.col("text"))).alias("tok")
     )
     cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     top = cnt.orderBy(F.col("c").desc(), "tok").limit(_ZIPF_TOP_V)
@@ -574,10 +573,9 @@ def _pagerank_oracle_sql() -> str:
     and the per-round rank expression uses the repr of the Python-
     evaluated constants — (1.0 - damping) is computed driver-side in the
     Spark operator, so the oracle carries its exact binary value."""
-    from habits_etl_spark.operators.pagerank import _DAMPING, _ITERS
 
-    one_minus_d = repr(1.0 - _DAMPING)
-    d = repr(_DAMPING)
+    one_minus_d = repr(1.0 - DAMPING)
+    d = repr(DAMPING)
     ctes = [
         "pairs AS (SELECT doc_a, doc_b FROM mh_pairs)",
         "nodes AS MATERIALIZED (SELECT doc_id AS node FROM documents)",
@@ -592,7 +590,7 @@ def _pagerank_oracle_sql() -> str:
         " FROM e GROUP BY src)",
         "r0 AS MATERIALIZED (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)",
     ]
-    for i in range(1, _ITERS + 1):
+    for i in range(1, ITERS + 1):
         ctes.append(
             f"""c{i} AS (
       SELECT e.dst,
@@ -617,10 +615,10 @@ def _pagerank_oracle_sql() -> str:
     )"""
         )
     return (
-        f"WITH {_MINHASH_CTES},\n    mh_pairs AS ({_MINHASH_FINAL}),\n    "
+        f"WITH {MINHASH_CTES},\n    mh_pairs AS ({MINHASH_FINAL}),\n    "
         + ",\n    ".join(ctes)
         + f"""
-    SELECT node AS doc_id, round(rank, 9) AS rank FROM r{_ITERS}
+    SELECT node AS doc_id, round(rank, 9) AS rank FROM r{ITERS}
     ORDER BY rank DESC, doc_id
     """
     )
@@ -640,8 +638,6 @@ def ext_pagerank_dupgraph(spark, sf_dir):
     over the shared MinHash pair graph (_pagerank_oracle_sql above);
     exact semantics additionally pinned in tests/test_pagerank.py against
     a Python reference."""
-    from habits_etl_spark.operators.pagerank import pagerank
-    from habits_etl_spark.plans.ext_text import minhash_pairs_shared
 
     docs = t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
     pairs = minhash_pairs_shared(spark, sf_dir)
@@ -668,7 +664,7 @@ _CONT_THRESHOLD = 0.1
       SELECT doc_id, source,
              unnest(list_distinct(list_transform(generate_series(1, len(w) - {_CONT_N - 1}),
                     i -> w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]))) AS gram
-      FROM (SELECT doc_id, source, {_TOK_DUCK} AS w FROM documents)
+      FROM (SELECT doc_id, source, {TOK_DUCK} AS w FROM documents)
       WHERE len(w) >= {_CONT_N}
     ),
     sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY 1),
@@ -736,7 +732,7 @@ def ext_containment_blocked(spark, sf_dir):
     # parquet arrives as 1-2 splits and the gram build is the dominant
     # map cost — serialized on 2 cores it was 10.8 s of the sf1 wall
     d = widened(spark, d)
-    w = d.select("doc_id", "source", _TOK_SPARK(F.col("text")).alias("w")).filter(
+    w = d.select("doc_id", "source", tok_spark(F.col("text")).alias("w")).filter(
         F.size("w") >= _CONT_N
     )
     # cached: sizes and BOTH join arms scan this relation — uncached, the
@@ -810,7 +806,7 @@ _WS_PER_LANG = 20  # sampled docs per language stratum
     "ext_weighted_sample",
     f"""
     WITH q AS (
-      SELECT doc_id, lang, {_TOK_DUCK} AS w,
+      SELECT doc_id, lang, {TOK_DUCK} AS w,
              (CAST(('0x' || substr(md5('wsample:' || CAST(doc_id AS VARCHAR)), 1, 8))
                    AS BIGINT) + 1) / 4294967297.0 AS u
       FROM documents
@@ -845,7 +841,7 @@ def ext_weighted_sample(spark, sf_dir):
     (TakeOrdered per stratum). No collect, no RNG state."""
     d = t(spark, sf_dir, "documents")
     u = (md5_int("wsample:", F.col("doc_id").cast("string")) + 1) / F.lit(4294967297.0)
-    w = _TOK_SPARK(F.col("text"))
+    w = tok_spark(F.col("text"))
     scored = d.select(
         "doc_id",
         "lang",
@@ -871,7 +867,7 @@ _VC_KS = (1, 5, 10, 20, 50, 100)
 @query(
     "ext_vocab_coverage",
     f"""
-    WITH toks AS (SELECT unnest({_TOK_DUCK}) AS tok FROM documents),
+    WITH toks AS (SELECT unnest({TOK_DUCK}) AS tok FROM documents),
     cnt AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1),
     top AS (SELECT tok, c FROM cnt ORDER BY c DESC, tok LIMIT {max(_VC_KS)}),
     ranked AS (
@@ -897,7 +893,7 @@ def ext_vocab_coverage(spark, sf_dir):
     ext_zipf_fit — here a range join of the tiny k list against ranked
     counts, both broadcast-sized)."""
     toks = t(spark, sf_dir, "documents").select(
-        F.explode(_TOK_SPARK(F.col("text"))).alias("tok")
+        F.explode(tok_spark(F.col("text"))).alias("tok")
     )
     cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     top = cnt.orderBy(F.col("c").desc(), "tok").limit(max(_VC_KS))
@@ -941,8 +937,6 @@ def _calibration_sql() -> str:
     # Compose the two REGISTERED oracle statements verbatim (DuckDB allows
     # a full WITH statement inside a parenthesized subquery), so this
     # oracle can never drift from the chains it audits.
-    from habits_etl_spark.plans.common import ORACLES
-
     qc_sql = ORACLES["ext_quality_classifier"]
     gr_sql = ORACLES["ext_gopher_rules"]
     mean_pred = (
@@ -987,7 +981,6 @@ def ext_classifier_calibration(spark, sf_dir):
     two registered oracle statements composed verbatim as subqueries.
     Reference parity: [E] extension (BASELINE north-star 'quality
     scoring'); no reference twin."""
-    from habits_etl_spark.plans.ext_curation3 import ext_gopher_rules
 
     qc = ext_quality_classifier(spark, sf_dir).select("doc_id", "quality_prob")
     gr = ext_gopher_rules(spark, sf_dir).select("doc_id", "passed")

@@ -20,8 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from habits_etl_spark.functions.text import TOK_DUCK, tok_spark
+from habits_etl_spark.operators.srp import fold_dot
 from habits_etl_spark.plans.common import dec, query, t
-from habits_etl_spark.plans.ext_text import _TOK_DUCK, _TOK_SPARK
 
 # --- exact mode + median per group ------------------------------------------
 
@@ -214,12 +215,12 @@ def ext_fuzzy_linkage(spark, sf_dir):
 
 # --- label-blocked kNN graph ------------------------------------------------
 
-_KNN_K = 3
+KNN_K = 3
 
 
 # Shared with ext_curation7's triangle count, which re-derives the same
 # graph inside its own oracle.
-_KNN_RANKED_CTE = """
+KNN_RANKED_CTE = """
     e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
           FROM embeddings),
     scored AS (
@@ -241,8 +242,8 @@ _KNN_RANKED_CTE = """
 @query(
     "ext_knn_graph_blocked",
     f"""
-    WITH {_KNN_RANKED_CTE}
-    SELECT src_id, nbr_id, label, cos, rk FROM ranked WHERE rk <= {_KNN_K}
+    WITH {KNN_RANKED_CTE}
+    SELECT src_id, nbr_id, label, cos, rk FROM ranked WHERE rk <= {KNN_K}
     ORDER BY src_id, rk
     """,
 )
@@ -283,11 +284,7 @@ def ext_knn_graph_blocked(spark, sf_dir):
         F.col("vec_id").alias("nbr_id"), F.col("label").alias("label_b"),
         F.col("v").alias("b_v"), F.col("nrm").alias("b_nrm"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("a_v"), F.col("b_v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = fold_dot(F.col("a_v"), F.col("b_v"))
     scored = (
         a.join(b, (F.col("label") == F.col("label_b"))
                & (F.col("nbr_id") != F.col("src_id")))
@@ -299,7 +296,7 @@ def ext_knn_graph_blocked(spark, sf_dir):
     w = Window.partitionBy("src_id").orderBy(F.col("cos").desc(), F.col("nbr_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KNN_K)
+        .filter(F.col("rk") <= KNN_K)
         .orderBy("src_id", "rk")
     )
 
@@ -313,7 +310,7 @@ _PMI_TOP_K = 100
 @query(
     "ext_pmi_collocations",
     f"""
-    WITH d AS (SELECT {_TOK_DUCK} AS w FROM documents),
+    WITH d AS (SELECT {TOK_DUCK} AS w FROM documents),
     b AS (
       SELECT unnest(list_transform(generate_series(1, len(w) - 1),
                                    i -> w[i] || ' ' || w[i + 1])) AS bg
@@ -358,7 +355,7 @@ def ext_pmi_collocations(spark, sf_dir):
     global window) over the rounded score with a lexicographic
     tiebreak, so the boundary is a total order in both engines."""
     d = t(spark, sf_dir, "documents")
-    w = d.select(_TOK_SPARK(F.col("text")).alias("w"))
+    w = d.select(tok_spark(F.col("text")).alias("w"))
     bi = (
         w.select(
             F.explode(

@@ -22,8 +22,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.operators.kcore import coreness
+from habits_etl_spark.operators.minhash import MINHASH_CTES, MINHASH_FINAL
+from habits_etl_spark.plans.bases import minhash_pairs_shared
 from habits_etl_spark.plans.common import query, t
-from habits_etl_spark.plans.ext_curation6 import _KNN_K, _KNN_RANKED_CTE
+from habits_etl_spark.plans.ext_curation6 import (
+    KNN_K,
+    KNN_RANKED_CTE,
+    ext_knn_graph_blocked,
+)
 
 # --- embedding outliers (diagonal Mahalanobis) -------------------------------
 
@@ -133,8 +140,8 @@ def ext_embedding_outliers(spark, sf_dir):
 @query(
     "ext_knn_triangles",
     f"""
-    WITH {_KNN_RANKED_CTE},
-    knn AS (SELECT src_id, nbr_id FROM ranked WHERE rk <= {_KNN_K}),
+    WITH {KNN_RANKED_CTE},
+    knn AS (SELECT src_id, nbr_id FROM ranked WHERE rk <= {KNN_K}),
     mutual AS (
       SELECT a.src_id AS a, a.nbr_id AS b
       FROM knn a JOIN knn b ON b.src_id = a.nbr_id AND b.nbr_id = a.src_id
@@ -163,7 +170,6 @@ def ext_knn_triangles(spark, sf_dir):
     k, candidate fan-out per edge is ≤ k, so the join output is O(k·|E|)
     — never a corpus-sized product. (Same plan MapReduce triangle
     counting uses post node-ordering.)"""
-    from habits_etl_spark.plans.ext_curation6 import ext_knn_graph_blocked
 
     knn = ext_knn_graph_blocked(spark, sf_dir).select("src_id", "nbr_id")
     rev = knn.select(
@@ -332,11 +338,10 @@ def _kcore_oracle_sql() -> str:
     MATERIALIZED: the recursive term re-executes per iteration, and an
     inlined edge list would re-run the whole MinHash pipeline each round
     (the established CTE-materialization footgun)."""
-    from habits_etl_spark.plans.ext_text import _MINHASH_CTES, _MINHASH_FINAL
 
     return f"""
-    WITH RECURSIVE {_MINHASH_CTES},
-    mh_pairs AS ({_MINHASH_FINAL}),
+    WITH RECURSIVE {MINHASH_CTES},
+    mh_pairs AS ({MINHASH_FINAL}),
     knodes AS MATERIALIZED (SELECT doc_id AS node FROM documents),
     kedges AS MATERIALIZED (
       SELECT DISTINCT src, dst FROM (
@@ -389,8 +394,6 @@ def ext_kcore_dupgraph(spark, sf_dir):
     caps at operators/kcore.py _MAX_ITERS=20 — a graph needing more
     rounds would hash-mismatch, which is the honest behavior (the cap
     exists to bound a runaway job, not to change semantics)."""
-    from habits_etl_spark.operators.kcore import coreness
-    from habits_etl_spark.plans.ext_text import minhash_pairs_shared
 
     docs = t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
     pairs = minhash_pairs_shared(spark, sf_dir)

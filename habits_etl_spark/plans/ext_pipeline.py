@@ -2,8 +2,8 @@
 pipeline actually ships — which doc to KEEP per duplicate cluster, cluster
 structure over embedding near-dups, and per-doc salient terms (TF-IDF).
 
-These compose the primitives in ext_text / ext_vectors / operators.clusters
-into the deliverable artifacts (keep lists, cluster maps, term profiles),
+These compose the kernels in functions/text, operators/minhash and
+operators/clusters into the deliverable artifacts (keep lists, cluster maps, term profiles),
 each with a DuckDB oracle so the composition — not just the parts — is
 verified. Reference parity: the reference has no dedup surface at all;
 these extend it per the BASELINE north-star list (dedup / similarity /
@@ -16,27 +16,43 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from habits_etl_spark.functions.hashing import md5_int
+from habits_etl_spark.functions.text import (
+    LANG_PROFILES,
+    QUALITY_INPUTS_DUCK,
+    QUALITY_SQL,
+    TOK_DUCK,
+    lang_score_duck,
+    lang_score_spark,
+    quality_col,
+    tok_spark,
+)
 from habits_etl_spark.operators.clusters import connected_components
-from habits_etl_spark.plans.common import query, t
+from habits_etl_spark.operators.distrank import grouped_ntile_by_selection
+from habits_etl_spark.operators.minhash import (
+    JACCARD_THRESHOLD,
+    MINHASH_CTES,
+    MINHASH_FINAL,
+    N_HASHES,
+    band_rows_from,
+    minhash_ctes,
+    near_dedup_pairs,
+    signatures,
+)
+from habits_etl_spark.plans.bases import (
+    minhash_base,
+    minhash_pairs_shared,
+    prepped_embeddings,
+)
+from habits_etl_spark.plans.common import managed_cache, query, t
 from habits_etl_spark.plans.ext_text import (
-    _LANG_PROFILES,
-    _MINHASH_CTES,
-    _MINHASH_FINAL,
-    _QUALITY_INPUTS_DUCK,
-    _QUALITY_SQL,
-    _TOK_DUCK,
-    _TOK_SPARK,
-    _lang_score_duck,
-    _lang_score_spark,
+    ext_near_dedup_minhash,
     pii_scrub_expr,
     pii_scrub_sql,
 )
 from habits_etl_spark.plans.ext_vectors import (
-    _EXACT_PAIRS_CTE,
-    _EXACT_PAIRS_FINAL,
-    _prepped_embeddings,
-    _pair_arms,
-    _cosine_pairs_from,
+    EXACT_PAIRS_CTE,
+    EXACT_PAIRS_FINAL,
+    exact_pairs_blocked,
 )
 
 
@@ -62,8 +78,8 @@ def _cc_sql(src: str, dst: str) -> str:
 @query(
     "ext_dedup_keep_policy",
     f"""
-    WITH RECURSIVE {_MINHASH_CTES},
-    pairs AS ({_MINHASH_FINAL}),
+    WITH RECURSIVE {MINHASH_CTES},
+    pairs AS ({MINHASH_FINAL}),
     {_cc_sql("doc_a", "doc_b")},
     all_docs AS (
       SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id, d.n_chars
@@ -86,7 +102,6 @@ def ext_dedup_keep_policy(spark, sf_dir):
     corpus -> per-cluster ranking window. Scale: the window partitions by
     cluster_id where almost every cluster is a singleton — one shuffle of
     (doc_id, cluster_id, n_chars), never the text."""
-    from habits_etl_spark.plans.ext_text import minhash_pairs_shared
 
     d = t(spark, sf_dir, "documents")
     pairs = minhash_pairs_shared(spark, sf_dir)
@@ -109,8 +124,8 @@ def ext_dedup_keep_policy(spark, sf_dir):
 @query(
     "ext_embedding_dup_clusters",
     f"""
-    WITH RECURSIVE {_EXACT_PAIRS_CTE},
-    pairs AS ({_EXACT_PAIRS_FINAL}),
+    WITH RECURSIVE {EXACT_PAIRS_CTE},
+    pairs AS ({EXACT_PAIRS_FINAL}),
     {_cc_sql("vec_a", "vec_b")}
     SELECT u AS vec_id, cluster_id FROM comp ORDER BY vec_id
     """,
@@ -119,17 +134,16 @@ def ext_embedding_dup_clusters(spark, sf_dir):
     """Connected components over the embedding-cosine near-dup graph — the
     vector-space twin of ext_dup_clusters (exact cosine pairs feed the
     same O(log n) label propagation). Pairs come from the r12 block-
-    matmul path (_exact_pairs_blocked) — same values, ~20x less pair-dot
+    matmul path (exact_pairs_blocked) — same values, ~20x less pair-dot
     cost than the old HOF expression join; its _EXACT_PAIRS_MAX-bounded
     broadcast contract applies here too (past the bound, cluster over
     ext_cosine_pairs_lsh instead)."""
-    from habits_etl_spark.plans.ext_vectors import _exact_pairs_blocked
 
-    prepped = _prepped_embeddings(spark, sf_dir)
+    prepped = prepped_embeddings(spark, sf_dir)
     # parquet-metadata count of the underlying table: the gate inside
-    # _exact_pairs_blocked needs n but must not pay a full job for it
+    # exact_pairs_blocked needs n but must not pay a full job for it
     n = t(spark, sf_dir, "embeddings").count()
-    pairs = _exact_pairs_blocked(spark, prepped, n=n).select("vec_a", "vec_b")
+    pairs = exact_pairs_blocked(spark, prepped, n=n).select("vec_a", "vec_b")
     comps = connected_components(pairs, "vec_a", "vec_b")
     return comps.select(
         F.col("vertex").alias("vec_id"), F.col("component").alias("cluster_id")
@@ -143,7 +157,7 @@ _TFIDF_TOP_K = 3
     "ext_tfidf_topk",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOK_DUCK}) AS tok FROM documents
+      SELECT doc_id, unnest({TOK_DUCK}) AS tok FROM documents
     ),
     tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
     df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
@@ -205,8 +219,8 @@ _INCOMING = "doc_id % 10 >= 8"
 @query(
     "ext_incremental_dedup",
     f"""
-    WITH {_MINHASH_CTES},
-    pairs AS ({_MINHASH_FINAL}),
+    WITH {MINHASH_CTES},
+    pairs AS ({MINHASH_FINAL}),
     incoming AS (SELECT doc_id, md5(text) AS h FROM documents WHERE {_INCOMING}),
     existing AS (SELECT doc_id, md5(text) AS h FROM documents WHERE NOT ({_INCOMING})),
     exact_hit AS (
@@ -243,7 +257,6 @@ def ext_incremental_dedup(spark, sf_dir):
     signatures/bands would be a precomputed, partitioned table rather
     than recomputed (noted in README), but the join topology is
     identical."""
-    from habits_etl_spark.plans.ext_text import minhash_pairs_shared
 
     d = t(spark, sf_dir, "documents")
     is_incoming = (F.col("doc_id") % 10) >= 8
@@ -297,11 +310,11 @@ _FUNNEL_MIN_STOP = 0.005
     f"""
     WITH m AS (
       SELECT doc_id, n_chars,
-             len({_TOK_DUCK}) AS n_tokens,
-             CAST(len(list_distinct({_TOK_DUCK})) AS DOUBLE)
-               / greatest(len({_TOK_DUCK}), 1) AS uniq_ratio,
-             CAST({_lang_score_duck(_LANG_PROFILES['en'])} AS DOUBLE)
-               / greatest(len({_TOK_DUCK}), 1) AS stop_ratio
+             len({TOK_DUCK}) AS n_tokens,
+             CAST(len(list_distinct({TOK_DUCK})) AS DOUBLE)
+               / greatest(len({TOK_DUCK}), 1) AS uniq_ratio,
+             CAST({lang_score_duck(LANG_PROFILES['en'])} AS DOUBLE)
+               / greatest(len({TOK_DUCK}), 1) AS stop_ratio
       FROM documents
     )
     SELECT stage, CAST(count(*) AS BIGINT) AS n_docs
@@ -328,11 +341,11 @@ def ext_quality_funnel(spark, sf_dir):
     count(*). The stage predicates mirror ext_quality_score's components,
     so the funnel explains exactly what the score penalizes."""
     d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text"))
+    toks = tok_spark(F.col("text"))
     n_tokens = F.size(toks)
     g = F.greatest(n_tokens, F.lit(1))
     uniq_ratio = F.size(F.array_distinct(toks)).cast("double") / g
-    stop_ratio = _lang_score_spark(toks, _LANG_PROFILES["en"]).cast("double") / g
+    stop_ratio = lang_score_spark(toks, LANG_PROFILES["en"]).cast("double") / g
     stage = (
         F.when(F.col("n_chars") < _FUNNEL_MIN_CHARS, F.lit("1_reject_length"))
         .when(n_tokens < _FUNNEL_MIN_TOKENS, F.lit("2_reject_tokens"))
@@ -352,10 +365,10 @@ def ext_quality_funnel(spark, sf_dir):
     "ext_lang_quality_buckets",
     f"""
     WITH m AS (
-      SELECT doc_id, lang, {_QUALITY_INPUTS_DUCK}
+      SELECT doc_id, lang, {QUALITY_INPUTS_DUCK}
       FROM documents
     ),
-    q AS (SELECT doc_id, lang, {_QUALITY_SQL} AS quality FROM m)
+    q AS (SELECT doc_id, lang, {QUALITY_SQL} AS quality FROM m)
     SELECT doc_id, lang, quality,
            CASE ntile(3) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id)
                 WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
@@ -382,13 +395,10 @@ def ext_lang_quality_buckets(spark, sf_dir):
     per-language sort, exact at any language skew. DESC quality is
     expressed by negating the (non-null) score, per distrank's
     ASC-keys rule."""
-    from habits_etl_spark.operators.distrank import grouped_ntile_by_selection
-    from habits_etl_spark.plans.common import managed_cache
-    from habits_etl_spark.plans.ext_text import _quality_col
 
     d = t(spark, sf_dir, "documents")
     q = managed_cache(
-        d.select("doc_id", "lang", _quality_col().alias("quality")),
+        d.select("doc_id", "lang", quality_col().alias("quality")),
         "ext_lang_quality_buckets/scores",
     )
     tiled = grouped_ntile_by_selection(
@@ -415,8 +425,8 @@ _scrub_spark = pii_scrub_expr
 @query(
     "ext_admission_decision",
     f"""
-    WITH RECURSIVE {_MINHASH_CTES},
-    pairs AS ({_MINHASH_FINAL}),
+    WITH RECURSIVE {MINHASH_CTES},
+    pairs AS ({MINHASH_FINAL}),
     {_cc_sql("doc_a", "doc_b")},
     scrub AS (
       SELECT doc_id, lang, n_chars AS n_chars_orig, {_SCRUB_DUCK} AS text
@@ -425,13 +435,13 @@ _scrub_spark = pii_scrub_expr
     m AS (
       SELECT doc_id, lang, n_chars_orig,
              length(text) AS n_chars_s,
-             CAST(len({_TOK_DUCK}) AS BIGINT) AS n_tokens,
-             CAST(len(list_distinct({_TOK_DUCK})) AS BIGINT) AS n_unique,
-             {_lang_score_duck(_LANG_PROFILES['en'])} AS n_stop
+             CAST(len({TOK_DUCK}) AS BIGINT) AS n_tokens,
+             CAST(len(list_distinct({TOK_DUCK})) AS BIGINT) AS n_unique,
+             {lang_score_duck(LANG_PROFILES['en'])} AS n_stop
       FROM scrub
     ),
     q AS (
-      SELECT doc_id, lang, n_chars_orig, {_QUALITY_SQL} AS quality,
+      SELECT doc_id, lang, n_chars_orig, {QUALITY_SQL} AS quality,
              CASE WHEN n_chars_s < {_FUNNEL_MIN_CHARS} THEN 'quality_length'
                   WHEN n_tokens < {_FUNNEL_MIN_TOKENS} THEN 'quality_tokens'
                   WHEN CAST(n_unique AS DOUBLE) / greatest(n_tokens, 1)
@@ -507,27 +517,17 @@ def ext_admission_decision(spark, sf_dir):
     pinned boundary keys per language); cluster ranking shuffles
     collision-scale rows. The corpus text moves once (the MinHash
     signature pass)."""
-    from habits_etl_spark.operators.distrank import grouped_ntile_by_selection
-    from habits_etl_spark.plans.common import managed_cache
-    from habits_etl_spark.plans.ext_text import minhash_pairs_shared
 
     _C, _T = _FUNNEL_MIN_CHARS, _FUNNEL_MIN_TOKENS
     _U, _S = _FUNNEL_MIN_UNIQ, _FUNNEL_MIN_STOP
 
     d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text2"))
+    toks = tok_spark(F.col("text2"))
     n_tokens = F.size(toks).cast("bigint")
     n_unique = F.size(F.array_distinct(toks)).cast("bigint")
-    n_stop = _lang_score_spark(toks, _LANG_PROFILES["en"])
+    n_stop = lang_score_spark(toks, LANG_PROFILES["en"])
     g = F.greatest(n_tokens, F.lit(1).cast("bigint"))
-    # +1e-9 tie-nudge before round — see ext_text._QUALITY_SQL comment
-    quality = F.round(
-        F.lit(0.5) * F.least(n_tokens.cast("double") / 100.0, F.lit(1.0))
-        + F.lit(0.3) * (n_unique.cast("double") / g)
-        + F.lit(0.2) * F.least(F.lit(10.0) * n_stop.cast("double") / g, F.lit(1.0))
-        + F.lit(1e-9),
-        4,
-    )
+    quality = quality_col(F.col("text2"))
     stage_q = (
         F.when(F.length("text2") < _C, F.lit("quality_length"))
         .when(n_tokens < _T, F.lit("quality_tokens"))
@@ -624,7 +624,7 @@ _DELTA_SPLIT = "doc_id % 10 >= 8"  # same 20% arrival split as incremental_dedup
 @query(
     "ext_minhash_delta_maintenance",
     f"""
-    WITH {_MINHASH_CTES},
+    WITH {MINHASH_CTES},
     bucket AS (
       SELECT band, v,
              sum(CASE WHEN {_DELTA_SPLIT} THEN 0 ELSE 1 END) AS nb,
@@ -662,20 +662,13 @@ def ext_minhash_delta_maintenance(spark, sf_dir):
     Scale: arrivals only ever touch the map-side signature stage plus
     one groupBy over (band, v) — the standing side's band rows are a
     precomputed index table at 100 TB; nothing here rescans the corpus
-    text beyond the delta batch. Oracle: the shared _MINHASH_CTES band
+    text beyond the delta batch. Oracle: the shared MINHASH_CTES band
     chain (hash-green in five ids since r3) aggregated per bucket then
     per band, pure integer arithmetic throughout — the report is
     hash-gated end to end. Reference parity: [E] extension (BASELINE
     north-star dedup family); no reference twin."""
-    from habits_etl_spark.plans.ext_text import _band_rows_from, _minhash_base
 
-    base = _minhash_base(
-        spark,
-        sf_dir,
-        x_sql="cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)",
-        cache_key="minhash.base",
-    )
-    bands = _band_rows_from(base)
+    bands = band_rows_from(minhash_base(spark, sf_dir))
     is_delta = (F.col("doc_id") % 10) >= 8
     bucket = bands.groupBy("band", "v").agg(
         F.sum(F.when(is_delta, 0).otherwise(1)).alias("nb"),
@@ -712,8 +705,8 @@ _SPLIT_DUCK = (
 @query(
     "ext_split_leakage",
     f"""
-    WITH {_MINHASH_CTES},
-    pairs AS ({_MINHASH_FINAL}),
+    WITH {MINHASH_CTES},
+    pairs AS ({MINHASH_FINAL}),
     sp AS (SELECT doc_id, {_SPLIT_DUCK} AS split FROM documents)
     SELECT p.doc_a, p.doc_b, sa.split AS split_a, sb.split AS split_b,
            p.jaccard
@@ -741,9 +734,8 @@ def ext_split_leakage(spark, sf_dir):
     the pair list joined twice against a two-column broadcast. At 100 TB
     the pair list is the standing dedup-index table, so this audit is a
     filter over an artifact that already exists. Oracle: the shared
-    _MINHASH_CTES chain + split CASE per side. Reference parity: [E]
+    MINHASH_CTES chain + split CASE per side. Reference parity: [E]
     extension (BASELINE north-star dedup family); no reference twin."""
-    from habits_etl_spark.plans.ext_text import ext_near_dedup_minhash
 
     pairs = ext_near_dedup_minhash(spark, sf_dir)
     split = F.when(F.col("doc_id") % 10 < 8, "train").otherwise(
@@ -774,8 +766,8 @@ _CSPLIT_BUCKET_DUCK = (
 @query(
     "ext_cluster_safe_split",
     f"""
-    WITH RECURSIVE {_MINHASH_CTES},
-    pairs AS ({_MINHASH_FINAL}),
+    WITH RECURSIVE {MINHASH_CTES},
+    pairs AS ({MINHASH_FINAL}),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM pairs
       UNION
@@ -838,12 +830,10 @@ def ext_cluster_safe_split(spark, sf_dir):
     corpus growth like ext_hash_split, because a cluster's rep only
     changes if a new doc BRIDGES clusters, exactly the case where the
     family must be re-split together anyway. Oracle: the shared
-    _MINHASH_CTES chain + the recursive-CTE closure (the
+    MINHASH_CTES chain + the recursive-CTE closure (the
     ext_dup_clusters pattern) + the same salted-hash CASE. Reference
     parity: [E] extension (BASELINE north-star dedup family); no
     reference twin."""
-    from habits_etl_spark.plans.common import managed_cache
-    from habits_etl_spark.plans.ext_text import minhash_pairs_shared
 
     pairs = minhash_pairs_shared(spark, sf_dir)
     comps = connected_components(pairs, "doc_a", "doc_b").select(
@@ -915,8 +905,6 @@ def _scurve(b: int, r: int, j: float) -> float:
 
 
 def _reband_sql() -> str:
-    from habits_etl_spark.plans.ext_text import _JACCARD_THRESHOLD, _MINHASH_CTES
-
     parts = []
     for b, r in _REBAND_LAYOUTS:
         band_sel = " UNION ALL ".join(
@@ -931,12 +919,12 @@ def _reband_sql() -> str:
                CAST(count(*) AS BIGINT) AS buckets,
                CAST(max(c) AS BIGINT) AS max_bucket,
                CAST(sum((c * (c - 1)) // 2) AS BIGINT) AS cand_pairs,
-               {_scurve(b, r, _JACCARD_THRESHOLD)} AS scurve_at_t
+               {_scurve(b, r, JACCARD_THRESHOLD)} AS scurve_at_t
         FROM (SELECT band, v, count(*) AS c FROM ({band_sel}) GROUP BY band, v)"""
         )
     body = "\n    UNION ALL\n    ".join(parts)
     return f"""
-    WITH {_MINHASH_CTES}
+    WITH {MINHASH_CTES}
     SELECT * FROM (
     {body}
     ) ORDER BY r_rows
@@ -964,20 +952,8 @@ def ext_minhash_reband_sim(spark, sf_dir):
     the s-curve is a Python literal inlined identically in both
     engines. Reference parity: [E] extension (BASELINE north-star
     dedup family); no reference twin."""
-    from habits_etl_spark.plans.ext_text import (
-        _N_HASHES,
-        _minhash_base,
-        _perm_col,
-    )
 
-    base = _minhash_base(
-        spark,
-        sf_dir,
-        x_sql="cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)",
-        cache_key="minhash.base",
-    )
-    sig = base.select("doc_id", *[_perm_col(h) for h in range(_N_HASHES)])
-    from habits_etl_spark.plans.ext_text import _JACCARD_THRESHOLD
+    sig = signatures(minhash_base(spark, sf_dir))
 
     reports = []
     for b, r in _REBAND_LAYOUTS:
@@ -1006,7 +982,7 @@ def ext_minhash_reband_sim(spark, sf_dir):
                 F.count(F.lit(1)).cast("long").alias("buckets"),
                 F.max("c").cast("long").alias("max_bucket"),
                 F.expr("sum((c * (c - 1)) div 2)").cast("long").alias("cand_pairs"),
-                F.lit(_scurve(b, r, _JACCARD_THRESHOLD)).alias("scurve_at_t"),
+                F.lit(_scurve(b, r, JACCARD_THRESHOLD)).alias("scurve_at_t"),
             ).select(
                 "r_rows", "n_bands", "band_rows", "buckets", "max_bucket",
                 "cand_pairs", "scurve_at_t",
@@ -1031,11 +1007,9 @@ _REBAND_B, _REBAND_R = 4, 4
 
 
 def _rebanded_sql() -> str:
-    from habits_etl_spark.plans.ext_text import _MINHASH_FINAL, _minhash_ctes
-
     return f"""
-    WITH {_minhash_ctes(_REBAND_B, _REBAND_R)}
-    {_MINHASH_FINAL}
+    WITH {minhash_ctes(_REBAND_B, _REBAND_R)}
+    {MINHASH_FINAL}
     """
 
 
@@ -1060,24 +1034,11 @@ def ext_near_dedup_minhash_rebanded(spark, sf_dir):
     corpus size. Oracle: the shared CTE chain under the same layout
     literals. Reference parity: [E] extension (BASELINE north-star
     'MinHash+LSH'); no reference twin."""
-    from habits_etl_spark.plans.ext_text import _near_dedup_pipeline
 
-    return _near_dedup_pipeline(
-        spark,
-        sf_dir,
-        x_sql="cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)",
-        cache_key="minhash.base",
-        n_bands=_REBAND_B,
-        band_rows=_REBAND_R,
-    )
+    return near_dedup_pairs(minhash_base(spark, sf_dir), _REBAND_B, _REBAND_R)
 
 
 def _reband_audit_sql() -> str:
-    from habits_etl_spark.plans.ext_text import (
-        _JACCARD_THRESHOLD,
-        _minhash_ctes,
-    )
-
     # "kept" = the pair still collides in >= 1 band of the re-banded
     # layout — an OR over the 4 four-minima conjunctions on the SAME sig
     # relation the default chain already computed (no second chain, no
@@ -1092,12 +1053,12 @@ def _reband_audit_sql() -> str:
         for b in range(_REBAND_B)
     )
     return f"""
-    WITH {_minhash_ctes()},
+    WITH {minhash_ctes()},
     pairs AS (
       SELECT doc_a, doc_b,
              round(CAST(n_common AS DOUBLE) / (na + nb - n_common), 4) AS jaccard
       FROM inter
-      WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= {_JACCARD_THRESHOLD}
+      WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= {JACCARD_THRESHOLD}
     )
     SELECT p.doc_a, p.doc_b, p.jaccard, ({kept}) AS kept
     FROM pairs p
@@ -1127,28 +1088,16 @@ def ext_reband_recall_audit(spark, sf_dir):
     shared default-layout chain plus the same band-equality predicate
     over its sig CTE. Reference parity: [E] extension (BASELINE
     north-star dedup family); no reference twin."""
-    from habits_etl_spark.plans.ext_text import (
-        _N_HASHES,
-        _minhash_base,
-        _perm_col,
-        ext_near_dedup_minhash,
-    )
 
     pairs = ext_near_dedup_minhash(spark, sf_dir)
-    base = _minhash_base(
-        spark,
-        sf_dir,
-        x_sql="cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)",
-        cache_key="minhash.base",
-    )
-    sig = base.select("doc_id", *[_perm_col(h) for h in range(_N_HASHES)])
+    sig = signatures(minhash_base(spark, sf_dir))
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"m{h}").alias(f"a{h}") for h in range(_N_HASHES)],
+        *[F.col(f"m{h}").alias(f"a{h}") for h in range(N_HASHES)],
     )
     sb = sig.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"m{h}").alias(f"b{h}") for h in range(_N_HASHES)],
+        *[F.col(f"m{h}").alias(f"b{h}") for h in range(N_HASHES)],
     )
     kept = None
     for b in range(_REBAND_B):

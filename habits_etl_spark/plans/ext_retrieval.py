@@ -21,24 +21,24 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.functions.text import TOK_DUCK, tok_spark
 from habits_etl_spark.plans.common import dec, query, t
-from habits_etl_spark.plans.ext_text import _TOK_DUCK, _TOK_SPARK
 
-_BM25_K1 = 1.2
-_BM25_B = 0.75
+BM25_K1 = 1.2
+BM25_B = 0.75
 # Fixed audit query: one rare term (high idf) + two common ones. Term
 # constants are part of the operator spec, mirrored in the oracle.
 _BM25_TERMS = ("dup", "spark", "join")
-_BM25_TOPK = 50
+BM25_TOPK = 50
 
-_TERMS_SQL = ", ".join(f"'{q}'" for q in _BM25_TERMS)
+TERMS_SQL = ", ".join(f"'{q}'" for q in _BM25_TERMS)
 
 
 @query(
     "ext_bm25_topk",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_TOK_DUCK} AS w FROM documents
+      SELECT doc_id, {TOK_DUCK} AS w FROM documents
     ),
     stats AS (
       SELECT CAST(count(*) AS BIGINT) AS n_docs,
@@ -46,7 +46,7 @@ _TERMS_SQL = ", ".join(f"'{q}'" for q in _BM25_TERMS)
       FROM toks
     ),
     hits AS (
-      SELECT doc_id, len(w) AS dl, unnest(list_filter(w, x -> x IN ({_TERMS_SQL}))) AS tok
+      SELECT doc_id, len(w) AS dl, unnest(list_filter(w, x -> x IN ({TERMS_SQL}))) AS tok
       FROM toks
     ),
     tf AS (
@@ -60,21 +60,21 @@ _TERMS_SQL = ", ".join(f"'{q}'" for q in _BM25_TERMS)
            CAST(count(*) AS BIGINT) AS n_terms_hit,
            round(CAST(sum(CAST(
              ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-             * tf * ({_BM25_K1} + 1.0)
-             / (tf + {_BM25_K1} * (1.0 - {_BM25_B} + {_BM25_B} * dl / avgdl))
+             * tf * ({BM25_K1} + 1.0)
+             / (tf + {BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * dl / avgdl))
            AS DECIMAL(28,12))) AS DOUBLE), 4) AS score
     FROM tf JOIN df USING (tok) CROSS JOIN stats
     GROUP BY doc_id
     ORDER BY score DESC, doc_id
-    LIMIT {_BM25_TOPK}
+    LIMIT {BM25_TOPK}
     """,
 )
 def ext_bm25_topk(spark, sf_dir):
     """BM25 top-k lexical retrieval for the fixed audit query
     {_BM25_TERMS}: idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (the Lucene
-    non-negative variant), tf saturation k1={_BM25_K1}, length
-    normalization b={_BM25_B} against the corpus mean document length.
-    Emits the top {_BM25_TOPK} (doc_id, n_terms_hit, score), score
+    non-negative variant), tf saturation k1={BM25_K1}, length
+    normalization b={BM25_B} against the corpus mean document length.
+    Emits the top {BM25_TOPK} (doc_id, n_terms_hit, score), score
     rounded to 4 digits, doc_id tie-break.
 
     Determinism: per-term scores are cast to DECIMAL(28,12) before the
@@ -84,12 +84,12 @@ def ext_bm25_topk(spark, sf_dir):
     return bm25_topk_over(t(spark, sf_dir, "documents"))
 
 
-def bm25_topk_over(d, terms=_BM25_TERMS, topk=_BM25_TOPK):
+def bm25_topk_over(d, terms=_BM25_TERMS, topk=BM25_TOPK):
     """BM25 top-k over any documents-like DataFrame (doc_id, text) —
     factored out so tests can feed constructed corpora and a pipeline can
     retrieve over its admitted subset."""
     terms_sql = ", ".join(f"'{q}'" for q in terms)
-    toks = d.select("doc_id", _TOK_SPARK(F.col("text")).alias("w"))
+    toks = d.select("doc_id", tok_spark(F.col("text")).alias("w"))
     stats = toks.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         (F.sum(F.size("w")).cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -110,11 +110,11 @@ def bm25_topk_over(d, terms=_BM25_TERMS, topk=_BM25_TOPK):
     term_score = (
         idf
         * F.col("tf")
-        * (_BM25_K1 + 1.0)
+        * (BM25_K1 + 1.0)
         / (
             F.col("tf")
-            + _BM25_K1
-            * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
+            + BM25_K1
+            * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
         )
     )
     return (

@@ -25,15 +25,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from habits_etl_spark.operators.srp import dot_expr, norm_expr
 from habits_etl_spark.plans.common import query, t
 from habits_etl_spark.plans.ext_retrieval import (
-    _BM25_B,
-    _BM25_K1,
-    _BM25_TOPK,
-    _TERMS_SQL,
+    BM25_B,
+    BM25_K1,
+    BM25_TOPK,
+    TERMS_SQL,
     bm25_topk_over,
 )
-from habits_etl_spark.plans.ext_vectors import dot_expr, norm_expr
 
 _RRF_C = 60  # the SIGIR-2009 constant
 _RRF_TOPK = 20
@@ -118,7 +118,7 @@ _LEX_SQL = f"""
     ),
     hits AS (
       SELECT doc_id, len(w) AS dl,
-             unnest(list_filter(w, x -> x IN ({_TERMS_SQL}))) AS tok
+             unnest(list_filter(w, x -> x IN ({TERMS_SQL}))) AS tok
       FROM toks
     ),
     tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf
@@ -128,12 +128,12 @@ _LEX_SQL = f"""
       SELECT doc_id,
              round(CAST(sum(CAST(
                ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-               * tf * ({_BM25_K1} + 1.0)
-               / (tf + {_BM25_K1} * (1.0 - {_BM25_B} + {_BM25_B} * dl / avgdl))
+               * tf * ({BM25_K1} + 1.0)
+               / (tf + {BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * dl / avgdl))
              AS DECIMAL(28,12))) AS DOUBLE), 4) AS score
       FROM tf JOIN dfreq USING (tok) CROSS JOIN stats
       GROUP BY doc_id
-      ORDER BY score DESC, doc_id LIMIT {_BM25_TOPK}
+      ORDER BY score DESC, doc_id LIMIT {BM25_TOPK}
     ),
     lex AS (
       SELECT doc_id,

@@ -13,6 +13,25 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from habits_etl_spark.functions.hashing import md5_int
+from habits_etl_spark.functions.text import (
+    LANG_PROFILES,
+    QUALITY_INPUTS_DUCK,
+    TOK_DUCK,
+    lang_guess_col,
+    lang_guess_sql,
+    lang_score_spark,
+    lang_scores_sql,
+    quality_col,
+    tok_spark,
+)
+from habits_etl_spark.operators.clusters import connected_components
+from habits_etl_spark.operators.minhash import (
+    MINHASH_CTES,
+    MINHASH_FINAL,
+    near_dedup_pairs,
+    verify_jaccard,
+)
+from habits_etl_spark.plans.bases import minhash_base, minhash_pairs_shared
 from habits_etl_spark.plans.common import (
     davg,
     managed_cache,
@@ -22,23 +41,6 @@ from habits_etl_spark.plans.common import (
     t,
     widened,
 )
-
-# Whitespace tokenization shared by every operator here.
-_TOK_SPARK = lambda c: F.split(F.trim(c), r"\s+")  # noqa: E731
-_TOK_DUCK = "regexp_split_to_array(trim(text), '\\s+')"
-
-# Tiny stopword profiles for the language-ID heuristic.
-_LANG_PROFILES = {
-    "en": ("the", "a", "of", "and", "to", "in", "is"),
-    "de": ("der", "die", "das", "und", "ist", "ein"),
-    "fr": ("le", "la", "les", "et", "est", "un"),
-    "es": ("el", "la", "los", "y", "es", "un"),
-}
-
-_N_BANDS = 8  # MinHash LSH bands
-_BAND_ROWS = 2  # hashes per band (b=8, r=2 -> s-curve threshold ~0.35)
-_JACCARD_THRESHOLD = 0.7
-_SHINGLE_N = 3  # word n-gram shingle width
 
 
 @query(
@@ -73,10 +75,10 @@ def ext_exact_dedup(spark, sf_dir):
     f"""
     SELECT doc_id, lang,
            length(text) AS n_chars_calc,
-           CAST(len({_TOK_DUCK}) AS BIGINT) AS n_tokens,
-           CAST(len(list_distinct({_TOK_DUCK})) AS BIGINT) AS n_unique_tokens,
+           CAST(len({TOK_DUCK}) AS BIGINT) AS n_tokens,
+           CAST(len(list_distinct({TOK_DUCK})) AS BIGINT) AS n_unique_tokens,
            round(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                 / greatest(len({_TOK_DUCK}), 1), 4) AS avg_token_len
+                 / greatest(len({TOK_DUCK}), 1), 4) AS avg_token_len
     FROM documents
     """,
 )
@@ -85,7 +87,7 @@ def ext_text_stats(spark, sf_dir):
     char count, token count, unique-token count, mean token length.
     Pure map stage — no shuffle."""
     d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text"))
+    toks = tok_spark(F.col("text"))
     return d.select(
         "doc_id",
         "lang",
@@ -105,7 +107,7 @@ def ext_text_stats(spark, sf_dir):
     f"""
     SELECT lang, count(*) AS n_docs,
            {sql_davg('CAST(n_chars AS DOUBLE)')} AS avg_chars,
-           CAST(sum(len({_TOK_DUCK})) AS BIGINT) AS total_tokens
+           CAST(sum(len({TOK_DUCK})) AS BIGINT) AS total_tokens
     FROM documents GROUP BY lang ORDER BY lang
     """,
 )
@@ -118,19 +120,10 @@ def ext_lang_profile(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             davg(F.col("n_chars").cast("double")).alias("avg_chars"),
-            F.sum(F.size(_TOK_SPARK(F.col("text"))).cast("bigint")).alias("total_tokens"),
+            F.sum(F.size(tok_spark(F.col("text"))).cast("bigint")).alias("total_tokens"),
         )
         .orderBy("lang")
     )
-
-
-def _lang_score_spark(toks, words):
-    return F.size(F.filter(toks, lambda x: x.isin(*words)))
-
-
-def _lang_score_duck(words):
-    wl = ", ".join(f"'{w}'" for w in words)
-    return f"len(list_filter({_TOK_DUCK}, x -> list_contains([{wl}], x)))"
 
 
 @query(
@@ -138,18 +131,11 @@ def _lang_score_duck(words):
     f"""
     WITH scored AS (
       SELECT doc_id, lang,
-             {_lang_score_duck(_LANG_PROFILES['en'])} AS s_en,
-             {_lang_score_duck(_LANG_PROFILES['de'])} AS s_de,
-             {_lang_score_duck(_LANG_PROFILES['fr'])} AS s_fr,
-             {_lang_score_duck(_LANG_PROFILES['es'])} AS s_es
+             {lang_scores_sql(13)}
       FROM documents
     )
     SELECT doc_id, lang,
-           CASE WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-                WHEN s_en >= greatest(s_de, s_fr, s_es) THEN 'en'
-                WHEN s_de >= greatest(s_fr, s_es) THEN 'de'
-                WHEN s_fr >= s_es THEN 'fr'
-                ELSE 'es' END AS lang_guess
+           {lang_guess_sql(11)}
     FROM scored
     """,
 )
@@ -158,57 +144,8 @@ def ext_lang_id(spark, sf_dir):
     north-star 'text analysis'): count stopword hits per language profile,
     argmax with a fixed precedence order. Map-only, no shuffle."""
     d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text"))
-    s = {k: _lang_score_spark(toks, v) for k, v in _LANG_PROFILES.items()}
-    guess = (
-        F.when(F.greatest(s["en"], s["de"], s["fr"], s["es"]) == 0, F.lit("und"))
-        .when(s["en"] >= F.greatest(s["de"], s["fr"], s["es"]), F.lit("en"))
-        .when(s["de"] >= F.greatest(s["fr"], s["es"]), F.lit("de"))
-        .when(s["fr"] >= s["es"], F.lit("fr"))
-        .otherwise(F.lit("es"))
-    )
+    guess = lang_guess_col(tok_spark(F.col("text")))
     return d.select("doc_id", "lang", guess.alias("lang_guess"))
-
-
-# The combined quality formula, shared by ext_quality_score and the
-# CCNet-style per-language bucket routing (plans/ext_pipeline.py).
-#
-# The +1e-9 tie-nudge before round(., 4): the weighted sum is a rational
-# with denominator 100*n_tokens <= ~1e6, so values can land EXACTLY on a
-# 4th-decimal rounding boundary (e.g. 0.59625 at n_tokens=48) — where
-# Spark (BigDecimal HALF_UP on the double's shortest decimal repr) and
-# DuckDB (scaled-double rounding) disagree per-value. Nudging by 1e-9
-# rounds exact ties UP in both engines, and cannot move any non-tie:
-# legitimate values sit on a >= 1e-6 grid, 1000x coarser than the nudge.
-# (Found by the sf0.1 full-ledger gate: 9 of 50k docs hit ties that sf0.01
-# never sampled.)
-_QUALITY_SQL = (
-    "round(0.5 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)"
-    " + 0.3 * (CAST(n_unique AS DOUBLE) / greatest(n_tokens, 1))"
-    " + 0.2 * least(10.0 * CAST(n_stop AS DOUBLE) / greatest(n_tokens, 1), 1.0)"
-    " + 1e-9, 4)"
-)
-_QUALITY_INPUTS_DUCK = f"""CAST(len({_TOK_DUCK}) AS BIGINT) AS n_tokens,
-             CAST(len(list_distinct({_TOK_DUCK})) AS BIGINT) AS n_unique,
-             {_lang_score_duck(_LANG_PROFILES['en'])} AS n_stop,
-             length(text) AS n_chars"""
-
-
-def _quality_col():
-    """Spark twin of _QUALITY_SQL, from the raw text column (incl. the
-    1e-9 tie-nudge — see the _QUALITY_SQL comment)."""
-    toks = _TOK_SPARK(F.col("text"))
-    n_tokens = F.size(toks).cast("bigint")
-    n_unique = F.size(F.array_distinct(toks)).cast("bigint")
-    n_stop = _lang_score_spark(toks, _LANG_PROFILES["en"])
-    g = F.greatest(n_tokens, F.lit(1).cast("bigint"))
-    return F.round(
-        F.lit(0.5) * F.least(n_tokens.cast("double") / 100.0, F.lit(1.0))
-        + F.lit(0.3) * (n_unique.cast("double") / g)
-        + F.lit(0.2) * F.least(F.lit(10.0) * n_stop.cast("double") / g, F.lit(1.0))
-        + F.lit(1e-9),
-        4,
-    )
 
 
 @query(
@@ -216,7 +153,7 @@ def _quality_col():
     f"""
     WITH m AS (
       SELECT doc_id,
-             {_QUALITY_INPUTS_DUCK}
+             {QUALITY_INPUTS_DUCK}
       FROM documents
     )
     SELECT doc_id, n_tokens,
@@ -235,27 +172,19 @@ def ext_quality_score(spark, sf_dir):
     length / lexical-diversity / stopword-ratio components combined into a
     bounded score — the standard pretraining-data heuristic family."""
     d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text"))
+    toks = tok_spark(F.col("text"))
     n_tokens = F.size(toks).cast("bigint")
     n_unique = F.size(F.array_distinct(toks)).cast("bigint")
-    n_stop = _lang_score_spark(toks, _LANG_PROFILES["en"])
+    n_stop = lang_score_spark(toks, LANG_PROFILES["en"])
     n_chars = F.length("text")
     g = F.greatest(n_tokens, F.lit(1).cast("bigint"))
-    # +1e-9 tie-nudge before round — see the _QUALITY_SQL comment
-    quality = F.round(
-        F.lit(0.5) * F.least(n_tokens.cast("double") / 100.0, F.lit(1.0))
-        + F.lit(0.3) * (n_unique.cast("double") / g)
-        + F.lit(0.2) * F.least(F.lit(10.0) * n_stop.cast("double") / g, F.lit(1.0))
-        + F.lit(1e-9),
-        4,
-    )
     return d.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
         F.round(n_unique.cast("double") / g, 4).alias("uniq_ratio"),
         F.round(n_stop.cast("double") / g, 4).alias("stop_ratio"),
         F.round(n_chars.cast("double") / g, 4).alias("chars_per_token"),
-        quality.alias("quality"),
+        quality_col().alias("quality"),
     )
 
 
@@ -284,7 +213,7 @@ def ext_token_count(spark, sf_dir):
     "ext_fingerprint",
     f"""
     SELECT doc_id,
-           list_aggregate(list_transform(list_distinct({_TOK_DUCK}), x -> md5(x)), 'min') AS fingerprint
+           list_aggregate(list_transform(list_distinct({TOK_DUCK}), x -> md5(x)), 'min') AS fingerprint
     FROM documents
     """,
 )
@@ -294,156 +223,47 @@ def ext_fingerprint(spark, sf_dir):
     1-permutation MinHash, stable under token reordering (engine-portable,
     unlike builtin hash())."""
     d = t(spark, sf_dir, "documents")
-    toks = F.array_distinct(_TOK_SPARK(F.col("text")))
+    toks = F.array_distinct(tok_spark(F.col("text")))
     return d.select(
         "doc_id",
         F.array_min(F.transform(toks, lambda x: F.md5(x))).alias("fingerprint"),
     )
 
 
-_N_HASHES = _N_BANDS * _BAND_ROWS
-
-# word n-gram shingles, both engines (1-based element access in each)
-_SHINGLE_DUCK = (
-    "list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]"
-    " for i in range(1, len(w) - 1)])"
-)
-
-# Broder-style minhash: ONE md5 per shingle -> 32-bit integer x, then
-# _N_HASHES universal-hash 'permutations' h_i(x) = (a_i*x + b_i) mod p.
-# 16x less hashing than md5-per-permutation on the hottest stage, still
-# engine-portable (identical integer arithmetic in Spark SQL and DuckDB;
-# a_i < 2^31 and x < 2^32 keep a_i*x + b_i < 2^63, no BIGINT overflow
-# under ANSI mode).
-_MH_P = 4294967311  # prime > 2^32
-
-
-def _mh_params(i: int) -> tuple[int, int]:
-    a = (2654435761 * (i + 1)) % 2147483647 or 1  # Knuth multiplicative
-    b = (97531 * (i + 1) + 12345) % _MH_P
-    return a, b
-
-
-# x = first 8 hex chars of md5(shingle) as an integer, computed once per
-# shingle row in the sh relation of both engines.
-_X_DUCK = "CAST(('0x' || substr(md5(shingle), 1, 8)) AS BIGINT)"
-
-
-def _minhash_sql_sigs():
-    """Per-doc signature columns from the xs array — a list fold per
-    permutation, no unnest/GROUP BY."""
-    parts = []
-    for h in range(_N_HASHES):
-        a, b = _mh_params(h)
-        parts.append(
-            f"list_aggregate(list_transform(xs, x -> ({a} * x + {b}) % {_MH_P}), 'min') AS m{h}"
-        )
-    return ",\n             ".join(parts)
-
-
-def _band_sql(
-    alias: str = "sig", n_bands: int = _N_BANDS, band_rows: int = _BAND_ROWS
-):
-    """Band-table SQL for any (b x r) partition of the signature minima
-    (r14: parameterized so a re-banded layout — the ext_minhash_reband_sim
-    decision — is the same chain with different literals)."""
-    assert n_bands * band_rows <= _N_HASHES
-    return " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, concat_ws(':', {cols}) AS v FROM {alias}".format(
-            b=b,
-            cols=", ".join(f"m{band_rows * b + j}" for j in range(band_rows)),
-            alias=alias,
-        )
-        for b in range(n_bands)
-    )
-
-
-def _minhash_ctes(n_bands: int = _N_BANDS, band_rows: int = _BAND_ROWS) -> str:
-    """The MinHash pipeline's CTE chain under a given (b x r) banding,
-    shared between the ext_near_dedup_minhash oracle, the dup-clusters
-    recursive oracle, and (r14) the re-banded dedup twin. Mirrors the
-    Spark topology: shingle ARRAYS stay packed per doc (no corpus-wide
-    unnest); only candidate pairs compare full shingle sets."""
-    return f"""words AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
-    ),
-    base AS (
-      SELECT doc_id, {_SHINGLE_DUCK} AS sh_arr FROM words WHERE len(w) >= {_SHINGLE_N}
-    ),
-    xs AS (
-      SELECT doc_id, sh_arr, len(sh_arr) AS n,
-             list_transform(sh_arr, shingle -> {_X_DUCK}) AS xs
-      FROM base
-    ),
-    sig AS (
-      SELECT doc_id,
-             {_minhash_sql_sigs()}
-      FROM xs
-    ),
-    bands AS (
-      {_band_sql(n_bands=n_bands, band_rows=band_rows)}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id
-    ),
-    inter AS (
-      SELECT c.doc_a, c.doc_b,
-             len(list_intersect(a.sh_arr, b.sh_arr)) AS n_common,
-             a.n AS na, b.n AS nb
-      FROM cand c
-      JOIN xs a ON a.doc_id = c.doc_a
-      JOIN xs b ON b.doc_id = c.doc_b
-    )"""
-
-
-_MINHASH_CTES = _minhash_ctes()
-
-_MINHASH_FINAL = f"""SELECT doc_a, doc_b,
-           round(CAST(n_common AS DOUBLE) / (na + nb - n_common), 4) AS jaccard
-    FROM inter
-    WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= {_JACCARD_THRESHOLD}"""
-
-
 @query(
     "ext_near_dedup_minhash",
     f"""
-    WITH {_MINHASH_CTES}
-    {_MINHASH_FINAL}
+    WITH {MINHASH_CTES}
+    {MINHASH_FINAL}
     """,
 )
 def ext_near_dedup_minhash(spark, sf_dir):
     """MinHash + LSH near-duplicate detection (BASELINE north-star
     'MinHash+LSH'; SURVEY §2.12 ext_near_dedup), fully relational and
-    engine-portable:
+    engine-portable (operators/minhash.py):
 
-    1. word {_SHINGLE_N}-gram shingling (sequence-sensitive, so shuffled
+    1. word {SHINGLE_N}-gram shingling (sequence-sensitive, so shuffled
        same-vocabulary docs do NOT collide — only true edited copies do);
-    2. one md5 per shingle -> 32-bit integer, then {_N_HASHES} universal-
+    2. one md5 per shingle -> 32-bit integer, then {N_HASHES} universal-
        hash permutations (a_i*x + b_i mod p, Broder-style), each an
        array_min fold over the PACKED shingle array — the signature stage
        is a pure map, no explode, no shuffle;
-    3. LSH banding, b={_N_BANDS} bands x r={_BAND_ROWS} rows: the band key
-       concatenates {_BAND_ROWS} minima, giving the classic s-curve with
+    3. LSH banding, b={N_BANDS} bands x r={BAND_ROWS} rows: the band key
+       concatenates {BAND_ROWS} minima, giving the classic s-curve with
        ~(1/b)^(1/r) = 0.35 threshold — docs sharing any band value become
        candidate pairs via a self-equi-join on (band, value); the
        quadratic pair space is never materialized, only collisions;
     4. exact Jaccard verification on candidates via array_intersect of the
-       two shingle arrays, keep pairs >= {_JACCARD_THRESHOLD}.
+       two shingle arrays, keep pairs >= {JACCARD_THRESHOLD}.
 
     Scale: the corpus is touched by MAP stages only (shingle + sign); the
-    only shuffles are the (n_docs x {_N_BANDS})-row band self-join and the
+    only shuffles are the (n_docs x {N_BANDS})-row band self-join and the
     candidate lookups, which broadcast the (tiny) candidate list against
     the corpus arrays. r=2 banding makes random-overlap candidates ~j^2,
     so the verify stage is linear in true duplicates — the standard
     web-scale near-dedup layout (GPT-3/CCNet-style MinHash over n-gram
     shingles)."""
-    return _near_dedup_pipeline(
-        spark,
-        sf_dir,
-        x_sql="cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)",
-        cache_key="minhash.base",
-    )
+    return near_dedup_pairs(minhash_base(spark, sf_dir))
 
 
 @query("ext_near_dedup_minhash_fast")  # no oracle: xxhash64 has no DuckDB twin
@@ -462,167 +282,13 @@ def ext_near_dedup_minhash_fast(spark, sf_dir):
     rows-only driver check; tests/test_minhash_fast.py pins precision
     (every reported pair is exact-verified >= threshold, same as the md5
     path) and recall against brute-force Jaccard ground truth."""
-    return _near_dedup_pipeline(
-        spark,
-        sf_dir,
-        x_sql="pmod(xxhash64(s), 4294967296L)",
-        cache_key="minhash.fast.base",
-    )
-
-
-def minhash_pairs_shared(spark, sf_dir):
-    """Session-shared cached (doc_a, doc_b) near-dup pair relation — the
-    dedup 'index artifact' every graph consumer starts from (dup
-    clusters, keep-policy, CDC apply, PageRank, k-core, the admission
-    gate). The signature pipeline is a deterministic pure function of
-    the input dir, so one materialization serves all of them AND bench
-    repetitions (the fit-memo argument: at 100 TB the pair list is a
-    written dedup-index table, not something each consumer recomputes).
-    The headline ext_near_dedup_minhash itself stays UNCACHED so its
-    tracked bench number keeps measuring the real pipeline."""
-    from habits_etl_spark.plans.common import shared_cache
-
-    return shared_cache(
-        spark,
-        f"minhash/pairs::{sf_dir}",
-        lambda: ext_near_dedup_minhash(spark, sf_dir).select("doc_a", "doc_b"),
-    )
-
-
-def _minhash_base(spark, sf_dir, x_sql: str, cache_key: str):
-    """Cached per-doc packed relation (doc_id, sh_arr, n, xs) the
-    signature stage and both verify arms start from (factored r13 so the
-    delta-maintenance id reuses the identical chain)."""
-    d = t(spark, sf_dir, "documents")
-    # Materialize the word array once per doc BEFORE indexing into it:
-    # element_at() inside the transform lambda would otherwise re-evaluate
-    # split() per shingle position (O(doc_len^2) per document).
-    # A small parquet file arrives as one split; fan the docs out so the
-    # shingle/minhash map stage uses every core. Only when actually
-    # under-split: repartition() is ALWAYS a full shuffle of the corpus
-    # text, and at cluster scale maxPartitionBytes already yields enough
-    # splits, so an unconditional repartition would add a complete extra
-    # network pass of the corpus before any work happens. The guard reads
-    # the scan's file list (len(inputFiles()) — a listing the relation
-    # already holds), NOT df.rdd.getNumPartitions(): the RDD conversion
-    # compiles the whole plan and costs ~0.7s per call in PySpark.
-    n_part = spark.sparkContext.defaultParallelism
-    if len(d.inputFiles()) < n_part:
-        d = d.repartition(n_part, "doc_id")
-    words = d.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("w")
-    )
-    # Higher-order-function expressions are built as SQL strings, not
-    # python-lambda Columns: each F.transform(..., lambda ...) costs
-    # dozens of py4j round trips (profiled: 16 perm lambdas alone =
-    # 0.37s of plan-BUILD time per invocation); F.expr is one parse.
-    shingles = F.expr(
-        "array_distinct(transform("
-        f"sequence(1, size(w) - {_SHINGLE_N - 1}), "
-        "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1), "
-        "element_at(w, i + 2))))"
-    )
-    # Cached: the packed per-doc arrays feed the signature stage and both
-    # arms of the candidate verification. managed_cache releases the
-    # previous invocation's handle (no leak across runs in one session).
-    return managed_cache(
-        words.filter(F.size("w") >= _SHINGLE_N)
-        .select("doc_id", shingles.alias("sh_arr"))
-        .withColumn("n", F.size("sh_arr"))
-        .withColumn("xs", F.expr(f"transform(sh_arr, s -> {x_sql})")),
-        cache_key,
-    )
-
-
-def _perm_col(h: int):
-    a, b = _mh_params(h)
-    return F.expr(
-        f"array_min(transform(xs, x -> ({a}L * x + {b}L) % {_MH_P}L))"
-    ).alias(f"m{h}")
-
-
-def _band_rows_from(base, n_bands: int = _N_BANDS, band_rows: int = _BAND_ROWS):
-    """(doc_id, band, v) LSH band rows from the packed base relation —
-    the standing band TABLE a deployed dedup index materializes — under
-    any (b x r) partition of the signature minima (r14: parameterized so
-    the re-band decision is executable, not just simulated)."""
-    assert n_bands * band_rows <= _N_HASHES
-    sig = base.select("doc_id", *[_perm_col(h) for h in range(_N_HASHES)])
-    # One pass, not a b-way union: explode an array of (band, value)
-    # structs. A union of b selects re-evaluates the signature subtree
-    # once per arm on EACH side of the self-join below (2b scans + 2b
-    # stages of scheduling) — measured 2.8s vs 0.48s at sf0.1.
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"m{band_rows * b + j}")
-                                for j in range(band_rows)
-                            ],
-                        ).alias("v"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("doc_id", "bv.band", "bv.v")
-
-
-def _near_dedup_pipeline(
-    spark,
-    sf_dir,
-    x_sql: str,
-    cache_key: str,
-    n_bands: int = _N_BANDS,
-    band_rows: int = _BAND_ROWS,
-):
-    """Shared MinHash+LSH pipeline; ``x_sql`` maps a shingle string ``s``
-    to the 32-bit integer fed to the universal-hash permutations.
-    ``n_bands x band_rows`` selects the LSH layout over the same
-    signature minima (default = the registered 8x2)."""
-    base = _minhash_base(spark, sf_dir, x_sql, cache_key)
-    bands = _band_rows_from(base, n_bands, band_rows)
-    a = bands.alias("a")
-    bb = bands.alias("b")
-    cand = (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    return near_dedup_pairs(
+        minhash_base(
+            spark,
+            sf_dir,
+            x_sql="pmod(xxhash64(s), 4294967296L)",
+            cache_key="minhash.fast.base",
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    arr_a = base.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("arr_a"), F.col("n").alias("na")
-    )
-    arr_b = base.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("arr_b"), F.col("n").alias("nb")
-    )
-    # The candidate ID-PAIR list is collision-sized: broadcast it against
-    # the corpus arrays so the big side never shuffles in the first
-    # lookup. The second lookup's left side carries the matched docs'
-    # shingle arrays — roughly the duplicate documents' text, UNBOUNDED
-    # in exactly the duplicate-heavy corpus this op targets — so it gets
-    # NO forced broadcast: AQE sees its actual runtime size and
-    # broadcasts when genuinely small, shuffles when not (a forced hint
-    # here would hard-fail on the 8 GB broadcast limit at scale).
-    inter = (
-        arr_a.join(F.broadcast(cand), "doc_a")
-        .join(arr_b, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("arr_a", "arr_b")))
-    )
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        inter.filter(jac >= _JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
     )
 
 
@@ -656,7 +322,7 @@ _SIMHASH_BITS = 16
     "ext_simhash",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest(list_distinct({_TOK_DUCK})) AS tok FROM documents
+      SELECT doc_id, unnest(list_distinct({TOK_DUCK})) AS tok FROM documents
     ),
     sums AS (
       SELECT doc_id,
@@ -694,7 +360,7 @@ def ext_simhash(spark, sf_dir):
     return d.select(
         "doc_id",
         F.transform(
-            F.array_distinct(_TOK_SPARK(F.col("text"))), lambda tk: F.md5(tk)
+            F.array_distinct(tok_spark(F.col("text"))), lambda tk: F.md5(tk)
         ).alias("hs"),
     ).selectExpr("doc_id", f"CAST({fingerprint} AS BIGINT) AS simhash")
 
@@ -1112,29 +778,14 @@ def ext_ngram_jaccard_simhash_blocked(spark, sf_dir):
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    arr_a = arrs.select(
-        F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"), F.col("n").alias("na")
-    )
-    arr_b = arrs.select(
-        F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"), F.col("n").alias("nb")
-    )
-    inter = (
-        arr_a.join(F.broadcast(cand), "doc_a")
-        .join(arr_b, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("arr_a", "arr_b")))
-    )
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        inter.filter(jac >= _CGRAM_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
+    return verify_jaccard(arrs, cand, "arr", _CGRAM_THRESHOLD)
 
 
 @query(
     "ext_dup_clusters",
     f"""
-    WITH RECURSIVE {_MINHASH_CTES},
-    pairs AS ({_MINHASH_FINAL}),
+    WITH RECURSIVE {MINHASH_CTES},
+    pairs AS ({MINHASH_FINAL}),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM pairs
       UNION
@@ -1159,8 +810,6 @@ def ext_dup_clusters(spark, sf_dir):
     The closure is quadratic in component size, fine for an oracle over
     collision-scale pairs; the Spark side stays the O(log n) label
     propagation that scales."""
-    from habits_etl_spark.operators.clusters import connected_components
-
     pairs = minhash_pairs_shared(spark, sf_dir)
     comps = connected_components(pairs, "doc_a", "doc_b")
     return comps.select(
@@ -1252,7 +901,7 @@ def ext_stratified_sample(spark, sf_dir):
     "ext_token_histogram",
     f"""
     WITH toks AS (
-      SELECT unnest({_TOK_DUCK}) AS tok FROM documents
+      SELECT unnest({TOK_DUCK}) AS tok FROM documents
     )
     SELECT tok, count(*) AS n FROM toks
     GROUP BY tok ORDER BY n DESC, tok LIMIT 25
@@ -1263,7 +912,7 @@ def ext_token_histogram(spark, sf_dir):
     count -> TakeOrdered. Scale: partial counts collapse map-side before
     the shuffle (hash agg on the token), top-k never sorts globally."""
     d = t(spark, sf_dir, "documents")
-    toks = d.select(F.explode(_TOK_SPARK(F.col("text"))).alias("tok"))
+    toks = d.select(F.explode(tok_spark(F.col("text"))).alias("tok"))
     return (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))

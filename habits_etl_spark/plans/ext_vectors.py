@@ -11,152 +11,29 @@ cuts agree.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from habits_etl_spark.functions.hashing import md5_int
+from habits_etl_spark.operators.srp import (
+    band_collisions,
+    cosine_expr,
+    fold_dot,
+    srp_band_sql,
+    srp_signatures,
+)
+from habits_etl_spark.plans.bases import prepped_embeddings
 from habits_etl_spark.plans.common import managed_cache, query, t
 
-_TOP_K = 5
-_N_QUERIES = 10  # vec_id < 10 are the query vectors
+TOP_K = 5
+N_QUERIES = 10  # vec_id < 10 are the query vectors
 _COS_THRESHOLD = 0.4
-_DIM = 64
 
 # Above this corpus size ext_embedding_cosine_pairs REFUSES (raises) —
 # its registered oracle asserts the exact all-pairs result, so semantics
 # must not silently change with input size (ADVICE r2). The scale path is
 # the separately registered ext_cosine_pairs_lsh.
 _EXACT_PAIRS_MAX = 100_000
-
-
-def _plane_signs(key_prefix: str) -> list[float]:
-    """Deterministic pseudo-hyperplane: component i is +-1 from bit 0 of
-    md5(f"{key_prefix}:{i}"). The planes are materialized as Python
-    literals and inlined into BOTH engines (Spark F.lit arrays, DuckDB
-    DOUBLE[] literals), so cross-engine parity holds by construction —
-    the hash only has to be a good bit source, never re-evaluated at
-    runtime.
-
-    md5, NOT crc32 (r12): CRC is GF(2)-LINEAR, so for equal-length keys
-    crc(k1) XOR crc(k2) depends only on k1 XOR k2 — within a digit-length
-    class of plane indices, every pair of crc32-parity planes was equal
-    or complementary (up to the two i-digit-length blocks), collapsing
-    the 128-plane pair family to ~6 effective projections and the 8-bit
-    band space to 4 observed values per band (64 distinct buckets for
-    500 vectors, measured). The SRP s-curve this file's recall math
-    assumes was never in effect; every banding parameter change was a
-    no-op. md5 is non-linear, so plane bits are independent; the
-    non-degeneracy is pinned in tests/test_vectors.py
-    (test_planes_are_pairwise_independent)."""
-    import hashlib
-
-    return [
-        1.0
-        if hashlib.md5(f"{key_prefix}:{i}".encode()).digest()[0] & 1
-        else -1.0
-        for i in range(_DIM)
-    ]
-
-
-def _plane_sql_lit(signs: list[float]) -> str:
-    """The plane as a DuckDB DOUBLE[] literal."""
-    return "[" + ", ".join("1.0" if s > 0 else "-1.0" for s in signs) + "]"
-
-
-def _srp_proj(vcol: Column, plane: int, seed: str) -> Column:
-    """Signed projection of ``vcol`` (double array) onto the
-    deterministic pseudo-hyperplane ``plane`` (see _plane_signs)."""
-    signs = _plane_signs(f"{seed}:{plane}")
-    return F.aggregate(
-        F.zip_with(
-            vcol,
-            F.array(*[F.lit(h) for h in signs]),
-            lambda x, h: x * h,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def srp_band_values(vcol: Column, n_bands: int, band_bits: int, seed: str = "srp") -> list[Column]:
-    """One integer band key per band: ``band_bits`` sign bits packed.
-    Two vectors collide in band b iff all of that band's projection signs
-    agree — P(bit agree) = 1 - theta/pi, so a band collides with
-    p = (1 - theta/pi)^band_bits and overall recall after ``n_bands``
-    bands is 1 - (1-p)^n_bands (the classic SRP-LSH s-curve)."""
-    values = []
-    for b in range(n_bands):
-        bits = []
-        for j in range(band_bits):
-            proj = _srp_proj(vcol, b * band_bits + j, seed)
-            bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**j))
-        values.append(sum(bits[1:], bits[0]))
-    return values
-
-
-def _proj_array_expr(vcol_name: str, keys: list[str]) -> Column:
-    """ALL plane projections as ONE array<double> expression: a literal
-    |keys| x {_DIM} matrix folded against the vector in a single
-    transform. One parsed expression instead of |keys| independent
-    aggregate trees — the 128-fold form cost ~4.5 s of plan/compile time
-    per evaluation at sf0.1 and defeated codegen. Per-plane fold order is
-    unchanged (zip_with then left fold), so projections are bit-identical
-    to _srp_proj's."""
-    rows = ", ".join(
-        "array(" + ", ".join(f"{h}D" for h in _plane_signs(k)) + ")" for k in keys
-    )
-    return F.expr(
-        f"transform(array({rows}), h -> "
-        f"aggregate(zip_with({vcol_name}, h, (x, hh) -> x * hh), 0D, (a, x) -> a + x))"
-    )
-
-
-def _band_vals_from_proj(pj_col: str, n_bands: int, band_bits: int) -> list[Column]:
-    """Packed band keys from a projection-array column (1-indexed
-    element_at): bit j of band b is the sign of projection b*bits+j."""
-    vals = []
-    for b in range(n_bands):
-        terms = " + ".join(
-            f"IF(element_at({pj_col}, {b * band_bits + j + 1}) >= 0D, {1 << j}, 0)"
-            for j in range(band_bits)
-        )
-        vals.append(F.expr(terms))
-    return vals
-
-
-def srp_band_sql(vexpr: str, n_bands: int, band_bits: int, seed: str = "srp") -> list[str]:
-    """DuckDB twins of srp_band_values — one SQL expression per band over
-    the DOUBLE[] expression ``vexpr``, built from the SAME literal planes,
-    so an LSH pipeline's oracle states the identical bucketing."""
-    exprs = []
-    for b in range(n_bands):
-        bits = []
-        for j in range(band_bits):
-            lit = _plane_sql_lit(_plane_signs(f"{seed}:{b * band_bits + j}"))
-            bits.append(
-                f"(CASE WHEN list_dot_product({vexpr}, {lit}) >= 0"
-                f" THEN {1 << j} ELSE 0 END)"
-            )
-        exprs.append(" + ".join(bits))
-    return exprs
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    """Sum_i a[i]*b[i] in float64 (left-to-right fold)."""
-    prod = F.zip_with(
-        F.transform(a, lambda x: x.cast("double")),
-        F.transform(b, lambda x: x.cast("double")),
-        lambda x, y: x * y,
-    )
-    return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(dot_expr(a, a))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 _SQL_COS = (
@@ -173,36 +50,29 @@ _SQL_COS = (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, b.label AS neighbor_label,
              round({_SQL_COS}, 4) AS cos
       FROM e a JOIN e b ON b.vec_id <> a.vec_id
-      WHERE a.vec_id < {_N_QUERIES}
+      WHERE a.vec_id < {N_QUERIES}
     ),
     ranked AS (
       SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
       FROM scored
     )
-    SELECT query_id, neighbor_id, neighbor_label, cos, rk FROM ranked WHERE rk <= {_TOP_K}
+    SELECT query_id, neighbor_id, neighbor_label, cos, rk FROM ranked WHERE rk <= {TOP_K}
     """,
 )
 def ext_topk_sim_search(spark, sf_dir):
     """Brute-force cosine top-k (the exact baseline; SURVEY §2.12): the
-    {_N_QUERIES} query vectors are broadcast against the corpus, scored
+    {N_QUERIES} query vectors are broadcast against the corpus, scored
     JVM-side, and cut with a per-query row_number.
 
     Scale: the broadcast-queries × corpus-scan shape is the right 100 TB
     baseline (queries are small; the corpus never shuffles — only
     (query × corpus) partial top-k results do, via WindowGroupLimit /
     TakeOrdered). The sub-linear path is ext_ann_lsh_bucketed below."""
-    e = t(spark, sf_dir, "embeddings")
     # Normalize ONCE per vector (cast to float64 + L2 norm) — computing the
     # norm inside the pair expression would redo it per candidate pair,
     # turning an O(N + Q·N) kernel into O(3·Q·N) folds.
-    prepped = e.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nrm", F.sqrt(F.aggregate(
-        F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-    )))
-    q = prepped.filter(F.col("vec_id") < _N_QUERIES).select(
+    prepped = prepped_embeddings(spark, sf_dir)
+    q = prepped.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("q_v"),
         F.col("nrm").alias("q_nrm"),
@@ -213,11 +83,7 @@ def ext_topk_sim_search(spark, sf_dir):
         F.col("v").alias("c_v"),
         F.col("nrm").alias("c_nrm"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("q_v"), F.col("c_v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = fold_dot(F.col("q_v"), F.col("c_v"))
     # crossJoin + post-filter, not join(cond=neighbor!=query): the same
     # query×corpus work, but the plan reads as the intended broadcast
     # product instead of a BroadcastNestedLoopJoin a reviewer must stop
@@ -235,19 +101,8 @@ def ext_topk_sim_search(spark, sf_dir):
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= _TOP_K)
+        .filter(F.col("rk") <= TOP_K)
     )
-
-
-def _prepped_embeddings(spark, sf_dir):
-    e = t(spark, sf_dir, "embeddings")
-    return e.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nrm", F.sqrt(F.aggregate(
-        F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-    )))
 
 
 def _cosine_pairs_from(pair_source, threshold=_COS_THRESHOLD):
@@ -264,11 +119,7 @@ def _cosine_pairs_from(pair_source, threshold=_COS_THRESHOLD):
     rebuild in the plane projection (_banded_rows), not this
     well-shaped fold. Verify stays join-shaped (no corpus broadcast)
     and JVM-side — the LSH scale path's kernel."""
-    dot = F.aggregate(
-        F.zip_with(F.col("v_a"), F.col("v_b"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = fold_dot(F.col("v_a"), F.col("v_b"))
     cos = dot / (F.col("n_a") * F.col("n_b"))
     return (
         pair_source.filter(cos >= threshold)
@@ -277,7 +128,7 @@ def _cosine_pairs_from(pair_source, threshold=_COS_THRESHOLD):
 
 
 # Memo of corpus broadcasts keyed by (applicationId, corpus sha256):
-# without it every _exact_pairs_blocked call leaked one ~51 MB-max
+# without it every exact_pairs_blocked call leaked one ~51 MB-max
 # broadcast per invocation (ADVICE r12). Entries are never destroy()'d —
 # a returned DataFrame is lazy and may still reference the handle when a
 # later call arrives, so explicit destroy could invalidate a plan the
@@ -298,7 +149,7 @@ def _cosine_pairs_from(pair_source, threshold=_COS_THRESHOLD):
 _PAIRS_BCAST_MEMO: dict = {}
 
 
-def _exact_pairs_blocked(spark, prepped, threshold=_COS_THRESHOLD, n=None):
+def exact_pairs_blocked(spark, prepped, threshold=_COS_THRESHOLD, n=None):
     """Exact all-pairs cosine >= threshold as a distributed BLOCK MATMUL:
     broadcast the (gate-bounded) corpus matrix once, then each partition
     computes its row-block's A @ V.T against it in numpy and emits only
@@ -338,7 +189,7 @@ def _exact_pairs_blocked(spark, prepped, threshold=_COS_THRESHOLD, n=None):
         n = prepped.count()
     if n > _EXACT_PAIRS_MAX:
         raise ValueError(
-            f"_exact_pairs_blocked is exact all-pairs (O(n^2)) and refuses "
+            f"exact_pairs_blocked is exact all-pairs (O(n^2)) and refuses "
             f"{n} rows > _EXACT_PAIRS_MAX={_EXACT_PAIRS_MAX}; use "
             "ext_cosine_pairs_lsh (banded SRP-LSH + exact verify) at scale"
         )
@@ -391,7 +242,7 @@ def _exact_pairs_blocked(spark, prepped, threshold=_COS_THRESHOLD, n=None):
     # single-row-group parquet arrives as ONE split, and mapInPandas
     # inherits it — the r13 scaling gate caught the whole 20k x 20k
     # block matmul serialized on one core at sf1 (105 s cold / 27 s warm
-    # vs ~2 s wide; the same under-split trap _near_dedup_pipeline
+    # vs ~2 s wide; the same under-split trap bases.minhash_base
     # guards with inputFiles()). The shuffle moved is the gate-bounded
     # probe projection (<= 51 MB), noise next to the O(n^2) work it
     # parallelizes; at real scale input splits already provide width and
@@ -423,73 +274,27 @@ _PAIR_BROADCAST_MAX = 2_000_000
 
 
 def _banded_rows(prepped, seed: str, n_bands: int, band_bits: int):
-    """Skinny (vec_id, band_idx, band_val) rows: Arrow-batched numpy
-    matmul for the plane projections, behind a cache barrier
+    """Skinny (vec_id, band_idx, band_val) rows of the SRP signatures
+    (operators/srp.py srp_signatures), behind a cache barrier
     (managed_cache) so no join can inline the projection.
 
-    Two measured lessons at sf1 (20k vectors, 192 planes) are baked in:
+    Without a materialization barrier, Catalyst inlines the projection
+    into every consumer — the band self-join evaluated it once per
+    exploded row per join SIDE (measured at sf1, 20k vectors, 192
+    planes). Caching the per-vector signature rows (|v| x n_bands ints —
+    a few MB at any realistic shard size) runs the projection exactly
+    once per vector; both join sides rescan integers. Same lesson as the
+    r11 shared MinHash pair relation.
 
-    1. The higher-order-function expression path
-       (transform/zip_with/aggregate over a literal plane matrix —
-       _proj_array_expr) costs ~1.4 ms/vector: HOFs are interpreted,
-       never codegen'd, and the 192x64 literal matrix is rebuilt per
-       row. One V @ M numpy matmul over an Arrow batch does the same
-       245 MFLOPs in milliseconds — the classic vectorized-UDF-beats-
-       per-row case, ~100x here (28 s -> <1 s for the signature job).
-       At 10^9 vectors the expression path is CPU-days; the batch path
-       is minutes. (_proj_array_expr stays as the pure-expression
-       reference implementation; cross-path equality is pinned in
-       tests/test_vectors.py::test_numpy_and_expression_bands_agree.)
-    2. Without a materialization barrier, Catalyst inlines the
-       projection into every consumer — the band self-join evaluated it
-       once per exploded row per join SIDE. Checkpointing the per-vector
-       signature rows (|v| x n_bands ints — a few MB at any realistic
-       shard size) runs the projection exactly once per vector; both
-       join sides rescan integers. Same lesson as the r11 shared
-       MinHash pair relation.
-
-    Cross-engine parity: numpy's pairwise summation can disagree with
-    the oracle's sequential list_dot_product fold only when
-    |projection| is within ~1e-13 of zero (a sign flip on a knife
-    edge) — the ICWS argmin-tie residual class. The fixture margin is
-    pinned in tests (min |proj| >> double noise); like the ICWS ties,
-    the class is documented rather than provably empty."""
-    import numpy as np
-    import pandas as pd
-
-    M = np.array(
-        [_plane_signs(f"{seed}:{p}") for p in range(n_bands * band_bits)]
-    ).T  # dim x planes
-    weights = 1 << np.arange(band_bits)
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.vstack(pdf["v"].to_numpy())  # n x dim
-            S = (V @ M) >= 0.0  # n x planes sign bits
-            B = S.reshape(len(V), n_bands, band_bits) @ weights
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "bands": list(B.astype("int32"))}
-            )
-
-    # managed_cache, NOT localCheckpoint (r13, ADVICE r12): an eager
-    # checkpoint ran a full job at PLAN-CONSTRUCTION time (registering a
-    # query without executing it paid the projection), and localCheckpoint
-    # is non-reliable — a lost executor makes the partitions unrecoverable
-    # with no lineage fallback. A cached InMemoryRelation is the same plan
-    # barrier (Catalyst cannot inline the projection past it, so both join
-    # sides rescan integers), fills lazily on first action, and recomputes
-    # from lineage on loss.
-    # Same under-split guard as _exact_pairs_blocked (r13): the fixture
-    # parquet is one split, and a one-partition Arrow stage serializes
-    # the projection matmul on a single core.
-    proj_in = prepped.select("vec_id", "v")
-    n_part = prepped.sparkSession.sparkContext.defaultParallelism
-    if len(prepped.inputFiles()) < n_part:
-        proj_in = proj_in.repartition(n_part)
+    managed_cache, NOT localCheckpoint (r13, ADVICE r12): an eager
+    checkpoint ran a full job at PLAN-CONSTRUCTION time (registering a
+    query without executing it paid the projection), and localCheckpoint
+    is non-reliable — a lost executor makes the partitions unrecoverable
+    with no lineage fallback. A cached InMemoryRelation is the same plan
+    barrier, fills lazily on first action, and recomputes from lineage on
+    loss."""
     sig = managed_cache(
-        proj_in.mapInPandas(gen, "vec_id long, bands array<int>"),
+        srp_signatures(prepped, seed, n_bands, band_bits),
         f"banded_sig:{seed}:{n_bands}:{band_bits}",
     )
     return sig.select(
@@ -507,8 +312,8 @@ def _lsh_candidate_pairs(prepped, n_bands=_PAIR_BANDS, band_bits=_PAIR_BAND_BITS
     rows x 1 KB at sf0.1 (clustered synthetic embeddings put 38% of the
     corpus in one bucket) before the dedup, ~70 s; skinny rows + one
     array lookup per verified side take it to ~3 s. The quadratic pair
-    space is never materialized; signatures come from the single
-    literal-matrix projection expression (_proj_array_expr).
+    space is never materialized; signatures come from one numpy matmul
+    per Arrow batch (_banded_rows).
 
     Band sizing is a function of CORPUS SIZE, not just the recall
     target: a band key has 2^band_bits values, so even zero-similarity
@@ -523,27 +328,8 @@ def _lsh_candidate_pairs(prepped, n_bands=_PAIR_BANDS, band_bits=_PAIR_BAND_BITS
     default 8-bit banding at 20k vectors: 24.7x the sf0.1 time (noise
     collisions 16 * n^2 / 256); 12-bit banding at the same corpus cut
     candidates ~16x (see SCALING.md)."""
-    banded = _banded_rows(prepped, "pairs", n_bands, band_bits)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    arr_a = prepped.select(
-        F.col("vec_id").alias("vec_a"), F.col("label").alias("label_a"),
-        F.col("v").alias("v_a"), F.col("nrm").alias("n_a"),
-    )
-    arr_b = prepped.select(
-        F.col("vec_id").alias("vec_b"), F.col("label").alias("label_b"),
-        F.col("v").alias("v_b"), F.col("nrm").alias("n_b"),
-    )
+    cand = band_collisions(_banded_rows(prepped, "pairs", n_bands, band_bits))
+    arr_a, arr_b = _pair_arms(prepped)
     # The candidate pair list is collision-DRIVEN, not constant-bounded
     # (this very docstring cites 38% of the corpus in one bucket), so the
     # broadcast is gated on a MEASURED count, the connected_components
@@ -561,10 +347,10 @@ def _lsh_candidate_pairs(prepped, n_bands=_PAIR_BANDS, band_bits=_PAIR_BAND_BITS
 
 # CTE body + final select for the exact pair set, shared with the
 # embedding-cluster oracle in plans/ext_pipeline.py.
-_EXACT_PAIRS_CTE = (
+EXACT_PAIRS_CTE = (
     "e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
 )
-_EXACT_PAIRS_FINAL = f"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+EXACT_PAIRS_FINAL = f"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            a.label AS label_a, b.label AS label_b,
            round({_SQL_COS}, 4) AS cos
     FROM e a JOIN e b ON a.vec_id < b.vec_id
@@ -574,8 +360,8 @@ _EXACT_PAIRS_FINAL = f"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
 @query(
     "ext_embedding_cosine_pairs",
     f"""
-    WITH {_EXACT_PAIRS_CTE}
-    {_EXACT_PAIRS_FINAL}
+    WITH {EXACT_PAIRS_CTE}
+    {EXACT_PAIRS_FINAL}
     """,
 )
 def ext_embedding_cosine_pairs(spark, sf_dir):
@@ -589,10 +375,10 @@ def ext_embedding_cosine_pairs(spark, sf_dir):
     explicit error instead of silently degrading to lossy LSH candidates
     — the scale path is a *different, honestly-approximate* query,
     registered separately as ``ext_cosine_pairs_lsh`` (rows-only check;
-    recall follows the s-curve in ``srp_band_values``: near-complete at
-    the cosine levels real near-dup dedup uses (>=0.8), lossy at this
-    fixture's 0.4 threshold)."""
-    prepped = _prepped_embeddings(spark, sf_dir)
+    recall follows the s-curve in ``operators.srp.srp_band_sql``:
+    near-complete at the cosine levels real near-dup dedup uses (>=0.8),
+    lossy at this fixture's 0.4 threshold)."""
+    prepped = prepped_embeddings(spark, sf_dir)
     n = t(spark, sf_dir, "embeddings").count()  # parquet metadata count
     if n > _EXACT_PAIRS_MAX:
         raise ValueError(
@@ -600,7 +386,7 @@ def ext_embedding_cosine_pairs(spark, sf_dir):
             f"refuses {n} rows > _EXACT_PAIRS_MAX={_EXACT_PAIRS_MAX}; use "
             "ext_cosine_pairs_lsh (banded SRP-LSH + exact verify) at scale"
         )
-    return _exact_pairs_blocked(spark, prepped, n=n)
+    return exact_pairs_blocked(spark, prepped, n=n)
 
 
 def _pairs_lsh_oracle_sql() -> str:
@@ -651,7 +437,7 @@ def ext_cosine_pairs_lsh(spark, sf_dir):
     exact op, but fully DETERMINISTIC given the data: the planes are
     pinned literals, so the whole pipeline is oracle-gated in SQL (r10 —
     previously rows-only)."""
-    return _cosine_pairs_from(_lsh_candidate_pairs(_prepped_embeddings(spark, sf_dir)))
+    return _cosine_pairs_from(_lsh_candidate_pairs(prepped_embeddings(spark, sf_dir)))
 
 
 def scale_tuned_cosine_pairs(
@@ -673,26 +459,26 @@ def scale_tuned_cosine_pairs(
     invariant are pinned in tests/test_vectors.py."""
     return _cosine_pairs_from(
         _lsh_candidate_pairs(
-            _prepped_embeddings(spark, sf_dir), n_bands=n_bands, band_bits=band_bits
+            prepped_embeddings(spark, sf_dir), n_bands=n_bands, band_bits=band_bits
         ),
         threshold=threshold,
     )
 
 
 _IVF_N_CELLS = 16
-_IVF_N_PROBE = 4
+IVF_N_PROBE = 4
 # engine-portable row hash for the centroid pick (md5-hex-prefix integer —
 # the ext_stratified_sample pattern; Spark's crc32 has no DuckDB twin)
-_IVF_H_DUCK = (
+IVF_H_DUCK = (
     "CAST(('0x' || substr(md5('centroid:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT)"
 )
 
 
-def _ivf_probe_ctes(n_cells: int = _IVF_N_CELLS, n_probe: int = _IVF_N_PROBE) -> str:
+def ivf_probe_ctes(n_cells: int = _IVF_N_CELLS, n_probe: int = IVF_N_PROBE) -> str:
     """The IVF pipeline as a CTE body (``e`` through ``scored``), shared
     by the probe oracle below and the lifecycle oracles in ext_vectors4
-    (the _minhash_ctes / _MINHASH_FINAL pattern), parameterized by the
-    index layout the way _minhash_ctes is by (b, r). Nothing in it is
+    (the minhash_ctes / MINHASH_FINAL pattern), parameterized by the
+    index layout the way minhash_ctes is by (b, r). Nothing in it is
     trained or sampled at runtime — centroids are a hash-of-id pick,
     assignment is an argmax over pinned cells — so the 'approximate' op
     (approximate only vs exact ANN) is a deterministic function of the
@@ -707,9 +493,9 @@ def _ivf_probe_ctes(n_cells: int = _IVF_N_CELLS, n_probe: int = _IVF_N_PROBE) ->
     ),
     tot AS (SELECT count(*) AS total FROM e),
     candc AS (
-      SELECT vec_id, v, nrm, {_IVF_H_DUCK} AS h
+      SELECT vec_id, v, nrm, {IVF_H_DUCK} AS h
       FROM n CROSS JOIN tot
-      WHERE {_IVF_H_DUCK} % greatest(total // {n_cells}, 1) < 2
+      WHERE {IVF_H_DUCK} % greatest(total // {n_cells}, 1) < 2
     ),
     cent AS (
       SELECT cell_id, v AS c_v, nrm AS c_nrm FROM (
@@ -730,7 +516,7 @@ def _ivf_probe_ctes(n_cells: int = _IVF_N_CELLS, n_probe: int = _IVF_N_PROBE) ->
                row_number() OVER (PARTITION BY a.vec_id
                                   ORDER BY (list_dot_product(a.v, c.c_v) / (a.nrm * c.c_nrm)) DESC,
                                            c.cell_id) AS rk
-        FROM assign a CROSS JOIN cent c WHERE a.vec_id < {_N_QUERIES}
+        FROM assign a CROSS JOIN cent c WHERE a.vec_id < {N_QUERIES}
       ) WHERE rk <= {n_probe}
     ),
     scored AS (
@@ -740,18 +526,18 @@ def _ivf_probe_ctes(n_cells: int = _IVF_N_CELLS, n_probe: int = _IVF_N_PROBE) ->
     )"""
 
 
-def _ivf_probe_oracle_sql(n_cells: int = _IVF_N_CELLS, n_probe: int = _IVF_N_PROBE) -> str:
+def ivf_probe_oracle_sql(n_cells: int = _IVF_N_CELLS, n_probe: int = IVF_N_PROBE) -> str:
     return f"""
-    WITH {_ivf_probe_ctes(n_cells, n_probe)}
+    WITH {ivf_probe_ctes(n_cells, n_probe)}
     SELECT query_id, neighbor_id, cos, CAST(rk AS BIGINT) AS rk FROM (
       SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY cos DESC, neighbor_id) AS rk
       FROM scored
-    ) WHERE rk <= {_TOP_K}
+    ) WHERE rk <= {TOP_K}
     """
 
 
-def _ivf_pick_assign(spark, sf_dir, n_cells, total=None):
+def ivf_pick_assign(spark, sf_dir, n_cells, total=None):
     """Hash-pick ``n_cells`` coarse centroids and assign the corpus — the
     shared build step of the IVF family (probe here, partition-sim /
     recall-audit in ext_vectors4). Returns ``(assigned, centroids)``
@@ -763,7 +549,7 @@ def _ivf_pick_assign(spark, sf_dir, n_cells, total=None):
     centroid pick sorts only the ~2k-row hash-oversampled set (bounded
     heap via TakeOrderedAndProject), and the k-bounded collect is the
     same driver materialization the broadcast needs anyway."""
-    prepped = _prepped_embeddings(spark, sf_dir)
+    prepped = prepped_embeddings(spark, sf_dir)
     if total is None:
         # bounded metadata read (one count of the corpus); multi-layout
         # callers (the partition sim) pass it in so three layouts don't
@@ -781,11 +567,7 @@ def _ivf_pick_assign(spark, sf_dir, n_cells, total=None):
         [(i, list(r.v), float(r.nrm)) for i, r in enumerate(picked)],
         "cell_id int, c_v array<double>, c_nrm double",
     )
-    dot_vc = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c_v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot_vc = fold_dot(F.col("v"), F.col("c_v"))
     sim_to_centroid = dot_vc / (F.col("nrm") * F.col("c_nrm"))
     # r15 MEASURED AND REJECTED: replacing this crossJoin+window argmax
     # with a per-row fold over an array<struct> literal of the k cells
@@ -811,7 +593,7 @@ def _ivf_pick_assign(spark, sf_dir, n_cells, total=None):
     return assigned, centroids
 
 
-@query("ext_ann_ivf_probe", _ivf_probe_oracle_sql())
+@query("ext_ann_ivf_probe", ivf_probe_oracle_sql())
 def ext_ann_ivf_probe(spark, sf_dir):
     """IVF-style ANN (SURVEY §2.12 'an IVF or LSH-bucketed variant'):
 
@@ -833,26 +615,22 @@ def ext_ann_ivf_probe(spark, sf_dir):
     return ivf_probe(spark, sf_dir)
 
 
-def ivf_probe(spark, sf_dir, n_cells=_IVF_N_CELLS, n_probe=_IVF_N_PROBE):
+def ivf_probe(spark, sf_dir, n_cells=_IVF_N_CELLS, n_probe=IVF_N_PROBE):
     """``ext_ann_ivf_probe`` with the index layout exposed — the
     re-tune-on-growth API, like ``scale_tuned_cosine_pairs`` for the SRP
     index. The registered query pins the deployed defaults; the retuned
     registration in ext_vectors4 runs the nlist the partition sim's
     decision table points to."""
-    assigned, centroids = _ivf_pick_assign(spark, sf_dir, n_cells)
+    assigned, centroids = ivf_pick_assign(spark, sf_dir, n_cells)
     assigned = assigned.drop("cell_cos")
 
     queries_assigned = (
-        assigned.filter(F.col("vec_id") < _N_QUERIES)
+        assigned.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("q_v"), F.col("nrm").alias("q_nrm"))
         .crossJoin(F.broadcast(centroids))
         .withColumn(
             "__sim",
-            F.aggregate(
-                F.zip_with(F.col("q_v"), F.col("c_v"), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ) / (F.col("q_nrm") * F.col("c_nrm")),
+            fold_dot(F.col("q_v"), F.col("c_v")) / (F.col("q_nrm") * F.col("c_nrm")),
         )
         .withColumn(
             "__rk",
@@ -864,11 +642,7 @@ def ivf_probe(spark, sf_dir, n_cells=_IVF_N_CELLS, n_probe=_IVF_N_PROBE):
         .select("query_id", "q_v", "q_nrm", "cell_id")
     )
 
-    dot_qc = F.aggregate(
-        F.zip_with(F.col("q_v"), F.col("v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot_qc = fold_dot(F.col("q_v"), F.col("v"))
     scored = (
         assigned.join(F.broadcast(queries_assigned), "cell_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -880,7 +654,7 @@ def ivf_probe(spark, sf_dir, n_cells=_IVF_N_CELLS, n_probe=_IVF_N_PROBE):
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return scored.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rk") <= _TOP_K
+        F.col("rk") <= TOP_K
     )
 
 
@@ -904,7 +678,7 @@ def _ann_lsh_oracle_sql() -> str:
       {banded}
     ),
     q AS (SELECT vec_id AS query_id, band_idx, band_val
-          FROM banded WHERE vec_id < {_N_QUERIES}),
+          FROM banded WHERE vec_id < {N_QUERIES}),
     cand AS (
       SELECT DISTINCT q.query_id, s.vec_id AS neighbor_id
       FROM banded s JOIN q
@@ -926,7 +700,7 @@ def _ann_lsh_oracle_sql() -> str:
       FROM scored
     )
     SELECT query_id, neighbor_id, cos, CAST(rk AS BIGINT) AS rk
-    FROM ranked WHERE rk <= {_TOP_K}
+    FROM ranked WHERE rk <= {TOP_K}
     """
 
 
@@ -934,7 +708,7 @@ def _ann_lsh_oracle_sql() -> str:
 def ext_ann_lsh_bucketed(spark, sf_dir):
     """Sub-linear ANN path (SURVEY §2.12 'IVF or LSH-bucketed variant'):
     sign-random-projection LSH with {_ANN_BANDS} tables x
-    {_ANN_BAND_BITS} bits (pinned literal ±1 planes — see _plane_signs);
+    {_ANN_BAND_BITS} bits (pinned literal ±1 planes — see operators/srp.py);
     candidates = the union over bands of same-bucket corpus rows vs the
     query set, then exact cosine re-rank of the distinct candidates.
 
@@ -942,8 +716,8 @@ def ext_ann_lsh_bucketed(spark, sf_dir):
     cos-θ neighbor with p = (1 - θ/π)^b — at 12 bits and the fixture's
     cos ≈ 0.5 neighbors that is (2/3)^12 ≈ 0.8%, useless. The pre-r12
     shape only LOOKED like it recalled (~0.2+) because the crc32 planes
-    were degenerate (see _plane_signs): the "12-bit" bucket held ~4 real
-    bits, i.e. it brute-force-scanned ~30% of the corpus per query. With
+    were degenerate (see operators/srp.py): the "12-bit" bucket held ~4
+    real bits, i.e. it brute-force-scanned ~30% of the corpus per query. With
     independent md5 planes, recall comes from OR-ing L=32 independent
     8-bit tables — 1-(1-p)^L ≈ 0.5-0.8 at the fixture's neighbor
     cosines — the classic (L, b) LSH trade the banding law in
@@ -964,7 +738,7 @@ def ext_ann_lsh_bucketed(spark, sf_dir):
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
     )
     banded = _banded_rows(base, "ann", _ANN_BANDS, _ANN_BAND_BITS)
-    q = banded.filter(F.col("vec_id") < _N_QUERIES).select(
+    q = banded.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "band_idx", "band_val"
     )
     cand = (
@@ -980,7 +754,7 @@ def ext_ann_lsh_bucketed(spark, sf_dir):
     scored = (
         cand.join(
             F.broadcast(
-                arrs.filter(F.col("vec_id") < _N_QUERIES).select(
+                arrs.filter(F.col("vec_id") < N_QUERIES).select(
                     F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("q_emb"),
                 )
@@ -1002,5 +776,5 @@ def ext_ann_lsh_bucketed(spark, sf_dir):
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return scored.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rk") <= _TOP_K
+        F.col("rk") <= TOP_K
     )

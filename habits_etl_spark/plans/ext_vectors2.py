@@ -7,7 +7,7 @@ iterations expressed as DataFrame ops — and the operator that motivates it
 at 100 TB: SemDeDup (Abbas et al. 2023), which clusters embeddings FIRST so
 the quadratic near-duplicate search runs only inside clusters. Both are oracle-gated
 end to end since r10 (the fixed Lloyd round count unrolls into a DuckDB
-CTE chain — _kmeans_cent_sql); precision and recall against the exact
+CTE chain — kmeans_cent_sql); precision and recall against the exact
 cosine-pairs op are additionally asserted in tests/test_vectors2.py. Reference parity: the reference has no embedding
 surface; these extend it per the BASELINE north-star list.
 
@@ -25,57 +25,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from habits_etl_spark.functions.hashing import md5_int
-from habits_etl_spark.operators.lloyd import hash_seeds, lloyd_round
-from habits_etl_spark.plans.common import memo_fit, query, shared_cache, t
-from habits_etl_spark.plans.ext_vectors import _prepped_embeddings
+from habits_etl_spark.operators.lloyd import (
+    argmax_cell_expr,
+    dots_sql,
+    hash_seeds,
+    lloyd_round,
+)
+from habits_etl_spark.operators.srp import fold_dot
+from habits_etl_spark.plans.bases import normed_base_cached, prepped_embeddings
+from habits_etl_spark.plans.common import memo_fit, query, shared_cache
 
 _KM_K = 8
-_KM_ITERS = 3
+KM_ITERS = 3
 _SEM_THRESHOLD = 0.4  # matches ext_embedding_cosine_pairs' _COS_THRESHOLD
 
 
-def _lit_array_sql(vals) -> str:
-    """A float64 array literal as ONE parsed SQL expression (a Column-tree
-    build of 64 lits per centroid costs hundreds of py4j round trips —
-    the lesson recorded in PERF_r3_minhash.md #2)."""
-    return "array(" + ", ".join(f"{x!r}D" for x in vals) + ")"
-
-
-def _dots_sql(centroids: list[list[float]], vcol: str = "v") -> str:
-    """SQL for array(dot(vcol, c_0), ..., dot(vcol, c_{k-1}))."""
-    return "array(" + ", ".join(
-        f"aggregate(zip_with({vcol}, {_lit_array_sql(c)}, (x, y) -> x * y),"
-        " 0.0D, (acc, x) -> acc + x)"
-        for c in centroids
-    ) + ")"
-
-
-def _argmax_cell_expr(centroids: list[list[float]]) -> F.Column:
-    """cluster id of the nearest centroid for embedding column ``v``, ties
-    to the lowest cell id — a pure map over the corpus, no shuffle, no
-    join: the centroid set rides into the task as plan literals. Because
-    centroids are unit vectors, argmax of the raw dot product IS argmax
-    of the cosine (the row's 1/nrm factor is a positive constant)."""
-    dots = _dots_sql(centroids)
-    return F.expr(f"array_position({dots}, array_max({dots})) - 1").cast("int")
-
-
-def _normed_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-lifetime cached (vec_id, v, nrm) base relation that every
-    fit trains on: kmeans_fit, the incremental-IVF fit (on its base
-    split) and pq_fit (ext_vectors3, via its exploded subvectors). The
-    kernel's seed pick counts and hash-orders it and every Lloyd round
-    re-reads it — one cached copy per (session, sf_dir) instead of one
-    re-cache per fit invocation."""
-    return shared_cache(
-        spark,
-        f"embeddings/normed::{sf_dir}",
-        lambda: _prepped_embeddings(spark, sf_dir).select("vec_id", "v", "nrm"),
-    )
-
-
 def kmeans_fit(spark: SparkSession, sf_dir: str, k: int = _KM_K,
-               iters: int = _KM_ITERS) -> list[list[float]]:
+               iters: int = KM_ITERS) -> list[list[float]]:
     """Spherical k-means via Lloyd iterations, DataFrame-only. Returns k
     UNIT centroids. MEMOIZED per (sf_dir, k, iters): the fit is a
     deterministic pure function of the parquet input (md5 seeds,
@@ -88,12 +54,12 @@ def kmeans_fit(spark: SparkSession, sf_dir: str, k: int = _KM_K,
     hash_seeds is the md5-order pick, widened to the full corpus if its
     2x-oversampled slice comes up short of k rows; each lloyd_round is a
     pure-map assignment (broadcast-literal centroids, see
-    _argmax_cell_expr), ONE decimal-exact (cell, dim) aggregate and a
+    argmax_cell_expr), ONE decimal-exact (cell, dim) aggregate and a
     k x dim collect — the same loop shape MLlib's KMeans runs via
     treeAggregate."""
     return memo_fit(
         ("kmeans_fit", sf_dir, k, iters),
-        lambda: _spherical_lloyd(_normed_base_cached(spark, sf_dir), k, iters),
+        lambda: _spherical_lloyd(normed_base_cached(spark, sf_dir), k, iters),
     )
 
 
@@ -104,7 +70,7 @@ def _spherical_lloyd(m: DataFrame, k: int, iters: int) -> list[list[float]]:
     empty cells keep their previous centroid (standard Lloyd fallback)."""
     centroids = hash_seeds(m, "kmeans:", k)
     for _ in range(iters):
-        sums = lloyd_round(m, _argmax_cell_expr(centroids))
+        sums = lloyd_round(m, argmax_cell_expr(centroids))
         new = {cell: _unit(vsum) for (cell,), (vsum, _) in sums.items()}
         centroids = [new.get(i, c) for i, c in enumerate(centroids)]
     return centroids
@@ -115,7 +81,7 @@ def _unit(vec: list[float]) -> list[float]:
     return [x / nrm for x in vec]
 
 
-def _kmeans_cent_sql(k: int = _KM_K, iters: int = _KM_ITERS,
+def kmeans_cent_sql(k: int = _KM_K, iters: int = KM_ITERS,
                      prefix: str = "", include_base: bool = True,
                      src_where: str = "") -> str:
     """CTE chain restating kmeans_fit in DuckDB, ending in ``cent{iters}``
@@ -225,7 +191,7 @@ def _kmeans_cent_sql(k: int = _KM_K, iters: int = _KM_ITERS,
 @query(
     "ext_kmeans_centroids",
     f"""
-    WITH {_kmeans_cent_sql()}
+    WITH {kmeans_cent_sql()}
     SELECT CAST(cluster_id AS INT) AS cluster_id,
            CAST(count(*) AS BIGINT) AS n_members,
            round(CAST(sum(CAST(bestdot / nrm AS DECIMAL(28,12))) AS DOUBLE)
@@ -235,19 +201,19 @@ def _kmeans_cent_sql(k: int = _KM_K, iters: int = _KM_ITERS,
 )
 def ext_kmeans_centroids(spark, sf_dir):
     """Trained coarse quantizer for the embedding column: {_KM_K} spherical
-    k-means cells after {_KM_ITERS} Lloyd iterations. Emits per cell its
+    k-means cells after {KM_ITERS} Lloyd iterations. Emits per cell its
     member count and mean member-to-centroid cosine (the spherical
     analogue of inertia) — the health dashboard of an IVF index build.
 
     Oracle-gated since r10: the mean numerators are decimal-exact
     (order-invariant, unlike MLlib's float treeAggregate), so the fixed
-    Lloyd round count unrolls into the _kmeans_cent_sql oracle chain;
+    Lloyd round count unrolls into the kmeans_cent_sql oracle chain;
     cluster-quality invariants are asserted in tests/test_vectors2.py."""
     centroids = kmeans_fit(spark, sf_dir)
-    m = _prepped_embeddings(spark, sf_dir)
-    cell = _argmax_cell_expr(centroids)
+    m = prepped_embeddings(spark, sf_dir)
+    cell = argmax_cell_expr(centroids)
     # cosine to own centroid = max dot / row norm (centroids are unit)
-    sim_to_own = F.expr(f"array_max({_dots_sql(centroids)})") / F.col("nrm")
+    sim_to_own = F.expr(f"array_max({dots_sql(centroids)})") / F.col("nrm")
     return (
         m.select(cell.alias("cluster_id"), sim_to_own.alias("sim"))
         .groupBy("cluster_id")
@@ -268,7 +234,7 @@ def ext_kmeans_centroids(spark, sf_dir):
 @query(
     "ext_semantic_dedup",
     f"""
-    WITH {_kmeans_cent_sql()},
+    WITH {kmeans_cent_sql()},
     pairs AS (
       SELECT x.vec_id AS va, y.vec_id AS vb,
              list_dot_product(x.v, y.v) / (x.nrm * y.nrm) AS cos
@@ -301,8 +267,8 @@ def ext_semantic_dedup(spark, sf_dir):
     construction (every flagged pair is exactly scored); recall is bounded
     by cell purity and asserted in tests/test_vectors2.py."""
     centroids = kmeans_fit(spark, sf_dir)
-    m = _prepped_embeddings(spark, sf_dir).select(
-        "vec_id", "label", "v", "nrm", _argmax_cell_expr(centroids).alias("cluster_id")
+    m = prepped_embeddings(spark, sf_dir).select(
+        "vec_id", "label", "v", "nrm", argmax_cell_expr(centroids).alias("cluster_id")
     )
     a = m.select(
         F.col("cluster_id"),
@@ -316,11 +282,7 @@ def ext_semantic_dedup(spark, sf_dir):
         F.col("v").alias("v_a"),
         F.col("nrm").alias("n_a"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("v_a"), F.col("v_b"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = fold_dot(F.col("v_a"), F.col("v_b"))
     cos = dot / (F.col("n_a") * F.col("n_b"))
     pair_sims = (
         b.join(a, "cluster_id")
@@ -368,7 +330,7 @@ def _ivfd_delta_col() -> F.Column:
 @query(
     "ext_ivf_delta_maintenance",
     f"""
-    WITH {_kmeans_cent_sql(src_where=f"WHERE NOT ({_IVFD_DUCK_DELTA})")},
+    WITH {kmeans_cent_sql(src_where=f"WHERE NOT ({_IVFD_DUCK_DELTA})")},
     all2 AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
              sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
@@ -383,7 +345,7 @@ def _ivfd_delta_col() -> F.Column:
                row_number() OVER (PARTITION BY a.vec_id
                                   ORDER BY list_dot_product(a.v, c.w) DESC,
                                            c.cell) AS rk
-        FROM all2 a CROSS JOIN cent{_KM_ITERS} c
+        FROM all2 a CROSS JOIN cent{KM_ITERS} c
       ) WHERE rk = 1
     ),
     rep AS (
@@ -423,24 +385,24 @@ def ext_ivf_delta_maintenance(spark, sf_dir):
     re-runs only when a cell's report says so. The fit itself is
     memoized per (session, sf_dir) like every trained model here
     (build-the-index-once), and reuses the shared normed base relation.
-    Oracle: the unrolled decimal-exact Lloyd chain (_kmeans_cent_sql)
+    Oracle: the unrolled decimal-exact Lloyd chain (kmeans_cent_sql)
     parameterized by the same hash split via ``src_where``, plus a
     final full-corpus assignment CTE — cross-engine parity leans on the
     same md5-seed / sequential-fold / DECIMAL-sum pins as
     ext_kmeans_centroids (hash-green there since r10). Reference
     parity: [E] extension (BASELINE north-star similarity-search
     family); no reference twin."""
-    m = _normed_base_cached(spark, sf_dir)
+    m = normed_base_cached(spark, sf_dir)
     base = shared_cache(
         spark,
         f"embeddings/normed_ivf_base::{sf_dir}",
         lambda: m.filter(~_ivfd_delta_col()),
     )
     cents = memo_fit(
-        ("ivf_delta_fit", sf_dir, _KM_K, _KM_ITERS),
-        lambda: _spherical_lloyd(base, _KM_K, _KM_ITERS),
+        ("ivf_delta_fit", sf_dir, _KM_K, KM_ITERS),
+        lambda: _spherical_lloyd(base, _KM_K, KM_ITERS),
     )
-    dots = F.expr(_dots_sql(cents))
+    dots = F.expr(dots_sql(cents))
     assigned = (
         m.select("vec_id", "nrm", _ivfd_delta_col().alias("is_delta"), "v")
         .withColumn("__dots", dots)

@@ -14,7 +14,7 @@ composes with the IVF cell routing (ext_ann_ivf_probe) for sub-linear
 candidate selection.
 
 All three operators are oracle-gated end to end since r10: the fixed
-Lloyd round count unrolls into a DuckDB CTE chain (_pq_codebook_sql, the
+Lloyd round count unrolls into a DuckDB CTE chain (pq_codebook_sql, the
 k-center/MMR/PCA/PageRank/k-means pattern) with md5-int seeds and
 decimal-exact mean numerators, so training is a deterministic function
 of the data. Quantization quality and search recall against the exact
@@ -34,26 +34,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from habits_etl_spark.operators.lloyd import hash_seeds, lloyd_round
-from habits_etl_spark.plans.common import memo_fit, query, shared_cache, t
-from habits_etl_spark.plans.ext_vectors import (
-    _DIM,
-    _N_QUERIES,
-    _TOP_K,
-    _prepped_embeddings,
+from habits_etl_spark.operators.lloyd import (
+    argmax_cell_expr,
+    hash_seeds,
+    lit_array_sql,
+    lloyd_round,
 )
-from habits_etl_spark.plans.ext_vectors2 import (
-    _KM_ITERS,
-    _argmax_cell_expr,
-    _kmeans_cent_sql,
-    _lit_array_sql,
-    _normed_base_cached,
-    kmeans_fit,
-)
+from habits_etl_spark.operators.srp import DIM
+from habits_etl_spark.plans.bases import normed_base_cached, prepped_embeddings
+from habits_etl_spark.plans.common import memo_fit, query, shared_cache
+from habits_etl_spark.plans.ext_vectors import N_QUERIES, TOP_K
+from habits_etl_spark.plans.ext_vectors2 import KM_ITERS, kmeans_cent_sql, kmeans_fit
 
 _PQ_M = 8  # subspaces
-_PQ_DSUB = _DIM // _PQ_M
-_PQ_K = 16  # codebook entries per subspace (4-bit codes)
+_PQ_DSUB = DIM // _PQ_M
+PQ_K = 16  # codebook entries per subspace (4-bit codes)
 _PQ_RERANK = 64  # ADC shortlist size fed to the exact re-rank stage
 _PQ_ITERS = 3
 
@@ -66,7 +61,7 @@ def _sub_slice(m: int, vcol: str = "v", dsub: int = _PQ_DSUB) -> str:
 def _cb_lit(codebooks) -> str:
     """The full codebook as ONE m_sub x k x dsub literal matrix."""
     return "array(" + ", ".join(
-        "array(" + ", ".join(_lit_array_sql(c) for c in cb_m) + ")" for cb_m in codebooks
+        "array(" + ", ".join(lit_array_sql(c) for c in cb_m) + ")" for cb_m in codebooks
     ) + ")"
 
 
@@ -106,7 +101,7 @@ def pq_fit(
     spark: SparkSession,
     sf_dir: str,
     m_sub: int = _PQ_M,
-    k: int = _PQ_K,
+    k: int = PQ_K,
     iters: int = _PQ_ITERS,
 ) -> list[list[list[float]]]:
     """Train the M codebooks, Lloyd iterations expressed as DataFrame ops,
@@ -134,8 +129,8 @@ def pq_fit(
 
 
 def _pq_fit(spark, sf_dir, m_sub, k, iters):
-    dsub = _DIM // m_sub
-    base = _normed_base_cached(spark, sf_dir)
+    dsub = DIM // m_sub
+    base = normed_base_cached(spark, sf_dir)
     seeds = hash_seeds(base, "pq:", k)
     codebooks = [[u[m * dsub : (m + 1) * dsub] for u in seeds] for m in range(m_sub)]
 
@@ -174,7 +169,7 @@ def _pq_fit(spark, sf_dir, m_sub, k, iters):
     return codebooks
 
 
-def _with_codes(base: DataFrame, codebooks) -> DataFrame:
+def with_codes(base: DataFrame, codebooks) -> DataFrame:
     """Attach the M-code array — a pure map, codebooks as plan literals.
     One sequence-transform expression (the codebook matrix appears twice
     — argmax needs the scores array for both position and max — instead
@@ -192,15 +187,15 @@ def _with_codes(base: DataFrame, codebooks) -> DataFrame:
     )
 
 
-def _pq_codebook_sql(m_sub: int = _PQ_M, k: int = _PQ_K, iters: int = _PQ_ITERS) -> str:
+def pq_codebook_sql(m_sub: int = _PQ_M, k: int = PQ_K, iters: int = _PQ_ITERS) -> str:
     """CTE chain restating pq_fit in DuckDB, ending in ``cb{iters}``
     (sub_id, cell, w) plus ``m2``/``subs`` base relations and ``fasg``
     (final per-(vector, subspace) assignment carrying the chosen
-    codeword). Same unroll discipline as _kmeans_cent_sql: md5-int
+    codeword). Same unroll discipline as kmeans_cent_sql: md5-int
     seeds, decimal-exact mean numerators, ordered-list folds for every
     scalar the driver computes left-to-right in Python, argmax ties to
     the lowest cell."""
-    dsub = _DIM // m_sub
+    dsub = DIM // m_sub
     h = "CAST(('0x' || substr(md5('pq:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT)"
     score = (
         "(list_dot_product(s.sv, c.w) / s.nrm)"
@@ -301,7 +296,7 @@ def _pq_codebook_sql(m_sub: int = _PQ_M, k: int = _PQ_K, iters: int = _PQ_ITERS)
 @query(
     "ext_pq_codes",
     f"""
-    WITH {_pq_codebook_sql()},
+    WITH {pq_codebook_sql()},
     codes AS (
       SELECT vec_id, array_to_string(list(cell ORDER BY sub_id), ',') AS codes
       FROM fasg GROUP BY vec_id
@@ -330,9 +325,9 @@ def ext_pq_codes(spark, sf_dir):
     (which an index writer drops in favor of writing codes next to the
     source partition)."""
     codebooks = pq_fit(spark, sf_dir)
-    base = _prepped_embeddings(spark, sf_dir)
-    coded = _with_codes(base, codebooks)
-    recon = _recon_err_expr(codebooks)
+    base = prepped_embeddings(spark, sf_dir)
+    coded = with_codes(base, codebooks)
+    recon = recon_err_expr(codebooks)
     return coded.select(
         "vec_id",
         "label",
@@ -347,7 +342,7 @@ def ext_pq_codes(spark, sf_dir):
     ).orderBy("vec_id")
 
 
-def _recon_err_expr(codebooks):
+def recon_err_expr(codebooks):
     """|u - recon|^2 over a ``codes`` column: per subspace |u_m|^2 -
     2 u_m.c + |c|^2, all folds on raw v with scalar 1/nrm applied outside
     the lambda. The codeword dot folds against the SELECTED codeword only
@@ -376,10 +371,10 @@ def _recon_err_expr(codebooks):
 
 
 def _query_units(base: DataFrame) -> dict[int, list[float]]:
-    """Collect the query vectors (vec_id < _N_QUERIES) as unit vectors —
-    bounded driver traffic: _N_QUERIES x _DIM floats."""
+    """Collect the query vectors (vec_id < N_QUERIES) as unit vectors —
+    bounded driver traffic: N_QUERIES x DIM floats."""
     qrows = (
-        base.filter(F.col("vec_id") < _N_QUERIES).select("vec_id", "v", "nrm").collect()
+        base.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "v", "nrm").collect()
     )
     return {r.vec_id: [x / (r.nrm or 1.0) for x in r.v] for r in qrows}
 
@@ -409,7 +404,7 @@ def _adc_tables(units, codebooks):
 def _adc_dist_sql(tab) -> str:
     """sum_m element_at(T_m, codes[m]+1) — the whole per-row ADC cost."""
     return " + ".join(
-        f"element_at({_lit_array_sql(tab[m])}, codes[{m}] + 1)" for m in range(len(tab))
+        f"element_at({lit_array_sql(tab[m])}, codes[{m}] + 1)" for m in range(len(tab))
     )
 
 
@@ -429,13 +424,13 @@ def _shortlist_topk(scored: DataFrame, n: int) -> DataFrame:
 def _rerank_exact(shortlist: DataFrame, base: DataFrame, units) -> DataFrame:
     """Exact-cosine re-rank of an ADC shortlist: join back to (v, nrm),
     score against literal unit query vectors (CASE over query_id, scalar
-    1/nrm outside the fold), keep the final _TOP_K."""
+    1/nrm outside the fold), keep the final TOP_K."""
     from pyspark.sql import Window
 
     qcos = None
     for qid, u in sorted(units.items()):
         dot = (
-            f"aggregate(zip_with(v, {_lit_array_sql(u)}, (x, y) -> x * y),"
+            f"aggregate(zip_with(v, {lit_array_sql(u)}, (x, y) -> x * y),"
             " 0.0D, (acc, x) -> acc + x) / nrm"
         )
         e = F.expr(dot)
@@ -446,13 +441,13 @@ def _rerank_exact(shortlist: DataFrame, base: DataFrame, units) -> DataFrame:
     wr = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
         exact.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= _TOP_K)
+        .filter(F.col("rk") <= TOP_K)
         .select("query_id", "neighbor_id", "cos")
         .orderBy("query_id", F.col("cos").desc(), "neighbor_id")
     )
 
 
-def _pq_search_tail_sql(
+def pq_search_tail_sql(
     adcd_body: str, extra: str = "", m_sub: int = _PQ_M, iters: int = _PQ_ITERS
 ) -> str:
     """Shared oracle tail of the PQ search queries: unit query vectors,
@@ -461,11 +456,11 @@ def _pq_search_tail_sql(
     scoring relation ``adcd``, the ADC shortlist, and the exact-cosine
     re-rank — each tie broken exactly as the Spark windows break it.
     ``m_sub``/``iters`` select the codebook layout (cb{{iters}} chain)."""
-    dsub = _DIM // m_sub
+    dsub = DIM // m_sub
     return f"""qunits AS MATERIALIZED (
       SELECT vec_id AS query_id,
              list_transform(v, x -> x / (CASE WHEN nrm = 0.0 THEN 1.0 ELSE nrm END)) AS u
-      FROM m2 WHERE vec_id < {_N_QUERIES}
+      FROM m2 WHERE vec_id < {N_QUERIES}
     ),
     adct AS MATERIALIZED (
       SELECT q.query_id, c.sub_id, c.cell,
@@ -499,11 +494,11 @@ def _pq_search_tail_sql(
       SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY cos DESC, neighbor_id) AS rk
       FROM rer
-    ) WHERE rk <= {_TOP_K}
+    ) WHERE rk <= {TOP_K}
     """
 
 
-_PQ_FLAT_ADCD = """SELECT a.query_id, f.vec_id AS neighbor_id,
+PQ_FLAT_ADCD = """SELECT a.query_id, f.vec_id AS neighbor_id,
              list_aggregate(list(a.t ORDER BY f.sub_id), 'sum') AS approx_dist
       FROM fasg f
       JOIN adct a ON a.sub_id = f.sub_id AND a.cell = f.cell
@@ -513,20 +508,20 @@ _PQ_FLAT_ADCD = """SELECT a.query_id, f.vec_id AS neighbor_id,
 @query(
     "ext_pq_topk",
     f"""
-    WITH {_pq_codebook_sql()},
-    {_pq_search_tail_sql(_PQ_FLAT_ADCD)}
+    WITH {pq_codebook_sql()},
+    {pq_search_tail_sql(PQ_FLAT_ADCD)}
     """,
 )
 def ext_pq_topk(spark, sf_dir):
     """PQ-ADC candidate scan + exact re-rank (the IVFADC+R shape, Jegou
-    et al. 2011 §V): the {_N_QUERIES} query vectors (vec_id <
-    {_N_QUERIES}, same convention as ext_topk_sim_search) are collected
+    et al. 2011 §V): the {N_QUERIES} query vectors (vec_id <
+    {N_QUERIES}, same convention as ext_topk_sim_search) are collected
     driver-side, each query's M x k distance table is computed in plain
     Python (M*k floats per query), and the corpus-side scan is ONLY
     `sum_m table[q][m][codes[m]]` — element_at lookups into plan
     literals, zero float folds over embeddings at candidate time. The
     ADC shortlist (top {_PQ_RERANK} per query) is then re-ranked with
-    EXACT cosine — float folds run on {_N_QUERIES} x {_PQ_RERANK} rows,
+    EXACT cosine — float folds run on {N_QUERIES} x {_PQ_RERANK} rows,
     not the corpus. That asymmetry is the point of PQ: per-query float
     math happens once on the driver, the distributed scan touches just
     the codes, and exact math touches just the shortlist.
@@ -537,15 +532,15 @@ def ext_pq_topk(spark, sf_dir):
     return pq_topk(spark, sf_dir)
 
 
-def pq_topk(spark, sf_dir, m_sub: int = _PQ_M, k: int = _PQ_K) -> DataFrame:
+def pq_topk(spark, sf_dir, m_sub: int = _PQ_M, k: int = PQ_K) -> DataFrame:
     """The flat PQ-ADC search pipeline under any (m_sub, k) codebook
-    layout — the layout is a PARAMETER through pq_fit/_with_codes/
+    layout — the layout is a PARAMETER through pq_fit/with_codes/
     _adc_tables (all derive shapes from the codebooks), not a code path,
     which is what makes ext_pq_topk_retuned (ext_vectors4) a literal
     change. Called with defaults this IS ext_pq_topk's plan."""
     codebooks = pq_fit(spark, sf_dir, m_sub=m_sub, k=k)
-    base = _prepped_embeddings(spark, sf_dir)
-    coded = _with_codes(base, codebooks).select("vec_id", "codes")
+    base = prepped_embeddings(spark, sf_dir)
+    coded = with_codes(base, codebooks).select("vec_id", "codes")
 
     units = _query_units(base)
     tables = _adc_tables(units, codebooks)
@@ -584,7 +579,7 @@ def _ivfpq_oracle_sql() -> str:
                row_number() OVER (PARTITION BY q.query_id
                                   ORDER BY list_dot_product(q.u, c.w) DESC,
                                            c.cell) AS rk
-        FROM qunits q CROSS JOIN km_cent{_KM_ITERS} c
+        FROM qunits q CROSS JOIN km_cent{KM_ITERS} c
       ) WHERE rk <= {_IVFPQ_N_PROBE}
     )"""
     adcd = """SELECT a.query_id, f.vec_id AS neighbor_id,
@@ -596,9 +591,9 @@ def _ivfpq_oracle_sql() -> str:
                  AND a.sub_id = f.sub_id AND a.cell = f.cell
       GROUP BY a.query_id, f.vec_id"""
     return f"""
-    WITH {_pq_codebook_sql()},
-    {_kmeans_cent_sql(prefix="km_", include_base=False)},
-    {_pq_search_tail_sql(adcd, extra=probes)}
+    WITH {pq_codebook_sql()},
+    {kmeans_cent_sql(prefix="km_", include_base=False)},
+    {pq_search_tail_sql(adcd, extra=probes)}
     """
 
 
@@ -628,10 +623,10 @@ def ext_ivfpq_topk(spark, sf_dir):
     (losses come from cell misses + quantization, bounded there)."""
     centroids = kmeans_fit(spark, sf_dir)
     codebooks = pq_fit(spark, sf_dir)
-    base = _prepped_embeddings(spark, sf_dir)
+    base = prepped_embeddings(spark, sf_dir)
     coded = (
-        _with_codes(base, codebooks)
-        .withColumn("cell", _argmax_cell_expr(centroids))
+        with_codes(base, codebooks)
+        .withColumn("cell", argmax_cell_expr(centroids))
         .select("vec_id", "cell", "codes")
     )
 

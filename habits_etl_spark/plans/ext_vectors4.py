@@ -14,7 +14,7 @@ r13/r14.
 
 Both ops are oracle-gated end to end: centroids are a deterministic
 hash-of-id pick and assignment is an argmax over pinned cells
-(ext_vectors._ivf_probe_ctes has carried that parity since r10), so
+(ext_vectors.ivf_probe_ctes has carried that parity since r10), so
 "approximate" means approximate vs exact ANN, never nondeterministic.
 
 Reference parity: [E] extension (BASELINE north-star similarity-search
@@ -26,19 +26,32 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.common import managed_cache, query
+from habits_etl_spark.operators.srp import fold_dot
+from habits_etl_spark.plans.bases import prepped_embeddings
+from habits_etl_spark.plans.common import ORACLES, managed_cache, query
 from habits_etl_spark.plans.ext_vectors import (
-    _IVF_H_DUCK,
-    _IVF_N_PROBE,
-    _N_QUERIES,
-    _TOP_K,
-    _ivf_pick_assign,
-    _ivf_probe_ctes,
-    _ivf_probe_oracle_sql,
-    _prepped_embeddings,
+    IVF_H_DUCK,
+    IVF_N_PROBE,
+    N_QUERIES,
+    TOP_K,
     ext_ann_ivf_probe,
+    ext_ann_lsh_bucketed,
     ext_topk_sim_search,
+    ivf_pick_assign,
     ivf_probe,
+    ivf_probe_ctes,
+    ivf_probe_oracle_sql,
+)
+from habits_etl_spark.plans.ext_vectors3 import (
+    PQ_FLAT_ADCD,
+    PQ_K,
+    ext_pq_topk,
+    pq_codebook_sql,
+    pq_fit,
+    pq_search_tail_sql,
+    pq_topk,
+    recon_err_expr,
+    with_codes,
 )
 
 # Candidate nlist layouts the partition sim evaluates — bracketing the
@@ -52,12 +65,12 @@ _IVF_SIM_LAYOUTS = (8, 16, 32)
 def _ivf_layout_ctes(c: int) -> str:
     """Per-layout DuckDB CTEs (suffix = nlist) over the shared e/n/tot
     base: hash-pick ``c`` centroids, argmax-assign the corpus, cell
-    sizes, and the query probe routing at the deployed _IVF_N_PROBE."""
+    sizes, and the query probe routing at the deployed IVF_N_PROBE."""
     sim = "list_dot_product({l}.v, {r}.c_v) / ({l}.nrm * {r}.c_nrm)"
     return f"""candc{c} AS (
-      SELECT vec_id, v, nrm, {_IVF_H_DUCK} AS h
+      SELECT vec_id, v, nrm, {IVF_H_DUCK} AS h
       FROM n CROSS JOIN tot
-      WHERE {_IVF_H_DUCK} % greatest(total // {c}, 1) < 2
+      WHERE {IVF_H_DUCK} % greatest(total // {c}, 1) < 2
     ),
     cent{c} AS (
       SELECT cell_id, v AS c_v, nrm AS c_nrm FROM (
@@ -81,8 +94,8 @@ def _ivf_layout_ctes(c: int) -> str:
                row_number() OVER (PARTITION BY nn.vec_id
                                   ORDER BY ({sim.format(l='nn', r='c')}) DESC,
                                            c.cell_id) AS rk
-        FROM n nn CROSS JOIN cent{c} c WHERE nn.vec_id < {_N_QUERIES}
-      ) WHERE rk <= {_IVF_N_PROBE}
+        FROM n nn CROSS JOIN cent{c} c WHERE nn.vec_id < {N_QUERIES}
+      ) WHERE rk <= {IVF_N_PROBE}
     )"""
 
 
@@ -117,8 +130,8 @@ def ext_ivf_partition_sim(spark, sf_dir):
     {_IVF_SIM_LAYOUTS} evaluated on the actual corpus — per layout its
     occupied cell count, max cell occupancy (the skew the probe's tail
     latency rides on), the measured probe scan cost (rows the
-    {_N_QUERIES} standing queries would touch at the deployed
-    n_probe={_IVF_N_PROBE}), and the decimal-exact mean
+    {N_QUERIES} standing queries would touch at the deployed
+    n_probe={IVF_N_PROBE}), and the decimal-exact mean
     member-to-centroid cosine (what coarser cells COST in quantization
     quality). The delta-maintenance report says WHEN the index needs
     attention; this table says which nlist to rebuild at — measured
@@ -132,10 +145,10 @@ def ext_ivf_partition_sim(spark, sf_dir):
     Oracle: the shared hash-pick/argmax chain per layout (suffixed CTEs
     over one e/n/tot base). Reference parity: [E] extension; no
     reference twin."""
-    total = _prepped_embeddings(spark, sf_dir).count()
+    total = prepped_embeddings(spark, sf_dir).count()
     reports = []
     for c in _IVF_SIM_LAYOUTS:
-        assigned, cents = _ivf_pick_assign(spark, sf_dir, c, total=total)
+        assigned, cents = ivf_pick_assign(spark, sf_dir, c, total=total)
         # r15 (guide §2.4, VERDICT r14 #2): the three aggregate branches
         # (occupancy, probe scan, quality) used to each re-read the cached
         # assignment — three corpus passes per layout. ONE
@@ -156,22 +169,18 @@ def ext_ivf_partition_sim(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("occupied_cells"),
             F.max("m").cast("bigint").alias("max_cell"),
         )
-        dot_qc = F.aggregate(
-            F.zip_with(F.col("v"), F.col("c_v"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        dot_qc = fold_dot(F.col("v"), F.col("c_v"))
         w_probe = Window.partitionBy("query_id").orderBy(
             F.col("__sim").desc(), F.col("cell_id")
         )
         qp = (
-            _prepped_embeddings(spark, sf_dir)
-            .filter(F.col("vec_id") < _N_QUERIES)
+            prepped_embeddings(spark, sf_dir)
+            .filter(F.col("vec_id") < N_QUERIES)
             .select(F.col("vec_id").alias("query_id"), "v", "nrm")
             .crossJoin(F.broadcast(cents))
             .withColumn("__sim", dot_qc / (F.col("nrm") * F.col("c_nrm")))
             .withColumn("__rk", F.row_number().over(w_probe))
-            .filter(F.col("__rk") <= _IVF_N_PROBE)
+            .filter(F.col("__rk") <= IVF_N_PROBE)
             .select("query_id", "cell_id")
         )
         scan = qp.join(F.broadcast(sizes), "cell_id").agg(
@@ -209,14 +218,14 @@ _IVF_RETUNE_CELLS = 32
 
 @query(
     "ext_ann_ivf_probe_retuned",
-    _ivf_probe_oracle_sql(n_cells=_IVF_RETUNE_CELLS),
+    ivf_probe_oracle_sql(n_cells=_IVF_RETUNE_CELLS),
 )
 def ext_ann_ivf_probe_retuned(spark, sf_dir):
     """The IVF re-partition decision EXECUTED (r14, the vector twin of
     ext_near_dedup_minhash_rebanded): the identical probe pipeline under
     the nlist={_IVF_RETUNE_CELLS} layout ext_ivf_partition_sim's table
     selects — a re-partition is a parameter change through the shared
-    ivf_probe / _ivf_probe_ctes pair, not a new code path. With
+    ivf_probe / ivf_probe_ctes pair, not a new code path. With
     maintenance (when), the partition sim (which nlist), the recall
     audit (what the deployed layout misses), and this id (the retuned
     index itself), the vector index lifecycle is executable end to end.
@@ -231,19 +240,19 @@ def ext_ann_ivf_probe_retuned(spark, sf_dir):
 
 def _ivf_audit_sql() -> str:
     return f"""
-    WITH {_ivf_probe_ctes()},
+    WITH {ivf_probe_ctes()},
     probe AS (
       SELECT query_id, neighbor_id FROM (
         SELECT *, row_number() OVER (PARTITION BY query_id
                                      ORDER BY cos DESC, neighbor_id) AS rk
         FROM scored
-      ) WHERE rk <= {_TOP_K}
+      ) WHERE rk <= {TOP_K}
     ),
     ex_scored AS (
       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
              round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 4) AS cos
       FROM n a JOIN n b ON b.vec_id <> a.vec_id
-      WHERE a.vec_id < {_N_QUERIES}
+      WHERE a.vec_id < {N_QUERIES}
     ),
     exact AS (
       SELECT *, row_number() OVER (PARTITION BY query_id
@@ -254,7 +263,7 @@ def _ivf_audit_sql() -> str:
            CAST(x.exact_rk AS BIGINT) AS exact_rk,
            (p.neighbor_id IS NOT NULL) AS found
     FROM exact x LEFT JOIN probe p USING (query_id, neighbor_id)
-    WHERE x.exact_rk <= {_TOP_K}
+    WHERE x.exact_rk <= {TOP_K}
     ORDER BY x.query_id, x.exact_rk
     """
 
@@ -262,8 +271,8 @@ def _ivf_audit_sql() -> str:
 @query("ext_ivf_recall_audit", _ivf_audit_sql())
 def ext_ivf_recall_audit(spark, sf_dir):
     """Measured recall audit of the deployed IVF configuration (r14):
-    for every TRUE top-{_TOP_K} neighbor (exact brute-force cosine),
-    whether the standing probe (nlist=16, n_probe={_IVF_N_PROBE}) also
+    for every TRUE top-{TOP_K} neighbor (exact brute-force cosine),
+    whether the standing probe (nlist=16, n_probe={IVF_N_PROBE}) also
     surfaced it — the per-miss loss list a deployment reviews before
     trusting (or re-partitioning) its index, and the ground truth the
     partition sim's scan-cost table trades against. recall@k is
@@ -274,7 +283,7 @@ def ext_ivf_recall_audit(spark, sf_dir):
 
     Scale: the exact side is the broadcast-queries x corpus scan the
     audit needs as ground truth — priced for a SAMPLED query set (the
-    standing {_N_QUERIES} queries here), never the full corpus; the
+    standing {N_QUERIES} queries here), never the full corpus; the
     probe side reuses the standing index. The audit joins two
     query-bounded top-k relations (k rows per query each) — the join is
     trivially broadcast. Oracle: the shared probe CTE chain plus the
@@ -315,7 +324,6 @@ def _composed_audit_sql(probe_oracle_id: str) -> str:
     verbatim as subqueries (DuckDB nested-WITH; the
     ext_classifier_calibration pattern) — the audit cannot drift from
     the probe chain it measures."""
-    from habits_etl_spark.plans.common import ORACLES
 
     exact_sql = ORACLES["ext_topk_sim_search"]
     probe_sql = ORACLES[probe_oracle_id]
@@ -342,7 +350,6 @@ def ext_pq_recall_audit(spark, sf_dir):
     the same shape the dedup index got in r14. Plan and oracle are the
     shared audit builders (one implementation, composed registered
     statements). Reference parity: [E] extension; no reference twin."""
-    from habits_etl_spark.plans.ext_vectors3 import ext_pq_topk
 
     return _recall_audit_frame(spark, sf_dir, ext_pq_topk(spark, sf_dir))
 
@@ -362,18 +369,14 @@ def _pq_layout_report_sql(m_sub: int) -> str:
     row. Every aggregate is cross-engine exact: the per-vector err is
     rounded to 4 (the grain ext_pq_codes' hash already proves portable),
     the mean folds decimal-cast rounded values, max is order-free."""
-    from habits_etl_spark.plans.ext_vectors3 import (
-        _PQ_K,
-        _pq_codebook_sql,
-    )
 
-    bits = (_PQ_K - 1).bit_length()  # bits per code = log2(k)
+    bits = (PQ_K - 1).bit_length()  # bits per code = log2(k)
     return f"""SELECT {m_sub} AS m_sub,
       {m_sub * bits} AS code_bits,
-      {m_sub * _PQ_K} AS table_floats,
+      {m_sub * PQ_K} AS table_floats,
       vectors, mean_recon_err, max_recon_err
     FROM (
-      WITH {_pq_codebook_sql(m_sub=m_sub)},
+      WITH {pq_codebook_sql(m_sub=m_sub)},
       recon AS (
         SELECT vec_id,
                round(list_aggregate(list(term ORDER BY sub_id), 'sum'), 4) AS err4
@@ -420,20 +423,14 @@ def ext_pq_layout_sim(spark, sf_dir):
     scoped per layout), aggregated over the SAME rounded per-vector
     error grain ext_pq_codes' hash already proves portable. Reference
     parity: [E] extension; no reference twin."""
-    from habits_etl_spark.plans.ext_vectors3 import (
-        _PQ_K,
-        _recon_err_expr,
-        _with_codes,
-        pq_fit,
-    )
 
-    base = _prepped_embeddings(spark, sf_dir)
+    base = prepped_embeddings(spark, sf_dir)
     reports = []
     for m_sub in _PQ_SIM_LAYOUTS:
         codebooks = pq_fit(spark, sf_dir, m_sub=m_sub)
-        err4 = F.round(_recon_err_expr(codebooks), 4)
+        err4 = F.round(recon_err_expr(codebooks), 4)
         reports.append(
-            _with_codes(base, codebooks)
+            with_codes(base, codebooks)
             .select(err4.alias("err4"))
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("vectors"),
@@ -446,8 +443,8 @@ def ext_pq_layout_sim(spark, sf_dir):
             )
             .select(
                 F.lit(m_sub).alias("m_sub"),
-                F.lit(m_sub * (_PQ_K - 1).bit_length()).alias("code_bits"),
-                F.lit(m_sub * _PQ_K).alias("table_floats"),
+                F.lit(m_sub * (PQ_K - 1).bit_length()).alias("code_bits"),
+                F.lit(m_sub * PQ_K).alias("table_floats"),
                 "vectors", "mean_recon_err", "max_recon_err",
             )
         )
@@ -466,15 +463,9 @@ _PQ_RETUNE_M = 16
 
 
 def _pq_retuned_oracle_sql() -> str:
-    from habits_etl_spark.plans.ext_vectors3 import (
-        _PQ_FLAT_ADCD,
-        _pq_codebook_sql,
-        _pq_search_tail_sql,
-    )
-
     return f"""
-    WITH {_pq_codebook_sql(m_sub=_PQ_RETUNE_M)},
-    {_pq_search_tail_sql(_PQ_FLAT_ADCD, m_sub=_PQ_RETUNE_M)}
+    WITH {pq_codebook_sql(m_sub=_PQ_RETUNE_M)},
+    {pq_search_tail_sql(PQ_FLAT_ADCD, m_sub=_PQ_RETUNE_M)}
     """
 
 
@@ -484,7 +475,7 @@ def ext_pq_topk_retuned(spark, sf_dir):
     index family's lifecycle): the identical flat ADC + exact-re-rank
     pipeline under the m={_PQ_RETUNE_M} layout ext_pq_layout_sim's
     table selects — a re-encode is a parameter change through the
-    shared pq_fit / _with_codes / _adc_tables / pq_topk builders, not a
+    shared pq_fit / with_codes / _adc_tables / pq_topk builders, not a
     new code path. With the layout sim (which m), the recall audit
     (what the deployed codes miss), and this id (the retuned index
     itself), PQ now has the same decide -> audit -> retune arc as the
@@ -495,7 +486,6 @@ def ext_pq_topk_retuned(spark, sf_dir):
     per row), exact folds only on the shortlist. Oracle: the shared
     codebook + search-tail chains under the retuned layout literals.
     Reference parity: [E] extension; no reference twin."""
-    from habits_etl_spark.plans.ext_vectors3 import pq_topk
 
     return pq_topk(spark, sf_dir, m_sub=_PQ_RETUNE_M)
 
@@ -510,6 +500,5 @@ def ext_lsh_recall_audit(spark, sf_dir):
     which is exactly why each family needs its own table. Shared audit
     builders as above. Reference parity: [E] extension; no reference
     twin."""
-    from habits_etl_spark.plans.ext_vectors import ext_ann_lsh_bucketed
 
     return _recall_audit_frame(spark, sf_dir, ext_ann_lsh_bucketed(spark, sf_dir))

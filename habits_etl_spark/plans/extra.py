@@ -11,9 +11,11 @@ from pyspark.sql import types as T
 from habits_etl_spark.functions.datetime_ops import parse_report_date_expr
 from habits_etl_spark.operators.distrank import grouped_order_statistics
 from habits_etl_spark.operators.pivot import pivot_long_rows
+from habits_etl_spark.operators.range_join import point_in_interval_join
 from habits_etl_spark.plans.common import (
     TS_FMT_DUCK,
     day_str,
+    dec,
     dsum,
     fmt_ts,
     query,
@@ -424,7 +426,6 @@ def join_range_binned(spark, sf_dir):
     cross product. The intervals here scale WITH the data (a fixed
     fraction of orders), so the broadcast shortcut wouldn't survive —
     this op is the large x large case."""
-    from habits_etl_spark.operators.range_join import point_in_interval_join
 
     o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 977 == 0)
     intervals = o.select(
@@ -719,7 +720,6 @@ def agg_corr_value_hour(spark, sf_dir):
     Scale: one hash-agg with map-side partials; five sums per group,
     O(|event_types|) output. Degenerate variance (constant x or y) is an
     explicit NULL via nullif in both engines."""
-    from habits_etl_spark.plans.common import dec
 
     e = t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     v = e.select(
@@ -1119,7 +1119,6 @@ def agg_value_gini(spark, sf_dir):
     ranked = ux.select(
         "event_type", "x", F.row_number().over(w).alias("i")
     )
-    from habits_etl_spark.plans.common import dec
 
     s = ranked.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -251,6 +251,8 @@ def pred_time_range(spark, sf_dir):
     $__timeFilter), pushed to the parquet scan on the stored ts column
     (sources.load_events_range) so row groups outside the range are skipped
     by min/max stats — the hypertable chunk-exclusion analog."""
+    # Looked up at call time: the traced benchmark run wraps
+    # habits_etl_spark.sources.load_events_range in place.
     from habits_etl_spark.sources import load_events_range
 
     e = load_events_range(spark, sf_dir, "2024-01-05", "2024-01-06")

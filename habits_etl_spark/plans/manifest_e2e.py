@@ -24,7 +24,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.common import query, scratch_result, sql_dsum, t
+from habits_etl_spark.plans.common import ORACLES, query, scratch_result, sql_dsum, t
 from habits_etl_spark.sinks import manifest as M
 
 
@@ -126,7 +126,6 @@ def _vacuum_oracle_sql() -> str:
     pins the transactional assertions as literals: exactly one manifest
     version survives retain=1, the pre-retention snapshot is gone from
     time travel, and the current read is bit-identical to pre-vacuum."""
-    from habits_etl_spark.plans.common import ORACLES
 
     snap = ORACLES["sink_manifest_snapshot"]
     return f"""

@@ -23,11 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from habits_etl_spark.operators.distrank import (
-    with_global_lag,
-    with_global_running_agg,
-)
-from habits_etl_spark.plans.common import TS_FMT_DUCK, fmt_ts, query, t
+from habits_etl_spark.operators.distrank import with_global_lag, with_global_running_agg
+from habits_etl_spark.plans.common import TS_FMT_DUCK, fmt_ts, managed_cache, query, t
 
 # --- id-sequence gap audit ---------------------------------------------------
 
@@ -393,7 +390,6 @@ def ext_pca_top_component(spark, sf_dir):
             F.lit(0).cast("decimal(28,12)"),
             lambda acc, term: (acc + term).cast("decimal(28,12)"),
         ).cast("double")
-    from habits_etl_spark.plans.common import managed_cache
 
     xc_arr = managed_cache(xc_arr, "ext_pca_top_component/xc")
     n_dims = len(mu)

@@ -25,18 +25,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from habits_etl_spark.functions.hashing import md5_int
+from habits_etl_spark.functions.text import (
+    LANG_PROFILES,
+    TOK_DUCK,
+    lang_score_duck,
+    lang_score_spark,
+    tok_spark,
+)
 from habits_etl_spark.operators.distrank import (
     bounded_running_sum,
     with_global_ntile_by_selection,
 )
 from habits_etl_spark.plans.common import dec, managed_cache, query, t
-from habits_etl_spark.plans.ext_text import (
-    _LANG_PROFILES,
-    _TOK_DUCK,
-    _TOK_SPARK,
-    _lang_score_duck,
-    _lang_score_spark,
-)
 
 # --- Poisson bootstrap CI ----------------------------------------------------
 
@@ -242,8 +242,8 @@ _GAINS_BINS = 10
     f"""
     WITH scored AS (
       SELECT doc_id, lang = 'en' AS label,
-             round(CAST({_lang_score_duck(_LANG_PROFILES['en'])} AS DOUBLE)
-                   / greatest(len({_TOK_DUCK}), 1), 6) AS score
+             round(CAST({lang_score_duck(LANG_PROFILES['en'])} AS DOUBLE)
+                   / greatest(len({TOK_DUCK}), 1), 6) AS score
       FROM documents
     ),
     ranked AS (
@@ -292,9 +292,9 @@ def ext_cumulative_gains(spark, sf_dir):
     running totals are a triangular broadcast self-join (windowless,
     bounded by {_GAINS_BINS}). Exact integer ratios."""
     d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text"))
+    toks = tok_spark(F.col("text"))
     score = F.round(
-        _lang_score_spark(toks, _LANG_PROFILES["en"]).cast("double")
+        lang_score_spark(toks, LANG_PROFILES["en"]).cast("double")
         / F.greatest(F.size(toks), F.lit(1)),
         6,
     )
@@ -345,8 +345,8 @@ _ECE_BINS = 10
     f"""
     WITH scored AS (
       SELECT doc_id, lang = 'en' AS label,
-             round(CAST({_lang_score_duck(_LANG_PROFILES['en'])} AS DOUBLE)
-                   / greatest(len({_TOK_DUCK}), 1), 6) AS score
+             round(CAST({lang_score_duck(LANG_PROFILES['en'])} AS DOUBLE)
+                   / greatest(len({TOK_DUCK}), 1), 6) AS score
       FROM documents
     ),
     capped AS (
@@ -387,9 +387,9 @@ def agg_feature_calibration(spark, sf_dir):
     per-bin stats are one hash-agg to {_ECE_BINS} rows; the ECE reduce
     is the decimal pattern over identically-computed double terms."""
     d = t(spark, sf_dir, "documents")
-    toks = _TOK_SPARK(F.col("text"))
+    toks = tok_spark(F.col("text"))
     score = F.round(
-        _lang_score_spark(toks, _LANG_PROFILES["en"]).cast("double")
+        lang_score_spark(toks, LANG_PROFILES["en"]).cast("double")
         / F.greatest(F.size(toks), F.lit(1)),
         6,
     )

@@ -52,6 +52,7 @@ def daily_series(
     else:
         if events is None:
             raise ValueError("raw-path routing needs the events DataFrame")
+        # call-time import: streaming.rollup imports plans.common (a cycle)
         from habits_etl_spark.streaming.rollup import batch_daily_rollup
 
         df = batch_daily_rollup(events)

@@ -43,6 +43,7 @@ from habits_etl_spark.functions.coerce import (
 )
 from habits_etl_spark.functions.datetime_ops import parse_report_date_expr
 from habits_etl_spark.plans.common import davg, query, sql_davg
+from habits_etl_spark.sources.sheet_source import WideSheetDataSource
 
 _FIXTURE_DIR = "/tmp/spark_graft_fixtures"
 FIXTURE_PATH = os.path.join(_FIXTURE_DIR, "wide_sheet_e2e.csv")
@@ -96,8 +97,6 @@ _REGISTERED: set[str] = set()
 def _register_source(spark) -> None:
     app = spark.sparkContext.applicationId
     if app not in _REGISTERED:
-        from habits_etl_spark.sources.sheet_source import WideSheetDataSource
-
         spark.dataSource.register(WideSheetDataSource)
         _REGISTERED.add(app)
 

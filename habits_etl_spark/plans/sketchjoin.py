@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from habits_etl_spark.operators.bloom import bloom_build, bloom_prune
 from habits_etl_spark.operators.cms import cms_build, cms_estimate, cms_merge
 from habits_etl_spark.operators.range_join import interval_overlap_join
+from habits_etl_spark.operators.skew import salted_join
 from habits_etl_spark.plans.common import query, t
 
 # Bloom sizing for the urgent-orders key set: ~16 bits per expected key
@@ -249,7 +250,6 @@ def join_skew_salted(spark, sf_dir):
     (bench-measured max-partition share 0.515 -> 0.079); AQE skew
     splitting is the adaptive alternative, salting the deterministic
     one — this registry exercises both (session.py enables AQE)."""
-    from habits_etl_spark.operators.skew import salted_join
 
     e = t(spark, sf_dir, "events")
     big = e.select(

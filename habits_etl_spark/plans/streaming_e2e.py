@@ -52,6 +52,15 @@ from habits_etl_spark.plans.common import (
     t,
 )
 from habits_etl_spark.session import conf_scope
+from habits_etl_spark.sinks import manifest as M
+from habits_etl_spark.streaming.anomaly import zscore_anomaly_stream
+from habits_etl_spark.streaming.dedup import dedup_stream
+from habits_etl_spark.streaming.dq_gate import QUARANTINE_DIR, dq_gated_publish
+from habits_etl_spark.streaming.drift import psi_drift_stream
+from habits_etl_spark.streaming.funnel import FUNNEL, FUNNEL_STEP_US, funnel_stream
+from habits_etl_spark.streaming.heavy_hitters import heavy_hitters_stream
+from habits_etl_spark.streaming.join import interval_enrichment_join
+from habits_etl_spark.streaming.retention import retention_stream
 
 # streaming.rollup imports plans.common for its decimal-exact aggregates, so
 # importing it at module scope from inside the plans package would be
@@ -282,7 +291,6 @@ def stream_retention_e2e(spark, sf_dir):
     incrementally checkpointed (RocksDB-compatible); per-trigger cost
     scales with new files, and the foreachBatch sink appends update
     deltas — the latest-row read models the dashboard's upsert."""
-    from habits_etl_spark.streaming.retention import retention_stream
 
     staged = t(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     source_schema = staged.drop("event_id").schema
@@ -317,24 +325,23 @@ def _funnel_final_oracle_sql() -> str:
     earliest same-user event strictly after the previous instant and
     within the step window (the s1/s2/s3 chain ext_event_funnel's oracle
     uses, re-emitted per user instead of per stage)."""
-    from habits_etl_spark.plans.analytics import _FUNNEL, _FUNNEL_STEP_US
 
     return f"""
     WITH s1 AS (
       SELECT user_id, min(epoch_us(ts)) AS t FROM events
-      WHERE event_type = '{_FUNNEL[0]}' GROUP BY 1
+      WHERE event_type = '{FUNNEL[0]}' GROUP BY 1
     ),
     s2 AS (
       SELECT e.user_id, min(epoch_us(e.ts)) AS t
       FROM events e JOIN s1 USING (user_id)
-      WHERE e.event_type = '{_FUNNEL[1]}' AND epoch_us(e.ts) > s1.t
-        AND epoch_us(e.ts) <= s1.t + {_FUNNEL_STEP_US} GROUP BY 1
+      WHERE e.event_type = '{FUNNEL[1]}' AND epoch_us(e.ts) > s1.t
+        AND epoch_us(e.ts) <= s1.t + {FUNNEL_STEP_US} GROUP BY 1
     ),
     s3 AS (
       SELECT e.user_id, min(epoch_us(e.ts)) AS t
       FROM events e JOIN s2 USING (user_id)
-      WHERE e.event_type = '{_FUNNEL[2]}' AND epoch_us(e.ts) > s2.t
-        AND epoch_us(e.ts) <= s2.t + {_FUNNEL_STEP_US} GROUP BY 1
+      WHERE e.event_type = '{FUNNEL[2]}' AND epoch_us(e.ts) > s2.t
+        AND epoch_us(e.ts) <= s2.t + {FUNNEL_STEP_US} GROUP BY 1
     )
     SELECT u.user_id,
            CAST(CASE WHEN s3.user_id IS NOT NULL THEN 3
@@ -379,7 +386,6 @@ def stream_funnel_e2e(spark, sf_dir):
     incrementally checkpointed (RocksDB-compatible); per-trigger cost
     scales with new files; the boundary computation is one bounded
     2-value percentile job, never a sort of the corpus."""
-    from habits_etl_spark.streaming.funnel import funnel_stream
 
     staged = t(spark, sf_dir, "events").select("ts", "user_id", "event_type")
 
@@ -437,7 +443,6 @@ def stream_dedup_e2e(spark, sf_dir):
     Scale: state is one timestamp per key, hash-partitioned
     (RocksDB-compatible); the only shuffle is the state-store exchange
     on event_id; output appends per batch with no window or join."""
-    from habits_etl_spark.streaming.dedup import dedup_stream
 
     staged = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -528,7 +533,6 @@ def stream_interval_join_e2e(spark, sf_dir):
     micro-batch — sizing partitions to throughput instead of the batch
     default is the same knob a real deployment sets; the result is
     partition-count independent)."""
-    from habits_etl_spark.streaming.join import interval_enrichment_join
 
     ev = t(spark, sf_dir, "events")
     facts = ev.filter(F.col("event_type") == "purchase").select(
@@ -651,7 +655,6 @@ def stream_drift_e2e(spark, sf_dir):
     (the shuffle carries (window, bin), never raw values); state is one
     fixed-width count vector per window, hash-partitioned and
     incrementally checkpointed (RocksDB-compatible)."""
-    from habits_etl_spark.streaming.drift import psi_drift_stream
 
     staged = t(spark, sf_dir, "events").select("event_id", "ts", "value")
     source_schema = staged.drop("event_id").schema
@@ -758,7 +761,6 @@ def stream_anomaly_e2e(spark, sf_dir):
     Scale: state is three scalars per user, hash-partitioned; append
     mode emits only the exception stream. The oracle's recursion is a
     CHECK, not the engine — the Spark side never iterates."""
-    from habits_etl_spark.streaming.anomaly import zscore_anomaly_stream
 
     staged = t(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
 
@@ -821,8 +823,6 @@ def stream_dq_gate_e2e(spark, sf_dir):
     micro-batch (map-side partials, ≤|rules| driver rows); publish
     appends files through the manifest sink (no rewrite); quarantine is
     a per-batch directory write."""
-    from habits_etl_spark.sinks import manifest as M
-    from habits_etl_spark.streaming.dq_gate import _QUARANTINE_DIR, dq_gated_publish
 
     staged = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -860,7 +860,7 @@ def stream_dq_gate_e2e(spark, sf_dir):
     quar = (
         spark.read.schema(source_schema)
         .option("recursiveFileLookup", "true")
-        .parquet(os.path.join(table, _QUARANTINE_DIR))
+        .parquet(os.path.join(table, QUARANTINE_DIR))
         .withColumn("published", F.lit(False))
     )
     return pub.unionByName(quar).select(
@@ -918,7 +918,6 @@ def stream_heavy_hitters_e2e(spark, sf_dir):
 
     Scale: state is n_shards x capacity counters TOTAL — bounded
     regardless of item cardinality; each update touches one shard."""
-    from habits_etl_spark.streaming.heavy_hitters import heavy_hitters_stream
 
     staged = t(spark, sf_dir, "events").select("event_id", "user_id")
     source_schema = staged.drop("event_id").schema

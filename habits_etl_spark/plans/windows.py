@@ -6,16 +6,15 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from habits_etl_spark.operators.distrank import (
-    bounded_running_sum,
-    with_group_position,
-)
+from habits_etl_spark.operators.distrank import bounded_running_sum, with_group_position
 from habits_etl_spark.plans.common import (
     day_of,
+    dec,
+    dsum,
+    fmt_ts,
     managed_cache,
     query,
     sql_dsum,
-    dsum,
     t,
 )
 
@@ -255,7 +254,6 @@ def win_zscore_anomaly(spark, sf_dir):
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    from habits_etl_spark.plans.common import dec, fmt_ts
 
     s = e.select(
         "user_id",

@@ -39,6 +39,18 @@ SESSION_CONF = {
 }
 
 
+# The former fixed default, kept as the ceiling on large hosts.
+_DRIVER_MEMORY_CAP = 24 << 30
+
+
+def default_driver_memory(physical_bytes: int) -> str:
+    """``spark.driver.memory`` when SPARK_DRIVER_MEMORY is unset: half of
+    the host's physical memory, capped at 24g. A heap ceiling above what
+    the host has gives the JVM no reason to collect before the host runs
+    out, so a second Spark process on the same host gets killed."""
+    return f"{min(physical_bytes // 2, _DRIVER_MEMORY_CAP) >> 20}m"
+
+
 def get_spark(app_name: str = "habits_etl_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -65,7 +77,11 @@ def get_spark(app_name: str = "habits_etl_spark", master: str | None = None,
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-warehouse"),

@@ -55,6 +55,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from habits_etl_spark.sinks.upsert import upsert_keyed
+
 
 class CommitConflict(Exception):
     """Another writer committed since this snapshot was read; retry."""
@@ -324,7 +326,6 @@ def upsert_snapshot(
     """MERGE against the current snapshot (sinks/upsert.py semantics),
     publish the merged result atomically. Readers concurrent with the
     merge keep the pre-merge snapshot until the pointer swap."""
-    from habits_etl_spark.sinks.upsert import upsert_keyed
 
     cur = current_manifest(table_path)
     if cur is None:

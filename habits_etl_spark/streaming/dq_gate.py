@@ -36,7 +36,7 @@ from habits_etl_spark.plans.dq import dq_events_verdicts
 from habits_etl_spark.sinks.manifest import append_snapshot
 
 _LOG_DIR = "_dq_log"
-_QUARANTINE_DIR = "_dq_quarantine"
+QUARANTINE_DIR = "_dq_quarantine"
 
 LOG_SCHEMA = (
     "batch_id LONG, rule_id STRING, metric LONG, threshold LONG, "
@@ -89,7 +89,7 @@ def dq_gated_publish(
             append_snapshot(spark, batch_df, table_path)
         else:
             batch_df.write.mode("overwrite").parquet(
-                os.path.join(table_path, _QUARANTINE_DIR, f"batch={batch_id}")
+                os.path.join(table_path, QUARANTINE_DIR, f"batch={batch_id}")
             )
         spark.createDataFrame(
             [

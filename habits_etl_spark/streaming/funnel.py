@@ -30,7 +30,10 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from habits_etl_spark.plans.analytics import _FUNNEL, _FUNNEL_STEP_US
+# The funnel stages, in order, shared with the batch operator and the
+# streaming e2e oracle.
+FUNNEL = ("signup", "click", "purchase")
+FUNNEL_STEP_US = 12 * 3600 * 1_000_000  # max delay between adjacent stages
 
 STATE_SCHEMA = "stage INT, t BIGINT"
 OUTPUT_SCHEMA = "user_id LONG, stage INT, converted BOOLEAN"
@@ -71,8 +74,8 @@ def _make_update(stages: tuple, step_us: int):
     return update
 
 
-def funnel_stream(events_stream, stages: tuple = _FUNNEL,
-                  step_us: int = _FUNNEL_STEP_US):
+def funnel_stream(events_stream, stages: tuple = FUNNEL,
+                  step_us: int = FUNNEL_STEP_US):
     """events_stream: streaming DF with (ts, user_id, event_type).
     Returns the streaming DF of per-user funnel-position updates."""
     return (

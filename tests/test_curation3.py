@@ -26,8 +26,8 @@ from habits_etl_spark.plans.ext_curation3 import (
     gopher_rules_over,
 )
 from habits_etl_spark.plans.ext_retrieval import (
-    _BM25_B,
-    _BM25_K1,
+    BM25_B,
+    BM25_K1,
     _BM25_TERMS,
     bm25_topk_over,
     ext_bm25_topk,
@@ -50,7 +50,7 @@ def _r(x: float, digits: int) -> float:
 # --- BM25 --------------------------------------------------------------------
 
 
-def _bm25_py(corpus: dict[int, list[str]], terms, k1=_BM25_K1, b=_BM25_B):
+def _bm25_py(corpus: dict[int, list[str]], terms, k1=BM25_K1, b=BM25_B):
     n = len(corpus)
     avgdl = sum(len(w) for w in corpus.values()) / n
     df = {

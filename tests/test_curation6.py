@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from habits_etl_spark.plans.common import t
 from habits_etl_spark.plans.ext_curation6 import (
-    _KNN_K,
+    KNN_K,
     _LEV_MAX,
     _PMI_MIN_COUNT,
     _PMI_TOP_K,
@@ -107,7 +107,7 @@ def test_knn_graph_is_in_label_and_matches_brute_force(spark, sf_dir):
                 for nid, (l2, vec) in emb.items()
                 if l2 == lab and nid != src
             ),
-        )[:_KNN_K]
+        )[:KNN_K]
         expect = [nid for _, nid in cand]
         assert [nid for _, nid, _ in sorted(got[src])] == expect, src
 

@@ -71,13 +71,13 @@ def test_auc_matches_pairwise_reference(spark, sf_dir):
     lang label is random text, so the value itself hovers near 0.5 —
     chance — which is the honest reading; the identity is the test.)"""
     from habits_etl_spark.plans.common import t
-    from habits_etl_spark.plans.ext_text import _LANG_PROFILES
+    from habits_etl_spark.functions.text import LANG_PROFILES
 
     r = agg_langid_feature_auc(spark, sf_dir).collect()[0]
     assert r.n_pos > 0 and r.n_neg > 0
     assert 0.0 <= r.auc <= 1.0
     docs = t(spark, sf_dir, "documents").select("lang", "text").collect()
-    en = set(_LANG_PROFILES["en"])
+    en = set(LANG_PROFILES["en"])
     pairs = []
     for row in docs:
         toks = row.text.strip().split()

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from habits_etl_spark.operators.kcore import coreness
 from habits_etl_spark.plans.common import t
-from habits_etl_spark.plans.ext_curation6 import _KNN_K, ext_knn_graph_blocked
+from habits_etl_spark.plans.ext_curation6 import KNN_K, ext_knn_graph_blocked
 from habits_etl_spark.plans.ext_curation7 import (
     _OUT_FACTOR,
     ext_embedding_outliers,
@@ -93,7 +93,7 @@ def test_embedding_outliers_flag_and_expectation(spark, sf_dir):
 def test_knn_triangles_are_closed_mutual_edges(spark, sf_dir):
     knn = defaultdict(set)
     for r in ext_knn_graph_blocked(spark, sf_dir).collect():
-        assert r.rk <= _KNN_K
+        assert r.rk <= KNN_K
         knn[r.src_id].add(r.nbr_id)
     mutual = {
         (a, b)

@@ -4,10 +4,9 @@ truth, and the two hash choices agree on the verified pair set here."""
 
 from __future__ import annotations
 
+from habits_etl_spark.operators.minhash import JACCARD_THRESHOLD, SHINGLE_N
 from habits_etl_spark.plans.common import t
 from habits_etl_spark.plans.ext_text import (
-    _JACCARD_THRESHOLD,
-    _SHINGLE_N,
     ext_near_dedup_minhash,
     ext_near_dedup_minhash_fast,
 )
@@ -18,10 +17,10 @@ def _bruteforce_pairs(spark, sf_dir):
     sh = {}
     for r in docs:
         w = r.text.strip().split()
-        if len(w) < _SHINGLE_N:
+        if len(w) < SHINGLE_N:
             continue
         sh[r.doc_id] = {
-            " ".join(w[i : i + _SHINGLE_N]) for i in range(len(w) - _SHINGLE_N + 1)
+            " ".join(w[i : i + SHINGLE_N]) for i in range(len(w) - SHINGLE_N + 1)
         }
     ids = sorted(sh)
     out = {}
@@ -31,7 +30,7 @@ def _bruteforce_pairs(spark, sf_dir):
             if not inter:
                 continue
             j = inter / (len(sh[a]) + len(sh[b]) - inter)
-            if j >= _JACCARD_THRESHOLD:
+            if j >= JACCARD_THRESHOLD:
                 out[(a, b)] = round(j, 4)
     return out
 

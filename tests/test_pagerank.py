@@ -3,10 +3,10 @@ reference on a known graph, mass conservation, and hub ordering."""
 
 from __future__ import annotations
 
-from habits_etl_spark.operators.pagerank import _DAMPING, _ITERS, pagerank
+from habits_etl_spark.operators.pagerank import DAMPING, ITERS, pagerank
 
 
-def _py_pagerank(nodes, edges, damping=_DAMPING, iters=_ITERS):
+def _py_pagerank(nodes, edges, damping=DAMPING, iters=ITERS):
     out = {}
     outdeg = {}
     for s, d in edges:

@@ -133,17 +133,17 @@ def test_cumulative_gains_approx_edges(spark, sf01):
     """ext_cumulative_gains' committed shortcut: approx decile cut
     points over the (negated) language score match the exact deciles
     within 1% rank error beyond tie mass."""
-    from habits_etl_spark.plans.ext_text import (
-        _LANG_PROFILES,
-        _TOK_SPARK,
-        _lang_score_spark,
+    from habits_etl_spark.functions.text import (
+        LANG_PROFILES,
+        lang_score_spark,
+        tok_spark,
     )
     from habits_etl_spark.plans.resampling import _GAINS_BINS
 
     d = spark.read.parquet(f"{sf01}/documents.parquet")
-    toks = _TOK_SPARK(F.col("text"))
+    toks = tok_spark(F.col("text"))
     score = F.round(
-        _lang_score_spark(toks, _LANG_PROFILES["en"]).cast("double")
+        lang_score_spark(toks, LANG_PROFILES["en"]).cast("double")
         / F.greatest(F.size(toks), F.lit(1)),
         6,
     )

@@ -9,7 +9,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from habits_etl_spark.plans.common import t
-from habits_etl_spark.plans.ext_vectors import _IVF_N_PROBE, _N_QUERIES, _TOP_K
+from habits_etl_spark.plans.ext_vectors import IVF_N_PROBE, N_QUERIES, TOP_K
 from habits_etl_spark.plans.ext_vectors4 import (
     _IVF_SIM_LAYOUTS,
     ext_ivf_partition_sim,
@@ -80,11 +80,11 @@ def test_ivf_partition_sim_structure(spark, sf_dir):
     for c, r in rep.items():
         assert 1 <= r.occupied_cells <= c
         assert 1 <= r.max_cell <= total
-        assert r.probe_scan_rows <= _N_QUERIES * total
+        assert r.probe_scan_rows <= N_QUERIES * total
         assert -1.0 <= r.mean_cos_to_centroid <= 1.0
     lo, hi = min(_IVF_SIM_LAYOUTS), max(_IVF_SIM_LAYOUTS)
     assert rep[hi].probe_scan_rows < rep[lo].probe_scan_rows, (
-        f"finer partition should scan fewer rows at fixed n_probe={_IVF_N_PROBE}: "
+        f"finer partition should scan fewer rows at fixed n_probe={IVF_N_PROBE}: "
         f"{rep[hi].probe_scan_rows} vs {rep[lo].probe_scan_rows}"
     )
 
@@ -105,10 +105,10 @@ def test_ivf_retuned_probe_semantics(spark, sf_dir):
     per_q = defaultdict(list)
     for r in rows:
         per_q[r.query_id].append(r.rk)
-    assert len(per_q) == _N_QUERIES
+    assert len(per_q) == N_QUERIES
     for q, rks in per_q.items():
         assert sorted(rks) == list(range(1, len(rks) + 1))
-        assert len(rks) <= _TOP_K
+        assert len(rks) <= TOP_K
     hits = [r for r in rows if (r.query_id, r.neighbor_id) in exact_cos]
     for r in hits:
         assert r.cos == exact_cos[(r.query_id, r.neighbor_id)]
@@ -143,7 +143,7 @@ def test_recall_audit_matches_direct_join(spark, sf_dir, audit_id, probe_id, flo
         for r in QUERIES[probe_id](spark, sf_dir).collect()
     }
     audit = QUERIES[audit_id](spark, sf_dir).collect()
-    assert len(audit) == _N_QUERIES * _TOP_K
+    assert len(audit) == N_QUERIES * TOP_K
     got = {(r.query_id, r.neighbor_id): (r.exact_rk, r.found) for r in audit}
     assert len(got) == len(audit)
     for qid, nid, rk in exact:

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from habits_etl_spark.plans.ext_vectors import cosine_expr, dot_expr
+from habits_etl_spark.operators.srp import cosine_expr, dot_expr
 
 
 def test_dot_and_cosine_kernels(spark):
@@ -31,7 +31,7 @@ def test_planes_are_pairwise_independent():
     recall math assumes was never in effect, and changing band_bits was
     a measurable no-op. md5-derived planes must be pairwise distinct,
     non-complementary, and sign-balanced."""
-    from habits_etl_spark.plans.ext_vectors import _DIM, _plane_signs
+    from habits_etl_spark.operators.srp import DIM, _plane_signs
 
     keys = [f"pairs:{p}" for p in range(128)] + [f"ann:{p}" for p in range(128)]
     seen: dict[tuple, str] = {}
@@ -51,15 +51,11 @@ def test_band_space_is_actually_used(spark, sf_dir):
     more than the ~4 values/band the linear planes produced. With
     independent planes a 500-vector corpus fills most of each band's 256
     values."""
-    from habits_etl_spark.plans.ext_vectors import (
-        _PAIR_BAND_BITS,
-        _PAIR_BANDS,
-        _band_vals_from_proj,
-        _prepped_embeddings,
-        _proj_array_expr,
-    )
+    from habits_etl_spark.plans.ext_vectors import _PAIR_BANDS, _PAIR_BAND_BITS
+    from habits_etl_spark.operators.srp import _band_vals_from_proj, _proj_array_expr
+    from habits_etl_spark.plans.bases import prepped_embeddings
 
-    p = _prepped_embeddings(spark, sf_dir)
+    p = prepped_embeddings(spark, sf_dir)
     keys = [f"pairs:{i}" for i in range(_PAIR_BANDS * _PAIR_BAND_BITS)]
     proj = p.select("vec_id", _proj_array_expr("v", keys).alias("pj"))
     bands = _band_vals_from_proj("pj", _PAIR_BANDS, _PAIR_BAND_BITS)
@@ -137,12 +133,12 @@ def test_blocked_matmul_pairs_equal_expression_join(spark, sf_dir):
     refactor directly, including the rounded cosines)."""
     from habits_etl_spark.plans.ext_vectors import (
         _cosine_pairs_from,
-        _exact_pairs_blocked,
         _pair_arms,
-        _prepped_embeddings,
+        exact_pairs_blocked,
     )
+    from habits_etl_spark.plans.bases import prepped_embeddings
 
-    p = _prepped_embeddings(spark, sf_dir)
+    p = prepped_embeddings(spark, sf_dir)
     a, b = _pair_arms(p)
     old = {
         (r.vec_a, r.vec_b): (r.label_a, r.label_b, r.cos)
@@ -150,7 +146,7 @@ def test_blocked_matmul_pairs_equal_expression_join(spark, sf_dir):
     }
     new = {
         (r.vec_a, r.vec_b): (r.label_a, r.label_b, r.cos)
-        for r in _exact_pairs_blocked(spark, p).collect()
+        for r in exact_pairs_blocked(spark, p).collect()
     }
     assert old == new
 
@@ -164,15 +160,15 @@ def test_numpy_and_expression_bands_agree(spark, sf_dir):
     edge (the documented ICWS-tie residual class)."""
     import numpy as np
 
-    from habits_etl_spark.plans.ext_vectors import (
+    from habits_etl_spark.operators.srp import (
         _band_vals_from_proj,
-        _banded_rows,
         _plane_signs,
-        _prepped_embeddings,
         _proj_array_expr,
     )
+    from habits_etl_spark.plans.ext_vectors import _banded_rows
+    from habits_etl_spark.plans.bases import prepped_embeddings
 
-    p = _prepped_embeddings(spark, sf_dir)
+    p = prepped_embeddings(spark, sf_dir)
     got = {
         (r.vec_id, r.band_idx, r.band_val)
         for r in _banded_rows(p, "pairs", 16, 8).collect()
@@ -207,11 +203,11 @@ def test_scale_tuned_banding_cuts_candidates_and_keeps_precision(spark, sf_dir):
     from habits_etl_spark.plans import QUERIES
     from habits_etl_spark.plans.ext_vectors import (
         _lsh_candidate_pairs,
-        _prepped_embeddings,
         scale_tuned_cosine_pairs,
     )
+    from habits_etl_spark.plans.bases import prepped_embeddings
 
-    p = _prepped_embeddings(spark, sf_dir)
+    p = prepped_embeddings(spark, sf_dir)
     cand8 = _lsh_candidate_pairs(p, 16, 8).count()
     cand12 = _lsh_candidate_pairs(p, 16, 12).count()
     assert cand12 * 4 < cand8, f"wider bands did not cut candidates: {cand8} -> {cand12}"
@@ -231,7 +227,7 @@ def test_scale_tuned_banding_cuts_candidates_and_keeps_precision(spark, sf_dir):
 
 def test_exact_pairs_gate_refuses_past_max(spark, sf_dir, monkeypatch):
     """_EXACT_PAIRS_MAX refusal contract (r13, VERDICT r12 #6): the
-    driver-side corpus collect inside _exact_pairs_blocked is safe ONLY
+    driver-side corpus collect inside exact_pairs_blocked is safe ONLY
     while the gate holds, and since r13 the gate lives INSIDE the helper
     so every caller — ext_embedding_cosine_pairs AND the
     ext_embedding_dup_clusters path in ext_pipeline (ADVICE r12 medium)
@@ -244,19 +240,19 @@ def test_exact_pairs_gate_refuses_past_max(spark, sf_dir, monkeypatch):
     from habits_etl_spark.plans import ext_vectors
     from habits_etl_spark.plans.ext_pipeline import ext_embedding_dup_clusters
     from habits_etl_spark.plans.ext_vectors import (
-        _exact_pairs_blocked,
-        _prepped_embeddings,
+        exact_pairs_blocked,
         ext_cosine_pairs_lsh,
         ext_embedding_cosine_pairs,
     )
+    from habits_etl_spark.plans.bases import prepped_embeddings
 
-    p = _prepped_embeddings(spark, sf_dir)
+    p = prepped_embeddings(spark, sf_dir)
     n = p.count()
     assert n > 1  # fixture sanity
 
     monkeypatch.setattr(ext_vectors, "_EXACT_PAIRS_MAX", n - 1)
     with pytest.raises(ValueError, match="ext_cosine_pairs_lsh"):
-        _exact_pairs_blocked(spark, p)
+        exact_pairs_blocked(spark, p)
     with pytest.raises(ValueError, match="_EXACT_PAIRS_MAX"):
         ext_embedding_cosine_pairs(spark, sf_dir)
     # the cluster path (ext_pipeline) must inherit the same refusal —
@@ -267,19 +263,19 @@ def test_exact_pairs_gate_refuses_past_max(spark, sf_dir, monkeypatch):
     assert ext_cosine_pairs_lsh(spark, sf_dir).count() >= 0
 
     monkeypatch.setattr(ext_vectors, "_EXACT_PAIRS_MAX", n)
-    assert _exact_pairs_blocked(spark, p).count() > 0
+    assert exact_pairs_blocked(spark, p).count() > 0
 
 
 def test_exact_pairs_empty_corpus_returns_empty(spark):
     """ADVICE r12: np.vstack on a zero-row corpus raised ValueError where
     the old join form returned empty — the helper must short-circuit to
     an empty DataFrame with the contract schema."""
-    from habits_etl_spark.plans.ext_vectors import _exact_pairs_blocked
+    from habits_etl_spark.plans.ext_vectors import exact_pairs_blocked
 
     empty = spark.createDataFrame(
         [], "vec_id long, label string, v array<double>, nrm double"
     )
-    out = _exact_pairs_blocked(spark, empty)
+    out = exact_pairs_blocked(spark, empty)
     assert out.count() == 0
     assert out.columns == ["vec_a", "vec_b", "label_a", "label_b", "cos"]
 
@@ -289,13 +285,11 @@ def test_exact_pairs_broadcast_is_memoized(spark, sf_dir):
     on the same corpus (one handle per distinct corpus per session), not
     leaked one-per-call."""
     from habits_etl_spark.plans import ext_vectors
-    from habits_etl_spark.plans.ext_vectors import (
-        _exact_pairs_blocked,
-        _prepped_embeddings,
-    )
+    from habits_etl_spark.plans.ext_vectors import exact_pairs_blocked
+    from habits_etl_spark.plans.bases import prepped_embeddings
 
-    p = _prepped_embeddings(spark, sf_dir)
-    _exact_pairs_blocked(spark, p).count()
+    p = prepped_embeddings(spark, sf_dir)
+    exact_pairs_blocked(spark, p).count()
     before = len(ext_vectors._PAIRS_BCAST_MEMO)
-    _exact_pairs_blocked(spark, p).count()
+    exact_pairs_blocked(spark, p).count()
     assert len(ext_vectors._PAIRS_BCAST_MEMO) == before

@@ -8,14 +8,11 @@ import math
 
 from pyspark.sql import functions as F
 
-from habits_etl_spark.operators.lloyd import hash_seeds
-
+from habits_etl_spark.operators.lloyd import argmax_cell_expr, dots_sql, hash_seeds
+from habits_etl_spark.plans.bases import prepped_embeddings
 from habits_etl_spark.plans.common import QUERIES
-from habits_etl_spark.plans.ext_vectors import _prepped_embeddings
 from habits_etl_spark.plans.ext_vectors2 import (
     _SEM_THRESHOLD,
-    _argmax_cell_expr,
-    _dots_sql,
     ext_kmeans_centroids,
     ext_semantic_dedup,
     kmeans_fit,
@@ -24,8 +21,8 @@ from habits_etl_spark.plans.ext_vectors2 import (
 
 def _objective(spark, sf_dir, centroids):
     """Spherical k-means objective: total member-to-own-centroid cosine."""
-    m = _prepped_embeddings(spark, sf_dir)
-    sim = F.expr(f"array_max({_dots_sql(centroids)})") / F.col("nrm")
+    m = prepped_embeddings(spark, sf_dir)
+    sim = F.expr(f"array_max({dots_sql(centroids)})") / F.col("nrm")
     return m.select(F.sum(sim).alias("obj")).collect()[0].obj
 
 
@@ -37,7 +34,7 @@ def test_lloyd_iterations_improve_objective(spark, sf_dir):
 
 def test_kmeans_centroids_partition(spark, sf_dir):
     rows = ext_kmeans_centroids(spark, sf_dir).collect()
-    total = _prepped_embeddings(spark, sf_dir).count()
+    total = prepped_embeddings(spark, sf_dir).count()
     assert sum(r.n_members for r in rows) == total  # every vector in one cell
     for r in rows:
         assert -1.0 <= r.mean_cos_to_centroid <= 1.0
@@ -81,8 +78,8 @@ def test_assignment_is_shuffle_free(spark, sf_dir):
     """The per-vector cell assignment must be a pure map: centroids ride
     as plan literals, so the plan has no join/exchange below the scan."""
     centroids = kmeans_fit(spark, sf_dir, iters=0)
-    m = _prepped_embeddings(spark, sf_dir).select(
-        "vec_id", _argmax_cell_expr(centroids).alias("cell")
+    m = prepped_embeddings(spark, sf_dir).select(
+        "vec_id", argmax_cell_expr(centroids).alias("cell")
     )
     plan = m._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Join" not in plan, plan[:1500]

@@ -7,12 +7,7 @@ from __future__ import annotations
 import collections
 import math
 
-from habits_etl_spark.plans.ext_vectors3 import (
-    _PQ_K,
-    _PQ_M,
-    ext_pq_codes,
-    ext_pq_topk,
-)
+from habits_etl_spark.plans.ext_vectors3 import PQ_K, _PQ_M, ext_pq_codes, ext_pq_topk
 
 
 def _cos(a, b):
@@ -40,7 +35,7 @@ def test_pq_codes_invariants(spark, sf_dir):
     assert len(rows) == n_corpus
     for r in rows:
         assert len(r.codes) == _PQ_M
-        assert all(0 <= c < _PQ_K for c in r.codes)
+        assert all(0 <= c < PQ_K for c in r.codes)
         # squared distance between unit vector and reconstruction: >= 0,
         # and < 2 would hold even for orthogonal reconstructions of unit
         # norm; a trained codebook must do clearly better on average
@@ -50,7 +45,7 @@ def test_pq_codes_invariants(spark, sf_dir):
     # the quantizer actually uses its code space (not collapsed to one cell)
     per_sub = [collections.Counter(r.codes[m] for r in rows) for m in range(_PQ_M)]
     for m, cnt in enumerate(per_sub):
-        assert len(cnt) >= _PQ_K // 2, (m, cnt)
+        assert len(cnt) >= PQ_K // 2, (m, cnt)
 
 
 def test_pq_topk_recall_and_exactness(spark, sf_dir):
@@ -124,14 +119,14 @@ def test_ivf_cell_layout_prunes_partitions(spark, sf_dir, tmp_path):
     becomes partition pruning — non-probed cells are never read."""
     from pyspark.sql import functions as F
 
-    from habits_etl_spark.plans.ext_vectors import _prepped_embeddings
-    from habits_etl_spark.plans.ext_vectors2 import _argmax_cell_expr
+    from habits_etl_spark.plans.bases import prepped_embeddings
+    from habits_etl_spark.operators.lloyd import argmax_cell_expr
 
-    base = _prepped_embeddings(spark, sf_dir)
+    base = prepped_embeddings(spark, sf_dir)
     # deterministic one-hot "centroids": real assignment expression, no
     # training job needed for a layout test
     cents = [[1.0 if i == m * 16 else 0.0 for i in range(64)] for m in range(4)]
-    coded = base.withColumn("cell", _argmax_cell_expr(cents)).select("vec_id", "cell")
+    coded = base.withColumn("cell", argmax_cell_expr(cents)).select("vec_id", "cell")
     path = str(tmp_path / "ivf_index")
     coded.write.partitionBy("cell").parquet(path)
 

@@ -13,7 +13,7 @@ round-over-round deltas on data-bound plans are measurable.
 
 Protocol is bench.py's, from the same core (habits_etl_spark/metrics.py):
 each rep is ``time_noop`` (plan build + noop sink, jobs labelled
-``sf1:<id>:rep<i>``), >=2 reps with median+min+all reps and the median
+``sf1:<id>:rep<i>``) after one untimed ``warm:<id>`` run, >=2 reps with median+min+all reps and the median
 build seconds persisted, the same ``calibrate`` probe bracketing the
 timed section, the same one-time layout prep (reported separately).
 Naming ids times just those, at any ``--sf``. The fixture is the
@@ -101,6 +101,9 @@ def main() -> None:
             print(json.dumps({"query": name, "error": "unknown"}), file=sys.stderr)
             continue
         try:
+            # one untimed warm run per id, as bench.py's _warm: rep 0 would
+            # otherwise pay the cold JVM and the first build of its caches
+            time_noop(spark, lambda: QUERIES[name](spark, bench_dir), f"warm:{name}")
             times = [
                 time_noop(spark, lambda: QUERIES[name](spark, bench_dir), f"sf1:{name}:rep{i}")
                 for i in range(reps)
