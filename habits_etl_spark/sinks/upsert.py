@@ -7,12 +7,12 @@
 i.e. ``set_cols`` are overwritten by the incoming row (even with NULL),
 ``coalesce_cols`` keep the old value when the incoming one is NULL.
 
-Without Delta's MERGE (plain Parquet storage), the merge is a grouped
-aggregation over the union of target and source — one shuffle on the key,
+Without Delta's MERGE (plain Parquet storage), the merge is a FULL OUTER
+join of target and source on the key (see ``upsert_keyed``) — one shuffle,
 fully distributed, no driver involvement. At 100 TB the shuffle is bounded
-by the *changed partitions* when callers pre-filter the target to the
-incoming keys' date range (see ``write_events`` partition layout in
-landing.py).
+by the *changed partitions*: ``pipeline.run_ingest`` reads the target
+through ``landing.pruned_fact_scan`` on the incoming batch's dates and
+writes the merge back with ``landing.write_events``.
 
 Determinism note (SURVEY §7.3.4): Postgres applies conflicting rows in
 statement order; a set-oriented merge must instead pre-deduplicate the

@@ -3,7 +3,9 @@
 - no module imports another package module's underscore name — a name
   two modules share is public in the one module that owns it;
 - nothing in ``functions/`` or ``operators/`` imports from ``plans/``:
-  kernels sit below the query modules that compose them.
+  kernels sit below the query modules that compose them;
+- only ``sinks/landing.py`` knows the fact table's ``event_date`` layout:
+  no other module partitions a write by it or builds ``F.col("event_date")``.
 """
 
 import ast
@@ -48,4 +50,26 @@ def test_kernel_layers_do_not_import_plans():
         for mod, src, _, line in _package_imports()
         if mod.startswith(low) and src.startswith("habits_etl_spark.plans")
     ]
+    assert not hits, "\n".join(hits)
+
+
+def _names_event_date(call):
+    return any(isinstance(a, ast.Constant) and a.value == "event_date" for a in call.args)
+
+
+def test_only_landing_knows_the_fact_layout():
+    owner = PKG / "sinks" / "landing.py"
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call) and _names_event_date(node)):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            # Window.partitionBy("event_date") is a query window, not a layout
+            on_window = isinstance(fn, ast.Attribute) and getattr(fn.value, "id", None) == "Window"
+            if (name == "partitionBy" and not on_window) or name in ("col", "column"):
+                hits.append(f"{path.relative_to(PKG)}:{fn.end_lineno} {name}('event_date')")
     assert not hits, "\n".join(hits)

@@ -4,6 +4,7 @@ re-runs') and upsert semantics (reference etl/etl_habits.py:31-38)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from habits_etl_spark.config import PipelineConfig
 from habits_etl_spark.pipeline import read_events_table, run_ingest
@@ -189,10 +190,39 @@ def test_upsert_keyed_duplicate_incoming_fans_out(spark):
     assert rows == [("k1", "a", "keep"), ("k1", "b", "keep")]
 
 
-def test_crash_after_landing_then_rerun_matches_clean_run(spark, tmp_path, monkeypatch):
+def _crash_in_merge(real_upsert):
+    def boom(*args, **kwargs):
+        raise RuntimeError("crash between landing and merge")
+
+    return boom
+
+
+def _crash_in_write(real_upsert):
+    # the real merge, with one date's rows failing inside the write job
+    def merge_then_fail(*args, **kwargs):
+        merged = real_upsert(*args, **kwargs)
+        doomed = F.col("ts").cast("date") == F.lit("2025-08-21").cast("date")
+        fail = F.raise_error(F.lit("crash in the merge write"))
+        return merged.withColumn("value", F.when(doomed, fail).otherwise(F.col("value")))
+
+    return merge_then_fail
+
+
+@pytest.mark.parametrize(
+    "crash, message",
+    [(_crash_in_merge, "between landing and merge"), (_crash_in_write, "crash in the merge write")],
+    ids=["merge", "write"],
+)
+def test_crash_after_landing_then_rerun_matches_clean_run(
+    spark, tmp_path, monkeypatch, crash, message
+):
     """Crash-and-rerun (the CronJob restarts a failed run on the same
-    drop): a run that dies after land_raw and before the merge, re-run
-    unpatched, leaves both tables equal to a clean two-drop run's."""
+    drop): a run that dies after land_raw — while building the merge
+    (``merge``) or inside the merge's write job (``write``) — leaves
+    habit_events as it was, and re-run unpatched, leaves both tables
+    equal to a clean two-drop run's. The write-job crash fails before the
+    commit: dynamic partition overwrite writes under ``.spark-staging-*``
+    and the aborted job removes that directory, so no partition changed."""
     import os
 
     import habits_etl_spark.pipeline as pipeline
@@ -223,18 +253,35 @@ def test_crash_after_landing_then_rerun_matches_clean_run(spark, tmp_path, monke
 
     crashed = str(tmp_path / "crashed")
     run_ingest(spark, drop1, CFG, crashed)
-
-    def boom(*args, **kwargs):
-        raise RuntimeError("crash between landing and merge")
+    before = snapshot(spark, crashed)
 
     with monkeypatch.context() as m:
-        m.setattr(pipeline, "upsert_keyed", boom)
-        with pytest.raises(RuntimeError, match="between landing and merge"):
+        m.setattr(pipeline, "upsert_keyed", crash(pipeline.upsert_keyed))
+        with pytest.raises(Exception, match=message):
             run_ingest(spark, drop2, CFG, crashed)
-    # the crashed run landed drop2's payloads but merged nothing
+    # the crashed run landed drop2's payloads but changed no fact partition
     assert len(raw(crashed)) == len(raw(clean))
-    assert snapshot(spark, crashed) != snapshot(spark, clean)
+    assert snapshot(spark, crashed) == before != snapshot(spark, clean)
+    events_dir = os.path.join(crashed, "habit_events")
+    assert os.listdir(events_dir) == ["event_date=2025-08-20"]  # no staging dir left
 
     run_ingest(spark, drop2, CFG, crashed)
     assert snapshot(spark, crashed) == snapshot(spark, clean)
     assert raw(crashed) == raw(clean)
+
+
+def test_flat_fact_table_is_refused_before_landing(spark, wh):
+    """A habit_events dir in the flat pre-r8 layout (root-level parquet
+    files, no event_date) is refused with the migration message before
+    the drop lands, so habits_raw is never created."""
+    import os
+
+    flat = spark.createDataFrame(
+        [("a@x.com", "workout", "2025-08-20 12:00:00", 1.0)],
+        "user_email string, habit string, ts string, value double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    flat.write.parquet(os.path.join(wh, "habit_events"))
+    batch = wide(spark, [("08/20/2025", "a@x.com", "Yes", "8", None)])
+    with pytest.raises(ValueError, match="legacy UNPARTITIONED fact table"):
+        run_ingest(spark, batch, CFG, wh)
+    assert not os.path.exists(os.path.join(wh, "habits_raw"))

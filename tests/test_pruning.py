@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from habits_etl_spark.session import conf_scope
-from habits_etl_spark.sinks.landing import read_events, write_events
+from habits_etl_spark.sinks.landing import write_events
 
 
 def _events_fixture(spark, n_days=10, rows_per_day=200):
@@ -26,7 +26,7 @@ def _events_fixture(spark, n_days=10, rows_per_day=200):
 def test_static_partition_pruning(spark, tmp_path):
     path = str(tmp_path / "events")
     write_events(_events_fixture(spark), path)
-    q = read_events(spark, path).filter(F.col("event_date") == "2024-03-04")
+    q = spark.read.parquet(path).filter(F.col("event_date") == "2024-03-04")
     plan = q._jdf.queryExecution().executedPlan().toString()
     # the partition filter must reach the scan, not a post-scan Filter
     assert "PartitionFilters" in plan and "event_date" in plan.split("PartitionFilters")[1][:200], plan[:2000]
@@ -48,7 +48,7 @@ def test_dynamic_partition_pruning_through_join(spark, tmp_path):
         spark, {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "true"}
     ):
         j = (
-            read_events(spark, path)
+            spark.read.parquet(path)
             .join(dim.filter(F.col("tag") == "target"), "event_date")
             .groupBy("event_date")
             .agg(F.count(F.lit(1)).alias("n"))

@@ -228,7 +228,7 @@ def test_refresh_read_prunes_fact_partitions(spark, dirs):
     re-reading the whole history every 15-minute refresh."""
     import os
 
-    from habits_etl_spark.streaming.rollup import pruned_fact_scan
+    from habits_etl_spark.sinks.landing import pruned_fact_scan
 
     os.makedirs(dirs["source"], exist_ok=True)
     spark.createDataFrame(
