@@ -7,8 +7,9 @@ BENCH_r04.json went "parsed: null" when this line outgrew the capture):
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-The FULL record (per-repetition arrays, min timings, curation section,
-skew stress) is written to the sidecar file BENCH_DETAIL_<git-head>.json
+The FULL record (per-repetition arrays, min timings, per-id Janino
+compiles over the timed reps, curation section, skew stress) is written
+to the sidecar file BENCH_DETAIL_<git-head>.json
 next to this script. The per-HEAD name (gitignored) keeps a driver bench
 run from clobbering the committed accepted record — round 5's official
 run overwrote BENCH_DETAIL.json in the tracked tree; each round's
@@ -55,6 +56,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from habits_etl_spark.metrics import (  # noqa: E402
     PROBE_BASELINE_SEC,
     calibrate,
+    codegen_compiles,
     time_noop,
 )
 
@@ -471,14 +473,21 @@ def main():
     cal_pre_samples = calibrate(spark)
     cal_pre = round(statistics.median(cal_pre_samples), 3)
 
+    # Janino compiles over each id's last set of timed reps: a warm rep
+    # compiles nothing, so a non-zero count flags codegen cache thrash or
+    # a per-run literal that leaked into generated code.
+    codegen: dict[str, int] = {}
+
     def time_query(name: str, fn) -> tuple[list[float], float]:
         """``repeat`` reps of one query: (rep seconds, median build
         seconds). A rep is plan build + noop execution."""
         reps, builds = [], []
+        compiles0, _ = codegen_compiles(spark)
         for i in range(repeat):
             b, e = time_noop(spark, lambda: fn(spark, bench_dir), f"bench:{name}:rep{i}")
             reps.append(round(b + e, 3))
             builds.append(b)
+        codegen[name] = codegen_compiles(spark)[0] - compiles0
         return reps, round(statistics.median(builds), 3)
 
     STEAL_SPREAD = 3.0
@@ -795,6 +804,7 @@ def main():
             "sibling_headline_band": sibling_band,
             "queries_min": timings_min,
             "build_sec": build_sec,
+            "codegen_compiles": codegen,
             "repetitions": reps_all,
             "steal_queries": steal_queries,
             "steal_retries": steal_retries,

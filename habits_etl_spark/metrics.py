@@ -1,5 +1,6 @@
 """The bench tools' measurement core: one noop-forced timing of a plan
-(``time_noop``), the host-speed calibration probe (``calibrate``), and
+(``time_noop``), the host-speed calibration probe (``calibrate``), the
+driver's codegen compile counter (``codegen_compiles``), and
 execution-level shuffle metrics read back from Spark's SQL status store
 after forcing a plan (``run_with_shuffle_metrics``).
 
@@ -78,6 +79,19 @@ def time_noop(
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """``(count, compile_ms)`` of the Janino compiles this driver JVM has
+    run so far: whole-stage and expression codegen that missed the
+    generated-code cache (``session.get_spark`` sizes it). Take it before
+    and after a section; on a warm plan the difference should be 0. A
+    non-zero count flags cache thrash, or a per-run literal inlined into
+    generated code."""
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), nanos / 1e6
 
 
 def calibrate(spark: SparkSession) -> list[float]:

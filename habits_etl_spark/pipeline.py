@@ -3,17 +3,20 @@ etl/etl_habits.py:41-50):
 
     read wide source -> land raw (content-hash append-once)
                      -> normalize (unpivot + parse + coerce)
-                     -> dedup batch (deterministic winner), persisted once
+                     -> dedup batch (deterministic winner)
                      -> keyed upsert into the date-partitioned fact table
 
 vs. the reference's per-row Python loop with one SQL round-trip per
-statement (etl/etl_habits.py:47-50). ``run_ingest`` is eager: the deduped
-drop is evaluated once, and the affected-dates collect and the merge read
-that cached copy. The merge is **partition-scoped** (layout owned by
-sinks/landing.py): only the dates the drop names are read, merged and
-dynamically overwritten, so it costs O(drop date spread), not O(table).
-The ``habits_raw`` anti-join in ``land_raw`` still reads every landed
-hash — O(history) until that table is bucketed by date too.
+statement (etl/etl_habits.py:47-50). ``run_ingest`` is eager. Both
+warehouse tables are owned by sinks/landing.py, which reads them with
+their declared schemas (no footer job per read). The merge is
+**partition-scoped**: only the dates the drop names are listed, read,
+merged and dynamically overwritten, so it costs O(drop date spread), not
+O(table). It is also the one route that reads the deduped drop twice
+(the affected-dates collect, then the merge), so only it persists the
+drop; the first ingest and the manifest route read it once. The
+``habits_raw`` anti-join in ``land_raw`` still reads every landed hash —
+O(history) until that table is bucketed by date too.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from habits_etl_spark.sinks.landing import (
     assert_partitioned_fact_layout,
     event_dates,
     land_raw,
+    landed_hashes,
     pruned_fact_scan,
     with_event_date,
     write_events,
@@ -79,8 +83,7 @@ def run_ingest(
         wide = read_wide_csv(spark, wide)
 
     landing_path = os.path.join(warehouse, "habits_raw")
-    existing_hashes = spark.read.parquet(landing_path) if os.path.exists(landing_path) else None
-    land_raw(wide, landing_path, existing_hashes)
+    land_raw(wide, landing_path, landed_hashes(spark, landing_path))
 
     events = normalize_wide_rows(wide, cfg)
     # Deterministic intra-batch winner (SURVEY §7.3.4): the reference applies
@@ -90,20 +93,20 @@ def run_ingest(
         EVENT_KEYS,
         "__ingest_seq",
     ).drop("__ingest_seq")
-    # bounded (one sheet drop), so one cached copy serves every read below
-    incoming.persist()
     merge = dict(keys=EVENT_KEYS, set_cols=["value"], coalesce_cols=["notes"])
-    try:
-        if table_format == "manifest":
-            upsert_snapshot(
-                spark, with_event_date(incoming), events_path, **merge,
-                keep_old_cols=["source", "event_date"],
-            )
-        elif os.path.exists(events_path):
+    if table_format == "manifest":
+        upsert_snapshot(
+            spark, with_event_date(incoming), events_path, **merge,
+            keep_old_cols=["source", "event_date"],
+        )
+    elif not os.path.exists(events_path):
+        write_events(incoming, events_path)
+    else:
+        # bounded (one sheet drop) and read twice: one cached copy
+        incoming.persist()
+        try:
             existing = pruned_fact_scan(spark, events_path, event_dates(incoming))
             merged = upsert_keyed(existing, incoming, **merge, keep_old_cols=["source"])
             write_events(merged, events_path)
-        else:
-            write_events(incoming, events_path)
-    finally:
-        incoming.unpersist()
+        finally:
+            incoming.unpersist()

@@ -11,6 +11,29 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
   every query assumes; the driver builds its own session, so
   ``__spark_entry__`` applies the same dict to it.
 - Arrow enabled for any pandas-UDF extension path.
+- The generated-code cache holds 1000 classes, not Spark's default 100
+  (``spark.sql.codegen.cache.maxEntries``). The cache is a Guava cache
+  split into 4 LRU segments, so the default holds 25 classes per
+  segment. One warm cycle of the 15-minute CronJob (``run_ingest``, the
+  rollup refresh, a panel read) touches more generated classes than
+  that, so the LRU evicts code the next cycle needs again: in a
+  ``cron_ingest``-shaped run (4 cores) cycles 3-5 recompiled 20-26
+  classes each at 100 entries and 1 each at 1000, the per-run literal
+  of ``land_raw``'s ``current_timestamp()``; ``tests/test_session.py``
+  pins it. The memory cost is small: the traced
+  ``session.jvm_peak_rss_mb`` of perfbench ``cron_ingest`` (seed 1,
+  4 cores, 2 GB heap) read 1072 -> 1160 MB and 1088 -> 1081 MB in two
+  parent/change pairs.
+  It is a STATIC conf, read once when the JVM builds the cache, so it is
+  set on the builder and not in ``SESSION_CONF``: ``__spark_entry__``
+  applies that dict to a session that is already running, where setting
+  a static conf raises.
+- Measured and not shipped:
+  ``spark.python.sql.dataFrameDebugging.enabled=false`` cut
+  ``normalize_wide_rows``' plan build from 358 to 160 ms of CPU and the
+  nine dashboard panel builds from 636 to 434 ms per refresh (at
+  ``0ad4848``), but Spark errors would then lose the Python call site
+  that raised them.
 
 This module is the only one in the package that writes session conf.
 A temporary override goes through ``conf_scope``, which leaves the
@@ -72,6 +95,9 @@ def get_spark(app_name: str = "habits_etl_spark", master: str | None = None,
         # reuse a blanket rewrite destroys). Individual joins that
         # measurably win carry an explicit shuffle_hash hint instead.
         .config(map=SESSION_CONF)
+        # Static: fixed when the JVM's codegen cache is built, so it rides
+        # on the builder, not in SESSION_CONF (see the module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Allow Python Data Sources to receive pushed filters (the
         # wide_sheet source implements pushFilters; off by default)
         .config("spark.sql.python.filterPushdown.enabled", "true")

@@ -1,9 +1,10 @@
-"""Storage-layer sinks, and the one owner of the fact-table layout.
+"""Storage-layer sinks, and the one owner of the warehouse layouts.
 
-- ``land_raw``: content-hash-keyed append-once landing table
-  (reference habits_raw, sql/001_schema.sql:7-11 + ON CONFLICT DO NOTHING
-  at etl/etl_habits.py:27-30). The full source row is preserved as JSON
-  for forensics/replay.
+- ``habits_raw``, the landing table: ``land_raw`` appends content-hash
+  keyed rows once (reference habits_raw, sql/001_schema.sql:7-11 + ON
+  CONFLICT DO NOTHING at etl/etl_habits.py:27-30), and ``landed_hashes``
+  reads back the hashes it holds. The full source row is preserved as
+  JSON for forensics/replay.
 - ``habit_events``, the fact table (reference hypertable,
   sql/001_schema.sql:14-28): Parquet **partitioned by event_date** (``ts``
   cast to a date, i.e. ``date_trunc('DAY', ts)`` in the UTC session) — the
@@ -14,19 +15,34 @@
   ``write_events``, read it with ``pruned_fact_scan`` and guard it with
   ``assert_partitioned_fact_layout``; no other module derives, writes
   or filters on ``event_date``.
+
+Both tables are read with their declared schemas (``catalog``), so a
+read runs no footer job to infer one, and a fact read lists only the
+date directories it needs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from habits_etl_spark.catalog import EVENTS_SCHEMA, LANDING_SCHEMA
 from habits_etl_spark.functions.hashing import row_hash_expr
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` on its own scheme's file system,
+    so the layout checks work wherever the reads and writes do."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def land_raw(wide: DataFrame, path: str, existing_hashes: DataFrame | None = None) -> None:
     """Append-once landing: hash every raw row, drop rows whose hash is
     already present, append the rest as (row_hash, ingested_at, payload).
+
+    ``existing_hashes`` is ``landed_hashes`` of the same table.
 
     Scale: the anti-join against existing hashes is a shuffle on sha256 —
     uniformly distributed; with a date-bucketed landing layout the anti
@@ -41,6 +57,15 @@ def land_raw(wide: DataFrame, path: str, existing_hashes: DataFrame | None = Non
     if existing_hashes is not None:
         fresh = fresh.join(existing_hashes.select("row_hash"), "row_hash", "left_anti")
     fresh.write.mode("append").parquet(path)
+
+
+def landed_hashes(spark: SparkSession, path: str) -> DataFrame | None:
+    """The ``row_hash`` column of the landing table at ``path``, or None
+    before its first landing. Read with ``catalog.LANDING_SCHEMA``."""
+    fs, hpath = _hadoop_path(spark, path)
+    if not fs.exists(hpath):
+        return None
+    return spark.read.schema(LANDING_SCHEMA).parquet(path).select("row_hash")
 
 
 def with_event_date(events: DataFrame) -> DataFrame:
@@ -82,14 +107,42 @@ def write_events(events: DataFrame, path: str, mode: str = "overwrite") -> None:
     )
 
 
-def pruned_fact_scan(spark: SparkSession, events_path: str, days: list) -> DataFrame:
+def pruned_fact_scan(
+    spark: SparkSession, events_path: str, days: list, columns: T.StructType = EVENTS_SCHEMA
+) -> DataFrame:
     """Read the day-partitioned fact table restricted to ``days``.
 
-    The filter is on the PARTITION column (``event_date``), not a derived
-    ``date_trunc(ts)`` expression, so Catalyst turns it into
-    ``PartitionFilters`` on the scan and only the affected day directories
-    are listed and read — O(date spread) reads at any history size."""
-    return spark.read.parquet(events_path).filter(F.col("event_date").isin(days))
+    ``columns`` is the schema of the rows ``write_events`` was given
+    (its ``event_date``, if any, is replaced by the partition column):
+    ``catalog.EVENTS_SCHEMA`` for ``habit_events``, the source schema for
+    the rollup stream's fact table. A declared schema means the read runs
+    no footer job to infer one.
+
+    Only the ``event_date=<d>`` directories that exist for ``days`` are
+    handed to the reader (``basePath`` at the table root keeps the
+    partition column), so the read lists O(date spread) directories
+    however many dates the table holds; a listing of the whole table
+    would launch a listing job once it passes
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    dates. The filter stays on the PARTITION column, not a derived
+    ``date_trunc(ts)`` expression, so Catalyst still shows it as
+    ``PartitionFilters`` on the scan. No existing date: an empty frame."""
+    schema = T.StructType(
+        [f for f in columns.fields if f.name != "event_date"]
+        + [T.StructField("event_date", T.DateType())]
+    )
+    fs, root = _hadoop_path(spark, events_path)
+    child = spark._jvm.org.apache.hadoop.fs.Path
+    wanted = (child(root, f"event_date={d}") for d in sorted({str(d) for d in days if d is not None}))
+    dirs = [p.toString() for p in wanted if fs.exists(p)]
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", events_path)
+        .parquet(*dirs)
+        .filter(F.col("event_date").isin(days))
+    )
 
 
 def assert_partitioned_fact_layout(spark: SparkSession, events_path: str) -> None:
@@ -99,12 +152,8 @@ def assert_partitioned_fact_layout(spark: SparkSession, events_path: str) -> Non
     ``event_date=YYYY-MM-DD/`` directories. Writing on top of the old one
     would mix the two: partition discovery then fails or surfaces rows
     with a NULL ``event_date`` that the pruned read never sees. Any
-    root-level non-hidden FILE is such a data file. Uses the Hadoop
-    FileSystem of the path's own scheme, so the check works wherever the
-    write will."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(events_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    root-level non-hidden FILE is such a data file."""
+    fs, hpath = _hadoop_path(spark, events_path)
     if not fs.exists(hpath):
         return
     for st in fs.listStatus(hpath):

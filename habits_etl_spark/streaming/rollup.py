@@ -27,9 +27,10 @@ Semantics mapping (SURVEY §2.10 / §7.3.5):
 Scale: each micro-batch is appended with ``sinks.landing.write_events``,
 so the stream's fact table has the batch ingest's layout (partitioned by
 event_date, sorted within partitions), and each refresh reads it through
-``sinks.landing.pruned_fact_scan`` (PartitionFilters in the scan, asserted
-in tests/test_streaming.py) and rewrites only the affected day buckets of
-the rollup (per-write dynamic partition overwrite). Both sides of the
+``sinks.landing.pruned_fact_scan`` with the batch's own schema (no footer
+job, only the batch's date directories listed, PartitionFilters in the
+scan, asserted in tests/test_streaming.py) and rewrites only the affected
+day buckets of the rollup (per-write dynamic partition overwrite). Both sides of the
 refresh are O(late-data spread), not O(history) — the property the
 reference buys from Timescale's invalidation log. ``start_continuous_rollup``
 refuses a legacy flat (pre-r8) ``events_path`` up front.
@@ -39,7 +40,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from habits_etl_spark.catalog import EVENTS_SCHEMA
 from habits_etl_spark.plans.common import davg, dsum
 from habits_etl_spark.sinks.landing import (
     assert_partitioned_fact_layout,
@@ -68,16 +71,18 @@ def refresh_rollup_days(
     rollup_path: str,
     days: list,
     meditation_habit: str = "meditation_minutes",
+    columns: T.StructType = EVENTS_SCHEMA,
 ) -> None:
     """Recompute the given day buckets from the fact table and overwrite
     exactly those partitions of the rollup (Timescale refresh step).
+    ``columns`` is the fact table's row schema (``pruned_fact_scan``).
 
     Dynamic partition overwrite is requested per-write (DataFrameWriter
     option) rather than via session conf, so callers' later partitioned
     overwrites keep their own semantics."""
     if not days:
         return
-    events = pruned_fact_scan(spark, events_path, days).drop("event_date")
+    events = pruned_fact_scan(spark, events_path, days, columns).drop("event_date")
     fresh = batch_daily_rollup(events, meditation_habit)
     (
         fresh.write.mode("overwrite")
@@ -118,7 +123,9 @@ def start_continuous_rollup(
             horizon = F.date_sub(F.current_date(), backfill_horizon_days)
             # bounded: the distinct days of one micro-batch
             days = event_dates(batch_df.filter(F.col("ts") >= horizon))
-            refresh_rollup_days(spark, events_path, rollup_path, days, meditation_habit)
+            refresh_rollup_days(
+                spark, events_path, rollup_path, days, meditation_habit, batch_df.schema
+            )
         finally:
             batch_df.unpersist()
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from hypothesis import settings as _hyp_settings
@@ -74,3 +75,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture()
+def jobs_run_by(spark):
+    """``jobs_run_by(fn)``: the ids of the Spark jobs that ``fn()`` runs,
+    read after the listener bus has drained (the status store is fed
+    asynchronously)."""
+    sc = spark.sparkContext
+
+    def run(fn) -> list[int]:
+        label = f"jobs_run_by:{uuid.uuid4().hex}"
+        sc.setJobGroup(label, label)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(label))
+
+    return run

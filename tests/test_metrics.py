@@ -9,7 +9,12 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from habits_etl_spark.metrics import _metric_total, run_with_shuffle_metrics, time_noop
+from habits_etl_spark.metrics import (
+    _metric_total,
+    codegen_compiles,
+    run_with_shuffle_metrics,
+    time_noop,
+)
 
 
 def test_metric_total_parses_plain_and_human_forms():
@@ -102,3 +107,16 @@ def test_time_noop_clears_its_label_when_build_raises(spark):
         time_noop(spark, build, "test_time_noop:raises")
     assert sc.getLocalProperty("spark.jobGroup.id") is None
     assert sc.getLocalProperty("spark.job.description") is None
+
+
+def test_codegen_compiles_counts_new_code_and_not_a_warm_rerun(spark):
+    """A literal inlined into generated code makes the plan new code; the
+    same plan run again hits the codegen cache and compiles nothing."""
+    seed = uuid.uuid4().int % 1_000_000_007
+    df = spark.range(0, 1000, 1, 2).selectExpr(f"sum(id * {seed} % 7919) as s")
+    n0, ms0 = codegen_compiles(spark)
+    df.collect()
+    n1, ms1 = codegen_compiles(spark)
+    assert n1 > n0 and ms1 > ms0
+    df.collect()
+    assert codegen_compiles(spark) == (n1, ms1)

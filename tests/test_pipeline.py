@@ -97,6 +97,29 @@ def test_partition_scoped_merge_preserves_other_days(spark, wh):
     assert {r[3] for r in s2 if "2025-08-21" in r[2]} == {1.0, 9.0}
 
 
+def _cached_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_cold_ingest_runs_five_jobs_and_caches_nothing(spark, wh, jobs_run_by):
+    """The first ingest reads the deduped drop once (straight into the
+    write), so it persists nothing: caching it there only added a job
+    (6 instead of 5 for an in-memory drop; a CSV drop adds its header
+    read)."""
+    batch = wide(spark, [("08/20/2025", "a@x.com", "Yes", "8", "n1")])
+    cached = _cached_rdds(spark)
+    assert len(jobs_run_by(lambda: run_ingest(spark, batch, CFG, wh))) == 5
+    assert _cached_rdds(spark) <= cached
+
+
+def test_merge_ingest_leaves_nothing_cached(spark, wh):
+    """The merge route persists the drop it reads twice, and drops it."""
+    run_ingest(spark, wide(spark, [("08/20/2025", "a@x.com", "Yes", "8", None)]), CFG, wh)
+    cached = _cached_rdds(spark)
+    run_ingest(spark, wide(spark, [("08/20/2025", "a@x.com", "No", "3", None)]), CFG, wh)
+    assert _cached_rdds(spark) <= cached
+
+
 def test_landing_append_once(spark, wh):
     import os
 

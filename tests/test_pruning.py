@@ -76,3 +76,39 @@ def test_landing_schema_evolution(spark, tmp_path):
     assert set(merged.columns) == {"id", "x", "score"}
     rows = {r.id: r.score for r in merged.collect()}
     assert rows[1] is None and rows[2] == 9.5
+
+
+def test_pruned_fact_scan_lists_only_the_asked_dates(spark, tmp_path, jobs_run_by):
+    """Past ``parallelPartitionDiscovery.threshold`` (32) dates, listing
+    the whole table launches a listing job on every read. The pruned scan
+    hands the reader only the asked dates' directories, and its declared
+    schema needs no footer job: building it runs no Spark job at all."""
+    import datetime as dt
+
+    from habits_etl_spark.catalog import EVENTS_SCHEMA
+    from habits_etl_spark.sinks.landing import pruned_fact_scan
+
+    path = str(tmp_path / "events")
+    events = _events_fixture(spark, n_days=40, rows_per_day=2)
+    write_events(events.select("*", F.lit(None).cast("string").alias("notes"),
+                               F.lit("sheet").alias("source")), path)
+    days = [dt.date(2024, 3, 4), dt.date(2024, 3, 30)]
+    scans = []
+    assert jobs_run_by(lambda: scans.append(pruned_fact_scan(spark, path, days))) == []
+    scan = scans[0]
+    dirs = {f.split("/")[-2] for f in scan.inputFiles()}
+    assert dirs == {"event_date=2024-03-04", "event_date=2024-03-30"}
+    assert [f.name for f in scan.schema.fields] == [f.name for f in EVENTS_SCHEMA.fields]
+    assert scan.count() == 4
+
+
+def test_pruned_fact_scan_of_absent_dates_is_empty(spark, tmp_path):
+    import datetime as dt
+
+    from habits_etl_spark.sinks.landing import pruned_fact_scan
+
+    path = str(tmp_path / "events")
+    write_events(_events_fixture(spark, n_days=2, rows_per_day=2), path)
+    scan = pruned_fact_scan(spark, path, [dt.date(2030, 1, 1)])
+    assert scan.count() == 0
+    assert "event_date" in scan.columns

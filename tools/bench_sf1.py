@@ -14,7 +14,8 @@ round-over-round deltas on data-bound plans are measurable.
 Protocol is bench.py's, from the same core (habits_etl_spark/metrics.py):
 each rep is ``time_noop`` (plan build + noop sink, jobs labelled
 ``sf1:<id>:rep<i>``) after one untimed ``warm:<id>`` run, >=2 reps with median+min+all reps and the median
-build seconds persisted, the same ``calibrate`` probe bracketing the
+build seconds and the Janino compiles over the timed reps (``codegen_compiles``;
+a warm rep reads 0) persisted, the same ``calibrate`` probe bracketing the
 timed section, the same one-time layout prep (reported separately).
 Naming ids times just those, at any ``--sf``. The fixture is the
 DETERMINISTIC sf0.1 replication produced by tools/make_scaled_fixture.py
@@ -83,7 +84,7 @@ def main() -> None:
         )
 
     from bench import optimize_layout
-    from habits_etl_spark.metrics import PROBE_BASELINE_SEC, calibrate, time_noop
+    from habits_etl_spark.metrics import PROBE_BASELINE_SEC, calibrate, codegen_compiles, time_noop
     from habits_etl_spark.plans import QUERIES
     from habits_etl_spark.session import get_spark
 
@@ -96,6 +97,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     build_sec: dict[str, float] = {}
     reps_all: dict[str, list[float]] = {}
+    codegen: dict[str, int] = {}  # compiles over the timed reps; warm reads 0
     for name in names:
         if name not in QUERIES:
             print(json.dumps({"query": name, "error": "unknown"}), file=sys.stderr)
@@ -104,6 +106,7 @@ def main() -> None:
             # one untimed warm run per id, as bench.py's _warm: rep 0 would
             # otherwise pay the cold JVM and the first build of its caches
             time_noop(spark, lambda: QUERIES[name](spark, bench_dir), f"warm:{name}")
+            compiles0, _ = codegen_compiles(spark)
             times = [
                 time_noop(spark, lambda: QUERIES[name](spark, bench_dir), f"sf1:{name}:rep{i}")
                 for i in range(reps)
@@ -111,6 +114,7 @@ def main() -> None:
         except Exception as exc:
             print(f"ERROR {name}: {exc}", file=sys.stderr)
             continue
+        codegen[name] = codegen_compiles(spark)[0] - compiles0
         reps_all[name] = [round(b + e, 3) for b, e in times]
         build_sec[name] = round(statistics.median(b for b, _ in times), 3)
         timings[name] = round(statistics.median(reps_all[name]), 3)
@@ -132,6 +136,7 @@ def main() -> None:
         "repetitions": reps_all,
         "queries_min": {n: round(min(r), 3) for n, r in reps_all.items()},
         "build_sec": build_sec,
+        "codegen_compiles": codegen,
         "layout_prep_sec": prep_sec,
         "probe_baseline_sec": PROBE_BASELINE_SEC,
         "probe_observed_sec": probe_observed,
