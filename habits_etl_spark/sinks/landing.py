@@ -11,17 +11,15 @@
   hypertable-chunking analog that lets time-range predicates prune — and
   sorted within partitions by (user_email, habit, ts) to approximate the
   reference's composite B-tree index via Parquet row-group min/max stats.
-  ``pipeline.run_ingest`` and the rollup stream both write it with
-  ``write_events``, read it with ``pruned_fact_scan`` and guard it with
-  ``assert_partitioned_fact_layout``; no other module derives, writes
-  or filters on ``event_date``.
-
-Both tables are read with their declared schemas (``catalog``), so a
-read runs no footer job to infer one, and a fact read lists only the
-date directories it needs.
+  ``pipeline.run_ingest`` and the rollup stream both upsert it on
+  ``EVENT_KEYS`` with ``merge_events`` and guard it with
+  ``assert_partitioned_fact_layout``; no other module derives, writes or
+  filters on ``event_date``.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +27,9 @@ from pyspark.sql import types as T
 
 from habits_etl_spark.catalog import EVENTS_SCHEMA, LANDING_SCHEMA
 from habits_etl_spark.functions.hashing import row_hash_expr
+from habits_etl_spark.sinks.upsert import dedup_batch, upsert_keyed
+
+EVENT_KEYS = ["user_email", "habit", "ts"]  # reference sql/001_schema.sql:22
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -73,60 +74,92 @@ def with_event_date(events: DataFrame) -> DataFrame:
     return events.withColumn("event_date", F.col("ts").cast("date"))
 
 
-def event_dates(events: DataFrame) -> list:
-    """The distinct event dates of a BOUNDED batch, as a Python list.
-    ``coalesce(1)`` lets the distinct run in one task with no shuffle job."""
-    dates = with_event_date(events).select("event_date").coalesce(1).distinct()
-    return [r.event_date for r in dates.collect()]
+def write_events(events: DataFrame, path: str) -> None:
+    """Write ``events`` date-partitioned + stat-sorted, as a dynamic
+    partition overwrite: only the dates in ``events`` are replaced (the
+    option rides on this write, not on the session conf). ``merge_events``
+    is its one caller.
 
-
-def write_events(events: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write ``events`` date-partitioned + stat-sorted.
-
-    ``"overwrite"`` is a per-write dynamic partition overwrite: only the
-    dates present in ``events`` are replaced, the others are kept (the
-    option rides on this write, not on the session conf). ``"append"``
-    adds files to the dates present.
-
-    An overwrite stages its files under ``.spark-staging-*`` and moves them
-    into place at job commit, so a task or job that fails before the commit
-    leaves the table unchanged. The commit itself deletes and renames the
-    written partitions one at a time, so a crash DURING the commit is not
-    atomic across partitions: some dates can be new, some old, and one
-    missing. ``pipeline.run_ingest(table_format="manifest")`` is the
-    atomic route.
+    Files are staged under ``.spark-staging-*`` and moved into place at
+    job commit, so a job that fails before the commit leaves the table
+    unchanged. The commit renames partitions one at a time, so a crash
+    DURING it is not atomic across partitions: some dates can be new,
+    some old, one missing. ``pipeline.run_ingest(table_format="manifest")``
+    is the atomic route.
     """
     (
         with_event_date(events)
         .repartition("event_date")
         .sortWithinPartitions("user_email", "habit", "ts")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_date")
         .parquet(path)
     )
 
 
+def dedup_events(batch: DataFrame) -> DataFrame:
+    """One row per ``EVENT_KEYS``, the last in scan order winning (SURVEY
+    §7.3.4): the reference applies sheet rows in order."""
+    seq = batch.withColumn("__ingest_seq", F.monotonically_increasing_id())
+    return dedup_batch(seq, EVENT_KEYS, "__ingest_seq").drop("__ingest_seq")
+
+
+def event_merge_spec(columns: list[str]) -> dict:
+    """``upsert_keyed``'s arguments for the reference's ON CONFLICT rule
+    (etl/etl_habits.py:31-38) over ``columns``: ``value`` set, ``notes``
+    coalesced, every other non-key column keeps its stored value."""
+    notes = [c for c in columns if c == "notes"]
+    rest = [c for c in columns if c not in (*EVENT_KEYS, "value", "notes")]
+    return dict(keys=EVENT_KEYS, set_cols=["value"], coalesce_cols=notes, keep_old_cols=rest)
+
+
+def merge_events(
+    spark: SparkSession, batch: DataFrame, path: str, columns: T.StructType = EVENTS_SCHEMA
+) -> list:
+    """Upsert a BOUNDED ``batch`` into the fact table at ``path`` and
+    return its dates: ``dedup_events``, then ``upsert_keyed`` into the
+    ``pruned_fact_scan`` of those dates (``columns`` is its row schema).
+
+    A first write has nothing to merge with: the batch is written as is
+    (an empty one writes no data file) and its dates are read from the
+    ``event_date=`` directories just made, with no job. A later write
+    persists the batch, which it reads twice (dates, then merge); an
+    empty batch collects no date and writes nothing."""
+    incoming = dedup_events(batch)
+    fs, root = _hadoop_path(spark, path)
+    if not fs.exists(root):
+        write_events(incoming, path)
+        names = [st.getPath().getName().partition("=") for st in fs.listStatus(root)]
+        return sorted(dt.date.fromisoformat(d) for col, _, d in names if col == "event_date")
+    incoming.persist()
+    try:
+        # coalesce(1): the distinct runs in one task, with no shuffle job
+        dates = with_event_date(incoming).select("event_date").coalesce(1).distinct()
+        days = [r.event_date for r in dates.collect()]
+        if days:
+            existing = pruned_fact_scan(spark, path, days, columns)
+            merged = upsert_keyed(existing, incoming, **event_merge_spec(incoming.columns))
+            write_events(merged, path)
+        return days
+    finally:
+        incoming.unpersist()
+
+
 def pruned_fact_scan(
     spark: SparkSession, events_path: str, days: list, columns: T.StructType = EVENTS_SCHEMA
 ) -> DataFrame:
-    """Read the day-partitioned fact table restricted to ``days``.
-
-    ``columns`` is the schema of the rows ``write_events`` was given
-    (its ``event_date``, if any, is replaced by the partition column):
-    ``catalog.EVENTS_SCHEMA`` for ``habit_events``, the source schema for
-    the rollup stream's fact table. A declared schema means the read runs
-    no footer job to infer one.
+    """Read the day-partitioned fact table restricted to ``days``, with
+    ``columns`` as its row schema (``event_date`` replaced by the
+    partition column), so the read runs no footer job to infer one.
 
     Only the ``event_date=<d>`` directories that exist for ``days`` are
     handed to the reader (``basePath`` at the table root keeps the
-    partition column), so the read lists O(date spread) directories
-    however many dates the table holds; a listing of the whole table
-    would launch a listing job once it passes
-    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
-    dates. The filter stays on the PARTITION column, not a derived
-    ``date_trunc(ts)`` expression, so Catalyst still shows it as
-    ``PartitionFilters`` on the scan. No existing date: an empty frame."""
+    partition column): the read lists O(date spread) directories, where a
+    listing of the whole table would launch a listing job past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) dates.
+    The filter stays on the PARTITION column, so Catalyst still shows it
+    as ``PartitionFilters`` on the scan. No existing date: an empty frame."""
     schema = T.StructType(
         [f for f in columns.fields if f.name != "event_date"]
         + [T.StructField("event_date", T.DateType())]
@@ -162,7 +195,7 @@ def assert_partitioned_fact_layout(spark: SparkSession, events_path: str) -> Non
             raise ValueError(
                 f"events_path {events_path!r} holds root-level data file "
                 f"{name!r}: a legacy UNPARTITIONED fact table. Migrate it "
-                "first (read it and rewrite it with sinks.landing.write_events "
+                "first (read it and rewrite it with sinks.landing.merge_events "
                 "to a fresh path) — writing the day-partitioned layout on top "
                 "would mix layouts and break partition discovery and pruning."
             )

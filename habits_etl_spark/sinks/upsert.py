@@ -9,15 +9,22 @@ i.e. ``set_cols`` are overwritten by the incoming row (even with NULL),
 
 Without Delta's MERGE (plain Parquet storage), the merge is a FULL OUTER
 join of target and source on the key (see ``upsert_keyed``) — one shuffle,
-fully distributed, no driver involvement. At 100 TB the shuffle is bounded
-by the *changed partitions*: ``pipeline.run_ingest`` reads the target
-through ``landing.pruned_fact_scan`` on the incoming batch's dates and
-writes the merge back with ``landing.write_events``.
+fully distributed, no driver involvement. Callers:
+
+- ``landing.merge_events``, the one merge of the fact table, for
+  ``pipeline.run_ingest`` and the rollup stream alike. At 100 TB its
+  shuffle is bounded by the *changed partitions*: it reads the target
+  through ``landing.pruned_fact_scan`` on the incoming batch's dates and
+  writes the merge back with ``landing.write_events``.
+- ``manifest.upsert_snapshot`` (``run_ingest(table_format="manifest")``),
+  against the whole current snapshot.
+- the ``sink_upsert_events`` query (``plans/habits.py``).
 
 Determinism note (SURVEY §7.3.4): Postgres applies conflicting rows in
 statement order; a set-oriented merge must instead pre-deduplicate the
 incoming batch with an explicit winner. ``dedup_batch`` picks the row with
-the highest ``order_col`` per key.
+the highest ``order_col`` per key; ``landing.dedup_events`` orders by scan
+position, so the last row wins.
 """
 
 from __future__ import annotations

@@ -17,26 +17,28 @@ Semantics mapping (SURVEY §2.10 / §7.3.5):
 - late data (Timescale *re-folds* late rows into already-materialized
   buckets on a later refresh) -> a strict append-mode watermark would DROP
   them, so the rollup is maintained with **foreachBatch**: each micro-batch
-  appends to the fact table, then re-aggregates exactly the affected day
-  buckets from the fact table and overwrites those buckets in the rollup —
-  precisely Timescale's refresh algorithm (recompute the invalidated
-  window range), made idempotent by partition overwrite.
+  is upserted into the fact table, then the affected day buckets are
+  re-aggregated from it and overwritten in the rollup — Timescale's
+  refresh algorithm (recompute the invalidated window range). Both steps
+  are idempotent, so a batch that the at-least-once foreachBatch replays
+  after a crash changes nothing.
 - ``start_offset '60 days'``          -> ``backfill_horizon_days`` caps how
   far back a refresh will rewrite.
 
-Scale: each micro-batch is appended with ``sinks.landing.write_events``,
-so the stream's fact table has the batch ingest's layout (partitioned by
-event_date, sorted within partitions), and each refresh reads it through
-``sinks.landing.pruned_fact_scan`` with the batch's own schema (no footer
-job, only the batch's date directories listed, PartitionFilters in the
-scan, asserted in tests/test_streaming.py) and rewrites only the affected
-day buckets of the rollup (per-write dynamic partition overwrite). Both sides of the
+Scale: each micro-batch is upserted with ``sinks.landing.merge_events``,
+the merge ``pipeline.run_ingest`` runs, so the stream's fact table has
+the batch ingest's layout and semantics (a re-sent row updates its fact).
+Each refresh reads it through ``pruned_fact_scan`` with the batch's own
+schema (no footer job, only the batch's date directories listed,
+PartitionFilters in the scan, asserted in tests/test_streaming.py) and
+rewrites only the affected day buckets of the rollup. Both sides of the
 refresh are O(late-data spread), not O(history) — the property the
-reference buys from Timescale's invalidation log. ``start_continuous_rollup``
-refuses a legacy flat (pre-r8) ``events_path`` up front.
+reference buys from Timescale's invalidation log.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,9 +48,8 @@ from habits_etl_spark.catalog import EVENTS_SCHEMA
 from habits_etl_spark.plans.common import davg, dsum
 from habits_etl_spark.sinks.landing import (
     assert_partitioned_fact_layout,
-    event_dates,
+    merge_events,
     pruned_fact_scan,
-    write_events,
 )
 
 
@@ -73,19 +74,17 @@ def refresh_rollup_days(
     meditation_habit: str = "meditation_minutes",
     columns: T.StructType = EVENTS_SCHEMA,
 ) -> None:
-    """Recompute the given day buckets from the fact table and overwrite
-    exactly those partitions of the rollup (Timescale refresh step).
-    ``columns`` is the fact table's row schema (``pruned_fact_scan``).
-
-    Dynamic partition overwrite is requested per-write (DataFrameWriter
-    option) rather than via session conf, so callers' later partitioned
-    overwrites keep their own semantics."""
+    """Recompute the given day buckets from the fact table (``columns`` is
+    its row schema, as in ``pruned_fact_scan``) and overwrite exactly those
+    partitions of the rollup (Timescale refresh step). Dynamic partition
+    overwrite is a per-write option, not a session conf, so callers' later
+    partitioned overwrites keep their own semantics."""
     if not days:
         return
     events = pruned_fact_scan(spark, events_path, days, columns).drop("event_date")
-    fresh = batch_daily_rollup(events, meditation_habit)
     (
-        fresh.write.mode("overwrite")
+        batch_daily_rollup(events, meditation_habit)
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("day")
         .parquet(rollup_path)
@@ -105,7 +104,13 @@ def start_continuous_rollup(
     meditation_habit: str = "meditation_minutes",
 ):
     """Start the maintenance stream: watch ``source_dir`` for new event
-    files, append them to the fact table, refresh affected rollup buckets.
+    files, upsert them into the fact table, refresh affected rollup buckets
+    no older than ``backfill_horizon_days`` (in the session time zone).
+
+    Precondition: a key (user_email, habit, ts) that repeats within one
+    file resolves as in ``run_ingest``, the last row winning; when one
+    micro-batch holds several files that repeat a key, which row wins is
+    unspecified.
 
     Returns the StreamingQuery; callers stop it or use
     ``trigger={"availableNow": True}`` for a cron-style one-shot run.
@@ -115,30 +120,21 @@ def start_continuous_rollup(
     assert_partitioned_fact_layout(spark, events_path)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df.persist()
-        try:
-            write_events(batch_df, events_path, mode="append")
-            horizon = F.date_sub(F.current_date(), backfill_horizon_days)
-            # bounded: the distinct days of one micro-batch
-            days = event_dates(batch_df.filter(F.col("ts") >= horizon))
-            refresh_rollup_days(
-                spark, events_path, rollup_path, days, meditation_habit, batch_df.schema
-            )
-        finally:
-            batch_df.unpersist()
+        days = merge_events(spark, batch_df, events_path, batch_df.schema)
+        zone = spark._jvm.java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+        today = dt.date.fromisoformat(spark._jvm.java.time.LocalDate.now(zone).toString())
+        fresh = [d for d in days if d >= today - dt.timedelta(backfill_horizon_days)]
+        refresh_rollup_days(
+            spark, events_path, rollup_path, fresh, meditation_habit, batch_df.schema
+        )
 
-    stream = (
+    return (
         spark.readStream.schema(source_schema)
         .parquet(source_dir)
         .withWatermark("ts", watermark)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
+        .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("update")
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
     )
-    trigger = trigger or {"availableNow": True}
-    writer = writer.trigger(**trigger)
-    return writer.start()

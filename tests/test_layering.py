@@ -5,7 +5,9 @@
 - nothing in ``functions/`` or ``operators/`` imports from ``plans/``:
   kernels sit below the query modules that compose them;
 - only ``sinks/landing.py`` knows the fact table's ``event_date`` layout:
-  no other module partitions a write by it or builds ``F.col("event_date")``.
+  no other module partitions a write by it or builds ``F.col("event_date")``;
+- only ``sinks/landing.py`` calls ``write_events``: every fact write goes
+  through its ``merge_events``, so the table has one upsert semantics.
 """
 
 import ast
@@ -72,4 +74,19 @@ def test_only_landing_knows_the_fact_layout():
             on_window = isinstance(fn, ast.Attribute) and getattr(fn.value, "id", None) == "Window"
             if (name == "partitionBy" and not on_window) or name in ("col", "column"):
                 hits.append(f"{path.relative_to(PKG)}:{fn.end_lineno} {name}('event_date')")
+    assert not hits, "\n".join(hits)
+
+
+def test_only_landing_writes_the_fact_table():
+    owner = PKG / "sinks" / "landing.py"
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name == "write_events":
+                    hits.append(f"{path.relative_to(PKG)}:{node.lineno} write_events(...)")
     assert not hits, "\n".join(hits)

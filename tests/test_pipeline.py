@@ -120,6 +120,39 @@ def test_merge_ingest_leaves_nothing_cached(spark, wh):
     assert _cached_rdds(spark) <= cached
 
 
+def test_merge_of_an_empty_batch_writes_nothing(spark, tmp_path):
+    """An empty batch collects no date, so ``merge_events`` returns [] and
+    leaves an existing table's files as they were (no separate emptiness
+    job guards it); as a table's first write it leaves no data file."""
+    import datetime as dt
+    import os
+
+    from habits_etl_spark.sinks.landing import merge_events
+
+    def files(path):
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, names in os.walk(path) for f in names
+        }
+
+    schema = (
+        "ts timestamp, user_email string, habit string, value double, notes string, source string"
+    )
+    empty = spark.createDataFrame([], schema)
+    fresh = str(tmp_path / "fresh")
+    assert merge_events(spark, empty, fresh) == []
+    assert [f for f in files(fresh) if not os.path.basename(f).startswith(("_", "."))] == []
+
+    path = str(tmp_path / "events")
+    one = spark.createDataFrame(
+        [(dt.datetime(2025, 8, 20, 12), "a@x.com", "workout", 1.0, None, "s")], schema
+    )
+    assert merge_events(spark, one, path) == [dt.date(2025, 8, 20)]
+    before = files(path)
+    assert merge_events(spark, empty, path) == []
+    assert files(path) == before
+
+
 def test_landing_append_once(spark, wh):
     import os
 
@@ -248,7 +281,7 @@ def test_crash_after_landing_then_rerun_matches_clean_run(
     and the aborted job removes that directory, so no partition changed."""
     import os
 
-    import habits_etl_spark.pipeline as pipeline
+    import habits_etl_spark.sinks.landing as landing
 
     drop1 = wide(
         spark,
@@ -279,7 +312,8 @@ def test_crash_after_landing_then_rerun_matches_clean_run(
     before = snapshot(spark, crashed)
 
     with monkeypatch.context() as m:
-        m.setattr(pipeline, "upsert_keyed", crash(pipeline.upsert_keyed))
+        # merge_events looks upsert_keyed up in sinks.landing
+        m.setattr(landing, "upsert_keyed", crash(landing.upsert_keyed))
         with pytest.raises(Exception, match=message):
             run_ingest(spark, drop2, CFG, crashed)
     # the crashed run landed drop2's payloads but changed no fact partition

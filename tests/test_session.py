@@ -36,7 +36,8 @@ def _write_drop(path: str, cycle: int) -> None:
 def test_codegen_cache_holds_a_warm_cron_cycle(spark, tmp_path):
     """Three CronJob cycles on fresh drops, shaped as perfbench's
     cron_ingest round: ``run_ingest`` upserts the drop, the normalized
-    drop is appended to the stream's fact table and the rollup refreshes
+    drop is upserted into the stream's fact table with ``merge_events``
+    (as the stream's ``process_batch`` does) and the rollup refreshes
     its days. By the third cycle every plan is warm, so its compiles are
     the per-run literals only (``land_raw``'s ``current_timestamp()``).
     With Spark's default 100-entry cache (four LRU segments of 25) the
@@ -44,7 +45,7 @@ def test_codegen_cache_holds_a_warm_cron_cycle(spark, tmp_path):
     every cycle."""
     from habits_etl_spark.operators.unpivot import normalize_wide_rows
     from habits_etl_spark.pipeline import run_ingest
-    from habits_etl_spark.sinks.landing import event_dates, write_events
+    from habits_etl_spark.sinks.landing import merge_events
     from habits_etl_spark.sources import read_wide_csv
     from habits_etl_spark.streaming.rollup import refresh_rollup_days
     from tests.test_pipeline import CFG
@@ -58,7 +59,7 @@ def test_codegen_cache_holds_a_warm_cron_cycle(spark, tmp_path):
         before, _ = codegen_compiles(spark)
         run_ingest(spark, drop, CFG, wh)
         batch = normalize_wide_rows(read_wide_csv(spark, drop), CFG)
-        write_events(batch, stream_events, mode="append")
-        refresh_rollup_days(spark, stream_events, rollup, event_dates(batch))
+        days = merge_events(spark, batch, stream_events, batch.schema)
+        refresh_rollup_days(spark, stream_events, rollup, days, columns=batch.schema)
         compiles.append(codegen_compiles(spark)[0] - before)
     assert compiles[2] <= 3, compiles

@@ -4,6 +4,8 @@ refresh (Timescale re-fold), and re-processing must be idempotent."""
 
 from __future__ import annotations
 
+import collections
+import csv
 import datetime as dt
 
 import pytest
@@ -20,6 +22,8 @@ SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType()),
     ]
 )
+
+KEYS = ["user_email", "habit", "ts"]  # the fact table's upsert key
 
 
 def ev(day, hour, user, habit, value):
@@ -292,3 +296,103 @@ def test_legacy_unpartitioned_fact_table_is_refused(spark, dirs):
     run_once(spark, fresh)
     parts = [p for p in os.listdir(fresh["events"]) if p.startswith("event_date=")]
     assert parts  # day-partitioned from the first append
+
+
+def _by_bucket(rollup):
+    return {
+        (str(r.day), r.user_email, r.habit): (r.count_done, r.avg_value, r.sum_meditation)
+        for r in rollup.collect()
+    }
+
+
+def _write_drop(path, rows):
+    with open(path, "w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow(["Report Date", "Email Address", "Workout", "Mood", "Notes"])
+        w.writerows(rows)
+
+
+def test_resent_and_edited_rows_update_the_stream_facts(spark, dirs, tmp_path):
+    """Two CronJob cycles as perfbench's cron_ingest runs them: ``run_ingest``
+    upserts a CSV drop into habit_events, and the same drop, normalized,
+    lands in the watched directory for one availableNow run of the
+    stream. The second drop re-sends one row verbatim and edits another
+    row's value and note. The stream upserts them as habit_events does
+    (reference UNIQUE(user_email, habit, ts)), so each key holds one fact,
+    the re-sent row counts once and the rollup folds habit_events."""
+    from habits_etl_spark.operators.unpivot import normalize_wide_rows
+    from habits_etl_spark.pipeline import read_events_table, run_ingest
+    from habits_etl_spark.sources import read_wide_csv
+    from tests.test_pipeline import CFG
+
+    schema = T.StructType([*SCHEMA.fields, T.StructField("notes", T.StringType()),
+                           T.StructField("source", T.StringType())])
+    wh = str(tmp_path / "wh")
+    drops = [
+        [("08/20/2025", "a@x.com", "Yes", "8", "first"),
+         ("08/20/2025", "b@x.com", "No", "3", ""),
+         ("08/21/2025", "a@x.com", "Yes", "5", "x")],
+        [("08/20/2025", "a@x.com", "Yes", "8", "first"),  # re-sent verbatim
+         ("08/21/2025", "a@x.com", "No", "7", "edited"),  # value and note edited
+         ("08/22/2025", "b@x.com", "Yes", "2", "")],
+    ]
+    for i, rows in enumerate(drops):
+        drop = str(tmp_path / f"drop{i}.csv")
+        _write_drop(drop, rows)
+        run_ingest(spark, drop, CFG, wh)
+        events = normalize_wide_rows(read_wide_csv(spark, drop), CFG)
+        events.coalesce(1).write.mode("append").parquet(dirs["source"])
+        q = start_continuous_rollup(
+            spark, dirs["source"], schema, dirs["events"], dirs["rollup"], dirs["ckpt"],
+            backfill_horizon_days=100_000, trigger={"availableNow": True},
+        )
+        q.awaitTermination(120)
+
+    facts = spark.read.parquet(dirs["events"])
+    upserted = read_events_table(spark, wh)
+    assert facts.count() == facts.select(*KEYS).distinct().count()
+    cols = [*KEYS, "value", "notes", "source"]
+    assert collections.Counter(facts.select(cols).collect()) == collections.Counter(
+        upserted.select(cols).collect()
+    )
+    state = rollup_state(spark, dirs)
+    assert state == _by_bucket(batch_daily_rollup(upserted))
+    assert state[("2025-08-20", "a@x.com", "workout")][0] == 1  # the re-sent row
+
+
+def test_batch_replayed_after_a_crash_leaves_one_fact_per_key(spark, dirs, monkeypatch):
+    """foreachBatch is at-least-once: a trigger that dies after the merge
+    has written, before the rollup refresh, replays its batch when the
+    stream restarts on the same checkpoint. The replay upserts the same
+    rows again, so the fact table keeps one row per key and the rollup
+    matches it."""
+    import os
+
+    import habits_etl_spark.streaming.rollup as rollup_mod
+
+    def drop(rows):
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(
+            dirs["source"]
+        )
+
+    def crash_once(*args, **kwargs):
+        if not calls:
+            calls.append(1)
+            raise RuntimeError("crash before the rollup refresh")
+        return real(*args, **kwargs)
+
+    real, calls = rollup_mod.refresh_rollup_days, []
+    os.makedirs(dirs["source"], exist_ok=True)
+    drop([ev(5, 9, "a@x.com", "workout", 1.0), ev(6, 9, "b@x.com", "workout", 0.0)])
+    run_once(spark, dirs)
+    drop([ev(5, 23, "a@x.com", "meditation_minutes", 10.0), ev(7, 8, "b@x.com", "workout", 1.0)])
+    with monkeypatch.context() as m:
+        m.setattr(rollup_mod, "refresh_rollup_days", crash_once)
+        with pytest.raises(Exception, match="crash before the rollup refresh"):
+            run_once(spark, dirs)
+    assert spark.read.parquet(dirs["events"]).count() == 4  # the merge had written
+    run_once(spark, dirs)  # the restart replays the crashed batch
+
+    facts = spark.read.parquet(dirs["events"])
+    assert facts.count() == facts.select(*KEYS).distinct().count() == 4
+    assert rollup_state(spark, dirs) == _by_bucket(batch_daily_rollup(facts))
