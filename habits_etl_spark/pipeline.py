@@ -32,7 +32,7 @@ from habits_etl_spark.sinks.landing import (
     with_event_date,
 )
 from habits_etl_spark.sinks.manifest import read_snapshot, upsert_snapshot
-# perfbench's traced run wraps these two names in this module
+# unused here: perfbench/spans.py wraps them (see ROADMAP direction 1)
 from habits_etl_spark.sinks.upsert import dedup_batch, upsert_keyed  # noqa: F401
 from habits_etl_spark.sources import read_wide_csv
 

@@ -114,19 +114,19 @@ def event_merge_spec(columns: list[str]) -> dict:
     return dict(keys=EVENT_KEYS, set_cols=["value"], coalesce_cols=notes, keep_old_cols=rest)
 
 
-def merge_events(
-    spark: SparkSession, batch: DataFrame, path: str, columns: T.StructType = EVENTS_SCHEMA
-) -> list:
+def merge_events(spark: SparkSession, batch: DataFrame, path: str) -> list:
     """Upsert a BOUNDED ``batch`` into the fact table at ``path`` and
     return its dates: ``dedup_events``, then ``upsert_keyed`` into the
-    ``pruned_fact_scan`` of those dates (``columns`` is its row schema).
+    ``pruned_fact_scan`` of those dates, read with the batch's schema.
+    A row with a NULL key has no fact to update (nor, for ``ts``, a day)
+    and is dropped, as ``normalize_wide_rows`` drops it.
 
     A first write has nothing to merge with: the batch is written as is
     (an empty one writes no data file) and its dates are read from the
     ``event_date=`` directories just made, with no job. A later write
     persists the batch, which it reads twice (dates, then merge); an
     empty batch collects no date and writes nothing."""
-    incoming = dedup_events(batch)
+    incoming = dedup_events(batch.dropna(subset=EVENT_KEYS))
     fs, root = _hadoop_path(spark, path)
     if not fs.exists(root):
         write_events(incoming, path)
@@ -138,7 +138,7 @@ def merge_events(
         dates = with_event_date(incoming).select("event_date").coalesce(1).distinct()
         days = [r.event_date for r in dates.collect()]
         if days:
-            existing = pruned_fact_scan(spark, path, days, columns)
+            existing = pruned_fact_scan(spark, path, days, incoming.schema)
             merged = upsert_keyed(existing, incoming, **event_merge_spec(incoming.columns))
             write_events(merged, path)
         return days

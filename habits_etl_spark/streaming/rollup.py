@@ -120,7 +120,7 @@ def start_continuous_rollup(
     assert_partitioned_fact_layout(spark, events_path)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        days = merge_events(spark, batch_df, events_path, batch_df.schema)
+        days = merge_events(spark, batch_df, events_path)
         zone = spark._jvm.java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
         today = dt.date.fromisoformat(spark._jvm.java.time.LocalDate.now(zone).toString())
         fresh = [d for d in days if d >= today - dt.timedelta(backfill_horizon_days)]

@@ -59,7 +59,7 @@ def test_codegen_cache_holds_a_warm_cron_cycle(spark, tmp_path):
         before, _ = codegen_compiles(spark)
         run_ingest(spark, drop, CFG, wh)
         batch = normalize_wide_rows(read_wide_csv(spark, drop), CFG)
-        days = merge_events(spark, batch, stream_events, batch.schema)
+        days = merge_events(spark, batch, stream_events)
         refresh_rollup_days(spark, stream_events, rollup, days, columns=batch.schema)
         compiles.append(codegen_compiles(spark)[0] - before)
     assert compiles[2] <= 3, compiles

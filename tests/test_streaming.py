@@ -396,3 +396,32 @@ def test_batch_replayed_after_a_crash_leaves_one_fact_per_key(spark, dirs, monke
     facts = spark.read.parquet(dirs["events"])
     assert facts.count() == facts.select(*KEYS).distinct().count() == 4
     assert rollup_state(spark, dirs) == _by_bucket(batch_daily_rollup(facts))
+
+
+def test_rows_without_a_ts_do_not_stop_the_stream(spark, dirs):
+    """The watched directory is read with the caller's schema, whose ``ts``
+    can be NULL. Such a row has no key and no day, so the merge drops it,
+    on the first write and on a later one, and the next batch still
+    refreshes its day."""
+    import os
+
+    def drop(rows):
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(
+            dirs["source"]
+        )
+
+    os.makedirs(dirs["source"], exist_ok=True)
+    drop([(None, "a@x.com", "workout", 1.0), ev(5, 9, "a@x.com", "workout", 1.0)])
+    run_once(spark, dirs)
+    drop([(None, "b@x.com", "workout", 1.0), ev(6, 9, "b@x.com", "workout", 1.0)])
+    run_once(spark, dirs)
+    drop([ev(7, 9, "b@x.com", "workout", 0.0)])
+    run_once(spark, dirs)
+
+    facts = spark.read.parquet(dirs["events"])
+    assert sorted(str(r.event_date) for r in facts.collect()) == [
+        "2024-01-05", "2024-01-06", "2024-01-07"
+    ]
+    state = rollup_state(spark, dirs)
+    assert state == _by_bucket(batch_daily_rollup(facts))
+    assert state[("2024-01-07", "b@x.com", "workout")] == (0, 0.0, None)
