@@ -4,12 +4,15 @@ Pair lists (from MinHash/embedding dedup) aren't directly actionable: a
 keep-one-per-cluster policy needs the transitive closure (a~b, b~c => one
 cluster). This is the canonical iterative Spark algorithm: alternating
 small-star / large-star label propagation until no label changes — each
-iteration is one join + one aggregation, converging in O(log n) rounds.
+iteration is one join + one aggregation, converging in O(log n) rounds,
+run by the round loop of operators/iterate.py. Labels are vertex ids
+that never increase, so the loop terminates without a round cap.
 
 At 100 TB: edges are the (tiny) near-dup pair set, not the corpus, so the
 loop runs on collision-scale data; each round is a shuffle on vertex id.
-(Driver check: rows-only — iterative fixpoints aren't single-statement SQL;
-semantics are asserted in tests/test_clusters.py against known components.)
+(Driver check: the five ids built on it, ext_dup_clusters first, are
+hash-gated against DuckDB recursive CTEs; semantics are also asserted in
+tests/test_clusters.py against known components.)
 """
 
 from __future__ import annotations
@@ -18,8 +21,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from habits_etl_spark.operators.iterate import fixpoint, materialize, release
 
-def _driver_union_find(rows, vertex_type) -> list[tuple]:
+
+def _driver_union_find(rows) -> list[tuple]:
     """Min-label union-find over a BOUNDED collected edge list (path
     compression; roots keep the minimum member id). O(E α(E)) on the
     driver — microseconds at the collect budget."""
@@ -52,7 +57,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
     driver_solve_max_edges: int = 1_000_000,
     broadcast_edges_max: int = 2_000_000,
 ) -> DataFrame:
@@ -73,53 +77,46 @@ def connected_components(
       (≤ ``broadcast_edges_max``; drops ~6 exchange stages per round);
       above that the shuffle path stands and AQE converts per-stage when
       runtime stats allow — a 100 TB corpus can emit billions of pairs."""
-    sym = (
+    sym = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         # null endpoints carry no connectivity: drop them up front so the
         # driver union-find's min-id comparison never sees None and both
         # strategies agree (the distributed join path drops them anyway)
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b")).filter(
-                F.col("a").isNotNull() & F.col("b").isNotNull()
-            )
-        )
         .distinct()
-        # materialize: the edge list is re-joined every iteration and its
-        # lineage may be an expensive dedup pipeline — compute it exactly once
-        .localCheckpoint(eager=True)
     )
     # Gate on the UNDIRECTED edge count, measured directly: self-loops
     # appear once (not twice) in the symmetrized-distinct list, so
     # n_sym/2 would under-count them and a self-loop-heavy graph could
     # slip past the collect budget at up to 2x the documented bound.
-    # Counts run on checkpointed data: no recompute, collision-scale rows.
+    # Counts run on materialized data: no recompute, collision-scale rows.
     und_df = sym.filter(F.col("a") <= F.col("b"))
     n_und = und_df.count()
     if n_und <= driver_solve_max_edges:
         vt = sym.schema["a"].dataType
-        und = und_df.collect()
-        labeled = _driver_union_find([(r["a"], r["b"]) for r in und], vt)
-        spark = edges.sparkSession
+        labeled = _driver_union_find(und_df.collect())
+        release(sym)
         schema = T.StructType(
             [T.StructField("vertex", vt, False), T.StructField("component", vt, False)]
         )
-        return spark.createDataFrame(labeled, schema)
+        return edges.sparkSession.createDataFrame(labeled, schema)
     hint = F.broadcast if n_und <= broadcast_edges_max else (lambda df: df)
-    labels = (
+    labels = materialize(
         sym.select(F.col("a").alias("vertex"))
         .distinct()
         .withColumn("component", F.col("vertex"))
     )
-    for _ in range(max_iter):
+
+    def step(labels):
         # step 1: each vertex adopts the min(label) among itself + neighbors
         # (left join + least instead of union+groupBy: a self-referencing
         # union plan trips Catalyst's Union constraint propagation).
-        # NOT checkpointed: its lineage is one join off two already-
+        # NOT materialized: its lineage is one join off two already-
         # materialized inputs, so letting the pointer jump's self-join
         # evaluate it twice costs two tiny joins instead of an extra
-        # eager-checkpoint job per iteration (the loop is job-latency
-        # bound — collision-scale data, fixed cost per Spark job).
+        # checkpoint job per round (the loop is job-latency bound —
+        # collision-scale data, fixed cost per Spark job).
         neighbor_min = (
             sym.join(hint(labels), sym["b"] == labels["vertex"])
             .groupBy(F.col("a").alias("nv"))
@@ -129,33 +126,23 @@ def connected_components(
             hint(neighbor_min), labels["vertex"] == neighbor_min["nv"], "left"
         ).select(
             "vertex",
-            F.least(
-                F.col("component"), F.coalesce(F.col("ncomp"), F.col("component"))
-            ).alias("component"),
+            # least skips a null ncomp: a vertex with no neighbors keeps its label
+            F.least(F.col("component"), F.col("ncomp")).alias("component"),
             F.col("component").alias("prev"),
         )
         # step 2: pointer jumping — follow the label's own label
         # (component ids are vertex ids, so the self-join always hits);
         # together the two steps halve path lengths => O(log n) rounds.
-        # `prev` (the label at iteration start) rides along so the
-        # convergence check below reads THIS checkpoint instead of
-        # re-joining against the old labels — one job, not two.
+        # `prev` (the label at round start) rides along for the loop's
+        # convergence check.
         l1 = stepped.alias("l1")
         l2 = stepped.alias("l2")
-        new_labels = (
-            l1.join(hint(l2), F.col("l1.component") == F.col("l2.vertex"))
-            .select(
-                F.col("l1.vertex").alias("vertex"),
-                F.col("l2.component").alias("component"),
-                F.col("l1.prev").alias("prev"),
-            )
-            .localCheckpoint(eager=True)
+        return l1.join(hint(l2), F.col("l1.component") == F.col("l2.vertex")).select(
+            F.col("l1.vertex").alias("vertex"),
+            F.col("l2.component").alias("component"),
+            F.col("l1.prev").alias("prev"),
         )
-        changed = (
-            new_labels.filter(F.col("component") != F.col("prev")).limit(1).count()
-        )
-        # keep the lineage shallow across iterations
-        labels = new_labels.select("vertex", "component")
-        if changed == 0:
-            break
-    return labels
+
+    labels = fixpoint(labels, step, changed=F.col("component") != F.col("prev"))
+    release(sym)
+    return labels.select("vertex", "component")

@@ -19,19 +19,24 @@ exactly. Each iteration is pure DataFrame algebra:
   join edges with the current labels  →  per-node neighbor-value list
   h-index = max over neighbors of min(row_number by value desc, value)
 
-so one shuffle on dst plus one window per iteration — the same
-iterative-DataFrame pattern as operators/clusters.py and pagerank.py,
-with ``localCheckpoint(eager=True)`` truncating lineage per step.
+so one shuffle on dst plus one window per iteration, run by the round
+loop of operators/iterate.py until no label changes (the same loop as
+operators/clusters.py and pagerank.py). There is no round cap: labels
+are non-negative integers that never increase, so the loop terminates,
+and a cap would return labels that have not converged (a 60-node path
+needs 29 rounds).
 
 At 100 TB: the edge list is collision-scale (banded candidate pairs), the
 label vector is |nodes| rows hash-partitioned by id; convergence needs
 O(graph diameter-ish) rounds in theory but single digits in practice on
-near-dup graphs (their cores are shallow); the early-stop check is one
-aggregated count per round, never a data collect.
+near-dup graphs (their cores are shallow); each generation carries its
+previous label, so the stop check is one job over the materialized
+generation, never a data collect.
 
-Driver check: rows-only (iterative fixpoint, not single-statement SQL);
-semantics pinned in tests/test_kcore.py against an exact Python peeling
-reference.
+Driver check: ext_kcore_dupgraph is hash-gated against a DuckDB
+recursive CTE that runs the same update to its fixpoint
+(plans/ext_curation7.py); semantics pinned in tests/test_kcore.py
+against an exact Python peeling reference.
 """
 
 from __future__ import annotations
@@ -39,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_MAX_ITERS = 20
+from habits_etl_spark.operators.iterate import fixpoint, materialize, release
 
 
 def coreness(
@@ -48,7 +53,6 @@ def coreness(
     node_col: str = "node",
     src: str = "src",
     dst: str = "dst",
-    max_iters: int = _MAX_ITERS,
 ) -> DataFrame:
     """Exact coreness per node via the h-index fixpoint.
 
@@ -57,21 +61,23 @@ def coreness(
     both (a,b) and (b,a) present; self-loops are dropped. Returns
     (node, coreness) with coreness a bigint.
     """
-    v = nodes.select(F.col(node_col).alias("node")).distinct().localCheckpoint(True)
-    e = (
+    e = materialize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(True)
     )
     # c0 = degree (isolated nodes: 0).
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    labels = (
-        v.join(deg, v["node"] == deg["src"], "left")
-        .select("node", F.coalesce(F.col("c"), F.lit(0).cast("bigint")).alias("c"))
-        .localCheckpoint(True)
+    deg = e.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    for _ in range(max_iters):
+    labels = materialize(
+        nodes.select(F.col(node_col).alias("node"))
+        .distinct()
+        .join(deg, "node", "left")
+        .select("node", F.coalesce(F.col("c"), F.lit(0).cast("bigint")).alias("c"))
+    )
+
+    def step(labels):
         # Neighbor values arrive at dst; h-index = max(min(rank, value))
         # over neighbors sorted by value desc — at most degree(v) rows per
         # node, one user-keyed window, no per-node collect.
@@ -85,22 +91,14 @@ def coreness(
             .groupBy("node")
             .agg(F.max(F.least(F.col("rn"), F.col("nc"))).alias("h"))
         )
-        nxt = (
-            labels.join(h, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("c"), F.coalesce(F.col("h"), F.lit(0).cast("bigint"))
-                ).alias("c"),
-            )
-            .localCheckpoint(True)
+        return labels.join(h, "node", "left").select(
+            "node",
+            F.least(
+                F.col("c"), F.coalesce(F.col("h"), F.lit(0).cast("bigint"))
+            ).alias("c"),
+            F.col("c").alias("prev"),
         )
-        changed = (
-            nxt.join(labels.withColumnRenamed("c", "c_prev"), "node")
-            .filter(F.col("c") != F.col("c_prev"))
-            .count()
-        )
-        labels = nxt
-        if changed == 0:
-            break
+
+    labels = fixpoint(labels, step, changed=F.col("c") != F.col("prev"))
+    release(e)
     return labels.select("node", F.col("c").alias("coreness"))

@@ -6,13 +6,14 @@ canonical member of a near-duplicate cluster (most-connected doc instead
 of min-id). The graph here is whatever edge list the caller brings —
 near-dup candidate pairs, citation links, host links.
 
-Execution shape (the iterative-DataFrame pattern, like
-operators/clusters.py): each power iteration is one shuffle-join of the
-rank vector with the edge list plus one aggregation by destination;
-``localCheckpoint(eager=True)`` truncates lineage every iteration so the
-plan stays O(1) deep instead of O(iters). Dangling mass (nodes with no
-out-edges) is redistributed uniformly via a broadcast scalar — computed
-as an aggregate and cross-joined, never collected to the driver.
+Execution shape (the round loop of operators/iterate.py, which
+materializes every generation so the plan stays O(1) deep instead of
+O(iters)): the loop invariants are materialized once — each node carries
+its out-degree and the node count — so each power iteration is one
+shuffle-join of the rank vector with the edge list plus one aggregation
+by destination. Dangling mass (nodes with no out-edges, a null
+out-degree) is redistributed uniformly via a broadcast scalar — summed
+over those nodes and cross-joined, never collected to the driver.
 
 At 100 TB: the edge list of a near-dup graph is collision-scale (pairs
 that actually banded together), orders of magnitude smaller than the
@@ -30,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from habits_etl_spark.operators.iterate import fixpoint, materialize, release
 
 DAMPING = 0.85
 ITERS = 8
@@ -50,19 +53,21 @@ def pagerank(
     dangling mass). edges: DIRECTED (src, dst) rows; symmetrize first
     for an undirected graph. Returns (node, rank) with sum(rank) == 1.
     """
-    v = nodes.select(F.col(node_col).alias("node")).distinct().localCheckpoint(True)
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(True)
+    e = materialize(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )
+    v = nodes.select(F.col(node_col).alias("node")).distinct()
     n_df = v.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("outdeg"))
-
-    ranks = v.crossJoin(F.broadcast(n_df)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("rank")
+    outdeg = e.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).cast("double").alias("outdeg")
     )
-    for _ in range(iters):
+    ranks = materialize(
+        v.join(outdeg, "node", "left")
+        .crossJoin(F.broadcast(n_df))
+        .select("node", "outdeg", "n", (F.lit(1.0) / F.col("n")).alias("rank"))
+    )
+
+    def step(ranks):
         # DECIMAL(38,28)-exact sums (plans/common.py rule 1): the iterate
         # is then parallelism- and order-invariant, which is what lets
         # ext_pagerank_dupgraph state the unrolled iteration as a DuckDB
@@ -79,7 +84,6 @@ def pagerank(
         # ties — the residual tie class the sf0.1 ledger exists to catch.
         contrib = (
             e.join(ranks, e["src"] == ranks["node"])
-            .join(outdeg, "src")
             .groupBy("dst")
             .agg(
                 F.sum((F.col("rank") / F.col("outdeg")).cast("decimal(38,28)"))
@@ -87,27 +91,21 @@ def pagerank(
                 .alias("contrib")
             )
         )
-        dangling = (
-            ranks.join(outdeg, ranks["node"] == outdeg["src"], "left_anti")
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("rank").cast("decimal(38,28)")).cast("double"),
-                    F.lit(0.0),
-                ).alias("dm")
-            )
+        dangling = ranks.filter(F.col("outdeg").isNull()).agg(
+            F.coalesce(
+                F.sum(F.col("rank").cast("decimal(38,28)")).cast("double"),
+                F.lit(0.0),
+            ).alias("dm")
         )
-        ranks = (
-            v.join(contrib, v["node"] == contrib["dst"], "left")
-            .crossJoin(F.broadcast(n_df))
+        rank = (1.0 - damping) / F.col("n") + damping * (
+            F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dm") / F.col("n")
+        )
+        return (
+            ranks.join(contrib, ranks["node"] == contrib["dst"], "left")
             .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    (1.0 - damping) / F.col("n")
-                    + damping
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dm") / F.col("n"))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            .select("node", "outdeg", "n", rank.alias("rank"))
         )
-    return ranks
+
+    ranks = fixpoint(ranks, step, rounds=iters)
+    release(e)
+    return ranks.select("node", "rank")

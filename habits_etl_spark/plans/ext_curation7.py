@@ -390,10 +390,8 @@ def ext_kcore_dupgraph(spark, sf_dir):
     convergence. The integer labels make the iterate trivially engine-
     portable (no float sums anywhere). Exact semantics additionally
     pinned in tests/test_kcore.py against a Python peeling reference.
-    Note the oracle converges to the TRUE fixpoint while the Spark loop
-    caps at operators/kcore.py _MAX_ITERS=20 — a graph needing more
-    rounds would hash-mismatch, which is the honest behavior (the cap
-    exists to bound a runaway job, not to change semantics)."""
+    Like the oracle, the Spark loop runs to the true fixpoint (no round
+    cap)."""
 
     docs = t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
     pairs = minhash_pairs_shared(spark, sf_dir)

@@ -292,7 +292,8 @@ def _banded_rows(prepped, seed: str, n_bands: int, band_bits: int):
     is non-reliable — a lost executor makes the partitions unrecoverable
     with no lineage fallback. A cached InMemoryRelation is the same plan
     barrier, fills lazily on first action, and recomputes from lineage on
-    loss."""
+    loss. (A loop whose plan must be cut every round follows
+    operators/iterate.py instead: a cached generation keeps its plan.)"""
     sig = managed_cache(
         srp_signatures(prepped, seed, n_bands, band_bits),
         f"banded_sig:{seed}:{n_bands}:{band_bits}",
@@ -339,7 +340,8 @@ def _lsh_candidate_pairs(prepped, n_bands=_PAIR_BANDS, band_bits=_PAIR_BAND_BITS
     # and AQE may still convert when runtime stats allow. managed_cache,
     # not localCheckpoint (r13): keeps lineage on executor loss; the
     # count() still materializes it here because the gate needs the
-    # number before the plan is final.
+    # number before the plan is final. (Loops cut lineage through
+    # operators/iterate.py, the one rule for iterative operators.)
     cand = managed_cache(cand, f"lsh_cand:{n_bands}:{band_bits}")
     hint = F.broadcast if cand.count() <= _PAIR_BROADCAST_MAX else (lambda df: df)
     return arr_a.join(hint(cand), "vec_a").join(arr_b, "vec_b")

@@ -62,6 +62,16 @@ def test_coreness_known_graph(spark):
     assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 2, 5: 2, 6: 2, 7: 1, 8: 0}
 
 
+def test_coreness_long_path_converges(spark):
+    """A 60-node path (a thin re-post chain) is coreness 1 everywhere, but
+    its h-index labels fall from 2 to 1 only one node per round from each
+    end, so the loop must run to the fixpoint, not to a round cap."""
+    path = [(i, i + 1) for i in range(59)]
+    nodes = spark.createDataFrame([(i,) for i in range(60)], "node long")
+    got = {r.node: r.coreness for r in coreness(nodes, _sym(spark, path)).collect()}
+    assert got == _py_coreness(range(60), path)
+
+
 def test_coreness_matches_python_on_dupgraph(spark, sf_dir):
     from habits_etl_spark.plans.ext_text import ext_near_dedup_minhash
 

@@ -7,7 +7,10 @@
 - only ``sinks/landing.py`` knows the fact table's ``event_date`` layout:
   no other module partitions a write by it or builds ``F.col("event_date")``;
 - only ``sinks/landing.py`` calls ``write_events``: every fact write goes
-  through its ``merge_events``, so the table has one upsert semantics.
+  through its ``merge_events``, so the table has one upsert semantics;
+- nothing calls ``localCheckpoint``, and only ``operators/iterate.py``
+  calls ``.checkpoint(``: iterative operators cut lineage through its
+  ``materialize``, one policy that survives lost blocks.
 """
 
 import ast
@@ -89,4 +92,17 @@ def test_only_landing_writes_the_fact_table():
                 name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
                 if name == "write_events":
                     hits.append(f"{path.relative_to(PKG)}:{node.lineno} write_events(...)")
+    assert not hits, "\n".join(hits)
+
+
+def test_lineage_cuts_go_through_iterate():
+    owner = PKG / "operators" / "iterate.py"
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            name = node.func.attr
+            if name == "localCheckpoint" or (name == "checkpoint" and path != owner):
+                hits.append(f"{path.relative_to(PKG)}:{node.func.end_lineno} .{name}(...)")
     assert not hits, "\n".join(hits)
